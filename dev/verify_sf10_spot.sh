@@ -10,7 +10,7 @@
 set -eu
 cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/graft_verify_sf10}
-KEYS=${SPOT_KEYS:-q2_full_min_cost_supplier,q2_full_bucketed,q11_full_important_stock,q11_full_bucketed,q16_full_parts_supplier_cnt,q16_full_bucketed,q5_full_bucketed,q17_full_bucketed,q18_full_bucketed,q21_full_bucketed,q14_full_bucketed,q22_full_global_sales,q22_full_anti_rewrite,op_partition_prune,q15_full_top_supplier,q20_full_excess_suppliers,q8_full_market_share}
+KEYS=${SPOT_KEYS:-q2_full_min_cost_supplier,q11_full_important_stock,q16_full_parts_supplier_cnt,q5_full_bucketed,q17_full_bucketed,q18_full_bucketed,q21_full_bucketed,q22_full_global_sales,q22_full_anti_rewrite,op_partition_prune,q15_full_top_supplier,q20_full_excess_suppliers,q8_full_market_share}
 rm -rf "$OUT"
 CP="target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*"
 AO=""

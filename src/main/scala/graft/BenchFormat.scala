@@ -51,6 +51,13 @@ object BenchFormat {
     * "[success] Total time: 35640 s (9:54:00), completed <date>" plus
     * surrounding newlines, rounded up. */
   val TrailerWorst = 80
+  /** The newlines framing the compact line inside the window (one
+    * before it, one after). */
+  val LineBreaks = 2
+  /** Chars the queries fill leaves free for the `hidden` field's size
+    * wobble: the budget is computed with a placeholder hidden field,
+    * and the real one's count and max may be wider. */
+  val HiddenReserve = 40
 
   /** f"%.2f" with trailing zeros stripped; always keeps a leading digit
     * so the token stays valid JSON. */
@@ -229,7 +236,7 @@ object BenchFormat {
     val expensiveFirst = ok.sortBy { case (k, ts) => (-ts.head, k) }
     val qBudget = {
       val baseLen = compactWith(entries.size, 9999.99, "").length
-      TailWindow - TrailerWorst - 2 - 40 - baseLen
+      TailWindow - TrailerWorst - LineBreaks - HiddenReserve - baseLen
     }
     val qJson = {
       val wrapOverhead = ""","queries":{}""".length + ""","qmore":999""".length

@@ -31,14 +31,10 @@ object Registry {
       tpch.TpchGen.all ++
       sources.AuxGen.all ++
       Seq(sources.Sinks.bucketedJoin, sources.Sinks.q21Bucketed,
-        sources.Sinks.q18Bucketed, sources.Sinks.q14Bucketed,
-        sources.Sinks.q5Bucketed, sources.Sinks.q17Bucketed,
-        sources.Sinks.q2Bucketed, sources.Sinks.q11Bucketed,
-        sources.Sinks.q16Bucketed, sources.Sinks.q3Bucketed,
-        sources.Sinks.q4Bucketed, sources.Sinks.q12Bucketed,
-        sources.Sinks.q13Bucketed, sources.Sinks.q7Bucketed,
-        sources.Sinks.q10Bucketed, sources.Sinks.q20Bucketed,
-        sources.Sinks.q9Bucketed,
+        sources.Sinks.q18Bucketed, sources.Sinks.q5Bucketed,
+        sources.Sinks.q17Bucketed, sources.Sinks.q4Bucketed,
+        sources.Sinks.q12Bucketed, sources.Sinks.q13Bucketed,
+        sources.Sinks.q7Bucketed,
         sources.Sinks.compactSmallFiles, sources.Sinks.compactPartitioned,
         sources.Sinks.partitionPrune, sources.Sinks.bloomFilterJoin,
         sources.Sinks.statsSkipping) ++

@@ -1615,8 +1615,8 @@ object Relational {
   /** The WINDOW spelling of grouped top-k, auto-routed to the
     * bounded-heap aggregate by the Catalyst optimizer rule
     * [[graft.plans.TopKRewrite]] (opted in via
-    * `spark.graft.topk.rewrite` on this key's own session — the same
-    * per-key session-conf scoping as the bucketed-layout consumers).
+    * `spark.graft.topk.rewrite` on this key's own cached
+    * `Sessions.childWith` child, so the conf never reaches the caller).
     * The USER writes `row_number().over(...) <= k`; the OPTIMIZER
     * proves the pattern safe (single row_number, non-nullable long
     * (DESC, ASC) order, no rider columns, literal k within the heap

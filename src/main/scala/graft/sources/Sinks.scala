@@ -107,15 +107,6 @@ object Sinks {
     new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
   private val layoutSeq = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** The shared orderkey-bucketed fact layout: lineitem + orders
-    * bucket-sorted on the orderkey, projected to the union of the
-    * columns the serving query family (`q21_full_bucketed`,
-    * `q18_full_bucketed`) reads — at 100 TB this is "store the fact
-    * tables bucketed on their join key"; parquet column pruning keeps
-    * each query's scan as narrow as its own column set. Written once
-    * per corpus (see [[factLayouts]]); every key that reads it shares
-    * the one write. Returns the registered (lineitem, orders) catalog
-    * table names. */
   /** Memoized writer behind the layout family: one bucketized table
     * pair per (context incarnation, corpus root, layout tag), each
     * source file projected to its column list and bucket-sorted on its
@@ -151,19 +142,26 @@ object Sinks {
       })
   }
 
+  /** The shared orderkey-bucketed fact layout: lineitem + orders
+    * bucket-sorted on the orderkey, projected to the union of the
+    * columns the serving query family (q21/q18/q5/q4/q12/q7
+    * `_full_bucketed`) reads — at 100 TB this is "store the fact
+    * tables bucketed on their join key"; parquet column pruning keeps
+    * each query's scan as narrow as its own column set. Written once
+    * per corpus (see [[factLayouts]]); every key that reads it shares
+    * the one write. Returns the registered (lineitem, orders) catalog
+    * table names. */
   private def orderkeyLayout(s: SparkSession, root: String): (String, String) =
     pair(factLayout(s, root, "ok", Seq(
-      // column set = union of what the serving family (q21/q18/q5
-      // bucketed, + q3/q4/q12 round 16) reads; widening it costs only
-      // layout-write bytes — every query's scan stays as narrow as its
-      // own projection (parquet column pruning)
+      // column set = union of what the serving family reads; widening
+      // it costs only layout-write bytes — every query's scan stays as
+      // narrow as its own projection (parquet column pruning)
       ("lineitem", Seq("l_orderkey", "l_suppkey", "l_quantity",
         "l_extendedprice", "l_discount",
-        "l_receiptdate", "l_commitdate", "l_shipdate", "l_shipmode",
-        "l_returnflag"),
+        "l_receiptdate", "l_commitdate", "l_shipdate", "l_shipmode"),
         "l_orderkey"),
       ("orders", Seq("o_orderkey", "o_custkey", "o_orderstatus",
-        "o_totalprice", "o_orderdate", "o_shippriority", "o_orderpriority"),
+        "o_totalprice", "o_orderdate", "o_orderpriority"),
         "o_orderkey"))))
 
   private def pair(ts: Seq[String]): (String, String) = (ts.head, ts(1))
@@ -181,51 +179,20 @@ object Sinks {
     val root = graft.tpch.FullTpch.ensurePersisted(s, graft.tpch.TpchGen.sfFromDir(dir))
     orderkeyLayout(s, root)
     partkeyLayout(s, root)
-    partsuppLayout(s, root)
     custkeyLayout(s, root)
     (System.nanoTime() - t0) / 1e9
   }
 
   /** The PARTKEY sibling of [[orderkeyLayout]]: lineitem + part
     * bucket-sorted on the part key, serving the lineitem⋈part query
-    * family (`q14_full_bucketed`). Separate layout, same contract —
+    * family (`q17_full_bucketed`). Separate layout, same contract —
     * a real deployment keeps one clustered copy of the fact table per
     * high-traffic join key and routes each query to the copy whose
     * bucketing its joins consume. */
   private def partkeyLayout(s: SparkSession, root: String): (String, String) =
     pair(factLayout(s, root, "pk", Seq(
-      // q17 (round 15) added l_quantity / p_brand / p_container; q20
-      // (round 16) added l_suppkey / p_name; q9 added l_orderkey —
-      // same width-vs-pruning tradeoff as the orderkey layout
-      ("lineitem", Seq("l_partkey", "l_suppkey", "l_orderkey",
-        "l_quantity", "l_extendedprice", "l_discount", "l_shipdate"),
-        "l_partkey"),
-      ("part", Seq("p_partkey", "p_name", "p_type", "p_brand",
-        "p_container"), "p_partkey"))))
-
-  /** The PARTSUPP sibling: partsupp + part bucket-sorted on the part
-    * key, built to test the layout playbook on the partsupp-keyed
-    * family that was round 15's entire remaining ≥8× sf10 residue
-    * (q2 16.2×, q11 9.8×, q16 10.0× + v2 siblings). Column set = union
-    * of what `q2_full_bucketed` / `q11_full_bucketed` /
-    * `q16_full_bucketed` read; same width-costs-write-bytes-only
-    * contract as the other layouts.
-    *
-    * ROUND-16 OUTCOME: all three consumers are measured NEGATIVE arms
-    * at sf10 (interleaved A/Bs + per-node breakdowns in each key's
-    * scaladoc) — partsupp at bench scale is a 100 MB table whose raw
-    * joins AQE-broadcast, so there is no exchange volume for the
-    * layout to erase and the family's residue is aggregation machinery
-    * + per-stage constants. The layout and consumers ship as the
-    * documented boundary of the playbook: clustering pays ∝ erased
-    * exchange volume (q21/q18/q5/q17 erase lineitem-scale exchanges
-    * and win; partsupp-scale tables have none to give). */
-  private def partsuppLayout(s: SparkSession, root: String): (String, String) =
-    pair(factLayout(s, root, "ps", Seq(
-      ("partsupp", Seq("ps_partkey", "ps_suppkey", "ps_availqty",
-        "ps_supplycost"), "ps_partkey"),
-      ("part", Seq("p_partkey", "p_mfgr", "p_brand", "p_type", "p_size"),
-        "p_partkey"))))
+      ("lineitem", Seq("l_partkey", "l_quantity", "l_extendedprice"), "l_partkey"),
+      ("part", Seq("p_partkey", "p_brand", "p_container"), "p_partkey"))))
 
   /** Sub-session for reading the bucketed layout (shares the catalog,
     * so it sees the layout tables; own conf, so nothing leaks into the
@@ -235,7 +202,10 @@ object Sinks {
     * bucket read granularity, which is exactly what [[writeBucketed]]'s
     * repartition guarantees — and without it every merge join re-sorts
     * the already-sorted bucket files. The caller's join-strategy tuning
-    * is carried over so planner A/Bs see the layout keys. */
+    * is carried over so planner A/Bs see the layout keys. The child is
+    * CACHED and shared by every layout key, so a key must never
+    * `conf.set` on the session it gets back — the setting would leak
+    * into every other key's plans (SinksSpec pins this). */
   private def sortedScanSession(s: SparkSession): SparkSession =
     // cached per conf set (r16 advice — see Sessions.childWith); the
     // caller's join-strategy tuning rides the cache key, so planner
@@ -362,41 +332,6 @@ object Sinks {
     graft.tpch.FullTpch.q18Full.oracle,
     tags = Set("sinks", "tpch_full"))
 
-  /** First consumer of the [[partkeyLayout]]: textbook TPC-H Q14
-    * (promo revenue share), the q_full key whose sf10 cost is the
-    * lineitem⋈part sort-merge machinery — part is too wide to
-    * broadcast at scale, so the raw plan hash-partitions AND sorts
-    * both sides (the sf10 join-strategy A/B in dev/BENCH_NOTES.md
-    * measured the sort as 3/4 of its runtime). Over the partkey
-    * layout the merge join streams the two bucket-sorted scans
-    * directly — ZERO `Exchange hashpartitioning` and ZERO Sort; the
-    * only exchange left is the single-row global aggregate's
-    * `Exchange SinglePartition` (the spec pins all three properties).
-    * Same cents-discretized revenue arithmetic as
-    * `q14_full_promo_revenue`, whose spec-text oracle this key reuses
-    * BYTE-IDENTICALLY: relayout must not move the ratio by one
-    * millionth. */
-  val q14Bucketed: graft.GQuery = graft.GQuery(
-    "q14_full_bucketed",
-    (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val root = graft.tpch.FullTpch.ensurePersisted(s, graft.tpch.TpchGen.sfFromDir(dir))
-      val (liTable, ptTable) = partkeyLayout(s, root)
-      val ss = sortedScanSession(s)
-      val li = ss.table(liTable)
-        .where(col("l_shipdate") >= lit("1995-09-01").cast("date") &&
-          col("l_shipdate") < lit("1995-10-01").cast("date"))
-      val pt = ss.table(ptTable)
-      val cents = floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
-        .cast("long")
-      li.join(pt, col("l_partkey") === col("p_partkey"))
-        .agg(round(lit(100.0) *
-          sum(when(col("p_type").like("PROMO%"), cents).otherwise(0L)).cast("double") /
-          sum(cents).cast("double"), 6).as("promo_revenue"))
-    },
-    graft.tpch.FullTpch.q14Full.oracle,
-    tags = Set("sinks", "tpch_full"))
-
   /** Third consumer of the shared [[orderkeyLayout]]: textbook TPC-H Q5
     * (local-supplier revenue), the worst quiet-settle sf10 ratio family
     * of round 15 (15-18× raw — dev/BENCH_NOTES.md): over raw parquet
@@ -410,7 +345,7 @@ object Sinks {
     * the reduced fact (year- and region-filtered, three narrow
     * columns) against customer. Customer is deliberately NOT
     * broadcast: the three-arm interleaved A/B at sf10
-    * (Q5VariantAbMain, dev/BENCH_NOTES.md round 15) measured the
+    * (dev/BENCH_NOTES.md round 15) measured the
     * 1.5M-row broadcast BUILD costing more than the shuffle it saves
     * (bcast [3.62,3.98,...] vs shuffle [2.38,2.69,...] vs raw
     * [5.26,6.78,...]) — and unlike q18's few-hundred-row rollup
@@ -461,7 +396,7 @@ object Sinks {
     graft.tpch.FullTpch.q5Full.oracle,
     tags = Set("sinks", "tpch_full"))
 
-  /** Second consumer of the [[partkeyLayout]]: textbook TPC-H Q17
+  /** Sole consumer of the [[partkeyLayout]]: textbook TPC-H Q17
     * (small-quantity revenue), round 15's second-worst non-correlated
     * sf10 residue (11.7× raw). Its cost over raw parquet is lineitem
     * paid TWICE on the partkey — once hash-partitioned + sorted for
@@ -517,64 +452,7 @@ object Sinks {
       ("orders", Seq("o_custkey", "o_orderkey", "o_comment"), "o_custkey"),
       ("customer", Seq("c_custkey"), "c_custkey"))))
 
-  /** Fourth consumer of the shared [[orderkeyLayout]]: textbook TPC-H
-    * Q3 (shipping priority), 6.55× raw at the sf10 settle — raw
-    * hash-partitions AND sorts the date-filtered halves of BOTH fact
-    * tables (≈30M lineitem + 7M orders rows at sf10) for the orderkey
-    * join, then exchanges again toward customer. Over the layout the
-    * fact join streams the co-bucketed scans exchange-free, the
-    * BUILDING filter arrives as a broadcast SEMI of the customer KEY
-    * column only (the segment filter is the customer table's whole
-    * contribution — no output column comes from it; ~300k longs at
-    * sf10, linear in sf like q11's GERMANY keys, same documented
-    * shuffle fallback), and the GROUP BY (l_orderkey, o_orderdate,
-    * o_shippriority) — a superset of the bucket key — aggregates
-    * exchange-free too; ORDER BY + LIMIT 10 is TakeOrdered. The
-    * executed plan moves NOTHING but broadcasts (spec pins zero hash
-    * exchanges).
-    *
-    * MEASURED VERDICT (round 16, interleaved same-JVM sf10 A/B, 5
-    * rounds): raw [1.498,1.547,1.603,1.648,12.0-outlier] vs bucketed
-    * [1.489,1.852,1.872,2.044,2.639] — PARITY at the min, ~1.2× loss
-    * at the median. On THIS box (local[32]) an erased exchange is an
-    * erased page-cache round trip, so removing ~1 GB of fact movement
-    * buys little against the join/aggregate compute both arms share;
-    * on a network cluster the same erased bytes are the dominant cost,
-    * which is why the arm ships despite local parity — the 100 TB
-    * contract is the erased movement, measured in the plan, not the
-    * local wall delta. Oracle BYTE-IDENTICAL to
-    * `q3_full_shipping_priority`'s spec text. */
-  val q3Bucketed: graft.GQuery = graft.GQuery(
-    "q3_full_bucketed",
-    (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val root = graft.tpch.FullTpch.ensurePersisted(s, graft.tpch.TpchGen.sfFromDir(dir))
-      val (liTable, orTable) = orderkeyLayout(s, root)
-      val ss = sortedScanSession(s)
-      val building = ss.read.parquet(s"$root/customer.parquet")
-        .where(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-      val ord = ss.table(orTable)
-        .where(col("o_orderdate") < lit("1995-03-15").cast("date"))
-        .select(col("o_orderkey"), col("o_custkey"),
-          col("o_orderdate"), col("o_shippriority"))
-        .join(broadcast(building), col("o_custkey") === col("c_custkey"), "left_semi")
-      val li = ss.table(liTable)
-        .where(col("l_shipdate") > lit("1995-03-15").cast("date"))
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-      val cents = floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
-        .cast("long")
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_shippriority"))
-        .agg((sum(cents).cast("double") / 100.0).as("revenue"))
-        .select(col("l_orderkey"), col("revenue"),
-          col("o_orderdate"), col("o_shippriority"))
-        .orderBy(desc("revenue"), col("o_orderdate"), col("l_orderkey"))
-        .limit(10)
-    },
-    graft.tpch.FullTpch.q3Full.oracle,
-    tags = Set("sinks", "tpch_full"))
-
-  /** Fifth consumer of the shared [[orderkeyLayout]]: textbook TPC-H Q4
+  /** Fourth consumer of the shared [[orderkeyLayout]]: textbook TPC-H Q4
     * (order priority), 7.09× raw at the sf10 settle — raw answers the
     * EXISTS with a left-semi SMJ that hash-partitions the quarter of
     * orders AND the late half of lineitem. Over the layout BOTH sides
@@ -610,7 +488,7 @@ object Sinks {
     graft.tpch.FullTpch.q4Full.oracle,
     tags = Set("sinks", "tpch_full"))
 
-  /** Sixth consumer of the shared [[orderkeyLayout]]: textbook TPC-H
+  /** Fifth consumer of the shared [[orderkeyLayout]]: textbook TPC-H
     * Q12 (priority class), 6.25× raw at the sf10 settle — the
     * shipmode/date filters keep only ~4% of lineitem, but orders is
     * UNFILTERED, so the raw join hash-partitions all 15M orders rows
@@ -650,7 +528,7 @@ object Sinks {
     graft.tpch.FullTpch.q12Full.oracle,
     tags = Set("sinks", "tpch_full"))
 
-  /** Seventh consumer of the shared [[orderkeyLayout]]: textbook TPC-H
+  /** Sixth consumer of the shared [[orderkeyLayout]]: textbook TPC-H
     * Q7 (volume shipping) — the same plan family as q5 (round 15's
     * 1.7× layout win): raw hash-partitions AND sorts the 2-year slice
     * of lineitem (~17M rows at sf10) and all of orders for the fact
@@ -708,220 +586,6 @@ object Sinks {
     graft.tpch.FullTpch.q7Full.oracle,
     tags = Set("sinks", "tpch_full"))
 
-  /** Eighth consumer of the shared [[orderkeyLayout]]: textbook TPC-H
-    * Q10 (returned items) — raw hash-partitions AND sorts the R-flagged
-    * quarter of lineitem (~15M rows at sf10) and orders for the fact
-    * join, then exchanges the joined frame toward customer and groups
-    * on seven customer attributes. Over the layout the fact join is
-    * exchange-free, and the q18 rewrite discipline applies: revenue is
-    * aggregated per o_custkey BEFORE the customer join (o_custkey
-    * functionally determines every grouped customer column through the
-    * 1:1 c_custkey join, so the spec's post-join GROUP BY collapses
-    * nothing the pre-join rollup didn't), the per-customer frame's own
-    * exchange doubles as the join partitioning (only customer
-    * re-shuffles), nation broadcasts, and LIMIT 20 is TakeOrdered.
-    * MEASURED VERDICT (round 16, two interleaved same-JVM sf10 A/Bs of
-    * 5 rounds): raw wins consistently in both windows (mins 1.818 /
-    * 1.674 vs bucketed 2.192 / 2.038 — a ~1.2× LOSS). The q14 rule
-    * applies from the orders side: the pushed quarter filter leaves
-    * only ~3.6% of orders, so the join output is small and the erased
-    * fact movement is mostly the R-flagged lineitem exchange — a
-    * page-cache round trip locally — while the arm PAYS a real extra
-    * aggregation round (the pre-join rollup) and the full-table
-    * bucket-granular lineitem read. Kept as a measured negative arm:
-    * pre-join rollups pay only when the join side being avoided is
-    * LARGE relative to the rollup input (q18's HAVING rollup yes,
-    * q10's quarter slice no).
-    *
-    * Oracle BYTE-IDENTICAL to `q10_full_returned_items`' spec text. */
-  val q10Bucketed: graft.GQuery = graft.GQuery(
-    "q10_full_bucketed",
-    (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val root = graft.tpch.FullTpch.ensurePersisted(s, graft.tpch.TpchGen.sfFromDir(dir))
-      val (liTable, orTable) = orderkeyLayout(s, root)
-      val ss = sortedScanSession(s)
-      val li = ss.table(liTable)
-        .where(col("l_returnflag") === "R")
-        .select(col("l_orderkey"),
-          floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
-            .cast("long").as("cents"))
-      val ord = ss.table(orTable)
-        .where(col("o_orderdate") >= lit("1993-10-01").cast("date") &&
-          col("o_orderdate") < lit("1994-01-01").cast("date"))
-        .select(col("o_orderkey"), col("o_custkey"))
-      val perCust = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("cents")).as("rev_cents"))
-      val cust = ss.read.parquet(s"$root/customer.parquet")
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-          col("c_address"), col("c_phone"), col("c_comment"), col("c_nationkey"))
-      val nation = ss.read.parquet(s"$root/nation.parquet")
-        .select(col("n_nationkey"), col("n_name"))
-      perCust.join(cust, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("c_name"),
-          (col("rev_cents").cast("double") / 100.0).as("revenue"),
-          col("c_acctbal"), col("n_name"), col("c_address"),
-          col("c_phone"), col("c_comment"))
-        .orderBy(desc("revenue"), col("c_custkey"))
-        .limit(20)
-    },
-    graft.tpch.FullTpch.q10Full.oracle,
-    tags = Set("sinks", "tpch_full"))
-
-  /** Cross-LAYOUT consumer (partkey + partsupp layouts): textbook
-    * TPC-H Q20 (excess suppliers), 5.63× raw at the sf10 settle — raw
-    * pays (a) an 8.5M-row hash exchange + sort for the correlated
-    * half-of-shipped-quantity aggregate Catalyst rewrites to a
-    * (l_partkey, l_suppkey) GROUP BY, and (b) a partsupp exchange for
-    * the IN-chain join. Over the layouts both vanish: the lineitem
-    * aggregate's grouping keys are a SUPERSET of the partkey bucket
-    * key (hash partitioning on a subset satisfies the clustered
-    * distribution), and the partsupp⋈forest-parts semi plus the
-    * ps⋈half-sum join are co-bucketed across the two catalog layouts
-    * (same bucket count, same key — only bucket-LOCAL (partkey,
-    * suppkey) sorts remain, never an exchange). NULL semantics of the
-    * spec's `ps_availqty > (SELECT 0.5*sum(...))` — a ps row whose
-    * correlated slice is empty compares against NULL and drops — are
-    * preserved by the INNER join against the aggregated frame (absent
-    * group = dropped row). The eligible-supplier key set then
-    * semi-joins CANADA suppliers (AQE broadcasts the small set).
-    *
-    * MEASURED VERDICT (round 16, two interleaved same-JVM sf10 A/B
-    * arms): raw wins decisively — raw [1.373,...] vs arm 1 (full-agg)
-    * [2.981,...] and arm 2 (forest-semi-reduced agg, shipped)
-    * [3.263,...], a ~2.4× LOSS. The per-node breakdown places the cost
-    * on the half-sum side's SCAN: the correlated aggregate must decode
-    * all 60M lineitem rows whichever layout serves it (the date filter
-    * selects 15% scattered through every row group), so the layout
-    * erases only a ~180k-row agg exchange that raw's own plan already
-    * reduces via a broadcast forest semi — nothing to win, while the
-    * bucket-granular scan and the co-bucketed merge machinery cost
-    * extra. Completes the layout boundary set: clustering cannot help
-    * a consumer whose cost is FULL-TABLE DECODE rather than movement.
-    * Oracle BYTE-IDENTICAL to `q20_full_excess_suppliers`' spec
-    * text. */
-  val q20Bucketed: graft.GQuery = graft.GQuery(
-    "q20_full_bucketed",
-    (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val root = graft.tpch.FullTpch.ensurePersisted(s, graft.tpch.TpchGen.sfFromDir(dir))
-      val (liTable, ptTable) = partkeyLayout(s, root)
-      val (psTable, _) = partsuppLayout(s, root)
-      val ss = sortedScanSession(s)
-      // the ps⋈half-sum join keys are (partkey, suppkey) while both
-      // sides arrive hash-partitioned on partkey alone — a valid
-      // subset co-partitioning (equal partkeys ⇒ co-located rows) that
-      // EnsureRequirements only accepts with the all-cluster-keys
-      // requirement relaxed; sortedScanSession returns a fresh
-      // session, so the conf is scoped to this key
-      ss.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      val forest = ss.table(ptTable)
-        .where(col("p_name").like("forest%")).select(col("p_partkey"))
-      // semi-reduce lineitem to forest partkeys BEFORE aggregating —
-      // bucket-aligned, exchange-free, and it shrinks the aggregate's
-      // group count ~25× (the correlated sum is only ever consumed for
-      // forest×partsupp pairs, which the ps-side semi already
-      // restricts, so dropping the other groups changes no row); the
-      // first measured arm aggregated ALL of 1994 lineitem into ~6M
-      // groups and paid their merge-join sort — 2.1× WORSE than raw
-      // (dev/BENCH_NOTES round 16)
-      val halfSum = ss.table(liTable)
-        .where(col("l_shipdate") >= lit("1994-01-01").cast("date") &&
-          col("l_shipdate") < lit("1995-01-01").cast("date"))
-        .join(forest, col("l_partkey") === col("p_partkey"), "left_semi")
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg((sum(col("l_quantity")) * 0.5).as("half_qty"))
-      val eligible = ss.table(psTable)
-        .select(col("ps_partkey"), col("ps_suppkey"), col("ps_availqty"))
-        .join(forest, col("ps_partkey") === col("p_partkey"), "left_semi")
-        .join(halfSum, col("ps_partkey") === col("l_partkey") &&
-          col("ps_suppkey") === col("l_suppkey"))
-        .where(col("ps_availqty") > col("half_qty"))
-        .select(col("ps_suppkey")).distinct()
-      ss.read.parquet(s"$root/supplier.parquet")
-        .select(col("s_suppkey"), col("s_name"), col("s_address"), col("s_nationkey"))
-        .join(broadcast(ss.read.parquet(s"$root/nation.parquet")
-          .where(col("n_name") === "CANADA").select(col("n_nationkey"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(eligible, col("s_suppkey") === col("ps_suppkey"), "left_semi")
-        .select(col("s_name"), col("s_address"))
-        .orderBy(col("s_name"))
-    },
-    graft.tpch.FullTpch.q20Full.oracle,
-    tags = Set("sinks", "tpch_full"))
-
-  /** Three-layout consumer (partkey + partsupp + orderkey): textbook
-    * TPC-H Q9 (profit), 4.09× raw at the sf10 settle. The raw plan's
-    * bill (BreakdownMain, dev/BENCH_NOTES round 16): a 9.35M-row sort
-    * by (partkey, suppkey) for the partsupp SMJ (12.2 s summed, 1.3 GB
-    * peak), partsupp's own exchange+sort, a second 9.35M-row
-    * re-exchange+sort toward orders, and orders' 15M-row
-    * exchange+sort. The route erases all but one: the part name filter
-    * is a bucket-aligned SEMI (part contributes nothing but the
-    * filter), the partsupp join rides subset co-partitioning across
-    * the partkey and partsupp layouts (q20's mechanism — partkey alone
-    * co-locates the (partkey, suppkey) keys; only bucket-LOCAL sorts
-    * remain), and the orders join shuffles the reduced frame INTO the
-    * orderkey layout's bucket partitioning — the orders side itself
-    * stays exchange-free and pre-sorted because bucket count equals
-    * the shuffle partition count and both hash with murmur3. Supplier
-    * and nation broadcast (q5 precedent: narrow dims over the reduced
-    * fact). One hash exchange survives: the reduced frame's move to
-    * the orderkey (plus the 350-group rollup).
-    *
-    * MEASURED VERDICT (round 16, two interleaved same-JVM sf10 A/Bs):
-    * PARITY within weather — window 1 mins raw 3.189 vs bucketed
-    * 3.531, window 2 raw 3.035 vs bucketed 2.627; the windows disagree
-    * on the winner and both deltas sit inside the observed run-to-run
-    * band. Rule 5 applies: the erased items are real in the plan (the
-    * 12.2 s summed (partkey,suppkey) sort, partsupp's and orders'
-    * exchanges+sorts) but partially local-offset by bucket-granular
-    * scan cost; at network scale the erased movement dominates, which
-    * is the contract the arm ships on. Oracle BYTE-IDENTICAL to
-    * `q9_full_profit`'s spec text. */
-  val q9Bucketed: graft.GQuery = graft.GQuery(
-    "q9_full_bucketed",
-    (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val root = graft.tpch.FullTpch.ensurePersisted(s, graft.tpch.TpchGen.sfFromDir(dir))
-      val (liTable, ptTable) = partkeyLayout(s, root)
-      val (psTable, _) = partsuppLayout(s, root)
-      val (_, orTable) = orderkeyLayout(s, root)
-      val ss = sortedScanSession(s)
-      ss.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      val forest = ss.table(ptTable)
-        .where(col("p_name").like("%forest%")).select(col("p_partkey"))
-      val li = ss.table(liTable)
-        .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-        .join(forest, col("l_partkey") === col("p_partkey"), "left_semi")
-      val ps = ss.table(psTable)
-        .select(col("ps_partkey"), col("ps_suppkey"), col("ps_supplycost"))
-      val amountCents = floor(
-        (col("l_extendedprice") * (lit(1) - col("l_discount")) -
-          col("ps_supplycost") * col("l_quantity")) * 100 + 0.5).cast("long")
-      val reduced = li.join(ps,
-        col("l_partkey") === col("ps_partkey") &&
-          col("l_suppkey") === col("ps_suppkey"))
-        .select(col("l_orderkey"), col("l_suppkey"), amountCents.as("amount_cents"))
-      val ord = ss.table(orTable).select(col("o_orderkey"), col("o_orderdate"))
-      val suppNation = ss.read.parquet(s"$root/supplier.parquet")
-        .select(col("s_suppkey"), col("s_nationkey"))
-        .join(broadcast(ss.read.parquet(s"$root/nation.parquet")
-          .select(col("n_nationkey"), col("n_name"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("nation"))
-      reduced.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(suppNation), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("nation"), year(col("o_orderdate")).as("o_year"))
-        .agg((sum(col("amount_cents")).cast("double") / 100.0).as("sum_profit"))
-        .orderBy(col("nation"), desc("o_year"))
-    },
-    graft.tpch.FullTpch.q9Full.oracle,
-    tags = Set("sinks", "tpch_full"))
-
   /** Sole consumer of the [[custkeyLayout]]: textbook TPC-H Q13
     * (customer distribution), 6.13× raw at the sf10 settle — the raw
     * plan's dominant movement is the outer join's orders exchange,
@@ -933,14 +597,12 @@ object Sinks {
     * what remains is the ≤|distinct c_count|-row distribution rollup
     * (spec pins exactly one hash exchange).
     *
-    * MEASURED VERDICT (round 16, interleaved same-JVM sf10 A/B, 5
-    * rounds): raw [1.580,1.593,1.596,1.597,1.656] vs bucketed
-    * [1.511,1.556,1.626,1.636,1.744] — PARITY on this box. Like q3's
-    * verdict: the erased ~900 MB comment-carrying exchange is a
-    * page-cache round trip under local[32], while the 15M-row
-    * outer-join + two-aggregate compute (which both arms share)
-    * dominates the wall; on a network cluster the erased bytes are the
-    * dominant term, which is the contract the arm ships on. Oracle
+    * MEASURED VERDICT: round 16's 5-round sf10 A/B on local[32] read
+    * parity (raw [1.580,1.593,1.596,1.597,1.656] vs bucketed
+    * [1.511,1.556,1.626,1.636,1.744]); the 10-pair `AbMain` run at sf1
+    * on 4 cores is a clear win — 10/10 pairs, median 1.241 s vs raw
+    * 1.833 s, raw IQR 0.244 s. With fewer cores the erased
+    * comment-carrying exchange is a larger share of the wall. Oracle
     * BYTE-IDENTICAL to `q13_full_customer_distribution`'s spec text. */
   val q13Bucketed: graft.GQuery = graft.GQuery(
     "q13_full_bucketed",
@@ -961,204 +623,6 @@ object Sinks {
         .orderBy(desc("custdist"), desc("c_count"))
     },
     graft.tpch.FullTpch.q13Full.oracle,
-    tags = Set("sinks", "tpch_full"))
-
-  /** First consumer of the [[partsuppLayout]]: textbook TPC-H Q2
-    * (min-cost supplier), round 15's WORST non-routed sf10 residue
-    * (16.2× raw). Raw q2 evaluates the 5-way join TWICE — once for the
-    * outer block, once for the correlated min-cost scalar subquery
-    * Catalyst rewrites to a second partsupp⋈supplier⋈nation⋈region
-    * aggregate tree. This build collapses both trees into ONE pass:
-    * the size/type-filtered part joins partsupp bucket-aligned, the
-    * EUROPE supplier frame joins the reduced fact without a broadcast
-    * hint (the q5 routing rule: a full dimension is never broadcast by
-    * fiat — at bench sf AQE broadcasts it, at cluster scale the
-    * planner shuffles), and the correlated min becomes a per-partkey
-    * window MIN over the joined frame — rows at the min survive,
-    * exactly the subquery's semantics (ties keep both suppliers, as
-    * the spec requires). ORDER BY + LIMIT plans as TakeOrdered, no
-    * range exchange.
-    *
-    * MEASURED VERDICT (round 16, interleaved same-JVM sf10 A/B, 5
-    * rounds): raw [1.233,1.343,1.448,1.454,2.197] vs bucketed
-    * [1.476,1.592,1.645,1.722,2.009] — the layout arm LOSES ~1.2×,
-    * and the per-node metric breakdown (BreakdownMain,
-    * dev/BENCH_NOTES round 16) shows why: at sf10 raw q2's joins are
-    * ALL AQE-broadcast already (filtered part is 7.8k rows, EUROPE
-    * suppliers 20k — there is no partsupp exchange to erase), so the
-    * single-pass rewrite saves only a sub-floor re-aggregation while
-    * paying extra stage boundaries (AQE's late SMJ→BHJ conversions
-    * leave already-executed shuffle stages behind). The residue is
-    * per-stage machinery over two cheap scans (0.34 s + 0.29 s wall of
-    * 8M/2M-row scan+probe), not shuffle volume. Kept as the layout
-    * family's measured negative arm for partsupp-scale tables — the
-    * routing rule gains its third clause: clustering pays ∝ erased
-    * exchange VOLUME, and a table whose joins already broadcast has
-    * none; the crossover is the scale where the dimension outgrows the
-    * broadcast threshold (sf ≳ 10³ for part here). Oracle
-    * BYTE-IDENTICAL to `q2_full_min_cost_supplier`'s spec text. */
-  val q2Bucketed: graft.GQuery = graft.GQuery(
-    "q2_full_bucketed",
-    (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val root = graft.tpch.FullTpch.ensurePersisted(s, graft.tpch.TpchGen.sfFromDir(dir))
-      val (psTable, ptTable) = partsuppLayout(s, root)
-      val ss = sortedScanSession(s)
-      val pt = ss.table(ptTable)
-        .where(col("p_size") === 15 && col("p_type").like("%BRASS"))
-        .select(col("p_partkey"), col("p_mfgr"))
-      val ps = ss.table(psTable)
-        .select(col("ps_partkey"), col("ps_suppkey"), col("ps_supplycost"))
-      // bucket-aligned: both scans pre-partitioned on the part key
-      val reduced = ps.join(pt, col("ps_partkey") === col("p_partkey"))
-      val eurNations = ss.read.parquet(s"$root/nation.parquet")
-        .join(broadcast(ss.read.parquet(s"$root/region.parquet")
-          .where(col("r_name") === "EUROPE").select(col("r_regionkey"))),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"))
-      val eurSupp = ss.read.parquet(s"$root/supplier.parquet")
-        .join(broadcast(eurNations), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("s_acctbal"), col("s_name"),
-          col("s_address"), col("s_phone"), col("s_comment"), col("n_name"))
-      // both the correlated subquery and the outer block restrict to
-      // EUROPE suppliers, so after this inner join the per-partkey MIN
-      // over the window IS the subquery's min — one pass, not two trees
-      val cand = reduced.join(eurSupp, col("ps_suppkey") === col("s_suppkey"))
-      cand
-        .withColumn("min_cost",
-          min(col("ps_supplycost")).over(Window.partitionBy(col("p_partkey"))))
-        .where(col("ps_supplycost") === col("min_cost"))
-        .select(col("s_acctbal"), col("s_name"), col("n_name"), col("p_partkey"),
-          col("p_mfgr"), col("s_address"), col("s_phone"), col("s_comment"))
-        .orderBy(desc("s_acctbal"), col("n_name"), col("s_name"), col("p_partkey"))
-        .limit(100)
-    },
-    graft.tpch.FullTpch.q2Full.oracle,
-    tags = Set("sinks", "tpch_full"))
-
-  /** Second consumer of the [[partsuppLayout]] — and the key the layout
-    * exists for even without a part join: textbook TPC-H Q11
-    * (important stock) GROUPS partsupp on ps_partkey twice — once per
-    * group, once for the 0.0001-fraction scalar total — so raw q11
-    * scans and aggregates partsupp in two separate trees (9.8× at the
-    * sf10 settle, every join already AQE-broadcast: the cost is the
-    * double aggregation, not join strategy — r15 plan audit). Over the
-    * layout the per-part aggregation consumes the bucket partitioning
-    * with ZERO exchange, and the scalar total is DERIVED from the
-    * per-group frame (sum of per-group BIGINT cents sums — exact), so
-    * partsupp is scanned and aggregated ONCE: the frame is persisted
-    * (Caches-tracked, released by the harness per run) and re-read for
-    * the 1-row total that the HAVING crossJoins back as a broadcast
-    * scalar. GERMANY's supplier keys ride a broadcast — bounded by
-    * |supplier|/25 (two ints per row; a deployment at sf ≳ 10⁴ where
-    * one nation's keys outgrow broadcast would shuffle partsupp on the
-    * suppkey instead and re-exchange the 1/25-reduced rows to the
-    * partkey).
-    *
-    * MEASURED VERDICT (round 16, interleaved same-JVM sf10 A/B, 5
-    * rounds): raw [0.691,0.744,0.768,0.820,0.853] vs bucketed
-    * [1.393,1.563,1.571,1.597,1.991] — the derive-the-total arm LOSES
-    * 2×. The r15 plan audit already showed raw q11's joins all
-    * AQE-broadcast; what this A/B adds is that the DOUBLE AGGREGATION
-    * is not the cost either: the GERMANY-filtered per-part agg is
-    * ~320k rows at sf10, so each raw tree is ~0.35 s of per-stage
-    * constants, while the persist arm pays a cache-materialization
-    * job, the InMemoryRelation read on both branches, and a codegen
-    * boundary — more fixed cost than the saved scan (partsupp is
-    * 100 MB; its scan is ~0.1 s). Kept as the measured negative arm:
-    * derive-from-the-aggregate pays only when the re-scanned input
-    * dwarfs the cached frame's materialization cost (true for
-    * lineitem-scale tables, false at partsupp scale). Note q11's sf10
-    * result set is EMPTY in both engines (the spec's fixed 0.0001
-    * fraction outgrows the per-part share as sf rises) — the A/B
-    * measures the aggregation machinery, which both arms execute in
-    * full. Oracle BYTE-IDENTICAL to `q11_full_important_stock`'s
-    * spec text. */
-  val q11Bucketed: graft.GQuery = graft.GQuery(
-    "q11_full_bucketed",
-    (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val root = graft.tpch.FullTpch.ensurePersisted(s, graft.tpch.TpchGen.sfFromDir(dir))
-      val (psTable, _) = partsuppLayout(s, root)
-      val ss = sortedScanSession(s)
-      val german = ss.read.parquet(s"$root/supplier.parquet")
-        .join(broadcast(ss.read.parquet(s"$root/nation.parquet")
-          .where(col("n_name") === "GERMANY").select(col("n_nationkey"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"))
-      val cents = floor(col("ps_supplycost") * col("ps_availqty") * 100 + 0.5)
-        .cast("long")
-      val perPart = graft.Caches.persistTracked(
-        ss.table(psTable)
-          .select(col("ps_partkey"), col("ps_suppkey"), cents.as("cents"))
-          .join(broadcast(german), col("ps_suppkey") === col("s_suppkey"))
-          .groupBy(col("ps_partkey"))
-          .agg(sum(col("cents")).as("value_cents")))
-      // re-aggregate the aggregate: the scalar total is the exact sum
-      // of the per-group BIGINT sums — no second partsupp scan
-      val total = perPart.agg(sum(col("value_cents")).as("total_cents"))
-      perPart.crossJoin(broadcast(total))
-        .where(col("value_cents").cast("double") >
-          col("total_cents").cast("double") * 0.0001)
-        .select(col("ps_partkey"),
-          (col("value_cents").cast("double") / 100.0).as("value"))
-        .orderBy(desc("value"))
-    },
-    graft.tpch.FullTpch.q11Full.oracle,
-    tags = Set("sinks", "tpch_full"))
-
-  /** Third consumer of the [[partsuppLayout]]: textbook TPC-H Q16
-    * (parts/supplier counts, 10.0× raw at the sf10 settle). Over the
-    * layout the partsupp⋈part join is bucket-aligned (zero exchange —
-    * raw hash-partitions both sides), the NOT IN complaint filter is a
-    * broadcast anti join (the generator's s_suppkey is a non-null PK,
-    * so the null-aware arm of NOT IN can never fire and a plain
-    * left_anti is row-identical — the byte-identical oracle enforces
-    * it), and ONE exchange remains by necessity: the
-    * count(DISTINCT ps_suppkey) grouped on (brand, type, size) has to
-    * move rows to their group — but only the filtered, joined,
-    * 4-narrow-column rows, never raw partsupp.
-    *
-    * MEASURED VERDICT (round 16, interleaved same-JVM sf10 A/B, 5
-    * rounds): raw [1.335,1.502,1.517,1.524,2.107] vs bucketed
-    * [2.339,2.474,2.528,2.610,2.695] — the layout arm LOSES 1.7×. The
-    * per-node breakdown (BreakdownMain, dev/BENCH_NOTES round 16)
-    * attributes q16's whole residue to the distinct-count HASH
-    * AGGREGATION (≈38 s of summed aggTime ≈ 1.2 s wall on 32 cores:
-    * partial dedup of 1.19M (brand,type,size,suppkey) rows, merge,
-    * count rounds), which no layout can erase — and the raw join was
-    * never the cost (AQE broadcasts the 297k-row filtered part; the
-    * bucket-aligned SMJ the layout buys is SLOWER than that broadcast
-    * probe). Kept as the layout family's measured negative arm for
-    * aggregation-bound queries: clustering pays ∝ erased exchange
-    * volume, and q16's only exchanges are the regroup the query's
-    * semantics require. Oracle BYTE-IDENTICAL to
-    * `q16_full_parts_supplier_cnt`. */
-  val q16Bucketed: graft.GQuery = graft.GQuery(
-    "q16_full_bucketed",
-    (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val root = graft.tpch.FullTpch.ensurePersisted(s, graft.tpch.TpchGen.sfFromDir(dir))
-      val (psTable, ptTable) = partsuppLayout(s, root)
-      val ss = sortedScanSession(s)
-      val pt = ss.table(ptTable)
-        .where(col("p_brand") =!= "Brand#45" &&
-          !col("p_type").like("MEDIUM POLISHED%") &&
-          col("p_size").isin(49, 14, 23, 45, 19, 3, 36, 9))
-        .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-      val complainers = ss.read.parquet(s"$root/supplier.parquet")
-        .where(col("s_comment").like("%Customer%Complaints%"))
-        .select(col("s_suppkey"))
-      ss.table(psTable).select(col("ps_partkey"), col("ps_suppkey"))
-        .join(pt, col("ps_partkey") === col("p_partkey"))
-        .join(broadcast(complainers),
-          col("ps_suppkey") === col("s_suppkey"), "left_anti")
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("ps_suppkey")).as("supplier_cnt"))
-        .orderBy(desc("supplier_cnt"), col("p_brand"), col("p_type"), col("p_size"))
-    },
-    graft.tpch.FullTpch.q16Full.oracle,
     tags = Set("sinks", "tpch_full"))
 
   /** Compact a parquet directory's files to ~`targetBytes` outputs and

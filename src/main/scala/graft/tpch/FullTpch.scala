@@ -143,9 +143,7 @@ object FullTpch {
     * so the spill-safe SMJ default wins on robustness at any larger
     * scale. Any future entry here must carry an interleaved
     * same-JVM A/B in BENCH_NOTES — FullTpchConfSpec pins the empty
-    * state and proves the routing mechanism live. The
-    * `SPARK_GRAFT_NO_CONF_OVERRIDES` escape hatch below is that
-    * A/B's control-arm instrument. */
+    * state and proves the routing mechanism live. */
   private[graft] val confOverrides: Map[String, Seq[(String, String)]] =
     Map.empty
 
@@ -171,14 +169,7 @@ object FullTpch {
       name,
       (s, dir) => {
         val root = ensurePersisted(s, TpchGen.sfFromDir(dir))
-        // SPARK_GRAFT_NO_CONF_OVERRIDES: measurement escape hatch — a
-        // settle/A/B run sets it to time the same key over the default
-        // session confs, so every claimed override win has a same-
-        // instrument counterfactual (dev/BENCH_NOTES.md round 15)
-        val confs =
-          if (sys.env.contains("SPARK_GRAFT_NO_CONF_OVERRIDES")) Nil
-          else confOverrides.getOrElse(name, Nil)
-        sessionFor(s, root, confs).sql(sparkSql)
+        sessionFor(s, root, confOverrides.getOrElse(name, Nil)).sql(sparkSql)
       },
       Some(oracleSql),
       tags = Set("tpch_full"))

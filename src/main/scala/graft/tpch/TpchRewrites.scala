@@ -91,8 +91,9 @@ object TpchRewrites {
     * 3-month slice of lineitem two full times (4.86× at the sf10
     * settle, the suite's worst duck ratio in the r16 canonical line's
     * duck column). This is the exact situation where the
-    * derive-from-the-aggregate pattern PAYS (contrast q11_full_bucketed,
-    * where it lost because partsupp is 100 MB): the per-supplier
+    * derive-from-the-aggregate pattern PAYS (contrast the retired
+    * q11_full_bucketed arm, where it lost 2× at sf10 because partsupp
+    * is 100 MB — SURVEY §4): the per-supplier
     * revenue frame is computed ONCE, persisted (Caches-tracked,
     * released by the harness per run), and reused for both the scalar
     * max (a broadcast 1-row re-aggregate) and the winner selection —

@@ -37,10 +37,9 @@ class PlanSpec extends SparkSpecBase {
       // collocations: lift attaches the broadcast 1-row n_pairs
       // scalar via crossJoin
       "text_cooccurrence",
-      // q11's HAVING total: the per-group frame crossJoins a broadcast
-      // 1-row re-aggregate of itself (Sinks.q11Bucketed scaladoc);
-      // q22's rewrite crossJoins its broadcast 1-row avg the same way
-      "q11_full_bucketed", "q22_full_anti_rewrite")
+      // q22's rewrite: the customer frame crossJoins its broadcast
+      // 1-row avg-balance scalar
+      "q22_full_anti_rewrite")
     Registry.all.filterNot(q => allowed(q.name)).foreach { q =>
       val plan = q.build(spark, sfDir).queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin"),

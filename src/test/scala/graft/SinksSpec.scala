@@ -125,23 +125,6 @@ class SinksSpec extends SparkSpecBase {
     }
   }
 
-  test("q14_full_bucketed: partkey layout streams the merge join sort-free, zero hash exchanges") {
-    withAutoBroadcastDisabled {
-      val df = Registry.byName("q14_full_bucketed").build(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"), plan.take(2000))
-      val shuffles = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-      assert(shuffles == 0, s"expected no hash exchange over the partkey layout, got $shuffles:\n${plan.take(4000)}")
-      // bucket-sorted scans feed the merge join directly — no re-sort;
-      // the single-row global agg's SinglePartition exchange is the
-      // only data movement in the whole query
-      val sorts = "\\bSort \\[".r.findAllMatchIn(plan).size
-      assert(sorts == 0, s"expected sort-free merge join over bucket order, got $sorts:\n${plan.take(4000)}")
-      val expected = Registry.byName("q14_full_promo_revenue").build(spark, sfDir)
-      assert(df.collect().toSeq == expected.collect().toSeq)
-    }
-  }
-
   test("q5_full_bucketed: fact join rides the layout; only the reduced fact, customer, and rollup move") {
     withAutoBroadcastDisabled {
       val df = Registry.byName("q5_full_bucketed").build(spark, sfDir)
@@ -184,90 +167,6 @@ class SinksSpec extends SparkSpecBase {
       assert(sorts.size == 1, s"expected only the avg-frame re-sort, got ${sorts.size}:\n${plan.take(4000)}")
       assert(plan.contains("Sort [lim_partkey"), s"the surviving sort is not the avg frame:\n${plan.take(4000)}")
       val expected = Registry.byName("q17_full_small_qty_revenue").build(spark, sfDir)
-      assert(df.collect().toSeq == expected.collect().toSeq)
-    }
-  }
-
-  test("q2_full_bucketed: one pass over the layout replaces both correlated trees") {
-    withAutoBroadcastDisabled {
-      val df = Registry.byName("q2_full_bucketed").build(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"), plan.take(2000))
-      // raw q2 exchanges partsupp twice (outer block + the rewritten
-      // min-cost subquery tree); here the ps⋈part join is bucket-
-      // aligned and the surviving exchanges move only the 1/250-reduced
-      // fact, the EUROPE suppliers (shuffled, never broadcast — the q5
-      // routing rule), and the candidate frame's window re-exchange
-      val shuffles = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-      assert(shuffles <= 3, s"expected at most fact/supplier/window shuffles, got $shuffles:\n${plan.take(4000)}")
-      // partsupp is scanned ONCE (raw q2 scans it twice)
-      val psScans = "graft_bktfact_ps_partsupp".r.findAllMatchIn(plan).size
-      assert(psScans >= 1, s"expected the bucketed partsupp scan:\n${plan.take(4000)}")
-      // ORDER BY + LIMIT plans as TakeOrdered — no range exchange
-      assert(!plan.contains("Exchange rangepartitioning"),
-        s"LIMIT should plan as TakeOrdered:\n${plan.take(4000)}")
-      val expected = Registry.byName("q2_full_min_cost_supplier").build(spark, sfDir)
-      assert(df.collect().toSeq == expected.collect().toSeq)
-    }
-  }
-
-  test("q11_full_bucketed: single partsupp aggregation, scalar total derived, zero hash exchanges") {
-    withAutoBroadcastDisabled {
-      val df = Registry.byName("q11_full_bucketed").build(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      // the per-part aggregation consumes the bucket partitioning and
-      // the scalar total re-aggregates the (persisted) per-group frame
-      // — no second partsupp scan, no hash exchange anywhere; the only
-      // movements are the 1-row total's SinglePartition, its broadcast,
-      // and the final ORDER BY range exchange
-      val shuffles = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-      assert(shuffles == 0, s"expected zero hash exchanges, got $shuffles:\n${plan.take(4000)}")
-      // both the HAVING total and the output read the SAME persisted
-      // per-group frame (InMemoryTableScan on both branches) — the
-      // plan string prints the cached partsupp scan under each
-      // InMemoryRelation, but physically partsupp is read once
-      val memoReads = "InMemoryTableScan".r.findAllMatchIn(plan).size
-      assert(memoReads >= 2, s"expected both branches to reuse the persisted per-group frame:\n${plan.take(4000)}")
-      val expected = Registry.byName("q11_full_important_stock").build(spark, sfDir)
-      assert(df.collect().toSeq == expected.collect().toSeq)
-      Caches.release()
-    }
-  }
-
-  test("q16_full_bucketed: bucket-aligned join; only the distinct-count regroup moves rows") {
-    withAutoBroadcastDisabled {
-      val df = Registry.byName("q16_full_bucketed").build(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"), plan.take(2000))
-      // the ps⋈part join is exchange-free; what remains is the
-      // irreducible count(DISTINCT) regroup — Spark plans it as two
-      // aggregation rounds (dedup on (b,t,s,suppkey), then count),
-      // i.e. at most 2 hash exchanges over filtered 4-column rows
-      val shuffles = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-      assert(shuffles <= 2, s"expected only the distinct-count regroup, got $shuffles:\n${plan.take(4000)}")
-      // NOT IN rides a broadcast anti join, never a shuffled one
-      assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-        s"complaint filter should be a broadcast anti join:\n${plan.take(4000)}")
-      val expected = Registry.byName("q16_full_parts_supplier_cnt").build(spark, sfDir)
-      assert(df.collect().toSeq == expected.collect().toSeq)
-    }
-  }
-
-  test("q3_full_bucketed: fact join, semi filter, and rollup all ride the bucket partitioning") {
-    withAutoBroadcastDisabled {
-      val df = Registry.byName("q3_full_bucketed").build(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"), plan.take(2000))
-      // raw q3 hash-partitions both date-filtered fact halves and
-      // re-exchanges toward customer; over the layout the fact join is
-      // bucket-aligned, BUILDING arrives as a broadcast key-only semi,
-      // and the GROUP BY (superset of the bucket key) aggregates in
-      // place — zero hash exchanges, TakeOrdered for the LIMIT
-      val shuffles = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-      assert(shuffles == 0, s"expected zero hash exchanges, got $shuffles:\n${plan.take(4000)}")
-      assert(!plan.contains("Exchange rangepartitioning"),
-        s"LIMIT should plan as TakeOrdered:\n${plan.take(4000)}")
-      val expected = Registry.byName("q3_full_shipping_priority").build(spark, sfDir)
       assert(df.collect().toSeq == expected.collect().toSeq)
     }
   }
@@ -330,53 +229,18 @@ class SinksSpec extends SparkSpecBase {
     }
   }
 
-  test("q10_full_bucketed: per-custkey rollup before the customer join; fact join exchange-free") {
-    withAutoBroadcastDisabled {
-      val df = Registry.byName("q10_full_bucketed").build(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"), plan.take(2000))
-      // movements: per-custkey rollup exchange (reduced fact), customer
-      // shuffle into that partitioning; nation broadcasts; LIMIT 20 is
-      // TakeOrdered
-      val shuffles = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-      assert(shuffles <= 3, s"expected at most rollup/customer shuffles, got $shuffles:\n${plan.take(4000)}")
-      assert(!plan.contains("Exchange rangepartitioning"),
-        s"LIMIT should plan as TakeOrdered:\n${plan.take(4000)}")
-      val expected = Registry.byName("q10_full_returned_items").build(spark, sfDir)
-      assert(df.collect().toSeq == expected.collect().toSeq)
-    }
-  }
-
-  test("q20_full_bucketed: cross-layout co-bucketed joins; only the suppkey distinct moves") {
-    withAutoBroadcastDisabled {
-      val df = Registry.byName("q20_full_bucketed").build(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"), plan.take(2000))
-      // the (l_partkey, l_suppkey) aggregate consumes the partkey
-      // bucketing (subset partitioning satisfies the clustering), and
-      // the ps⋈forest semi + ps⋈half-sum joins are co-bucketed across
-      // the partkey and partsupp layouts — movements left: the
-      // eligible-suppkey distinct and the final supplier semi
-      val shuffles = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-      assert(shuffles <= 3, s"expected only suppkey-side movements, got $shuffles:\n${plan.take(4000)}")
-      val expected = Registry.byName("q20_full_excess_suppliers").build(spark, sfDir)
-      assert(df.collect().toSeq == expected.collect().toSeq)
-    }
-  }
-
-  test("q9_full_bucketed: three layouts compose; only the reduced frame and rollup move") {
-    withAutoBroadcastDisabled {
-      val df = Registry.byName("q9_full_bucketed").build(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"), plan.take(2000))
-      // part-name semi bucket-aligned; li⋈ps subset-co-partitioned
-      // across layouts; orders consumes its own bucket partitioning
-      // while the reduced frame shuffles into it — surviving hash
-      // exchanges: that one move plus the 350-group rollup
-      val shuffles = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-      assert(shuffles <= 2, s"expected only the reduced-frame move and the rollup, got $shuffles:\n${plan.take(4000)}")
-      val expected = Registry.byName("q9_full_profit").build(spark, sfDir)
-      assert(df.collect().toSeq == expected.collect().toSeq)
+  test("building a layout key leaves no planner conf behind on the shared layout session") {
+    // every *_full_bucketed key reads through one cached child session,
+    // so a conf.set by one key there would re-plan every later key —
+    // this co-partitioning relaxation is the one layout keys have set
+    val conf = "spark.sql.requireAllClusterKeysForCoPartition"
+    val default = spark.newSession().conf.get(conf)
+    val frames = Registry.all.filter(_.name.endsWith("_full_bucketed"))
+      .map(q => q.name -> q.build(spark, sfDir))
+    assert(frames.nonEmpty)
+    frames.foreach { case (name, df) =>
+      assert(df.sparkSession.conf.get(conf) == default,
+        s"$name's session reads $conf=${df.sparkSession.conf.get(conf)}, default $default")
     }
   }
 
