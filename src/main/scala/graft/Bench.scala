@@ -46,6 +46,12 @@ object Bench {
       accepted: Boolean, warmBefore: Double, warmAfter: Double, steal: Double,
       times: Map[String, Seq[Double]], errs: Map[String, String])
 
+  /** Max keys per family chunk (see [[chunkPlan]]). */
+  private val ChunkSize = 12
+
+  /** Backoff seconds before retry passes 2, 3, … of rejected chunks. */
+  private val RetryBackoffS = Seq(20, 60)
+
   /** Registry family a key benches under — chunks never mix families,
     * so a retry re-runs keys with like cost shape and shared inputs. */
   def familyOf(k: String): String =
@@ -224,8 +230,7 @@ object Bench {
     // cold run — the min from any window is valid; acceptance is what
     // requires a clean window). Global health = every chunk earned at
     // least one accepted attempt.
-    val chunkSize = sys.env.getOrElse("SPARK_GRAFT_BENCH_CHUNK", "12").toInt
-    val chunks = chunkPlan(names, chunkSize)
+    val chunks = chunkPlan(names, ChunkSize)
     // single-sample bracket sentinel: one over-ceiling reading gets ONE
     // re-probe and the min counts — a lone JIT/GC straggler will not
     // repeat, a storm will (vs. raising the ceiling, which would let
@@ -267,17 +272,13 @@ object Bench {
     }
     val attempts = collection.mutable.Map.empty[String, Vector[ChunkAttempt]]
       .withDefaultValue(Vector())
-    // backoff seconds before retry passes 2, 3, ... — env-tunable so a
-    // dev loop can set "0" and a hostile-host driver run can stretch it
-    val backoffs = sys.env.getOrElse("SPARK_GRAFT_BENCH_BACKOFF_S", "20,60")
-      .split(",").toSeq.filter(_.trim.nonEmpty).map(_.trim.toInt)
     var pending = chunks
     var pass = 0
-    while (pending.nonEmpty && pass <= backoffs.size) {
+    while (pending.nonEmpty && pass <= RetryBackoffS.size) {
       if (pass > 0) {
         System.err.println(s"[bench] retry pass ${pass + 1} for " +
-          s"${pending.map(_._1).mkString(",")} after ${backoffs(pass - 1)} s backoff")
-        Thread.sleep(backoffs(pass - 1) * 1000L)
+          s"${pending.map(_._1).mkString(",")} after ${RetryBackoffS(pass - 1)} s backoff")
+        Thread.sleep(RetryBackoffS(pass - 1) * 1000L)
       }
       pending = pending.filter { case (cn, ks) =>
         val a = runChunk(ks)
@@ -411,7 +412,7 @@ object Bench {
     try {
       val sfNum = "sf([0-9]+(?:\\.[0-9]+)?)".r.findAllMatchIn(sfDir).toSeq.lastOption
         .map(_.group(1)).getOrElse("0.1")
-      val corpus = java.nio.file.Paths.get(s"/root/repo/dev/tpch_full/sf$sfNum")
+      val corpus = java.nio.file.Paths.get(s"${graft.tpch.FullTpch.Root}/sf$sfNum")
       val haveCorpus = java.nio.file.Files.exists(corpus.resolve("_GEN_VERSION"))
       val fullKey = "^q[0-9]+_full".r
       val fullTargets =

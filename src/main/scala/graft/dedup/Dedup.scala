@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.GQuery
+import graft.similarity.Ann
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -61,33 +62,43 @@ object Dedup {
         "transform(sequence(0, size(w) - 3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")))
         .as("shingle"))
 
-  /** Shingles minus the hot ones (df > [[DF_CAP]]). No broadcast
-    * HINT on the anti-join: on a small corpus the hot set is a
-    * handful of stop-phrases and AQE broadcasts it from runtime
-    * stats, but on a Zipfian web corpus the df>cap tail can run to
-    * many millions of shingles — far past any broadcast limit — and
-    * there the shuffled anti-join is the only shape that works (both
-    * sides are already partitioned by shingle from the df aggregate,
-    * so the exchange is reused, not added). The df aggregation
-    * itself is map-side-combined, so hot keys never concentrate raw
-    * rows on one reducer. */
-  private[graft] def cappedShingles(sh: DataFrame): DataFrame = {
-    val hot = sh.groupBy(col("shingle"))
+  /** The df-capped token self-join — the blocking stage of every
+    * set-overlap key. `toks` is (doc_id, `tok`) with distinct tokens
+    * per doc. Tokens of document frequency > `cap` are dropped (a key
+    * shared by df docs fans out to df²/2 pairs that AQE cannot split),
+    * then one aggregation over the self-join both blocks the pairs and
+    * counts what they share. Returns the (doc_a, doc_b, inter) pairs,
+    * doc_a < doc_b, and the capped per-doc (doc_id, n_sh) counts.
+    *
+    * No broadcast HINT on the hot-token anti-join: on a small corpus
+    * the hot set is a handful of stop-phrases and AQE broadcasts it
+    * from runtime stats, but on a Zipfian web corpus the df>cap tail
+    * can run to many millions of tokens — far past any broadcast
+    * limit — and there the shuffled anti-join is the only shape that
+    * works (both sides are already partitioned by token from the df
+    * aggregate, so the exchange is reused, not added). The df
+    * aggregation itself is map-side-combined, so hot keys never
+    * concentrate raw rows on one reducer. */
+  private[graft] def cappedOverlap(toks: DataFrame, tok: String,
+      cap: Int): (DataFrame, DataFrame) = {
+    val hot = toks.groupBy(col(tok))
       .agg(count(lit(1)).as("df"))
-      .filter(col("df") > DF_CAP)
-      .select(col("shingle"))
-    sh.join(hot, Seq("shingle"), "left_anti")
+      .filter(col("df") > cap)
+      .select(col(tok))
+    val kept = toks.join(hot, Seq(tok), "left_anti")
+    val n = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+    val inter = kept.as("a")
+      .join(kept.as("b"),
+        col(s"a.$tok") === col(s"b.$tok") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("inter"))
+    (inter, n)
   }
 
-  /** Exact Jaccard over full shingle sets for a candidate pair list;
-    * keeps pairs ≥ [[J_THRESHOLD]]. Shared verify stage of the ngram
-    * / minhash / curate paths: cost is O(candidates), never O(N²). */
-  private[graft] def verifiedJaccard(cand: DataFrame, sh: DataFrame, n: DataFrame): DataFrame = {
-    val inter = cand
-      .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sh.as("sb"),
-        col("doc_b") === col("sb.doc_id") && col("sa.shingle") === col("sb.shingle"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
+  /** Attaches both docs' set sizes from `n` (doc_id, n_sh) to
+    * (doc_a, doc_b, inter) pairs and keeps those with Jaccard ≥
+    * [[J_THRESHOLD]]. */
+  private def jaccardAtLeast(inter: DataFrame, n: DataFrame): DataFrame = {
     val j = round(col("inter").cast("double") /
       (col("na.n_sh") + col("nb.n_sh") - col("inter")), 4)
     inter
@@ -96,6 +107,18 @@ object Dedup {
       .withColumn("jaccard", j)
       .filter(col("jaccard") >= J_THRESHOLD)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
+  }
+
+  /** Exact Jaccard over full shingle sets for a candidate pair list;
+    * keeps pairs ≥ [[J_THRESHOLD]]. Shared verify stage of the minhash
+    * and curate paths: cost is O(candidates), never O(N²). */
+  private[graft] def verifiedJaccard(cand: DataFrame, sh: DataFrame, n: DataFrame): DataFrame = {
+    val inter = cand
+      .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
+      .join(sh.as("sb"),
+        col("doc_b") === col("sb.doc_id") && col("sa.shingle") === col("sb.shingle"))
+      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
+    jaccardAtLeast(inter, n)
   }
 
   /** `toks`/`sh`/`n` CTEs over an arbitrary (doc_id, text) relation. */
@@ -107,6 +130,16 @@ object Dedup {
       n AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)"""
 
   private val shinglesSql = shinglesSqlFrom("documents")
+
+  /** `toks`/`sh`/`n` then `hot`/`shc`/`nc`/`inter` CTEs over
+    * `documents` — the SQL mirror of [[cappedOverlap]] on shingles. */
+  private val cappedOverlapSql: String = s"""$shinglesSql,
+      hot AS (SELECT shingle FROM sh GROUP BY 1 HAVING count(*) > $DF_CAP),
+      shc AS (SELECT * FROM sh WHERE shingle NOT IN (SELECT shingle FROM hot)),
+      nc AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY 1),
+      inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+                FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                GROUP BY 1, 2)"""
 
   /** `inter`/`pairs` CTEs: exact-Jaccard verify over a `cand` CTE
     * against the full `sh`/`n` — the SQL mirror of [[verifiedJaccard]]. */
@@ -267,30 +300,11 @@ object Dedup {
       // explode + two aggregations collapsing to a tiny band frame),
       // which IS persisted. Persist pays when compute-to-size is
       // high; a raw shingle explode is the low case.
-      val shc = cappedShingles(shingles(Tables.documents(s, dir)))
-      val n = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-      val inter = shc.as("a")
-        .join(shc.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("inter"))
-      val j = round(col("inter").cast("double") /
-        (col("na.n_sh") + col("nb.n_sh") - col("inter")), 4)
-      inter
-        .join(n.as("na"), col("doc_a") === col("na.doc_id"))
-        .join(n.as("nb"), col("doc_b") === col("nb.doc_id"))
-        .withColumn("jaccard", j)
-        .filter(col("jaccard") >= J_THRESHOLD)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
+      val (inter, n) = cappedOverlap(shingles(Tables.documents(s, dir)), "shingle", DF_CAP)
+      jaccardAtLeast(inter, n)
     },
     Some(s"""
-      WITH ${shinglesSqlFrom("documents")},
-      hot AS (SELECT shingle FROM sh GROUP BY 1 HAVING count(*) > $DF_CAP),
-      shc AS (SELECT * FROM sh WHERE shingle NOT IN (SELECT shingle FROM hot)),
-      nc AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY 1),
-      inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-                FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2)
+      WITH $cappedOverlapSql
       SELECT doc_a, doc_b,
              round(CAST(inter AS DOUBLE) / (na.n_sh + nb.n_sh - inter), 4) AS jaccard
       FROM inter JOIN nc na ON doc_a = na.doc_id JOIN nc nb ON doc_b = nb.doc_id
@@ -307,20 +321,13 @@ object Dedup {
     * long doc B (a quoted paragraph, a truncated mirror page),
     * |A∩B|/|A∪B| is diluted by B's bulk but |A∩B|/|A| stays ≈ 1.
     * Emits every ordered pair with either direction's containment ≥
-    * [[CONT_THRESHOLD]], both directions reported. Same df-capped
-    * shingle blocking join as [[ngramJaccard]] (one aggregation
-    * yields the intersection), so the scale posture is identical —
-    * only the normalization differs. */
+    * [[CONT_THRESHOLD]], both directions reported. Blocking and the
+    * intersection count are [[cappedOverlap]]'s; only the
+    * normalization differs from [[ngramJaccard]]. */
   val containment: GQuery = GQuery(
     "dedup_containment",
     (s, dir) => {
-      val shc = cappedShingles(shingles(Tables.documents(s, dir)))
-      val n = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-      val inter = shc.as("a")
-        .join(shc.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("inter"))
+      val (inter, n) = cappedOverlap(shingles(Tables.documents(s, dir)), "shingle", DF_CAP)
       inter
         .join(n.as("na"), col("doc_a") === col("na.doc_id"))
         .join(n.as("nb"), col("doc_b") === col("nb.doc_id"))
@@ -330,13 +337,7 @@ object Dedup {
         .select(col("doc_a"), col("doc_b"), col("inter"), col("cont_a_in_b"), col("cont_b_in_a"))
     },
     Some(s"""
-      WITH ${shinglesSqlFrom("documents")},
-      hot AS (SELECT shingle FROM sh GROUP BY 1 HAVING count(*) > $DF_CAP),
-      shc AS (SELECT * FROM sh WHERE shingle NOT IN (SELECT shingle FROM hot)),
-      nc AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY 1),
-      inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-                FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2)
+      WITH $cappedOverlapSql
       SELECT doc_a, doc_b, inter,
              round(CAST(inter AS DOUBLE) / na.n_sh, 4) AS cont_a_in_b,
              round(CAST(inter AS DOUBLE) / nb.n_sh, 4) AS cont_b_in_a
@@ -344,16 +345,6 @@ object Dedup {
       WHERE greatest(round(CAST(inter AS DOUBLE) / na.n_sh, 4),
                      round(CAST(inter AS DOUBLE) / nb.n_sh, 4)) >= $CONT_THRESHOLD"""),
     tags = Set("dedup"))
-
-  /** Candidate pairs from the df-capped shingle blocking join. */
-  private[graft] def ngramCandidates(sh: DataFrame): DataFrame = {
-    val shc = cappedShingles(sh)
-    shc.as("a")
-      .join(shc.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-  }
 
   // ------------------------------------------------------- MinHash LSH
 
@@ -387,9 +378,7 @@ object Dedup {
       // exploded shingle frame (~10× doc bytes) costs far more than
       // recomputing it inside the codegen'd consumer stages, and the
       // gap WIDENS with sf, so this holds a fortiori at 100 TB.
-      val sh = shingles(Tables.documents(s, dir))
-      val n = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-      verifiedJaccard(bandCandidates(minhashBands(sh)), sh, n)
+      minhashPairs(shingles(Tables.documents(s, dir)))
     },
     Some(s"""
       WITH $shinglesSql,
@@ -397,6 +386,13 @@ object Dedup {
       $verifySql
       SELECT doc_a, doc_b, jaccard FROM pairs"""),
     tags = Set("dedup"))
+
+  /** Near-dup pairs (doc_a, doc_b, jaccard) over a (doc_id, shingle)
+    * frame: MinHash band candidates, then the exact Jaccard verify. */
+  private[graft] def minhashPairs(sh: DataFrame): DataFrame = {
+    val n = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+    verifiedJaccard(bandCandidates(minhashBands(sh)), sh, n)
+  }
 
   /** (doc_id, band, bkey) — 8-hash MinHash signature in ONE groupBy
     * pass over the shingles (no ×K explode), banded 4×2. */
@@ -461,6 +457,12 @@ object Dedup {
         UNION ALL SELECT doc_id, 1, md5(h2 || h3) FROM mh
         UNION ALL SELECT doc_id, 2, md5(h4 || h5) FROM mh
         UNION ALL SELECT doc_id, 3, md5(h6 || h7) FROM mh),
+      ${bandCandSql("doc_id")}"""
+
+  /** `bsz` → `cand` CTEs over a `bands`(doc_id, band, bkey, …) CTE — the
+    * SQL mirror of [[bandCandidates]]; `chainOrder` is its over-cap
+    * chain's ORDER BY list, ending in doc_id. */
+  private def bandCandSql(chainOrder: String): String = s"""
       bsz AS (SELECT band, bkey, count(*) AS bsize FROM bands GROUP BY 1, 2),
       bandss AS (SELECT b.*, bsize FROM bands b JOIN bsz USING (band, bkey)),
       cand_small AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
@@ -470,13 +472,35 @@ object Dedup {
       cand_chain AS (SELECT least(doc_id, nxt) AS doc_a, greatest(doc_id, nxt) AS doc_b
                      FROM (SELECT doc_id,
                                   lead(doc_id) OVER (PARTITION BY band, bkey
-                                                     ORDER BY doc_id) AS nxt
+                                                     ORDER BY $chainOrder) AS nxt
                            FROM bandss WHERE bsize > $BUCKET_CAP)
                      WHERE nxt IS NOT NULL),
       cand AS (SELECT DISTINCT doc_a, doc_b FROM
                (SELECT * FROM cand_small UNION ALL SELECT * FROM cand_chain))"""
 
   // ----------------------------------------------------------- SimHash
+
+  /** `toks`/`th`/`bits`/`sig`(doc_id, simhash) CTEs over `documents` —
+    * the SQL mirror of [[simhashSignatures]]. */
+  private val simhashSigSql: String = s"""
+      toks AS (SELECT DISTINCT doc_id, t AS tok
+                    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
+                    WHERE length(t) > 0),
+      th AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 12))::BIGINT AS h FROM toks),
+      bits AS (SELECT doc_id, i,
+                      sum(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS v
+               FROM th, range(48) t(i) GROUP BY 1, 2),
+      sig AS (SELECT doc_id,
+                     CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS simhash
+              FROM bits GROUP BY 1)"""
+
+  /** [[simhashSigSql]] plus the 4 × 12-bit `bands` and their capped
+    * candidates in signature chain order — the SQL mirror of the
+    * candidate stage of [[simhashPairsFrom]]. */
+  private val simhashCandSql: String = s"""$simhashSigSql,
+      bands AS (SELECT doc_id, simhash, b AS band, (simhash >> (12 * b)) & 4095 AS bkey
+                FROM sig, range(4) t(b)),
+      ${bandCandSql("simhash, doc_id")}"""
 
   private val SH_BITS = 48 // md5-derived token hash width (sign-safe in a long)
 
@@ -492,17 +516,8 @@ object Dedup {
   val simhash: GQuery = GQuery(
     "dedup_simhash",
     (s, dir) => simhashSignatures(Tables.documents(s, dir)),
-    Some("""
-      WITH toks AS (SELECT DISTINCT doc_id, t AS tok
-                    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
-                    WHERE length(t) > 0),
-      th AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 12))::BIGINT AS h FROM toks),
-      bits AS (SELECT doc_id, i,
-                      sum(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS v
-               FROM th, range(48) t(i) GROUP BY 1, 2),
-      sig AS (SELECT doc_id,
-                     CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS simhash
-              FROM bits GROUP BY 1)
+    Some(s"""
+      WITH $simhashSigSql
       SELECT doc_id, simhash,
              (simhash >> 0) & 4095 AS band0, (simhash >> 12) & 4095 AS band1,
              (simhash >> 24) & 4095 AS band2, (simhash >> 36) & 4095 AS band3
@@ -513,8 +528,8 @@ object Dedup {
 
   /** SimHash near-dup PAIRS — the verify stage over [[simhash]]'s
     * signatures: candidates share a 12-bit hamming band (equi-join on
-    * (band, bucket), degenerate buckets capped via [[bandCandidates]]
-    * exactly like the minhash path), verified by popcount of the
+    * (band, bucket), degenerate buckets capped via
+    * [[bandCandidates]]), verified by popcount of the
     * XORed 48-bit signatures ≤ [[HAM_T]]. Everything is integer
     * bit-math on md5-derived hashes, so the DuckDB oracle replays
     * signatures, banding, candidates and verify exactly. Constant
@@ -549,32 +564,7 @@ object Dedup {
     "dedup_simhash_pairs",
     (s, dir) => simhashPairsFrom(simhashSignatures(Tables.documents(s, dir))),
     Some(s"""
-      WITH toks AS (SELECT DISTINCT doc_id, t AS tok
-                    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
-                    WHERE length(t) > 0),
-      th AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 12))::BIGINT AS h FROM toks),
-      bits AS (SELECT doc_id, i,
-                      sum(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS v
-               FROM th, range(48) t(i) GROUP BY 1, 2),
-      sig AS (SELECT doc_id,
-                     CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS simhash
-              FROM bits GROUP BY 1),
-      bands AS (SELECT doc_id, simhash, b AS band, (simhash >> (12 * b)) & 4095 AS bkey
-                FROM sig, range(4) t(b)),
-      bsz AS (SELECT band, bkey, count(*) AS bsize FROM bands GROUP BY 1, 2),
-      bandss AS (SELECT b.*, bsize FROM bands b JOIN bsz USING (band, bkey)),
-      cand_small AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-                     FROM bandss x JOIN bandss y
-                       ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id
-                     WHERE x.bsize <= $BUCKET_CAP),
-      cand_chain AS (SELECT least(doc_id, nxt) AS doc_a, greatest(doc_id, nxt) AS doc_b
-                     FROM (SELECT doc_id,
-                                  lead(doc_id) OVER (PARTITION BY band, bkey
-                                                     ORDER BY simhash, doc_id) AS nxt
-                           FROM bandss WHERE bsize > $BUCKET_CAP)
-                     WHERE nxt IS NOT NULL),
-      cand AS (SELECT DISTINCT doc_a, doc_b FROM
-               (SELECT * FROM cand_small UNION ALL SELECT * FROM cand_chain))
+      WITH $simhashCandSql
       SELECT doc_a, doc_b, CAST(bit_count(xor(sa.simhash, sb.simhash)) AS BIGINT) AS hamming
       FROM cand JOIN sig sa ON doc_a = sa.doc_id JOIN sig sb ON doc_b = sb.doc_id
       WHERE bit_count(xor(sa.simhash, sb.simhash)) <= $HAM_T"""),
@@ -816,32 +806,7 @@ object Dedup {
     * labels (pipeline_split_cluster). A `def` so declaration order
     * doesn't matter during object init. */
   private[graft] def componentsOracleChain: String = s"""
-      WITH RECURSIVE toks AS (SELECT DISTINCT doc_id, t AS tok
-                    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
-                    WHERE length(t) > 0),
-      th AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 12))::BIGINT AS h FROM toks),
-      bits AS (SELECT doc_id, i,
-                      sum(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS v
-               FROM th, range(48) t(i) GROUP BY 1, 2),
-      sig AS (SELECT doc_id,
-                     CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS simhash
-              FROM bits GROUP BY 1),
-      bands AS (SELECT doc_id, simhash, b AS band, (simhash >> (12 * b)) & 4095 AS bkey
-                FROM sig, range(4) t(b)),
-      bsz AS (SELECT band, bkey, count(*) AS bsize FROM bands GROUP BY 1, 2),
-      bandss AS (SELECT b.*, bsize FROM bands b JOIN bsz USING (band, bkey)),
-      cand_small AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-                     FROM bandss x JOIN bandss y
-                       ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id
-                     WHERE x.bsize <= $BUCKET_CAP),
-      cand_chain AS (SELECT least(doc_id, nxt) AS doc_a, greatest(doc_id, nxt) AS doc_b
-                     FROM (SELECT doc_id,
-                                  lead(doc_id) OVER (PARTITION BY band, bkey
-                                                     ORDER BY simhash, doc_id) AS nxt
-                           FROM bandss WHERE bsize > $BUCKET_CAP)
-                     WHERE nxt IS NOT NULL),
-      cand AS (SELECT DISTINCT doc_a, doc_b FROM
-               (SELECT * FROM cand_small UNION ALL SELECT * FROM cand_chain)),
+      WITH RECURSIVE $simhashCandSql,
       pairs AS (SELECT doc_a, doc_b
                 FROM cand JOIN sig sa ON doc_a = sa.doc_id
                           JOIN sig sb ON doc_b = sb.doc_id
@@ -910,7 +875,7 @@ object Dedup {
     // twice, and nothing guarantees ReusedExchange across the two
     // sides (see Ann.lshTopkFrom — same reasoning, ExplainSpec pins
     // both plans)
-    val bands = graft.Caches.persistTracked(graft.similarity.Ann.signBands(q, s, EMB_BANDS, bitsPerBand))
+    val bands = graft.Caches.persistTracked(Ann.signBands(q, s, EMB_BANDS, bitsPerBand))
     val cand = bands.as("x")
       .join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
@@ -934,21 +899,8 @@ object Dedup {
     "dedup_embedding",
     (s, dir) => embeddingPairs(s, dir),
     Some(s"""
-      WITH qv AS (SELECT vec_id,
-                         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-                  FROM embeddings),
-      norms AS (SELECT vec_id, CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS nn FROM qv),
-      bits AS (SELECT vec_id, j,
-                      CASE WHEN sum(e[d + 1] *
-                             (CASE WHEN substr(md5(j::VARCHAR || '_' || d::VARCHAR), 1, 1) < '8'
-                                   THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END AS bit
-               FROM qv, range(${EMB_BANDS * EMB_BITS}) s(j), range(64) t(d)
-               GROUP BY vec_id, j),
-      codes AS (SELECT vec_id,
-                       CAST(sum(CASE WHEN bit = 1 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS code
-                FROM bits GROUP BY 1),
-      bands AS (SELECT vec_id, b AS band, (code >> ($EMB_BITS * b)) & ${(1 << EMB_BITS) - 1} AS bkey
-                FROM codes, range($EMB_BANDS) r(b)),
+      WITH ${Ann.qvNormsSql},
+      ${Ann.signBandsSql(EMB_BANDS, EMB_BITS)},
       cand AS (SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
                FROM bands x JOIN bands y
                  ON x.band = y.band AND x.bkey = y.bkey AND x.vec_id < y.vec_id),
@@ -968,22 +920,26 @@ object Dedup {
     * corpus clusters looser). */
   private[graft] val SEM_THRESHOLD = C_THRESHOLD
 
-  /** Cluster-then-dedup over quantized embeddings — `vecs` is
-    * `(vec_id, e: array<bigint>)`. Shared by the oracle key and
-    * DedupSpec (which drives it at several thresholds). */
-  private[graft] def semanticFrom(vecs: DataFrame, threshold: Double): DataFrame = {
-    import graft.similarity.Ann
-    val cents = Ann.ivfLloydStep(vecs, Ann.ivfSeeds(vecs))
-    val assign = Ann.ivfAssign(vecs, cents)
-    val sizes = assign.groupBy(col("c_id")).agg(count(lit(1)).as("n_cluster"))
-    val withE = assign.join(vecs, Seq("vec_id"))
-    val dups = withE.as("a")
+  /** The SemDeDup drop set: every vector of `withE` (vec_id, `list`,
+    * e) with a LOWER-id mate in the same `list` at cosine ≥
+    * `threshold` — pairs are equi-joined on `list`, never crossed. */
+  private def listDups(withE: DataFrame, list: String, threshold: Double): DataFrame =
+    withE.as("a")
       .join(withE.as("b"),
-        col("a.c_id") === col("b.c_id") && col("a.vec_id") < col("b.vec_id"))
+        col(s"a.$list") === col(s"b.$list") && col("a.vec_id") < col("b.vec_id"))
       .withColumn("cosine", Ann.cosine(expr("dot_long(a.e, b.e)"),
         expr("dot_long(a.e, a.e)"), expr("dot_long(b.e, b.e)")))
       .filter(col("cosine") >= threshold)
       .select(col("b.vec_id").as("vec_id")).distinct()
+
+  /** Cluster-then-dedup over quantized embeddings — `vecs` is
+    * `(vec_id, e: array<bigint>)`. Shared by the oracle key and
+    * DedupSpec (which drives it at several thresholds). */
+  private[graft] def semanticFrom(vecs: DataFrame, threshold: Double): DataFrame = {
+    val cents = Ann.ivfLloydStep(vecs, Ann.ivfSeeds(vecs))
+    val assign = Ann.ivfAssign(vecs, cents)
+    val sizes = assign.groupBy(col("c_id")).agg(count(lit(1)).as("n_cluster"))
+    val dups = listDups(assign.join(vecs, Seq("vec_id")), "c_id", threshold)
     assign.join(broadcast(sizes), Seq("c_id"))
       .join(dups.withColumn("dup", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("c_id"), col("n_cluster"),
@@ -1011,9 +967,8 @@ object Dedup {
     * terminal action. */
   private[graft] def semanticBalanced(vecs: DataFrame,
       threshold: Double = SEM_THRESHOLD,
-      c: Int = graft.similarity.Ann.IVF_C,
+      c: Int = Ann.IVF_C,
       maxListFactor: Double = 4.0, maxSteps: Int = 2): DataFrame = {
-    import graft.similarity.Ann
     graft.functions.GraftFunctions.register(vecs.sparkSession)
     // minSteps=1: anchor on the same seeds→one-Lloyd-step clustering
     // as [[semanticFrom]]. When the guard never engages past it
@@ -1023,14 +978,7 @@ object Dedup {
     // with sub==0 would also pass a split-only check yet diverge)
     val idx = Ann.ivfBalanced(vecs, c, maxListFactor, maxSteps, minSteps = 1)
     val sizes = idx.assign.groupBy(col("list_id")).agg(count(lit(1)).as("n_list"))
-    val withE = idx.assign.join(vecs, Seq("vec_id"))
-    val dups = withE.as("a")
-      .join(withE.as("b"),
-        col("a.list_id") === col("b.list_id") && col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cosine", Ann.cosine(expr("dot_long(a.e, b.e)"),
-        expr("dot_long(a.e, a.e)"), expr("dot_long(b.e, b.e)")))
-      .filter(col("cosine") >= threshold)
-      .select(col("b.vec_id").as("vec_id")).distinct()
+    val dups = listDups(idx.assign.join(vecs, Seq("vec_id")), "list_id", threshold)
     idx.assign.join(broadcast(sizes), Seq("list_id"))
       .join(dups.withColumn("dup", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("c_id"), col("list_id"), col("n_list"),
@@ -1050,8 +998,8 @@ object Dedup {
     * .Ann.ivfBalanced]], whose Lloyd-until-balanced loop plus
     * hash-split guarantees no oversized cluster regardless of
     * duplicate mass. The oracle key is the FIXED one-step
-    * construction (identical to `ann_ivf_topk`'s, one shared
-    * implementation) so DuckDB can replay centroids, assignment and
+    * construction (`ann_ivf_topk`'s [[graft.similarity.Ann.ivfLloydStep]]
+    * and its SQL mirror) so DuckDB can replay centroids, assignment and
     * every within-cluster cosine exactly (quantized-integer math).
     * Within-cluster pairing is an equi-join on `c_id` — never a
     * cross join; the keep rule (drop iff a LOWER-id mate is within
@@ -1064,38 +1012,12 @@ object Dedup {
     (s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val vecs = Tables.embeddings(s, dir)
-        .select(col("vec_id"), graft.similarity.Ann.quant.as("e"))
+        .select(col("vec_id"), Ann.quant.as("e"))
       semanticFrom(vecs, SEM_THRESHOLD)
     },
     Some(s"""
-      WITH qv AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-                  FROM embeddings),
-      norms AS (SELECT vec_id, CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS nn FROM qv),
-      seeds AS (SELECT vec_id AS c_id, e AS ce,
-                       CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS cn
-                FROM qv ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT ${graft.similarity.Ann.IVF_C}),
-      seed_scored AS (
-        SELECT qv.vec_id, c_id,
-               round(CAST(list_sum(list_transform(list_zip(qv.e, ce), p -> p[1] * p[2])) AS BIGINT)
-                     / (sqrt(norms.nn) * sqrt(cn)), 6) AS c_cos
-        FROM qv JOIN norms ON qv.vec_id = norms.vec_id, seeds),
-      seed_assign AS (
-        SELECT vec_id, c_id FROM (
-          SELECT vec_id, c_id,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS rn
-          FROM seed_scored) WHERE rn = 1),
-      dims AS (SELECT a.c_id, d, qv.e[d + 1] AS v
-               FROM seed_assign a JOIN qv USING (vec_id), range(64) t(d)),
-      dim_means AS (SELECT c_id, d, CAST(floor(sum(v) / count(*)) AS BIGINT) AS m
-                    FROM dims GROUP BY 1, 2),
-      cents AS (SELECT c_id, list(m ORDER BY d) AS ce,
-                       CAST(list_sum(list_transform(list(m ORDER BY d), x -> x * x)) AS BIGINT) AS cn
-                FROM dim_means GROUP BY 1),
-      scored_cents AS (
-        SELECT qv.vec_id, c_id,
-               round(CAST(list_sum(list_transform(list_zip(qv.e, ce), p -> p[1] * p[2])) AS BIGINT)
-                     / (sqrt(norms.nn) * sqrt(cn)), 6) AS c_cos
-        FROM qv JOIN norms ON qv.vec_id = norms.vec_id, cents),
+      WITH ${Ann.qvNormsSql},
+      ${Ann.ivfLloydSql},
       assign AS (
         SELECT vec_id, c_id FROM (
           SELECT vec_id, c_id,
@@ -1128,20 +1050,14 @@ object Dedup {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val fp = docs
       .select(col("doc_id"), explode(expr("winnow_fps(text, 8, 4)")).as("fp"))
+    // sizes count ALL of a doc's fingerprints, hot ones included
     val sizes = fp.groupBy(col("doc_id")).agg(count(lit(1)).as("nfp"))
-    val hot = fp.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > FP_DF_CAP).select(col("fp"))
-    val cold = fp.join(broadcast(hot), Seq("fp"), "left_anti")
-    val pairs = cold.as("a")
-      .join(cold.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("shared"))
+    val (pairs, _) = cappedOverlap(fp, "fp", FP_DF_CAP)
     pairs
       .join(sizes.select(col("doc_id").as("doc_a"), col("nfp").as("nfp_a")), Seq("doc_a"))
       .join(sizes.select(col("doc_id").as("doc_b"), col("nfp").as("nfp_b")), Seq("doc_b"))
-      .filter(col("shared") * 2 >= least(col("nfp_a"), col("nfp_b")))
-      .select(col("doc_a"), col("doc_b"), col("shared"), col("nfp_a"), col("nfp_b"))
+      .filter(col("inter") * 2 >= least(col("nfp_a"), col("nfp_b")))
+      .select(col("doc_a"), col("doc_b"), col("inter").as("shared"), col("nfp_a"), col("nfp_b"))
   }
 
   /** MOSS-style near-dup detection on winnowing fingerprints: the
@@ -1153,11 +1069,10 @@ object Dedup {
     * shared fingerprint, so it catches long verbatim spans that
     * word-level shingles dilute.
     *
-    * Scale shape: the pair join is blocked on individual fingerprints
-    * with the [[FP_DF_CAP]] heavy-hitter drop (broadcast anti-join),
-    * so no key fans out past ~cap²/2; the winnow density bounds
-    * fingerprints per doc at ~len/w. Same posture as
-    * [[ngramJaccard]] — no all-pairs stage exists. */
+    * Scale shape: the pair join is [[cappedOverlap]] over individual
+    * fingerprints with the [[FP_DF_CAP]] heavy-hitter drop, so no key
+    * fans out past ~cap²/2; the winnow density bounds fingerprints per
+    * doc at ~len/w — no all-pairs stage exists. */
   val fingerprintPairs: GQuery = GQuery(
     "dedup_fingerprint",
     (s, dir) => fingerprintPairsOf(Tables.documents(s, dir)),

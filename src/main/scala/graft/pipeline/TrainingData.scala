@@ -72,9 +72,7 @@ object TrainingData {
         col("r.n_words").as("n_words"), col("r.punct_ratio").as("punct_ratio"))
     // near-dup losers (higher doc_id of each Jaccard>=0.5 pair) leave;
     // candidates come from MinHash band buckets over survivors only
-    val sh = Dedup.shingles(survivors.select(col("doc_id"), col("text")))
-    val n = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val losers = Dedup.verifiedJaccard(Dedup.bandCandidates(Dedup.minhashBands(sh)), sh, n)
+    val losers = Dedup.minhashPairs(Dedup.shingles(survivors.select(col("doc_id"), col("text"))))
       .select(col("doc_b").as("doc_id")).distinct()
     survivors
       .join(losers, Seq("doc_id"), "left_anti")

@@ -25,8 +25,87 @@ object Ann {
   private[graft] val quant: Column =
     expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT))")
 
+  /** Cosine from an integer dot product and squared norms, unrounded. */
+  private[graft] def cosineRaw(dot: Column, na: Column, nb: Column): Column =
+    dot.cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double")))
+
   private[graft] def cosine(dot: Column, na: Column, nb: Column): Column =
-    round(dot.cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double"))), 6)
+    round(cosineRaw(dot, na, nb), 6)
+
+  /** `name`(vec_id, e) CTE — the SQL mirror of [[quant]]. */
+  private def quantSql(name: String): String =
+    s"""$name AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
+                  FROM embeddings)"""
+
+  /** `norms`(vec_id, nn) squared-norm CTE over `qv`. */
+  private val normsSql: String =
+    "norms AS (SELECT vec_id, CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS nn FROM qv)"
+
+  /** `qv` + `norms`: the prefix of every quantized-cosine oracle. */
+  private[graft] val qvNormsSql: String = s"""${quantSql("qv")},
+      $normsSql"""
+
+  /** The broadcast query probe: every (query, corpus vector) pair with
+    * the query set (vec_id < [[N_QUERIES]]) broadcast and self-pairs
+    * excluded. Carries the quantized `qe`/`ce` vectors, the `extra`
+    * corpus columns and the unrounded `cosine`. */
+  private[graft] def queryProbe(emb: DataFrame, extra: Column*): DataFrame = {
+    val q = emb.filter(col("vec_id") < N_QUERIES)
+      .select(col("vec_id").as("query_id"), quant.as("qe"))
+    val c = emb.select(col("vec_id") +: quant.as("ce") +: extra: _*)
+    c.join(broadcast(q), col("vec_id") =!= col("query_id"))
+      .withColumn("cosine", cosineRaw(expr("dot_long(qe, ce)"),
+        expr("dot_long(qe, qe)"), expr("dot_long(ce, ce)")))
+  }
+
+  /** `name`(query_id, vec_id, dot) CTE over `qv` — the SQL mirror of
+    * [[queryProbe]]'s pairs. */
+  private def probeSql(name: String): String =
+    s"""$name AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
+                       CAST(list_sum(list_transform(list_zip(q.e, c.e), p -> p[1] * p[2])) AS BIGINT) AS dot
+                FROM qv q, qv c WHERE q.vec_id < $N_QUERIES AND c.vec_id <> q.vec_id)"""
+
+  /** The [[K]] best (query_id, vec_id, rnk, cosine) rows per query by
+    * (cosine desc, vec_id). */
+  private def topK(scored: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
+    scored
+      .withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= K)
+      .select(col("query_id"), col("vec_id"), col("rnk"), col("cosine"))
+  }
+
+  /** SQL mirror of [[topK]] over a `scored`(query_id, vec_id, cosine) CTE. */
+  private val topkSql: String = s"""
+      SELECT query_id, vec_id, rnk, cosine FROM (
+        SELECT query_id, vec_id, cosine,
+               CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rnk
+        FROM scored)
+      WHERE rnk <= $K"""
+
+  /** Exact quantized cosine of (query_id, vec_id) candidate pairs, both
+    * sides looked up in `vecs` (vec_id, e). */
+  private def scoreCandidates(cand: DataFrame, vecs: DataFrame): DataFrame = {
+    val norms = vecs.select(col("vec_id"), expr("dot_long(e, e)").as("nn"))
+    cand
+      .join(vecs.select(col("vec_id").as("q_id"), col("e").as("qe")), col("query_id") === col("q_id")).drop("q_id")
+      .join(vecs.select(col("vec_id"), col("e").as("ce")), Seq("vec_id"))
+      .withColumn("dot", expr("dot_long(qe, ce)"))
+      .join(norms.select(col("vec_id").as("query_id"), col("nn").as("qn")), Seq("query_id"))
+      .join(norms.select(col("vec_id"), col("nn").as("cn")), Seq("vec_id"))
+      .withColumn("cosine", cosine(col("dot"), col("qn"), col("cn")))
+  }
+
+  /** `dots`/`scored`(query_id, vec_id, cosine) CTEs over a `cand`
+    * (query_id, vec_id) CTE — the SQL mirror of [[scoreCandidates]]. */
+  private val scoreCandSql: String = s"""
+      dots AS (SELECT query_id, cand.vec_id,
+                      CAST(list_sum(list_transform(list_zip(qa.e, qc.e), p -> p[1] * p[2])) AS BIGINT) AS dot
+               FROM cand JOIN qv qa ON query_id = qa.vec_id JOIN qv qc ON cand.vec_id = qc.vec_id),
+      scored AS (SELECT query_id, dots.vec_id AS vec_id,
+                        round(dot / (sqrt(nq.nn) * sqrt(nc.nn)), 6) AS cosine
+                 FROM dots JOIN norms nq ON query_id = nq.vec_id
+                           JOIN norms nc ON dots.vec_id = nc.vec_id)"""
 
   // --------------------------------------------------- brute force
 
@@ -41,36 +120,17 @@ object Ann {
     "ann_cosine_topk",
     (s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < N_QUERIES)
-        .select(col("vec_id").as("query_id"), quant.as("qe"))
-      val c = emb.select(col("vec_id"), quant.as("ce"))
-      val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-      c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .withColumn("dot", expr("dot_long(qe, ce)"))
-        .withColumn("qn", expr("dot_long(qe, qe)"))
-        .withColumn("cn", expr("dot_long(ce, ce)"))
-        .withColumn("cosine", cosine(col("dot"), col("qn"), col("cn")))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= K)
-        .select(col("query_id"), col("vec_id"), col("rnk"), col("cosine"))
+      topK(queryProbe(Tables.embeddings(s, dir))
+        .withColumn("cosine", round(col("cosine"), 6)))
     },
     Some(s"""
-      WITH qv AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-                  FROM embeddings),
-      norms AS (SELECT vec_id, CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS nn FROM qv),
-      pairs AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                       CAST(list_sum(list_transform(list_zip(q.e, c.e), p -> p[1] * p[2])) AS BIGINT) AS dot
-                FROM qv q, qv c WHERE q.vec_id < $N_QUERIES AND c.vec_id <> q.vec_id),
+      WITH $qvNormsSql,
+      ${probeSql("pairs")},
       scored AS (SELECT query_id, pairs.vec_id AS vec_id,
                         round(dot / (sqrt(nq.nn) * sqrt(nc.nn)), 6) AS cosine
                  FROM pairs JOIN norms nq ON query_id = nq.vec_id
                             JOIN norms nc ON pairs.vec_id = nc.vec_id)
-      SELECT query_id, vec_id, rnk, cosine FROM (
-        SELECT query_id, vec_id, cosine,
-               CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rnk
-        FROM scored)
-      WHERE rnk <= $K"""),
+      $topkSql"""),
     tags = Set("ann"))
 
   // ------------------------------------------------ hyperplane LSH
@@ -116,6 +176,22 @@ object Ann {
       .select(col("vec_id"), col("band"), col("bkey"))
   }
 
+  /** `bits`/`codes`/`bands` CTEs over `qv` — the SQL mirror of
+    * [[signBands]] (one monolithic code long, so nBands·bitsPerBand
+    * must stay ≤ 63 here). */
+  private[graft] def signBandsSql(nBands: Int, bitsPerBand: Int): String = s"""
+      bits AS (SELECT vec_id, j,
+                      CASE WHEN sum(e[d + 1] *
+                             (CASE WHEN substr(md5(j::VARCHAR || '_' || d::VARCHAR), 1, 1) < '8'
+                                   THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END AS bit
+               FROM qv, range(${nBands * bitsPerBand}) s(j), range(64) t(d)
+               GROUP BY vec_id, j),
+      codes AS (SELECT vec_id,
+                       CAST(sum(CASE WHEN bit = 1 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS code
+                FROM bits GROUP BY 1),
+      bands AS (SELECT vec_id, b AS band, (code >> ($bitsPerBand * b)) & ${(1 << bitsPerBand) - 1} AS bkey
+                FROM codes, range($nBands) r(b))"""
+
   /** Oracle WITH-chain through `scored` — the full LSH pipeline
     * (quantize, hyperplane signs, banding, candidate join, exact
     * cosine), shared verbatim by the top-k and range-search oracles
@@ -125,31 +201,13 @@ object Ann {
     * result-identical to the Spark side's pre-filtered corpus (band
     * collision is a pairwise property of the vectors alone). */
   private def lshScoredSqlWith(candFilter: String): String = s"""
-      WITH qv AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-                  FROM embeddings),
-      norms AS (SELECT vec_id, CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS nn FROM qv),
-      bits AS (SELECT vec_id, j,
-                      CASE WHEN sum(e[d + 1] *
-                             (CASE WHEN substr(md5(j::VARCHAR || '_' || d::VARCHAR), 1, 1) < '8'
-                                   THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END AS bit
-               FROM qv, range($HP) s(j), range(64) t(d)
-               GROUP BY vec_id, j),
-      codes AS (SELECT vec_id,
-                       CAST(sum(CASE WHEN bit = 1 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS code
-                FROM bits GROUP BY 1),
-      bands AS (SELECT vec_id, b AS band, (code >> (4 * b)) & 15 AS bkey
-                FROM codes, range(${HP / 4}) r(b)),
+      WITH $qvNormsSql,
+      ${signBandsSql(HP / 4, 4)},
       qb AS (SELECT vec_id AS query_id, band, bkey FROM bands WHERE vec_id < $N_QUERIES),
       cand AS (SELECT DISTINCT query_id, c.vec_id
                FROM qb JOIN bands c USING (band, bkey)
                WHERE c.vec_id <> query_id$candFilter),
-      dots AS (SELECT query_id, cand.vec_id,
-                      CAST(list_sum(list_transform(list_zip(qa.e, qc.e), p -> p[1] * p[2])) AS BIGINT) AS dot
-               FROM cand JOIN qv qa ON query_id = qa.vec_id JOIN qv qc ON cand.vec_id = qc.vec_id),
-      scored AS (SELECT query_id, dots.vec_id AS vec_id,
-                        round(dot / (sqrt(nq.nn) * sqrt(nc.nn)), 6) AS cosine
-                 FROM dots JOIN norms nq ON query_id = nq.vec_id
-                           JOIN norms nc ON dots.vec_id = nc.vec_id)"""
+      $scoreCandSql"""
 
   private val lshScoredSql: String = lshScoredSqlWith("")
 
@@ -168,11 +226,7 @@ object Ann {
     "ann_lsh_topk",
     (s, dir) => lshTopkFrom(Tables.embeddings(s, dir), s),
     Some(s"""$lshScoredSql
-      SELECT query_id, vec_id, rnk, cosine FROM (
-        SELECT query_id, vec_id, cosine,
-               CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rnk
-        FROM scored)
-      WHERE rnk <= $K"""),
+      $topkSql"""),
     tags = Set("ann"))
 
   /** Cosine threshold for [[rangeSearch]] — low for this synthetic
@@ -221,7 +275,6 @@ object Ann {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val vecs = emb.select(col("vec_id"), quant.as("e"))
-      val norms = vecs.select(col("vec_id"), expr("dot_long(e, e)").as("nn"))
       val qv = vecs.filter(col("vec_id") < N_QUERIES)
       val cvecs = emb.filter(pmod(col("label"), lit(2)) === 0)
         .select(col("vec_id"), quant.as("e"))
@@ -231,26 +284,11 @@ object Ann {
       val cand = qb.join(cb, Seq("band", "bkey"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id")).distinct()
-      val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-      cand
-        .join(vecs.select(col("vec_id").as("q_id"), col("e").as("qe")),
-          col("query_id") === col("q_id")).drop("q_id")
-        .join(vecs.select(col("vec_id"), col("e").as("ce")), Seq("vec_id"))
-        .withColumn("dot", expr("dot_long(qe, ce)"))
-        .join(norms.select(col("vec_id").as("query_id"), col("nn").as("qn")), Seq("query_id"))
-        .join(norms.select(col("vec_id"), col("nn").as("cn")), Seq("vec_id"))
-        .withColumn("cosine", cosine(col("dot"), col("qn"), col("cn")))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= K)
-        .select(col("query_id"), col("vec_id"), col("rnk"), col("cosine"))
+      topK(scoreCandidates(cand, vecs))
     },
     Some(s"""${lshScoredSqlWith(
       "\n                 AND c.vec_id IN (SELECT vec_id FROM embeddings WHERE label % 2 = 0)")}
-      SELECT query_id, vec_id, rnk, cosine FROM (
-        SELECT query_id, vec_id, cosine,
-               CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rnk
-        FROM scored)
-      WHERE rnk <= $K"""),
+      $topkSql"""),
     tags = Set("ann"))
 
   /** `bitsPerBand` widens the [[signBands]] buckets (default 4 = the
@@ -279,31 +317,18 @@ object Ann {
       bitsPerBand: Int = 4): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val vecs = emb.select(col("vec_id"), quant.as("e"))
-    val norms = vecs.select(col("vec_id"), expr("dot_long(e, e)").as("nn"))
     val bands = graft.Caches.persistTracked(signBands(vecs, s, HP / 4, bitsPerBand))
     val qb = bands.filter(col("vec_id") < N_QUERIES)
       .select(col("vec_id").as("query_id"), col("band"), col("bkey"))
     val cand = qb.join(bands, Seq("band", "bkey"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id")).distinct()
-    cand
-      .join(vecs.select(col("vec_id").as("q_id"), col("e").as("qe")), col("query_id") === col("q_id")).drop("q_id")
-      .join(vecs.select(col("vec_id"), col("e").as("ce")), Seq("vec_id"))
-      .withColumn("dot", expr("dot_long(qe, ce)"))
-      .join(norms.select(col("vec_id").as("query_id"), col("nn").as("qn")), Seq("query_id"))
-      .join(norms.select(col("vec_id"), col("nn").as("cn")), Seq("vec_id"))
-      .withColumn("cosine", cosine(col("dot"), col("qn"), col("cn")))
-      .select(col("query_id"), col("vec_id"), col("cosine"))
+    scoreCandidates(cand, vecs).select(col("query_id"), col("vec_id"), col("cosine"))
   }
 
   private[graft] def lshTopkFrom(emb: DataFrame, s: SparkSession,
-      bitsPerBand: Int = 4): DataFrame = {
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-    lshScored(emb, s, bitsPerBand)
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("vec_id"), col("rnk"), col("cosine"))
-  }
+      bitsPerBand: Int = 4): DataFrame =
+    topK(lshScored(emb, s, bitsPerBand))
 
   // ------------------------------------------------------- IVF-Flat
 
@@ -345,6 +370,37 @@ object Ann {
       .select(col("c_id"), struct(col("d"), floor(col("sv") / col("cnt")).as("m")).as("dm"))
       .groupBy(col("c_id"))
       .agg(expr("transform(array_sort(collect_list(dm)), x -> x.m)").as("ce"))
+
+  /** `seeds` → `scored_cents`(vec_id, c_id, c_cos) CTEs over `qv` and
+    * `norms`: [[ivfSeeds]], one [[ivfLloydStep]], then every vector
+    * scored against the stepped centroids — the SQL mirror shared by
+    * every one-step IVF oracle. */
+  private[graft] val ivfLloydSql: String = s"""
+      seeds AS (SELECT vec_id AS c_id, e AS ce,
+                       CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS cn
+                FROM qv ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT $IVF_C),
+      seed_scored AS (
+        SELECT qv.vec_id, c_id,
+               round(CAST(list_sum(list_transform(list_zip(qv.e, ce), p -> p[1] * p[2])) AS BIGINT)
+                     / (sqrt(norms.nn) * sqrt(cn)), 6) AS c_cos
+        FROM qv JOIN norms ON qv.vec_id = norms.vec_id, seeds),
+      seed_assign AS (
+        SELECT vec_id, c_id FROM (
+          SELECT vec_id, c_id,
+                 row_number() OVER (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS rn
+          FROM seed_scored) WHERE rn = 1),
+      dims AS (SELECT a.c_id, d, qv.e[d + 1] AS v
+               FROM seed_assign a JOIN qv USING (vec_id), range(64) t(d)),
+      dim_means AS (SELECT c_id, d, CAST(floor(sum(v) / count(*)) AS BIGINT) AS m
+                    FROM dims GROUP BY 1, 2),
+      cents AS (SELECT c_id, list(m ORDER BY d) AS ce,
+                       CAST(list_sum(list_transform(list(m ORDER BY d), x -> x * x)) AS BIGINT) AS cn
+                FROM dim_means GROUP BY 1),
+      scored_cents AS (
+        SELECT qv.vec_id, c_id,
+               round(CAST(list_sum(list_transform(list_zip(qv.e, ce), p -> p[1] * p[2])) AS BIGINT)
+                     / (sqrt(norms.nn) * sqrt(cn)), 6) AS c_cos
+        FROM qv JOIN norms ON qv.vec_id = norms.vec_id, cents)"""
 
   private[graft] case class IvfIndex(cents: DataFrame, assign: DataFrame,
       maxList: Long, lloydSteps: Int, split: Boolean)
@@ -466,45 +522,15 @@ object Ann {
       val cand = probes.join(assign, Seq("c_id"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id")).distinct()
-      val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-      cand
+      topK(cand
         .join(vecs.select(col("vec_id").as("q_id"), col("e").as("qe")), col("query_id") === col("q_id")).drop("q_id")
         .join(vecs.select(col("vec_id"), col("e").as("ce2")), Seq("vec_id"))
         .withColumn("cosine", cosine(expr("dot_long(qe, ce2)"),
-          expr("dot_long(qe, qe)"), expr("dot_long(ce2, ce2)")))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= K)
-        .select(col("query_id"), col("vec_id"), col("rnk"), col("cosine"))
+          expr("dot_long(qe, qe)"), expr("dot_long(ce2, ce2)"))))
     },
     Some(s"""
-      WITH qv AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-                  FROM embeddings),
-      norms AS (SELECT vec_id, CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS nn FROM qv),
-      seeds AS (SELECT vec_id AS c_id, e AS ce,
-                       CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS cn
-                FROM qv ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT $IVF_C),
-      seed_scored AS (
-        SELECT qv.vec_id, c_id,
-               round(CAST(list_sum(list_transform(list_zip(qv.e, ce), p -> p[1] * p[2])) AS BIGINT)
-                     / (sqrt(norms.nn) * sqrt(cn)), 6) AS c_cos
-        FROM qv JOIN norms ON qv.vec_id = norms.vec_id, seeds),
-      seed_assign AS (
-        SELECT vec_id, c_id FROM (
-          SELECT vec_id, c_id,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS rn
-          FROM seed_scored) WHERE rn = 1),
-      dims AS (SELECT a.c_id, d, qv.e[d + 1] AS v
-               FROM seed_assign a JOIN qv USING (vec_id), range(64) t(d)),
-      dim_means AS (SELECT c_id, d, CAST(floor(sum(v) / count(*)) AS BIGINT) AS m
-                    FROM dims GROUP BY 1, 2),
-      cents AS (SELECT c_id, list(m ORDER BY d) AS ce,
-                       CAST(list_sum(list_transform(list(m ORDER BY d), x -> x * x)) AS BIGINT) AS cn
-                FROM dim_means GROUP BY 1),
-      scored_cents AS (
-        SELECT qv.vec_id, c_id,
-               round(CAST(list_sum(list_transform(list_zip(qv.e, ce), p -> p[1] * p[2])) AS BIGINT)
-                     / (sqrt(norms.nn) * sqrt(cn)), 6) AS c_cos
-        FROM qv JOIN norms ON qv.vec_id = norms.vec_id, cents),
+      WITH $qvNormsSql,
+      $ivfLloydSql,
       ranked_cents AS (
         SELECT vec_id, c_id,
                row_number() OVER (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS c_rnk
@@ -515,18 +541,8 @@ object Ann {
       cand AS (SELECT DISTINCT query_id, assign.vec_id
                FROM probes JOIN assign USING (c_id)
                WHERE assign.vec_id <> query_id),
-      dots AS (SELECT query_id, cand.vec_id,
-                      CAST(list_sum(list_transform(list_zip(qa.e, qc.e), p -> p[1] * p[2])) AS BIGINT) AS dot
-               FROM cand JOIN qv qa ON query_id = qa.vec_id JOIN qv qc ON cand.vec_id = qc.vec_id),
-      scored AS (SELECT query_id, dots.vec_id AS vec_id,
-                        round(dot / (sqrt(nq.nn) * sqrt(nc.nn)), 6) AS cosine
-                 FROM dots JOIN norms nq ON query_id = nq.vec_id
-                           JOIN norms nc ON dots.vec_id = nc.vec_id)
-      SELECT query_id, vec_id, rnk, cosine FROM (
-        SELECT query_id, vec_id, cosine,
-               CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rnk
-        FROM scored)
-      WHERE rnk <= $K"""),
+      $scoreCandSql
+      $topkSql"""),
     tags = Set("ann"))
 
   /** Planted vec_id offset for [[ivfBalancedKey]] — far above any
@@ -562,38 +578,13 @@ object Ann {
         col("list_id").getField("sub").as("sub"))
     },
     Some(s"""
-      WITH qv0 AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-                   FROM embeddings),
+      WITH ${quantSql("qv0")},
       qv AS (SELECT vec_id, e FROM qv0
              UNION ALL
              SELECT $BAL_BASE + vec_id, (SELECT e FROM qv0 WHERE vec_id = 0)
              FROM qv0 WHERE vec_id < (SELECT ceil(count(*) / 2.0) FROM qv0)),
-      norms AS (SELECT vec_id, CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS nn FROM qv),
-      seeds AS (SELECT vec_id AS c_id, e AS ce,
-                       CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS cn
-                FROM qv ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT $IVF_C),
-      seed_scored AS (
-        SELECT qv.vec_id, c_id,
-               round(CAST(list_sum(list_transform(list_zip(qv.e, ce), p -> p[1] * p[2])) AS BIGINT)
-                     / (sqrt(norms.nn) * sqrt(cn)), 6) AS c_cos
-        FROM qv JOIN norms ON qv.vec_id = norms.vec_id, seeds),
-      seed_assign AS (
-        SELECT vec_id, c_id FROM (
-          SELECT vec_id, c_id,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS rn
-          FROM seed_scored) WHERE rn = 1),
-      dims AS (SELECT a.c_id, d, qv.e[d + 1] AS v
-               FROM seed_assign a JOIN qv USING (vec_id), range(64) t(d)),
-      dim_means AS (SELECT c_id, d, CAST(floor(sum(v) / count(*)) AS BIGINT) AS m
-                    FROM dims GROUP BY 1, 2),
-      cents AS (SELECT c_id, list(m ORDER BY d) AS ce,
-                       CAST(list_sum(list_transform(list(m ORDER BY d), x -> x * x)) AS BIGINT) AS cn
-                FROM dim_means GROUP BY 1),
-      scored_cents AS (
-        SELECT qv.vec_id, c_id,
-               round(CAST(list_sum(list_transform(list_zip(qv.e, ce), p -> p[1] * p[2])) AS BIGINT)
-                     / (sqrt(norms.nn) * sqrt(cn)), 6) AS c_cos
-        FROM qv JOIN norms ON qv.vec_id = norms.vec_id, cents),
+      $normsSql,
+      $ivfLloydSql,
       assign AS (SELECT vec_id, c_id FROM (
           SELECT vec_id, c_id,
                  row_number() OVER (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS rn
@@ -680,8 +671,7 @@ object Ann {
         .select(col("query_id"), col("vec_id"), col("rnk"), col("approx_dot"))
     },
     Some(s"""
-      WITH qv AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-                  FROM embeddings),
+      WITH ${quantSql("qv")},
       seeds AS (SELECT vec_id AS c_id, e FROM qv
                 ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT $PQ_KSUB),
       subcent AS (SELECT c_id, m, e[m * $PQ_SUBDIM + 1 : m * $PQ_SUBDIM + $PQ_SUBDIM] AS ce
@@ -788,9 +778,7 @@ object Ann {
           SELECT query_id, vec_id,
                  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rn
           FROM scored) WHERE rn <= $K),
-      bdots AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                       CAST(list_sum(list_transform(list_zip(q.e, c.e), p -> p[1] * p[2])) AS BIGINT) AS dot
-                FROM qv q, qv c WHERE q.vec_id < $N_QUERIES AND c.vec_id <> q.vec_id),
+      ${probeSql("bdots")},
       bscored AS (SELECT query_id, bdots.vec_id AS vec_id,
                          round(dot / (sqrt(nq.nn) * sqrt(nc.nn)), 6) AS cosine
                   FROM bdots JOIN norms nq ON query_id = nq.vec_id
@@ -808,7 +796,7 @@ object Ann {
   /** HYBRID retrieval — dense + lexical fused by Reciprocal Rank
     * Fusion (`Σ 1/(60+rank)`, the Cormack/Clarke formula every
     * production search stack ships): the vector arm is
-    * [[cosineTopk]]'s broadcast-probe top-20 over `embeddings`, the
+    * [[queryProbe]]'s top-20 over `embeddings`, the
     * lexical arm is an inverted-index join over `documents`
     * (distinct-token explode, equi-join on token, overlap count — the
     * plan a sharded BM25 engine runs; at web scale the hot-token
@@ -825,18 +813,8 @@ object Ann {
     "ann_hybrid_rrf",
     (s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < N_QUERIES)
-        .select(col("vec_id").as("query_id"), quant.as("qe"))
-      val c = emb.select(col("vec_id"), quant.as("ce"))
       val wv = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-      val vrank = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .withColumn("dot", expr("dot_long(qe, ce)"))
-        .withColumn("qn", expr("dot_long(qe, qe)"))
-        .withColumn("cn", expr("dot_long(ce, ce)"))
-        .withColumn("cosine",
-          col("dot").cast("double") /
-            (sqrt(col("qn").cast("double")) * sqrt(col("cn").cast("double"))))
+      val vrank = queryProbe(Tables.embeddings(s, dir))
         .withColumn("r_v", row_number().over(wv).cast("long"))
         .filter(col("r_v") <= 20)
         .select(col("query_id"), col("vec_id").as("doc_id"), col("r_v"))
@@ -861,12 +839,8 @@ object Ann {
         .select(col("query_id"), col("doc_id"), col("rrf6"), col("rnk"))
     },
     Some(s"""
-      WITH qv AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-                  FROM embeddings),
-      norms AS (SELECT vec_id, CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS nn FROM qv),
-      pairs AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                       CAST(list_sum(list_transform(list_zip(q.e, c.e), p -> p[1] * p[2])) AS BIGINT) AS dot
-                FROM qv q, qv c WHERE q.vec_id < $N_QUERIES AND c.vec_id <> q.vec_id),
+      WITH $qvNormsSql,
+      ${probeSql("pairs")},
       vscored AS (SELECT query_id, pairs.vec_id AS vec_id,
                          dot / (sqrt(nq.nn) * sqrt(nc.nn)) AS cosine
                   FROM pairs JOIN norms nq ON query_id = nq.vec_id
@@ -898,8 +872,8 @@ object Ann {
     * (query, label) vote count, winner = (votes desc, label asc) —
     * every stage integer-deterministic. Joined back against the
     * query's own label so the output doubles as a per-query accuracy
-    * audit (`correct`). Scale: the probe set broadcasts exactly like
-    * [[cosineTopk]]; votes and the winner window are O(k·Q) rows —
+    * audit (`correct`). Scale: the probe set broadcasts through
+    * [[queryProbe]]; votes and the winner window are O(k·Q) rows —
     * classification of a full corpus (Q = N) swaps the broadcast for
     * [[ivfTopk]]'s inverted lists, same vote/winner tail. */
   val knnClassify: GQuery = GQuery(
@@ -907,17 +881,8 @@ object Ann {
     (s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < N_QUERIES)
-        .select(col("vec_id").as("query_id"), quant.as("qe"))
-      val c = emb.select(col("vec_id"), quant.as("ce"), col("label"))
       val wk = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-      val knn = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .withColumn("dot", expr("dot_long(qe, ce)"))
-        .withColumn("qn", expr("dot_long(qe, qe)"))
-        .withColumn("cn", expr("dot_long(ce, ce)"))
-        .withColumn("cosine",
-          col("dot").cast("double") /
-            (sqrt(col("qn").cast("double")) * sqrt(col("cn").cast("double"))))
+      val knn = queryProbe(emb, col("label"))
         .withColumn("r", row_number().over(wk).cast("long"))
         .filter(col("r") <= K)
       val wv = Window.partitionBy(col("query_id")).orderBy(col("votes").desc, col("label"))
@@ -932,12 +897,8 @@ object Ann {
           when(col("label") === col("true_label"), 1L).otherwise(0L).as("correct"))
     },
     Some(s"""
-      WITH qv AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-                  FROM embeddings),
-      norms AS (SELECT vec_id, CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS nn FROM qv),
-      pairs AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                       CAST(list_sum(list_transform(list_zip(q.e, c.e), p -> p[1] * p[2])) AS BIGINT) AS dot
-                FROM qv q, qv c WHERE q.vec_id < $N_QUERIES AND c.vec_id <> q.vec_id),
+      WITH $qvNormsSql,
+      ${probeSql("pairs")},
       scored AS (SELECT query_id, pairs.vec_id AS vec_id, dot / (sqrt(nq.nn) * sqrt(nc.nn)) AS cosine
                  FROM pairs JOIN norms nq ON query_id = nq.vec_id
                             JOIN norms nc ON pairs.vec_id = nc.vec_id),
@@ -964,7 +925,7 @@ object Ann {
     * query) and keyed by query_id, so a million concurrent queries
     * diversify embarrassingly parallel with zero cross-query
     * coordination; nothing in the plan grows with the corpus (only
-    * [[cosineTopk]]'s candidate generation sees N). Determinism: rel
+    * [[queryProbe]]'s candidate generation sees N). Determinism: rel
     * and pairwise sims are unrounded doubles from exact quantized
     * integers, λ = 0.7 parses to the identical IEEE double in both
     * engines, ties break on vec_id; only the emitted score rounds
@@ -988,28 +949,18 @@ object Ann {
     "ann_mmr_rerank",
     (s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < N_QUERIES)
-        .select(col("vec_id").as("query_id"), quant.as("qe"))
-      val c = emb.select(col("vec_id"), quant.as("e"))
       val wc = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-      val cand = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .withColumn("cosine",
-          expr("dot_long(qe, e)").cast("double") /
-            (sqrt(expr("dot_long(qe, qe)").cast("double")) *
-              sqrt(expr("dot_long(e, e)").cast("double"))))
+      val cand = queryProbe(Tables.embeddings(s, dir))
         .withColumn("rk", row_number().over(wc))
         .filter(col("rk") <= 20)
-        .select(col("query_id"), col("vec_id"), col("cosine"), col("e"))
+        .select(col("query_id"), col("vec_id"), col("cosine"), col("ce").as("e"))
         .transform(graft.Checkpoints.truncate(s))
       val sims = cand.select(col("query_id"), col("vec_id").as("va"), col("e").as("ea"))
         .join(cand.select(col("query_id"), col("vec_id").as("vb"), col("e").as("eb")),
           Seq("query_id"))
         .filter(col("va") =!= col("vb"))
-        .withColumn("sim",
-          expr("dot_long(ea, eb)").cast("double") /
-            (sqrt(expr("dot_long(ea, ea)").cast("double")) *
-              sqrt(expr("dot_long(eb, eb)").cast("double"))))
+        .withColumn("sim", cosineRaw(expr("dot_long(ea, eb)"),
+          expr("dot_long(ea, ea)"), expr("dot_long(eb, eb)")))
         .select(col("query_id"), col("va"), col("vb"), col("sim"))
         .transform(graft.Checkpoints.truncate(s))
       val bare = cand.select(col("query_id"), col("vec_id"), col("cosine"))
@@ -1039,8 +990,7 @@ object Ann {
     },
     Some {
       val base = s"""
-      WITH qv AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e FROM embeddings),
-      norms AS (SELECT vec_id, CAST(list_sum(list_transform(e, x -> x * x)) AS BIGINT) AS nn FROM qv),
+      WITH $qvNormsSql,
       rel AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
                      CAST(list_sum(list_transform(list_zip(q.e, c.e), p -> p[1] * p[2])) AS BIGINT)
                        / (sqrt(nq.nn) * sqrt(nc.nn)) AS cosine

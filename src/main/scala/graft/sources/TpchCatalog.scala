@@ -20,7 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * }}}
   *
   * This is the third spelling of the same single construction point
-  * ([[TpchGen.table]], via [[TpchTable]]'s V1Scan binding): the
+  * ([[TpchGen.table]], via [[TpchTable]]'s native DSv2 scan): the
   * `tpch` FORMAT parameterizes reads, `USING tpch` views parameterize
   * DDL, and this catalog removes even the view step — the closest
   * Spark idiom to the reference's `SELECT * FROM tpch_lineitem(1)`

@@ -6,15 +6,14 @@ import java.util.Locale
 import scala.jdk.CollectionConverters._
 
 import graft.tpch.TpchGen
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression, Generator, GenericInternalRow, JoinedRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Project, Range => LogicalRange}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LocalRelation, LogicalPlan, Project, Range => LogicalRange}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, TableScan}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -37,17 +36,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * path. The scan still has exactly ONE construction point — the scan
   * builder takes [[TpchGen.table]]'s own optimized Catalyst plan
   * (`Project*(Range)`, plus one `Project(Generate(Project(Range)))` for
-  * lineitem's 1..7-lines explode), binds its resolved expressions to
+  * lineitem's 1..7-lines explode, or an empty relation for a fixed
+  * table's empty shard), binds its resolved expressions to
   * ordinals on the driver, and ships them as a tiny [[GenProgram]] that
   * each [[PartitionReader]] evaluates through executor-side
   * `UnsafeProjection` codegen. No `df.rdd`, no boxed `Row` bridge, no
   * second generator to keep in sync: the expressions ARE the
   * generator's (an unrecognized plan shape — e.g. a future optimizer
-  * change — falls back to the former [[V1Scan]] shim rather than
-  * diverging). The scan also reports row-count/size statistics from the
-  * spec layout, so Catalyst can pick broadcast joins for small
-  * generated dims — the V1 path pinned every table at
-  * `defaultSizeInBytes` (= never broadcast).
+  * change — fails the scan build with the plan in the message rather
+  * than diverging). The scan also reports row-count/size statistics
+  * from the spec layout, so Catalyst can pick broadcast joins for small
+  * generated dims.
   */
 class TpchDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "tpch"
@@ -94,10 +93,10 @@ private[sources] class TpchTable(opts: Map[String, String]) extends Table with S
           required.fold(base)(r =>
             base.select(r.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*))
         }
-        GenProgram.compile(df.queryExecution.optimizedPlan) match {
-          case Some(prog) => new TpchBatchScan(prog, df.schema)
-          case None => new TpchV1Scan(merged, required) // unrecognized shape — shim, not drift
-        }
+        val plan = df.queryExecution.optimizedPlan
+        val prog = GenProgram.compile(plan).getOrElse(throw new IllegalStateException(
+          s"tpch generator plan outside the compiled scan grammar:\n$plan"))
+        new TpchBatchScan(prog, df.schema)
       }
     }
   }
@@ -123,7 +122,7 @@ private[sources] final case class GenerateStep(generator: Generator) extends Gen
 
 private[sources] object GenProgram {
   /** Driver-side compilation of the generator's optimized plan. Returns
-    * None (→ V1 fallback) on any shape this grammar doesn't cover. */
+    * None on any shape this grammar doesn't cover. */
   def compile(plan: LogicalPlan): Option[GenProgram] = plan match {
     case Project(list, child) =>
       compile(child).map { p =>
@@ -131,13 +130,22 @@ private[sources] object GenProgram {
           BindReferences.bindReference(e: Expression, AttributeSeq(child.output)))
         p.copy(steps = p.steps :+ ProjectStep(bound))
       }
-    case g @ Generate(gen: Generator, unrequired, false, _, _, child) if unrequired.isEmpty =>
+    case g @ Generate(gen: Generator, unrequired, false, _, _, child) =>
       compile(child).map { p =>
         val bound = BindReferences.bindReference(gen: Expression, AttributeSeq(child.output))
-        p.copy(steps = p.steps :+ GenerateStep(bound.asInstanceOf[Generator]))
+        val generated = p.steps :+ GenerateStep(bound.asInstanceOf[Generator])
+        // pruned plans (e.g. a count over lineitem) drop child columns
+        // the parent never reads: project the joined row down to g.output
+        val steps = if (unrequired.isEmpty) generated else generated :+ ProjectStep(
+          g.output.map(a => BindReferences.bindReference(a: Expression,
+            AttributeSeq(child.output ++ g.generatorOutput))))
+        p.copy(steps = steps)
       }
     case r: LogicalRange if r.step == 1 =>
       Some(GenProgram(r.start, r.end, r.numSlices.getOrElse(1), Nil))
+    // a fixed table's empty shard (region/nation, part > 0): its
+    // limit(0) optimizes to an empty relation — zero rows, no steps
+    case l: LocalRelation if l.data.isEmpty => Some(GenProgram(0, 0, 1, Nil))
     case _ => None
   }
 }
@@ -159,7 +167,7 @@ private[sources] class TpchBatchScan(prog: GenProgram, schema: StructType)
   override def createReaderFactory(): PartitionReaderFactory = TpchReaderFactory(prog.steps)
 
   /** Spec-layout statistics: lets Catalyst broadcast small generated
-    * dims (the V1 path reported defaultSizeInBytes = never broadcast). */
+    * dims. */
   override def estimateStatistics(): Statistics = new Statistics {
     private val rows = prog.estimatedRows
     override def sizeInBytes(): util.OptionalLong =
@@ -214,32 +222,6 @@ private[sources] class TpchPartitionReader(
   }
   override def get(): InternalRow = current
   override def close(): Unit = ()
-}
-
-/** Former primary path, kept ONLY as the [[GenProgram.compile]]
-  * fallback for plan shapes outside the compiled grammar: Spark's
-  * sanctioned [[V1Scan]] shim over the same [[TpchGen.table]] plan.
-  * Pays a boxed Row↔InternalRow conversion at the scan boundary. */
-private[sources] class TpchV1Scan(opts: Map[String, String],
-    required: Option[StructType]) extends V1Scan {
-  override def readSchema(): StructType =
-    required.getOrElse(TpchDataSource.plan(SparkSession.active, opts).schema)
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new TpchRelation(context, opts, required).asInstanceOf[T]
-}
-
-private[sources] class TpchRelation(override val sqlContext: SQLContext,
-    opts: Map[String, String], required: Option[StructType] = None)
-    extends BaseRelation with TableScan {
-  private val df = {
-    val base = TpchDataSource.plan(sqlContext.sparkSession, opts)
-    // an EMPTY required schema is a pure count: project zero columns
-    required.fold(base)(r =>
-      base.select(r.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*))
-  }
-  override def schema: StructType = df.schema
-  override def buildScan(): RDD[Row] = df.rdd
 }
 
 object TpchDataSource {

@@ -41,11 +41,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object FullTpch {
 
-  /** Persist root for the generated full-schema corpus. Dev/driver
-    * environment path (the correctness gate's DuckDB process has no
-    * notion of the Spark session's cwd, so the oracle text needs an
-    * absolute path — same contract as the driver's /root/testdata). */
-  private val Root = "/root/repo/dev/tpch_full"
+  /** Persist root for the generated full-schema corpus: `dev/tpch_full`
+    * under the working directory, made absolute because the DuckDB
+    * process that runs the oracle text has no notion of the Spark
+    * session's cwd. */
+  private[graft] val Root = new java.io.File("dev/tpch_full").getAbsolutePath
 
   /** Bumped whenever [[TpchGen]]'s emitted bytes change, so a stale
     * persisted corpus from an earlier build is regenerated, not reused. */

@@ -38,16 +38,16 @@ class DedupSpec extends SparkSpecBase {
     // that single key; with it, the hot shingle is dropped from
     // blocking and the unique shingles pair nothing
     val hot = docs((1L to 1000L).map(i => i -> s"click here now unique$i words$i tail$i"): _*)
-    val sh = Dedup.shingles(hot)
-    assert(Dedup.ngramCandidates(sh).count() == 0)
+    val (hotPairs, _) = Dedup.cappedOverlap(Dedup.shingles(hot), "shingle", Dedup.DF_CAP)
+    assert(hotPairs.count() == 0)
     // and a genuine near-dup pair is still found even when it ALSO
     // shares the hot shingle, via its non-hot shared shingles
     val planted = docs(
       (Seq(2001L -> "click here now the quick brown fox jumps over the lazy dog",
            2002L -> "click here now the quick brown fox jumps over the lazy cat") ++
         (1L to 1000L).map(i => i -> s"click here now unique$i words$i tail$i")): _*)
-    val sh2 = Dedup.shingles(planted)
-    val cand = Dedup.ngramCandidates(sh2).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val (pairs, _) = Dedup.cappedOverlap(Dedup.shingles(planted), "shingle", Dedup.DF_CAP)
+    val cand = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(cand.toSet == Set((2001L, 2002L)), s"got ${cand.toSeq}")
   }
 
@@ -303,12 +303,8 @@ class DedupSpec extends SparkSpecBase {
     val b = a + " " + (31 to 90).map(i => s"w$i").mkString(" ")
     val unrel = (1 to 40).map(i => s"z$i").mkString(" ")
     val d = Seq((1L, a), (2L, b), (3L, unrel)).toDF("doc_id", "text")
-    val shc = Dedup.cappedShingles(Dedup.shingles(d))
-    val n = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val inter = shc.as("x").join(shc.as("y"),
-        col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
+    val (pairs, n) = Dedup.cappedOverlap(Dedup.shingles(d), "shingle", Dedup.DF_CAP)
+    val inter = pairs
       .join(n.as("na"), col("doc_a") === col("na.doc_id"))
       .join(n.as("nb"), col("doc_b") === col("nb.doc_id"))
       .select(col("doc_a"), col("doc_b"),

@@ -26,6 +26,10 @@ class TpchSourceSpec extends SparkSpecBase {
     assert(viaSource.schema == direct.schema)
     val diff = viaSource.exceptAll(direct).count() + direct.exceptAll(viaSource).count()
     assert(diff == 0, s"$diff rows differ between format scan and generator plan")
+    // a pruned lineitem read drops the explode's unread child columns
+    val lines = viaFormat("lineitem").select("l_linenumber")
+    val directLines = TpchGen.table(spark, "lineitem", SF).select("l_linenumber")
+    assert(lines.exceptAll(directLines).count() + directLines.exceptAll(lines).count() == 0)
   }
 
   test("load path names the table; shard options slice it") {
@@ -41,18 +45,29 @@ class TpchSourceSpec extends SparkSpecBase {
 
   test("column pruning reaches the format scan, and the scan is native DSv2") {
     // the format must plan a native BatchScan (TpchNativeScan) — not
-    // the V1 shim's ExistingRDD bridge, which exits codegen into boxed
-    // Rows at the scan boundary — and a 2-column projection must not
-    // synthesize the other 7 orders columns
+    // an ExistingRDD bridge, which exits codegen into boxed Rows at the
+    // scan boundary — and a 2-column projection must not synthesize
+    // the other 7 orders columns
     val plan = viaFormat("orders").select("o_orderkey", "o_totalprice")
       .queryExecution.executedPlan.toString
-    assert(!plan.contains("ExistingRDD") && !plan.contains("TpchRelation"),
-      s"tpch format fell back to the V1 RDD[Row] bridge:\n$plan")
+    assert(!plan.contains("ExistingRDD"), s"tpch format left the native scan:\n$plan")
     val scanLine = plan.linesIterator.find(_.contains("TpchNativeScan"))
       .getOrElse(fail(s"no TpchNativeScan in plan:\n$plan"))
     assert(scanLine.contains("BatchScan"), scanLine)
     assert(scanLine.contains("o_orderkey") && scanLine.contains("o_totalprice"), scanLine)
     assert(!scanLine.contains("o_comment") && !scanLine.contains("o_orderdate"), scanLine)
+    // every table, unsharded and as each shard of 3, full width and as
+    // a count: no shape (a fixed table's empty shard included) leaves
+    // the native scan
+    for (t <- TpchGen.tableNames; part <- -1 until 3) {
+      val r = spark.read.format("tpch").option("sf", SF).option("table", t)
+      val df = if (part < 0) r.load() else r.option("numParts", 3).option("part", part).load()
+      for (q <- Seq(df, df.groupBy().count())) {
+        val p = q.queryExecution.executedPlan.toString
+        assert(p.contains("TpchNativeScan") && !p.contains("ExistingRDD"),
+          s"$t part $part:\n$p")
+      }
+    }
   }
 
   test("generation is parameterized fully inside SQL via USING tpch") {
