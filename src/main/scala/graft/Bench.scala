@@ -128,10 +128,10 @@ object Bench {
     def runOnce(name: String): Either[String, Double] =
       try {
         // cold-run discipline (round-6 advice): builder-internal
-        // persists (sign-LSH band frames) survive across runs via the
-        // CacheManager, so without this runs 2..n of ann_lsh_topk /
-        // dedup_embedding would read the materialised cache and skip
-        // the band pipeline entirely — the reported min would be
+        // persists (e.g. the graph keys' edge frames) survive across
+        // runs via the CacheManager, so without this runs 2..n of
+        // those keys would read the materialised cache and skip their
+        // pipeline entirely — the reported min would be
         // warm-cache, not a full execution. Release tracked frames
         // BEFORE the clock starts: every run pays the whole plan,
         // min stays an honest cold estimator. Deliberate exception

@@ -2,10 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Registry of frames persisted INSIDE operator builders (today: the
-  * sign-LSH band frame in `Ann.lshTopkFrom` / `Dedup.embeddingPairs`,
-  * which feeds both sides of a candidate join and would otherwise be
-  * recomputed per side).
+/** Registry of frames persisted INSIDE operator builders (e.g. the
+  * graph keys' edge frames, the IVF balance guard's index).
   *
   * A builder-internal `persist()` has no natural unpersist point —
   * the builder returns a lazy frame and only the CALLER knows when
@@ -21,7 +19,7 @@ import org.apache.spark.sql.DataFrame
   * lifecycle at a time (Verify, Bench, a driver job). Concurrent
   * independent queries in a shared long-lived session should not
   * interleave release() calls: one caller's release would unpersist
-  * another's in-flight band frame (correct, Spark recomputes, but the
+  * another's in-flight frame (correct, Spark recomputes, but the
   * persist's savings are lost). Such a service should persist and
   * unpersist per-request frames itself.
   */

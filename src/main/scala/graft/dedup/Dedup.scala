@@ -216,21 +216,6 @@ object Dedup {
     * is unreliable. */
   private[graft] val PARA_W = 24
 
-  /** Sub-document (paragraph-level) cross-doc dedup, C4-style: split
-    * every document into consecutive [[PARA_W]]-word chunks, find
-    * chunks that recur across documents, and drop every occurrence
-    * except the one in the lowest doc_id (the same keep-min policy as
-    * [[exact]]). Emits per-document accounting: total chunks, dropped
-    * chunks, surviving word count — the numbers a curation pipeline
-    * needs to rewrite the text and budget tokens.
-    *
-    * Scale shape: chunk ownership is ONE groupBy on md5(chunk)
-    * (16-byte uniform key, no skew); marking occurrences is an
-    * equi-join back on that hash whose build side carries exactly one
-    * row per distinct chunk, so a boilerplate chunk shared by B docs
-    * fans out to B rows — never B² — and AQE's skew split handles a
-    * hot hash partition because output ≤ input. The final per-doc
-    * rollup shuffles doc_id. No stage is quadratic in anything. */
   /** (doc_id, chunk, h, n_words) for every [[PARA_W]]-word chunk of
     * every document — the shared chunking stage of [[paragraphStats]]
     * and [[graft.text.TextAnalysis.boilerplate]]. */
@@ -258,6 +243,21 @@ object Dedup {
         sum(when(!col("dropped"), col("n_words")).otherwise(0L)).as("kept_words"))
   }
 
+  /** Sub-document (paragraph-level) cross-doc dedup, C4-style: split
+    * every document into consecutive [[PARA_W]]-word chunks, find
+    * chunks that recur across documents, and drop every occurrence
+    * except the one in the lowest doc_id (the same keep-min policy as
+    * [[exact]]). Emits per-document accounting: total chunks, dropped
+    * chunks, surviving word count — the numbers a curation pipeline
+    * needs to rewrite the text and budget tokens.
+    *
+    * Scale shape: chunk ownership is ONE groupBy on md5(chunk)
+    * (16-byte uniform key, no skew); marking occurrences is an
+    * equi-join back on that hash whose build side carries exactly one
+    * row per distinct chunk, so a boilerplate chunk shared by B docs
+    * fans out to B rows — never B² — and AQE's skew split handles a
+    * hot hash partition because output ≤ input. The final per-doc
+    * rollup shuffles doc_id. No stage is quadratic in anything. */
   val paragraph: GQuery = GQuery(
     "dedup_paragraph",
     (s, dir) => paragraphStats(Tables.documents(s, dir)),
@@ -296,10 +296,8 @@ object Dedup {
       // self-join sides + per-doc counts): shingle frames are cheap
       // to recompute (one split+explode) but large to store, and an
       // A/B at sf0.1 measured the persist 10-100% SLOWER than the
-      // recompute — the opposite profile from signBands (heavy 64×
-      // explode + two aggregations collapsing to a tiny band frame),
-      // which IS persisted. Persist pays when compute-to-size is
-      // high; a raw shingle explode is the low case.
+      // recompute. Persist pays only when compute-to-size is high; a
+      // raw shingle explode is the low case.
       val (inter, n) = cappedOverlap(shingles(Tables.documents(s, dir)), "shingle", DF_CAP)
       jaccardAtLeast(inter, n)
     },
@@ -351,35 +349,24 @@ object Dedup {
   private val MH_K = 8 // signature length; 4 bands × 2 rows
 
   /** MinHash + LSH banding near-dup detection — the scale path. Per
-    * doc: an 8-hash MinHash signature (computed as 8 aggregate mins in
-    * ONE groupBy pass over the shingles — no ×K explode), banded 4×2;
+    * doc: an 8-hash MinHash signature banded 4×2, computed by the
+    * per-row [[graft.functions.MinHashBands]] kernel in one map-only
+    * projection (no ×shingles explode, no aggregate, no shuffle);
     * docs sharing any band bucket become candidates; candidates are
     * verified with exact Jaccard ≥ 0.5. The signature is constant
-    * size, so at 100 TB the shuffle carries the signature per doc
+    * size, so at 100 TB the band join carries four keys per doc
     * rather than the full shingle set; band buckets are md5-uniform
-    * (no skew). Hash family (r11: 4× cheaper than the original
-    * one-md5-per-hash): TWO md5s per shingle, each split into four
-    * 8-hex-char (32-bit) pieces — h_{4j+k}(s) = substr(md5(j ⧺ '|' ⧺
-    * s), 1+8k, 8). Distinct pieces of one md5 are independent uniform
-    * functions of the shingle, which is all MinHash needs, and the
-    * md5 digest is computed once per (j, shingle) via codegen
-    * subexpression elimination instead of once per hash. 32-bit
-    * minima leave collision odds at ~n_shingles/2^32 per hash (the
-    * Jaccard verify step screens any stragglers). Deterministic and
-    * identical in DuckDB, so the oracle replays the exact pipeline
-    * (bands included), not just the verify step. */
+    * (no skew). Hash family: TWO md5s per shingle, each split into
+    * four 8-hex-char (32-bit) pieces — h_{4j+k}(s) = substr(md5(j ⧺
+    * '|' ⧺ s), 1+8k, 8). Distinct pieces of one md5 are independent
+    * uniform functions of the shingle, which is all MinHash needs.
+    * 32-bit minima leave collision odds at ~n_shingles/2^32 per hash
+    * (the Jaccard verify step screens any stragglers). Deterministic
+    * and identical in DuckDB, so the oracle replays the exact
+    * pipeline (bands included), not just the verify step. */
   val minhashLsh: GQuery = GQuery(
     "dedup_minhash_lsh",
-    (s, dir) => {
-      // sh feeds four consumers but is deliberately NOT persisted —
-      // same A/B-measured reasoning as ngramJaccard above. Re-measured
-      // at sf1 (r11, MinhashAbMain, interleaved arms, min of 3):
-      // unpersisted 12.7 s vs persisted 49.5 s — materialising the
-      // exploded shingle frame (~10× doc bytes) costs far more than
-      // recomputing it inside the codegen'd consumer stages, and the
-      // gap WIDENS with sf, so this holds a fortiori at 100 TB.
-      minhashPairs(shingles(Tables.documents(s, dir)))
-    },
+    (s, dir) => minhashPairs(Tables.documents(s, dir)),
     Some(s"""
       WITH $shinglesSql,
       $minhashCandSql,
@@ -387,23 +374,33 @@ object Dedup {
       SELECT doc_a, doc_b, jaccard FROM pairs"""),
     tags = Set("dedup"))
 
-  /** Near-dup pairs (doc_a, doc_b, jaccard) over a (doc_id, shingle)
-    * frame: MinHash band candidates, then the exact Jaccard verify. */
-  private[graft] def minhashPairs(sh: DataFrame): DataFrame = {
-    val n = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    verifiedJaccard(bandCandidates(minhashBands(sh)), sh, n)
+  /** Near-dup pairs (doc_a, doc_b, jaccard) over a (doc_id, text)
+    * relation whose doc_id is a key: MinHash band candidates, then the
+    * exact Jaccard verify against the full shingle sets.
+    *
+    * The shingle frame feeds both verify sides but is deliberately NOT
+    * persisted: at sf1 (interleaved arms, min of 3) the unpersisted
+    * plan took 12.7 s and the persisted one 49.5 s — materialising the
+    * exploded shingle frame (~10× doc bytes) costs far more than
+    * recomputing it inside the codegen'd consumer stages, and the gap
+    * widens with sf. */
+  private[graft] def minhashPairs(docs: DataFrame): DataFrame = {
+    val bands = minhashBands(docs)
+    // docs with < 3 words get a null n_sh; they have no bands, so they
+    // never reach the verify joins
+    val n = docs.select(col("doc_id"), expr("minhash_bands(text).n_sh").as("n_sh"))
+    verifiedJaccard(bandCandidates(bands), shingles(docs), n)
   }
 
-  /** (doc_id, band, bkey) — 8-hash MinHash signature in ONE groupBy
-    * pass over the shingles (no ×K explode), banded 4×2. */
-  private[graft] def minhashBands(sh: DataFrame): DataFrame = {
-    val minhashes = (0 until MH_K).map(i =>
-      min(substring(md5(concat_ws("|", lit((i / 4).toString), col("shingle"))),
-        1 + 8 * (i % 4), 8)).as(s"h$i"))
-    val mh = sh.groupBy(col("doc_id")).agg(minhashes.head, minhashes.tail: _*)
-    mh.select(col("doc_id"), posexplode(array(
-      (0 until MH_K / 2).map(b => md5(concat(col(s"h${2 * b}"), col(s"h${2 * b + 1}")))): _*))
-      .as(Seq("band", "bkey")))
+  /** (doc_id, band, bkey) over a (doc_id, text) relation whose doc_id
+    * is a key: the 4 band keys of one [[graft.functions.MinHashBands]]
+    * call per row, map-only. Docs with < 3 words yield a null and so
+    * no rows — no null filter, which the optimizer would push below
+    * the projection as a second kernel call. */
+  private[graft] def minhashBands(docs: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    docs.select(col("doc_id"),
+      posexplode(expr("minhash_bands(text).bkeys")).as(Seq("band", "bkey")))
   }
 
   /** (doc_a, doc_b) pairs sharing a band bucket: all-to-all inside
@@ -502,17 +499,16 @@ object Dedup {
                 FROM sig, range(4) t(b)),
       ${bandCandSql("simhash, doc_id")}"""
 
-  private val SH_BITS = 48 // md5-derived token hash width (sign-safe in a long)
-
   /** 48-bit SimHash per document. Token hash = first 12 hex chars of
     * md5 (48 bits, fits a long with headroom — and md5 lets the DuckDB
-    * oracle replay the identical hash stream); per-bit majority vote
-    * computed as 48 conditional-sum aggregate columns in ONE groupBy
-    * pass (stays in codegen; no ×48 explode — the oracle's explode×48
-    * spelling is the semantic reference, not the plan). Output carries
-    * the 4 × 12-bit hamming bands used for candidate bucketing —
-    * near-identical docs land in the same band bucket; DedupSpec
-    * asserts a 1-word edit stays within hamming ≤ 3. */
+    * oracle replay the identical hash stream); the per-bit majority
+    * vote runs per row in the [[graft.functions.SimHash48]] kernel, so
+    * the plan is one map-only projection — no ×tokens explode, no
+    * aggregate, no shuffle (the oracle's explode ×48 spelling is the
+    * semantic reference, not the plan). Output carries the 4 × 12-bit
+    * hamming bands used for candidate bucketing — near-identical docs
+    * land in the same band bucket; DedupSpec asserts a 1-word edit
+    * stays within hamming ≤ 3. */
   val simhash: GQuery = GQuery(
     "dedup_simhash",
     (s, dir) => simhashSignatures(Tables.documents(s, dir)),
@@ -526,15 +522,6 @@ object Dedup {
 
   private val HAM_T = 3 // max hamming distance for a simhash near-dup
 
-  /** SimHash near-dup PAIRS — the verify stage over [[simhash]]'s
-    * signatures: candidates share a 12-bit hamming band (equi-join on
-    * (band, bucket), degenerate buckets capped via
-    * [[bandCandidates]]), verified by popcount of the
-    * XORed 48-bit signatures ≤ [[HAM_T]]. Everything is integer
-    * bit-math on md5-derived hashes, so the DuckDB oracle replays
-    * signatures, banding, candidates and verify exactly. Constant
-    * 8-byte signature per doc — like [[minhashLsh]], a shape whose
-    * shuffle width is independent of document size. */
   /** The [[simhashPairs]] body over a prebuilt signature frame —
     * reusable so [[components]] can share one signature pass. `carry`
     * names extra `sigs` columns to ride through the verify joins as
@@ -560,6 +547,15 @@ object Dedup {
           carry.flatMap(c => Seq(col(s"a_$c"), col(s"b_$c"))): _*)
   }
 
+  /** SimHash near-dup PAIRS — the verify stage over [[simhash]]'s
+    * signatures: candidates share a 12-bit hamming band (equi-join on
+    * (band, bucket), degenerate buckets capped via
+    * [[bandCandidates]]), verified by popcount of the
+    * XORed 48-bit signatures ≤ [[HAM_T]]. Everything is integer
+    * bit-math on md5-derived hashes, so the DuckDB oracle replays
+    * signatures, banding, candidates and verify exactly. Constant
+    * 8-byte signature per doc — like [[minhashLsh]], a shape whose
+    * shuffle width is independent of document size. */
   val simhashPairs: GQuery = GQuery(
     "dedup_simhash_pairs",
     (s, dir) => simhashPairsFrom(simhashSignatures(Tables.documents(s, dir))),
@@ -742,14 +738,6 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("c"), col("doc_id")).as("component"))
   }
 
-  /** Dup-cluster assignment for EVERY document: connected components
-    * of the [[simhashPairs]] near-dup graph (singletons are their own
-    * cluster), component id = min doc_id in the cluster, plus the
-    * `is_rep` keep-flag (true for exactly one doc per cluster). The
-    * DuckDB oracle replays the full chain — signatures, banding,
-    * capped candidates, hamming verify, then transitive closure via a
-    * recursive CTE — so the hash check covers the graph algorithm,
-    * not just the edge list. */
   /** The memoized (doc_id, component, is_rep) label frame — built and
     * persisted ONCE per (context, dir) via [[graft.Caches.memo]]:
     * it is the engine's priciest computation and at least two keys
@@ -790,6 +778,14 @@ object Dedup {
           (col("doc_id") === col("component")).as("is_rep"))
   }
 
+  /** Dup-cluster assignment for EVERY document: connected components
+    * of the [[simhashPairs]] near-dup graph (singletons are their own
+    * cluster), component id = min doc_id in the cluster, plus the
+    * `is_rep` keep-flag (true for exactly one doc per cluster). The
+    * DuckDB oracle replays the full chain — signatures, banding,
+    * capped candidates, hamming verify, then transitive closure via a
+    * recursive CTE — so the hash check covers the graph algorithm,
+    * not just the edge list. */
   val components: GQuery = GQuery(
     "dedup_components",
     (s, dir) => componentsFrame(s, dir),
@@ -819,20 +815,19 @@ object Dedup {
         SELECT u.b AS doc, r.lab FROM reach r JOIN und u ON u.a = r.doc
       )"""
 
-  /** (doc_id, simhash, band0..band3) — reusable signature builder. */
+  /** (doc_id, simhash, band0..band3) over a (doc_id, text) relation
+    * whose doc_id is a key — one [[graft.functions.SimHash48]] call per
+    * row, map-only; docs without a token drop out. */
   private[graft] def simhashSignatures(docs: DataFrame): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("tok"))
-      .filter(length(col("tok")) > 0)
-      .withColumn("h", conv(substring(md5(col("tok")), 1, 12), 16, 10).cast("long"))
-    val bitSums = (0 until SH_BITS).map(i =>
-      sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)).as(s"b$i"))
-    val voted = toks.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-    val sig = (0 until SH_BITS).map(i =>
-      when(col(s"b$i") > 0, lit(1L << i)).otherwise(0L)).reduce(_ + _)
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     val bandCols = (0 until 4).map(b =>
       shiftright(col("simhash"), 12 * b).bitwiseAND(lit(0xfffL)).as(s"band$b"))
-    voted.select(col("doc_id"), sig.as("simhash"))
+    // simhash48 is null exactly when the text has no non-space byte.
+    // Filtering on that cheap test, not on isNotNull(simhash), keeps
+    // the optimizer from pushing a second kernel call below the
+    // projection.
+    docs.filter(length(trim(col("text"))) > 0)
+      .select(col("doc_id"), expr("simhash48(text)").as("simhash"))
       .select(Seq(col("doc_id"), col("simhash")) ++ bandCols: _*)
   }
 
@@ -870,12 +865,7 @@ object Dedup {
     val q = Tables.embeddings(s, dir).select(col("vec_id"),
       expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT))").as("e"))
     val norms = q.select(col("vec_id"), expr("dot_long(e, e)").as("nn"))
-    // persisted (tracked in graft.Caches — release() after the
-    // terminal action): the x/y self-join below reads the band frame
-    // twice, and nothing guarantees ReusedExchange across the two
-    // sides (see Ann.lshTopkFrom — same reasoning, ExplainSpec pins
-    // both plans)
-    val bands = graft.Caches.persistTracked(Ann.signBands(q, s, EMB_BANDS, bitsPerBand))
+    val bands = Ann.signBands(q, EMB_BANDS, bitsPerBand)
     val cand = bands.as("x")
       .join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&

@@ -98,14 +98,6 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
 }
 
 object WinnowFingerprints {
-  /** Per-thread (digest, 16-byte output) pair: MD5 provider lookup is
-    * expensive per row, and `digest(buf, off, len)` writes into the
-    * reused buffer instead of allocating one per gram. */
-  private val tl = new ThreadLocal[(java.security.MessageDigest, Array[Byte])] {
-    override def initialValue(): (java.security.MessageDigest, Array[Byte]) =
-      (java.security.MessageDigest.getInstance("MD5"), new Array[Byte](16))
-  }
-
   /** Called from generated code — stays inside whole-stage codegen.
     * Hashes each k-char gram directly as a byte range of the row's
     * UTF-8 bytes (char→byte offsets computed once per row), so the
@@ -114,8 +106,7 @@ object WinnowFingerprints {
   def compute(s: org.apache.spark.unsafe.types.UTF8String, k: Int, w: Int): ArrayData = {
     val n = s.numChars()
     if (n < k + w - 1) return ArrayData.toArrayData(Array.empty[Long])
-    val (md, out16) = tl.get()
-    md.reset() // clear any state a prior row's failure left buffered
+    val (md, out16) = Sig.md5()
     val bytes = s.getBytes
     val nb = bytes.length
     // byte offset of each codepoint start; offs(n) = nb. Step with
@@ -139,10 +130,7 @@ object WinnowFingerprints {
       md.update(bytes, offs(i), offs(i + k) - offs(i))
       md.digest(out16, 0, 16) // finalises AND resets the digest
       // first 15 hex chars = top 60 bits of the first 8 digest bytes
-      var v = 0L
-      var b = 0
-      while (b < 8) { v = (v << 8) | (out16(b) & 0xffL); b += 1 }
-      hashes(i) = v >>> 4
+      hashes(i) = Sig.be(out16, 0, 8) >>> 4
       i += 1
     }
     val out = new java.util.LinkedHashSet[java.lang.Long]()
@@ -234,6 +222,316 @@ object CharEntropyStats {
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](n.toLong, charset, wbits))
+  }
+}
+
+/** Byte-level helpers shared by the per-row md5 kernels. */
+private[functions] object Sig {
+  /** Per-thread (digest, 16-byte output) pair: MD5 provider lookup is
+    * expensive per row, and `digest(buf, off, len)` writes into the
+    * reused buffer instead of allocating one per hash. */
+  private val tl = new ThreadLocal[(java.security.MessageDigest, Array[Byte])] {
+    override def initialValue(): (java.security.MessageDigest, Array[Byte]) =
+      (java.security.MessageDigest.getInstance("MD5"), new Array[Byte](16))
+  }
+
+  def md5(): (java.security.MessageDigest, Array[Byte]) = {
+    val p = tl.get()
+    p._1.reset() // clear any state a prior row's failure left buffered
+    p
+  }
+
+  /** Start offsets of the pieces of `b` split at every space byte, with
+    * one trailing sentinel (`b.length + 1`), so piece i is
+    * `[starts(i), starts(i + 1) - 1)` — Java's `split(" ", -1)`: empty
+    * pieces kept, one more piece than spaces. A space is one byte in
+    * UTF-8 and never part of a multi-byte sequence, so splitting bytes
+    * equals splitting the decoded string on valid UTF-8. */
+  def pieceStarts(b: Array[Byte]): Array[Int] = {
+    var spaces = 0
+    var i = 0
+    while (i < b.length) { if (b(i) == ' ') spaces += 1; i += 1 }
+    val starts = new Array[Int](spaces + 2)
+    var p = 1
+    i = 0
+    while (i < b.length) { if (b(i) == ' ') { starts(p) = i + 1; p += 1 }; i += 1 }
+    starts(p) = b.length + 1
+    starts
+  }
+
+  /** Unsigned big-endian value of `len` bytes of `b` from `off`. */
+  def be(b: Array[Byte], off: Int, len: Int): Long = {
+    var v = 0L
+    var i = 0
+    while (i < len) { v = (v << 8) | (b(off + i) & 0xffL); i += 1 }
+    v
+  }
+
+  private val HEX = "0123456789abcdef".getBytes("US-ASCII")
+
+  /** Lowercase hex of the low `nHex` nibbles of `v` into `out` at `off`. */
+  def hex(v: Long, nHex: Int, out: Array[Byte], off: Int): Unit = {
+    var i = 0
+    while (i < nHex) {
+      out(off + i) = HEX(((v >>> (4 * (nHex - 1 - i))) & 0xf).toInt)
+      i += 1
+    }
+  }
+}
+
+/** 48-bit SimHash of one document: `simhash48(text)` → bigint.
+  *
+  * Tokens are the distinct non-empty pieces of `split(text, ' ')`;
+  * each token hashes to the first 6 bytes of md5(token) read as a
+  * 48-bit unsigned value `h`; bit i of the result is set iff more
+  * tokens have bit i of `h` set than clear. A text with no token (or
+  * a null text) yields null. Identical, row for row, to the explode →
+  * groupBy(doc_id) → 48 conditional-sum spelling the DuckDB oracle
+  * replays (FunctionsSpec keeps that spelling as the reference) —
+  * provided `doc_id` is a key: the groupBy merged rows sharing an id,
+  * this kernel works per row.
+  *
+  * One map-only projection: no ×tokens row amplification, no shuffle.
+  * Malformed UTF-8 bytes are hashed as they are, where the built-in
+  * `split` re-encodes them to U+FFFD first — the one divergence, as
+  * for [[CharEntropyStats]]. */
+case class SimHash48(child: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
+  import org.apache.spark.sql.types.StringType
+
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def prettyName: String = "simhash48"
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val v = SimHash48.compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    if (v < 0) null else v
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.SimHash48.compute($c);
+         |${ev.isNull} = ${ev.value} < 0L;""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash48 =
+    copy(child = newChild)
+}
+
+object SimHash48 {
+  /** Called from generated code. Returns the signature, or -1 (never a
+    * 48-bit value) when the text has no token. */
+  def compute(s: org.apache.spark.unsafe.types.UTF8String): Long = {
+    val b = s.getBytes
+    val starts = Sig.pieceStarts(b)
+    val seen = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
+    val (md, out16) = Sig.md5()
+    val votes = new Array[Int](48)
+    var nTok = 0
+    var p = 0
+    while (p < starts.length - 1) {
+      val off = starts(p)
+      val len = starts(p + 1) - 1 - off
+      if (len > 0 && seen.add(org.apache.spark.unsafe.types.UTF8String.fromBytes(b, off, len))) {
+        md.update(b, off, len)
+        md.digest(out16, 0, 16)
+        val h = Sig.be(out16, 0, 6)
+        var i = 0
+        while (i < 48) { votes(i) += ((h >>> i) & 1L).toInt; i += 1 }
+        nTok += 1
+      }
+      p += 1
+    }
+    if (nTok == 0) return -1L
+    var sig = 0L
+    var i = 0
+    // set iff set-count > clear-count, i.e. 2·set > nTok
+    while (i < 48) { if (2 * votes(i) > nTok) sig |= 1L << i; i += 1 }
+    sig
+  }
+}
+
+/** MinHash band keys of one document: `minhash_bands(text)` →
+  * `struct(n_sh bigint, bkeys array<string>)`.
+  *
+  * Shingles are those of `graft.dedup.Dedup.shingles`: the pieces of
+  * `split(text, ' ')` (empty pieces kept), at least 3 of them, and the
+  * distinct `w[i] ⧺ ' ' ⧺ w[i+1] ⧺ ' ' ⧺ w[i+2]`. The 8 MinHash values
+  * are h_{4j+k} = hex chars [8k, 8k+8) of md5(j ⧺ '|' ⧺ shingle),
+  * minimised over the shingles; band b's key is md5hex(h_{2b} ⧺
+  * h_{2b+1}), 4 bands. `n_sh` is the distinct shingle count (the set
+  * size the Jaccard verify divides by). A text with fewer than 3
+  * pieces (or a null text) yields null.
+  *
+  * Identical, row for row, to the explode-shingles → groupBy(doc_id)
+  * → 8 md5-min aggregates spelling the DuckDB oracle replays — given
+  * `doc_id` is a key (the groupBy merged rows sharing an id; this
+  * kernel works per row). A shingle is the byte range from the start
+  * of w[i] to the end of w[i+2], hashed in place; 32-bit hex minima
+  * compare as unsigned integers. Same malformed-UTF-8 caveat as
+  * [[SimHash48]]. */
+case class MinHashBands(child: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
+  import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_sh", LongType, nullable = false),
+    StructField("bkeys", ArrayType(StringType, containsNull = false), nullable = false)))
+  override def nullable: Boolean = true
+  override def prettyName: String = "minhash_bands"
+
+  override protected def nullSafeEval(input: Any): Any =
+    MinHashBands.compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.MinHashBands.compute($c);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashBands =
+    copy(child = newChild)
+}
+
+object MinHashBands {
+  private val N_BANDS = 4
+  private val PREFIX = Array("0|".getBytes("US-ASCII"), "1|".getBytes("US-ASCII"))
+
+  /** Called from generated code; null when the text has < 3 pieces. */
+  def compute(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+    val b = s.getBytes
+    val starts = Sig.pieceStarts(b)
+    val nPieces = starts.length - 1
+    if (nPieces < 3) return null
+    val seen = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
+    val (md, out16) = Sig.md5()
+    val mins = Array.fill(2 * N_BANDS)(0xffffffffL)
+    var i = 0
+    while (i + 2 < nPieces) {
+      val off = starts(i)
+      val len = starts(i + 3) - 1 - off
+      if (seen.add(org.apache.spark.unsafe.types.UTF8String.fromBytes(b, off, len))) {
+        var j = 0
+        while (j < 2) {
+          md.update(PREFIX(j))
+          md.update(b, off, len)
+          md.digest(out16, 0, 16)
+          var k = 0
+          while (k < 4) {
+            val h = Sig.be(out16, 4 * k, 4)
+            if (h < mins(4 * j + k)) mins(4 * j + k) = h
+            k += 1
+          }
+          j += 1
+        }
+      }
+      i += 1
+    }
+    val pair = new Array[Byte](16)
+    val keyHex = new Array[Byte](32)
+    val bkeys = new Array[Any](N_BANDS)
+    var band = 0
+    while (band < N_BANDS) {
+      Sig.hex(mins(2 * band), 8, pair, 0)
+      Sig.hex(mins(2 * band + 1), 8, pair, 8)
+      md.update(pair)
+      md.digest(out16, 0, 16)
+      Sig.hex(Sig.be(out16, 0, 8), 16, keyHex, 0)
+      Sig.hex(Sig.be(out16, 8, 8), 16, keyHex, 16)
+      bkeys(band) = org.apache.spark.unsafe.types.UTF8String.fromBytes(keyHex.clone())
+      band += 1
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](seen.size.toLong, new org.apache.spark.sql.catalyst.util.GenericArrayData(bkeys)))
+  }
+}
+
+/** Random-hyperplane sign-LSH band keys of one vector:
+  * `sign_band_keys(e, nBands, bitsPerBand)` → `array<bigint>`.
+  *
+  * Hyperplane j < nBands·bitsPerBand has weight w(j, d) = +1 iff the
+  * first hex char of md5("j_d") is < '8' (else −1) over dimensions
+  * d < 64. Bit j is set iff Σ e[d]·w(j, d) ≥ 0 over the non-null
+  * e[d], d < min(len, 64) — and is 0 when no such term exists. Band
+  * b's key packs its bits low-first: Σ_k bit(b·bitsPerBand + k) << k.
+  * A null or empty array yields null (no band rows).
+  *
+  * Identical, row for row, to the posexplode ×64 → hyperplane
+  * broadcast join → groupBy(vec_id, j) → groupBy(vec_id, band)
+  * spelling the DuckDB oracle replays — given `vec_id` is a key (the
+  * groupBy merged rows sharing an id; this kernel works per row). The
+  * weights are md5-derived once per JVM per plane count and held as
+  * one 64-bit sign mask per plane. */
+case class SignBandKeys(child: Expression, nBands: Int, bitsPerBand: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
+
+  require(nBands > 0 && bitsPerBand > 0 && bitsPerBand <= 62,
+    s"sign_band_keys: need nBands > 0 and a band key that fits a long, got $nBands × $bitsPerBand")
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "sign_band_keys"
+
+  override protected def nullSafeEval(input: Any): Any =
+    SignBandKeys.compute(input.asInstanceOf[ArrayData], nBands, bitsPerBand)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.SignBandKeys.compute($c, $nBands, $bitsPerBand);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): SignBandKeys =
+    copy(child = newChild)
+}
+
+object SignBandKeys {
+  private val DIMS = 64
+  private val masks = new java.util.concurrent.ConcurrentHashMap[Integer, Array[Long]]()
+
+  /** Bit d of `planeMasks(nHp)(j)` is set iff w(j, d) = +1. */
+  private def planeMasks(nHp: Int): Array[Long] =
+    masks.computeIfAbsent(nHp, _ => {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      Array.tabulate(nHp) { j =>
+        var m = 0L
+        var d = 0
+        while (d < DIMS) {
+          // first hex char < '8' ⇔ the first digest byte's top bit is clear
+          if (md.digest(s"${j}_$d".getBytes("US-ASCII"))(0) >= 0) m |= 1L << d
+          d += 1
+        }
+        m
+      }
+    })
+
+  /** Called from generated code; null for an empty array. */
+  def compute(e: ArrayData, nBands: Int, bitsPerBand: Int): ArrayData = {
+    if (e.numElements() == 0) return null
+    val n = math.min(e.numElements(), DIMS)
+    val planes = planeMasks(nBands * bitsPerBand)
+    // a null element contributes no term: 0 on either sign
+    val v = new Array[Long](n)
+    var anyTerm = false
+    var d = 0
+    while (d < n) {
+      if (!e.isNullAt(d)) { v(d) = e.getLong(d); anyTerm = true }
+      d += 1
+    }
+    val keys = new Array[Long](nBands)
+    var j = 0
+    while (anyTerm && j < planes.length) {
+      val m = planes(j)
+      var acc = 0L
+      d = 0
+      while (d < n) {
+        if (((m >>> d) & 1L) != 0L) acc += v(d) else acc -= v(d)
+        d += 1
+      }
+      if (acc >= 0) keys(j / bitsPerBand) |= 1L << (j % bitsPerBand)
+      j += 1
+    }
+    ArrayData.toArrayData(keys)
   }
 }
 
@@ -368,6 +666,18 @@ object GraftFunctions {
     ("char_entropy", new ExpressionInfo(classOf[CharEntropyStats].getName, "char_entropy"), { args =>
       require(args.length == 1, s"char_entropy expects 1 argument, got ${args.length}")
       CharEntropyStats(args.head)
+    }),
+    ("simhash48", new ExpressionInfo(classOf[SimHash48].getName, "simhash48"), { args =>
+      require(args.length == 1, s"simhash48 expects 1 argument, got ${args.length}")
+      SimHash48(args.head)
+    }),
+    ("minhash_bands", new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands"), { args =>
+      require(args.length == 1, s"minhash_bands expects 1 argument, got ${args.length}")
+      MinHashBands(args.head)
+    }),
+    ("sign_band_keys", new ExpressionInfo(classOf[SignBandKeys].getName, "sign_band_keys"), { args =>
+      require(args.length == 3, s"sign_band_keys expects (e, nBands, bitsPerBand), got ${args.length} args")
+      SignBandKeys(args.head, intLit(args(1), "nBands"), intLit(args(2), "bitsPerBand"))
     }),
     ("top_k_long", new ExpressionInfo(classOf[TopKLong].getName, "top_k_long"), { args =>
       require(args.length == 3, s"top_k_long expects (score, payload, k), got ${args.length} args")

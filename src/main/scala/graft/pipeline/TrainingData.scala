@@ -61,8 +61,7 @@ object TrainingData {
     // measured the persist ~30% slower end-to-end — the frame carries
     // full text (large to store) while its recompute shares the
     // min_by exchange, so storing buys little and costs a full
-    // materialization (cf. the persisted signBands, where a heavy
-    // explode collapses to a tiny band frame)
+    // materialization
     val survivors = gated
       .groupBy(md5(col("text")).as("h"))
       .agg(min_by(
@@ -72,7 +71,7 @@ object TrainingData {
         col("r.n_words").as("n_words"), col("r.punct_ratio").as("punct_ratio"))
     // near-dup losers (higher doc_id of each Jaccard>=0.5 pair) leave;
     // candidates come from MinHash band buckets over survivors only
-    val losers = Dedup.minhashPairs(Dedup.shingles(survivors.select(col("doc_id"), col("text"))))
+    val losers = Dedup.minhashPairs(survivors.select(col("doc_id"), col("text")))
       .select(col("doc_b").as("doc_id")).distinct()
     survivors
       .join(losers, Seq("doc_id"), "left_anti")

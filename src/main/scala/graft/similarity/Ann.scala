@@ -137,10 +137,15 @@ object Ann {
 
   private val HP = 32 // default: 8 bands × 4 bits (the oracle-pinned width)
 
-  /** Random-hyperplane signs per vector → (nBands·bitsPerBand)-bit
-    * code → `nBands` bands of `bitsPerBand` bits. Hyperplane weights
-    * are ±1 derived from md5(j⧺'_'⧺d) — deterministic, no RNG state
-    * to ship. Returns (vec_id, band, bkey).
+  /** Random-hyperplane signs per vector → `nBands` bands of
+    * `bitsPerBand` bits. Hyperplane weights are ±1 derived from
+    * md5(j⧺'_'⧺d) — deterministic, no RNG state to ship. Returns
+    * (vec_id, band, bkey) over a (vec_id, e: array<bigint>) relation
+    * whose vec_id is a key; vectors with a null or empty `e` get no
+    * bands. The signs and band keys come from the per-row
+    * [[graft.functions.SignBandKeys]] kernel, so the plan is one
+    * map-only projection: no ×64 explode, no hyperplane join, no
+    * aggregate, no shuffle.
     *
     * `bitsPerBand` is THE scale knob for every sign-LSH blocking
     * consumer (this file's [[lshTopk]] and
@@ -153,27 +158,11 @@ object Ann {
     * corpus at a ≥0.9 threshold (p ≥ 0.86 per plane) runs 8–16 bits
     * with MORE bands to hold recall. The md5-uniform buckets keep the
     * candidate equi-join skew-free at any width. */
-  private[graft] def signBands(vecs: DataFrame, spark: SparkSession,
+  private[graft] def signBands(vecs: DataFrame,
       nBands: Int = 8, bitsPerBand: Int = 4): DataFrame = {
-    require(bitsPerBand > 0 && bitsPerBand <= 62, s"band key must fit a long: $bitsPerBand bits")
-    val nHp = nBands * bitsPerBand
-    val hp = spark.range(nHp * 64L)
-      .select((col("id") / lit(64)).cast("long").as("j"), pmod(col("id"), lit(64)).as("d"))
-      .withColumn("w", when(substring(md5(concat_ws("_", col("j"), col("d"))), 1, 1) < "8", 1L).otherwise(-1L))
-    val bits = vecs
-      .select(col("vec_id"), posexplode(col("e")).as(Seq("d", "v")))
-      .join(broadcast(hp), Seq("d"))
-      .groupBy(col("vec_id"), col("j"))
-      .agg((sum(col("v") * col("w")) >= 0).as("bit"))
-    // hyperplane j belongs to band j/bits at bit position j%bits; the
-    // keys are aggregated per band directly (no monolithic code long),
-    // so total width nBands·bitsPerBand is unbounded
-    bits
-      .groupBy(col("vec_id"), (col("j") / bitsPerBand).cast("int").as("band"))
-      .agg(sum(when(col("bit"),
-        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(pmod(j, $bitsPerBand) AS INT))")).otherwise(0L))
-        .as("bkey"))
-      .select(col("vec_id"), col("band"), col("bkey"))
+    graft.functions.GraftFunctions.register(vecs.sparkSession)
+    vecs.select(col("vec_id"),
+      posexplode(expr(s"sign_band_keys(e, $nBands, $bitsPerBand)")).as(Seq("band", "bkey")))
   }
 
   /** `bits`/`codes`/`bands` CTEs over `qv` — the SQL mirror of
@@ -278,9 +267,9 @@ object Ann {
       val qv = vecs.filter(col("vec_id") < N_QUERIES)
       val cvecs = emb.filter(pmod(col("label"), lit(2)) === 0)
         .select(col("vec_id"), quant.as("e"))
-      val qb = signBands(qv, s)
+      val qb = signBands(qv)
         .select(col("vec_id").as("query_id"), col("band"), col("bkey"))
-      val cb = signBands(cvecs, s)
+      val cb = signBands(cvecs)
       val cand = qb.join(cb, Seq("band", "bkey"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id")).distinct()
@@ -291,33 +280,18 @@ object Ann {
       $topkSql"""),
     tags = Set("ann"))
 
-  /** `bitsPerBand` widens the [[signBands]] buckets (default 4 = the
-    * oracle-pinned width); AnnSpec measures the superlinear candidate
-    * shrink at width 8 on the same corpus.
-    *
-    * The band frame feeds BOTH sides of the candidate equi-join
-    * (query side filtered, corpus side whole), so it is `persist`ed:
-    * without it Spark re-evaluates the explode-×64 → broadcast-join →
-    * two-aggregation pipeline once per side (exchange reuse only
-    * fires when both shuffles canonicalize identically, which the
-    * asymmetric filter above the query side does not guarantee). The
-    * cached frame is N·nBands rows of three longs — a ~200 GB
-    * MEMORY_AND_DISK footprint even at 10⁹ vectors, vs recomputing a
-    * 64×-exploded intermediate. ExplainSpec pins the two
-    * InMemoryTableScans; the CacheManager dedupes by canonical plan,
-    * so repeated builds of the same query reuse one entry. The persist
-    * is tracked in [[graft.Caches]] — callers release it with
-    * `Caches.release()` after their terminal action (Verify/Bench do;
-    * a long-lived session otherwise accumulates band caches). */
   /** Shared LSH candidate-scoring stage: band both sides, equi-join on
     * (band, bucket), score every colliding pair's exact quantized
     * cosine. [[lshTopkFrom]] ranks it (top-k); [[rangeSearch]]
-    * thresholds it (all neighbours ≥ τ). */
+    * thresholds it (all neighbours ≥ τ). `bitsPerBand` widens the
+    * [[signBands]] buckets (default 4 = the oracle-pinned width);
+    * AnnSpec measures the superlinear candidate shrink at width 8 on
+    * the same corpus. */
   private[graft] def lshScored(emb: DataFrame, s: SparkSession,
       bitsPerBand: Int = 4): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val vecs = emb.select(col("vec_id"), quant.as("e"))
-    val bands = graft.Caches.persistTracked(signBands(vecs, s, HP / 4, bitsPerBand))
+    val bands = signBands(vecs, HP / 4, bitsPerBand)
     val qb = bands.filter(col("vec_id") < N_QUERIES)
       .select(col("vec_id").as("query_id"), col("band"), col("bkey"))
     val cand = qb.join(bands, Seq("band", "bkey"))

@@ -82,7 +82,7 @@ class AnnSpec extends SparkSpecBase {
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT))").as("e"))
     def candidates(bits: Int): Long = {
-      val bands = graft.similarity.Ann.signBands(vecs, spark, nBands = 8, bitsPerBand = bits)
+      val bands = graft.similarity.Ann.signBands(vecs, nBands = 8, bitsPerBand = bits)
       val qb = bands.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("band"), col("bkey"))
       qb.join(bands, Seq("band", "bkey"))

@@ -1,28 +1,30 @@
 package graft
 
 /** Lifecycle of builder-internal persists (round-6 advice): the
-  * sign-LSH band frame cached inside `dedup_embedding` /
-  * `ann_lsh_topk` must be releasable by the caller — otherwise a
-  * long-lived session accumulates cache entries per invocation, and
-  * Bench's runs 2..n would read warm cache instead of executing. */
+  * frames an operator caches while building its plan (here the
+  * balance-guarded IVF index inside `ann_ivf_balanced`, which persists
+  * only tracked frames) must be
+  * releasable by the caller — otherwise a long-lived session
+  * accumulates cache entries per invocation, and Bench's runs 2..n
+  * would read warm cache instead of executing. */
 class CachesSpec extends SparkSpecBase {
 
-  test("band persists are tracked and released exactly once") {
+  test("tracked persists are released exactly once") {
     Caches.release() // drain anything left behind by earlier suites
-    SparkEntry.queries("dedup_embedding")(spark, sfDir)
+    SparkEntry.queries("ann_ivf_balanced")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     val released = Caches.release()
-    assert(released >= 1, s"expected >=1 tracked band frame, released $released")
+    assert(released >= 1, s"expected >=1 tracked frame, released $released")
     assert(Caches.release() == 0, "second release must find nothing to unpersist")
   }
 
-  test("after release the SQL cache holds no band frames") {
+  test("after release the SQL cache holds no tracked frames") {
     Caches.release()
     spark.catalog.clearCache() // earlier suites' untracked caches don't count
-    SparkEntry.queries("ann_lsh_topk")(spark, sfDir)
+    SparkEntry.queries("ann_ivf_balanced")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     assert(!spark.sharedState.cacheManager.isEmpty,
-      "the run should have left a tracked band frame in the CacheManager")
+      "the run should have left a tracked frame in the CacheManager")
     assert(Caches.release() >= 1)
     // release() must UNPERSIST, not merely forget: the CacheManager
     // itself has to be empty, with no clearCache() help

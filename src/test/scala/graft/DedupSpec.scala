@@ -57,15 +57,12 @@ class DedupSpec extends SparkSpecBase {
     // the over-cap fallback pairs each doc with its successor instead
     // (999 pairs), which still connects the cluster transitively
     val degenerate = docs((1L to 1000L).map(i => i -> "same boilerplate text every single time"): _*)
-    val shD = Dedup.shingles(degenerate)
-    val chain = Dedup.bandCandidates(Dedup.minhashBands(shD))
+    val chain = Dedup.bandCandidates(Dedup.minhashBands(degenerate))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(chain.length == 999, s"expected 999 chain pairs, got ${chain.length}")
     assert(chain.toSet == (1L until 1000L).map(i => (i, i + 1)).toSet)
     // keep-min over verified chain losers collapses the cluster to one doc
-    val n = shD.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val losers = Dedup.verifiedJaccard(
-        Dedup.bandCandidates(Dedup.minhashBands(shD)), shD, n)
+    val losers = Dedup.minhashPairs(degenerate)
       .select(col("doc_b")).distinct().count()
     assert(losers == 999, s"expected 999 losers, got $losers")
     // a genuine near-dup pair in a small bucket is still found all-to-all
@@ -73,10 +70,16 @@ class DedupSpec extends SparkSpecBase {
       (Seq(2001L -> "the quick brown fox jumps over the lazy dog",
            2002L -> "the quick brown fox jumps over the lazy cat") ++
         (1L to 1000L).map(i => i -> "same boilerplate text every single time")): _*)
-    val shP = Dedup.shingles(planted)
-    val cand = Dedup.bandCandidates(Dedup.minhashBands(shP))
+    val cand = Dedup.bandCandidates(Dedup.minhashBands(planted))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cand.contains((2001L, 2002L)), s"planted pair missing from ${cand.size} candidates")
+  }
+
+  test("the MinHash band frame is map-only: its plan has no Exchange") {
+    val p = Dedup.minhashBands(sources.Tables.documents(spark, sfDir))
+      .queryExecution.executedPlan.toString
+    assert(p.contains("minhash_bands"), p)
+    assert(!p.contains("Exchange"), s"MinHash band frame plans a shuffle\n$p")
   }
 
   test("embedding sign-band width is the bucket-size knob on a clustered corpus") {
@@ -94,7 +97,7 @@ class DedupSpec extends SparkSpecBase {
            (pmod(xxhash64('c', c * 64 + CAST(d AS BIGINT)), 2001) - 1000) * 100 +
            pmod(xxhash64('j', vec_id * 64 + CAST(d AS BIGINT)), 21) - 10)""").as("e"))
     def maxBucket(bits: Int): Long =
-      graft.similarity.Ann.signBands(corpus, spark, nBands = 4, bitsPerBand = bits)
+      graft.similarity.Ann.signBands(corpus, nBands = 4, bitsPerBand = bits)
         .groupBy(col("band"), col("bkey")).count()
         .agg(max(col("count"))).head().getLong(0)
     val m4 = maxBucket(4)

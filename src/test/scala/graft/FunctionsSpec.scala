@@ -1,10 +1,12 @@
 package graft
 
 import graft.functions.GraftFunctions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Native dot_long expression: matches the built-in spelling, handles
-  * nulls and length mismatch, resolves via SQL after registration. */
+/** graft's native expressions: each matches the built-in spelling it
+  * replaces, handles nulls and degenerate inputs, runs inside
+  * whole-stage codegen, and resolves via SQL after registration. */
 class FunctionsSpec extends SparkSpecBase {
 
   test("dot_long equals the aggregate/zip_with spelling and handles nulls") {
@@ -153,6 +155,139 @@ class FunctionsSpec extends SparkSpecBase {
     assert("""\*\(\d+\) Project \[char_entropy""".r.findFirstIn(plan).isDefined, plan)
   }
 
+  // ---- signature kernels: each replaced explode/groupBy spelling is
+  // kept here as the reference the kernel must reproduce row for row
+
+  /** (doc_id, simhash) — the explode-tokens → 48 conditional-sum
+    * aggregate spelling `simhash48` replaced. */
+  private def simhashRef(docs: DataFrame): DataFrame = {
+    val toks = docs
+      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("tok"))
+      .filter(length(col("tok")) > 0)
+      .withColumn("h", conv(substring(md5(col("tok")), 1, 12), 16, 10).cast("long"))
+    val bitSums = (0 until 48).map(i =>
+      sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)).as(s"b$i"))
+    val sig = (0 until 48).map(i =>
+      when(col(s"b$i") > 0, lit(1L << i)).otherwise(0L)).reduce(_ + _)
+    toks.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
+      .select(col("doc_id"), sig.as("simhash"))
+  }
+
+  /** ((doc_id, band, bkey), (doc_id, n_sh)) — the explode-shingles → 8
+    * md5-min aggregates spelling `minhash_bands` replaced. */
+  private def minhashRef(docs: DataFrame): (DataFrame, DataFrame) = {
+    val sh = graft.dedup.Dedup.shingles(docs)
+    val minhashes = (0 until 8).map(i =>
+      min(substring(md5(concat_ws("|", lit((i / 4).toString), col("shingle"))),
+        1 + 8 * (i % 4), 8)).as(s"h$i"))
+    val mh = sh.groupBy(col("doc_id")).agg(minhashes.head, minhashes.tail: _*)
+    val bands = mh.select(col("doc_id"), posexplode(array(
+      (0 until 4).map(b => md5(concat(col(s"h${2 * b}"), col(s"h${2 * b + 1}")))): _*))
+      .as(Seq("band", "bkey")))
+    (bands, sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh")))
+  }
+
+  /** (vec_id, band, bkey) — the posexplode ×64 → hyperplane broadcast
+    * join → two-aggregation spelling `sign_band_keys` replaced. */
+  private def signBandsRef(vecs: DataFrame, nBands: Int, bitsPerBand: Int): DataFrame = {
+    val hp = spark.range(nBands * bitsPerBand * 64L)
+      .select((col("id") / lit(64)).cast("long").as("j"), pmod(col("id"), lit(64)).as("d"))
+      .withColumn("w", when(substring(md5(concat_ws("_", col("j"), col("d"))), 1, 1) < "8", 1L).otherwise(-1L))
+    vecs
+      .select(col("vec_id"), posexplode(col("e")).as(Seq("d", "v")))
+      .join(broadcast(hp), Seq("d"))
+      .groupBy(col("vec_id"), col("j"))
+      .agg((sum(col("v") * col("w")) >= 0).as("bit"))
+      .groupBy(col("vec_id"), (col("j") / bitsPerBand).cast("int").as("band"))
+      .agg(sum(when(col("bit"),
+        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(pmod(j, $bitsPerBand) AS INT))")).otherwise(0L))
+        .as("bkey"))
+  }
+
+  private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  /** Asserts both frames hold the same rows, naming a few differences. */
+  private def assertSameRows(native: DataFrame, reference: DataFrame, what: String): Unit = {
+    val (n, r) = (rows(native), rows(reference))
+    assert(n == r, s"$what: ${(n -- r).take(3)} only native, ${(r -- n).take(3)} only reference")
+  }
+
+  private def simhashNative(docs: DataFrame): DataFrame =
+    graft.dedup.Dedup.simhashSignatures(docs).select(col("doc_id"), col("simhash"))
+
+  private def minhashNative(docs: DataFrame): (DataFrame, DataFrame) =
+    (graft.dedup.Dedup.minhashBands(docs),
+      docs.select(col("doc_id"), expr("minhash_bands(text).n_sh").as("n_sh"))
+        .filter(col("n_sh").isNotNull))
+
+  test("simhash48 and minhash_bands equal their explode/groupBy spellings on the sf0.01 documents") {
+    GraftFunctions.register(spark)
+    val docs = graft.sources.Tables.documents(spark, TestSession.sfDir01)
+    val sig = simhashNative(docs)
+    assert(sig.count() > 100)
+    assertSameRows(sig, simhashRef(docs), "simhash48")
+    val ((bands, n), (bandsRef, nRef)) = (minhashNative(docs), minhashRef(docs))
+    assertSameRows(bands, bandsRef, "minhash_bands keys")
+    assertSameRows(n, nRef, "minhash_bands n_sh")
+  }
+
+  test("sign_band_keys equals the explode/join/groupBy spelling on the sf0.01 embeddings") {
+    GraftFunctions.register(spark)
+    val vecs = graft.sources.Tables.embeddings(spark, TestSession.sfDir01)
+      .select(col("vec_id"), graft.similarity.Ann.quant.as("e"))
+    for ((nBands, bits) <- Seq((8, 4), (4, 8))) {
+      val native = graft.similarity.Ann.signBands(vecs, nBands, bits)
+      assert(native.count() > 100)
+      assertSameRows(native, signBandsRef(vecs, nBands, bits), s"sign_band_keys($nBands, $bits)")
+    }
+  }
+
+  test("signature kernels equal their reference spellings on degenerate inputs (property)") {
+    GraftFunctions.register(spark)
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import TestSession.spark.implicits._
+    // "" words make runs of spaces; repeats make duplicate tokens and
+    // shingles; non-ASCII words exercise multi-byte UTF-8
+    val word = Gen.oneOf("", "", "a", "b", "the", "é", "漢字", "🌍x", "ß")
+    val textGen = Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, word)).map(_.mkString(" "))
+    val fixed = Seq("", " ", "   ", "a  b", "a b", "a", "x x x x x", "the the the",
+      "é 漢字 🌍", " lead", "trail ", "a b c")
+    val texts = fixed.map(Option(_)) ++ Seq(None) ++
+      (0 until 300).flatMap(i => textGen.apply(Gen.Parameters.default, Seed(2000L + i)).map(Option(_)))
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    assertSameRows(simhashNative(docs), simhashRef(docs), "simhash48")
+    val ((bands, n), (bandsRef, nRef)) = (minhashNative(docs), minhashRef(docs))
+    assertSameRows(bands, bandsRef, "minhash_bands keys")
+    assertSameRows(n, nRef, "minhash_bands n_sh")
+
+    // vectors: null, empty, all-null, shorter and longer than 64 dims
+    val elem = Gen.frequency(4 -> Gen.choose(-20000L, 20000L).map(Option(_)), 1 -> Gen.const(None))
+    val vecGen = Gen.oneOf(Gen.choose(1, 63), Gen.const(64), Gen.choose(65, 90))
+      .flatMap(n => Gen.listOfN(n, elem))
+    val fixedVecs: Seq[Option[Seq[Option[Long]]]] = Seq(None, Some(Nil), Some(Seq(None)),
+      Some(Seq.fill(64)(None)), Some(Seq(Some(0L))), Some(Seq.fill(70)(Some(-1L))))
+    val vs = fixedVecs ++
+      (0 until 200).flatMap(i => vecGen.apply(Gen.Parameters.default, Seed(3000L + i)).map(Option(_)))
+    val vecs = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "e")
+    for ((nBands, bits) <- Seq((8, 4), (3, 5)))
+      assertSameRows(graft.similarity.Ann.signBands(vecs, nBands, bits),
+        signBandsRef(vecs, nBands, bits), s"sign_band_keys($nBands, $bits)")
+  }
+
+  test("simhash48, minhash_bands and sign_band_keys participate in whole-stage codegen") {
+    GraftFunctions.register(spark)
+    val docs = spark.range(10).selectExpr("concat('doc ', id, ' x y ', repeat('ab ', CAST(id AS INT))) AS text")
+    for (k <- Seq("simhash48", "minhash_bands")) {
+      val plan = docs.selectExpr(s"$k(text) AS s").queryExecution.executedPlan.toString
+      assert(s"""\\*\\(\\d+\\) Project \\[$k""".r.findFirstIn(plan).isDefined, plan)
+    }
+    val plan = spark.range(10)
+      .selectExpr("sign_band_keys(array(id, -id, id * 3 - 7), 8, 4) AS k")
+      .queryExecution.executedPlan.toString
+    assert("""\*\(\d+\) Project \[sign_band_keys""".r.findFirstIn(plan).isDefined, plan)
+  }
+
   test("dot_long participates in whole-stage codegen") {
     GraftFunctions.register(spark)
     // non-literal input so the optimizer can't constant-fold the call
@@ -183,6 +318,9 @@ class FunctionsSpec extends SparkSpecBase {
     assert(s2.sql("SELECT size(winnow_fps('the quick brown fox jumps over it', 8, 4)) AS n")
       .head().getInt(0) > 0)
     assert(s2.sql("SELECT char_entropy('abab').n_chars AS c").head().getLong(0) == 4L)
+    assert(s2.sql("SELECT simhash48('a b') IS NOT NULL AS s").head().getBoolean(0))
+    assert(s2.sql("SELECT minhash_bands('a b c').n_sh AS n").head().getLong(0) == 1L)
+    assert(s2.sql("SELECT size(sign_band_keys(array(1L, -2L), 8, 4)) AS n").head().getInt(0) == 8)
   }
 
   test("top_k_long keeps the k best with deterministic ties across partial merges") {

@@ -15,10 +15,7 @@ class PipelineSpec extends SparkSpecBase {
     // near-dup detector over the kept set must find nothing
     val keptDocs = graft.sources.Tables.documents(spark, dir)
       .join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    val sh = graft.dedup.Dedup.shingles(keptDocs)
-    val n = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val residual = graft.dedup.Dedup.verifiedJaccard(
-      graft.dedup.Dedup.bandCandidates(graft.dedup.Dedup.minhashBands(sh)), sh, n)
+    val residual = graft.dedup.Dedup.minhashPairs(keptDocs)
     assert(residual.count() == 0)
     // gates hold on every survivor
     assert(kept.filter(col("n_words") < 20 || col("punct_ratio") > 0.1).count() == 0)

@@ -56,7 +56,7 @@ class PlanSpec extends SparkSpecBase {
       "text_normalize", "text_pii", "text_fingerprint",
       "op_zorder_cluster", "pipeline_split_leakproof",
       "pipeline_sample_stratified", "pipeline_sample_weighted",
-      "mm_metadata", "mm_resize", "mm_frame_sample")
+      "mm_metadata", "mm_resize", "mm_frame_sample", "dedup_simhash")
     mapOnly.foreach { k =>
       val plan = Registry.byName(k).build(spark, sfDir).queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"$k claims map-only but plans an Exchange")
