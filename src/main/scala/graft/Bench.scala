@@ -2,7 +2,7 @@ package graft
 
 import java.lang.management.ManagementFactory
 
-import org.apache.spark.sql.SparkSession
+import graft.tpch.{FullTpch, TpchGen}
 
 /** Benchmark main: the driver-contract JSON line on stdout plus a
   * compact always-parseable twin on stderr (layout + why: see
@@ -86,13 +86,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-bench", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     def loadAvg(): Double =
@@ -182,8 +176,7 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     val floorMed = BenchFormat.median(floor3)
-    val sfGuess = "sf([0-9]+(?:\\.[0-9]+)?)".r.findAllMatchIn(sfDir).toSeq.lastOption
-      .flatMap(_.group(1).toDoubleOption).getOrElse(0.1)
+    val sfGuess = TpchGen.sfOf(sfDir).getOrElse(0.1)
     val warmIdleMax = if (sfGuess <= 0.1) 0.4 else 0.4 + 0.2 * math.log10(sfGuess / 0.1)
     if (warmup > warmIdleMax)
       System.err.println(f"[bench] warm sentinel median $warmup%.2f of [${warm3.map(BenchFormat.f2).mkString(",")}] > $warmIdleMax%.2f (sf-scaled ceiling) — box loaded, mins are upper bounds")
@@ -337,12 +330,9 @@ object Bench {
     System.err.println(results.collect { case (k, Right(ts)) => s""""$k":${t3(ts)}""" }
       .mkString("[bench] spread {", ",", "}"))
 
-    // numeric scale factor, not the dir path. LAST match (a path like
-    // /data/sf2024/runs/sf0.1 must report 0.1), toDoubleOption guards
-    // trailing-dot captures, fallback -1 keeps the field a number.
-    val sfNum = "sf([0-9]+(?:\\.[0-9]+)?)".r.findAllMatchIn(sfDir).toSeq.lastOption
-      .map(_.group(1)).filter(_.toDoubleOption.isDefined)
-      .getOrElse("-1")
+    // numeric scale factor, not the dir path; fallback -1 keeps the
+    // field a number
+    val sfNum = FullTpch.fmt(TpchGen.sfOf(sfDir).getOrElse(-1.0))
 
     // ENFORCED health gate, chunk-granular since r17 (r16 verdict #1):
     // the line is `accepted` iff EVERY chunk earned at least one
@@ -410,9 +400,8 @@ object Bench {
       results: Seq[(String, Either[String, Seq[Double]])],
       sfDir: String): Seq[(String, Double)] =
     try {
-      val sfNum = "sf([0-9]+(?:\\.[0-9]+)?)".r.findAllMatchIn(sfDir).toSeq.lastOption
-        .map(_.group(1)).getOrElse("0.1")
-      val corpus = java.nio.file.Paths.get(s"${graft.tpch.FullTpch.Root}/sf$sfNum")
+      val sf = FullTpch.fmt(TpchGen.sfOf(sfDir).getOrElse(0.1))
+      val corpus = java.nio.file.Paths.get(s"${FullTpch.Root}/sf$sf")
       val haveCorpus = java.nio.file.Files.exists(corpus.resolve("_GEN_VERSION"))
       val fullKey = "^q[0-9]+_full".r
       val fullTargets =
@@ -420,7 +409,7 @@ object Bench {
         else results.collect {
           case (k, Right(_)) if fullKey.findFirstIn(k).nonEmpty =>
             k -> Registry.byName(k).oracle.get
-              .replace("dev/tpch_full/sf0.01/", s"dev/tpch_full/sf$sfNum/")
+              .replace("dev/tpch_full/sf0.01/", s"dev/tpch_full/sf$sf/")
         }
       // top-N most expensive non-TPC-H keys whose oracle binds only the
       // view-served base tables (no dev/ paths — those oracles read

@@ -25,8 +25,16 @@ import org.apache.spark.sql.DataFrame
   */
 object Caches {
   private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private val memos =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val memos = new Sessions.ContextMemo[DataFrame]
+
+  /** Persist `df` unless its plan is already in the SQL cache; true
+    * iff this call persisted it. Re-persisting a cached plan only
+    * makes the CacheManager warn "Asked to cache already cached data". */
+  private def persistOnce(df: DataFrame): Boolean =
+    df.sparkSession.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty && {
+      df.persist(); true
+    }
 
   /** Build-once shared frames, keyed on (SparkContext incarnation,
     * frame id, input dir) — the in-suite reuse path for expensive
@@ -42,17 +50,13 @@ object Caches {
     * cold-run bench discipline applies to the operator under test,
     * not to its materialized upstream. [[releaseMemos]] is the
     * explicit end-of-suite drain (also safe mid-suite: consumers
-    * recompute). The context incarnation in the key makes entries
-    * from stopped sessions unreachable; they are swept (not
-    * unpersisted — their context is gone) on the next releaseMemos. */
+    * recompute). */
   private[graft] def memo(spark: org.apache.spark.sql.SparkSession,
       id: String, dir: String)(build: => DataFrame): DataFrame = {
-    val sc = spark.sparkContext
-    val key = s"${sc.applicationId}@${sc.startTime}:$id:$dir"
-    val df = memos.computeIfAbsent(key, _ => build.persist())
-    // re-arm if an external clearCache() evicted the entry (persist on
-    // an already-cached frame is a no-op, so this is cheap insurance)
-    if (spark.sharedState.cacheManager.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty) df.persist()
+    val df = memos(spark, s"$id:$dir")(build)
+    // (re-)arms the entry: persists on first build and after an
+    // external clearCache() evicted it
+    persistOnce(df)
     df
   }
 
@@ -63,36 +67,22 @@ object Caches {
     * suite-lifetime memo would turn timed runs 2..n into cache reads,
     * so the harness drops exactly this id before each clock start
     * while other keys' shared-input memos stay warm. */
-  def releaseMemo(id: String): Int = {
-    var n = 0
-    val it = memos.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.contains(s":$id:")) {
-        it.remove()
-        try { e.getValue.unpersist(blocking = false); n += 1 }
-        catch { case _: IllegalStateException => () } // stopped context — just sweep
-      }
-    }
-    n
-  }
+  def releaseMemo(id: String): Int = unpersistAll(memos.drain(_.startsWith(s"$id:")))
 
   /** Unpersist and forget every memoized frame; returns how many
     * live entries were released. */
-  def releaseMemos(): Int = {
-    var n = 0
-    val it = memos.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next(); it.remove()
-      try { e.getValue.unpersist(blocking = false); n += 1 }
-      catch { case _: IllegalStateException => () } // stopped context — just sweep
-    }
-    n
-  }
+  def releaseMemos(): Int = unpersistAll(memos.drain())
 
-  /** Persist `df` and remember it for the next [[release]]. */
+  private def unpersistAll(dfs: Seq[DataFrame]): Int =
+    dfs.count { df =>
+      try { df.unpersist(blocking = false); true }
+      catch { case _: IllegalStateException => false } // stopped context — just sweep
+    }
+
+  /** Persist `df` and remember it for the next [[release]]; a plan
+    * that is already cached is left to its current owner. */
   private[graft] def persistTracked(df: DataFrame): DataFrame = {
-    tracked.add(df.persist())
+    if (persistOnce(df)) tracked.add(df)
     df
   }
 

@@ -697,8 +697,6 @@ object GraftFunctions {
     registry.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    // conf-gated (spark.graft.topk.rewrite, default false): present in
-    // every session, inert until a session opts in
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
   }
 }

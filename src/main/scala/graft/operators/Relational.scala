@@ -1614,11 +1614,9 @@ object Relational {
 
   /** The WINDOW spelling of grouped top-k, auto-routed to the
     * bounded-heap aggregate by the Catalyst optimizer rule
-    * [[graft.plans.TopKRewrite]] (opted in via
-    * `spark.graft.topk.rewrite` on this key's own cached
-    * `Sessions.childWith` child, so the conf never reaches the caller).
-    * The USER writes `row_number().over(...) <= k`; the OPTIMIZER
-    * proves the pattern safe (single row_number, non-nullable long
+    * [[graft.plans.TopKRewrite]], which every session built with
+    * `GraftExtensions` runs. The USER writes
+    * `row_number().over(...) <= k`; the OPTIMIZER proves the pattern safe (single row_number, non-nullable long
     * (DESC, ASC) order, no rider columns, literal k within the heap
     * contract) and substitutes [[topkAgg]]'s plan — top-k without a
     * per-group sort, from unchanged user code. The oracle is the
@@ -1629,12 +1627,9 @@ object Relational {
   val topkRewrite: GQuery = GQuery(
     "op_topk_rewrite",
     (s, dir) => {
-      // cached conf-scoped child (r16 advice: a fresh newSession per
-      // invocation accumulated never-released sessions across bench loops)
-      val ss = graft.Sessions.childWith(s, Seq("spark.graft.topk.rewrite" -> "true"))
       val w = Window.partitionBy(col("l_returnflag"))
         .orderBy(col("cents").desc, col("okey"))
-      Tables.lineitem(ss, dir)
+      Tables.lineitem(s, dir)
         .select(col("l_returnflag"),
           coalesce(floor(col("l_extendedprice") * 100 + 0.5).cast("long"), lit(0L))
             .as("cents"),

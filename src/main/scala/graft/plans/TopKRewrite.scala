@@ -46,10 +46,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * The rewritten subtree re-exposes the ORIGINAL attribute ids
   * (aliases pinned to the old exprIds), so parents resolve unchanged.
   *
-  * Gated by `spark.graft.topk.rewrite` (default false): injected
-  * globally via [[graft.functions.GraftExtensions]] but inert until a
-  * session opts in — the conservative deployment posture for a
-  * semantics-preserving but plan-shape-changing rule.
+  * On in every session built with [[graft.functions.GraftExtensions]]
+  * (so every [[graft.Sessions.local]] session); a session turns it off
+  * with Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.TopKRewrite`.
   *
   * Measured (dev/BENCH_NOTES.md "window-vs-heap A/B"): ~6× at sf10
   * over a 3-group window (whose final sort parallelism is |groups|
@@ -59,17 +59,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   */
 object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val FLAG = "spark.graft.topk.rewrite"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(FLAG, "false").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case f @ Filter(cond, w: Window) =>
         rnUpperBound(cond, w).flatMap { case (rn, k) =>
           tryRewrite(w, rn, k).map(repl => Filter(cond, repl))
         }.getOrElse(f)
     }
-  }
 
   /** The tightest literal upper bound any conjunct places on the
     * window's row_number output, when it fits the heap contract.

@@ -55,7 +55,7 @@ object FullTpch {
     * bind to that corpus; at other sfs (bench) the oracle is unused. */
   private val OracleRoot = s"$Root/sf0.01"
 
-  private def fmt(sf: Double): String =
+  private[graft] def fmt(sf: Double): String =
     if (sf == sf.toLong) sf.toLong.toString else sf.toString
 
   /** Generate-and-persist all 8 tables at `sf` once per corpus version;
@@ -97,32 +97,32 @@ object FullTpch {
     mk(name, tables, body, ctes)
   }
 
-  /** One view-registered sub-session per (context incarnation, corpus
-    * root): the 8 temp-view registrations (schema reads over 8×32
-    * parquet footers) are CATALOG state — a deployment pays them once
-    * per session, then runs many queries. Before this memo every
-    * q*_full bench line re-paid newSession + registration per timed
-    * run, and an sf1 probe (dev/BENCH_NOTES.md round 14) measured that
-    * setup at 0.7-1.7 s of each 0.9-2.9 s line — the bench was timing
-    * catalog bootstrap, not the query. Parse + analysis + planning +
-    * execution still run per call (`ss.sql` below); only the session
-    * and its view definitions are reused. Keyed on the context
-    * incarnation so entries from stopped sessions are unreachable
-    * (same contract as [[graft.Caches.memo]]). */
-  private val sessions =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
+  /** One view-registered child session (see [[graft.Sessions.child]])
+    * per (context incarnation, corpus root, conf set): the 8 temp-view
+    * registrations (schema reads over 8×32 parquet footers) are
+    * CATALOG state — a deployment pays them once per session, then
+    * runs many queries. Before this memo every q*_full bench line
+    * re-paid newSession + registration per timed run, and an sf1 probe
+    * (dev/BENCH_NOTES.md round 14) measured that setup at 0.7-1.7 s of
+    * each 0.9-2.9 s line — the bench was timing catalog bootstrap, not
+    * the query. Parse + analysis + planning + execution still run per
+    * call (`ss.sql` below); only the session and its view definitions
+    * are reused. */
+  private val sessions = new graft.Sessions.ContextMemo[SparkSession]
   private[graft] def sessionFor(s: SparkSession, root: String,
-      confs: Seq[(String, String)] = Nil): SparkSession = {
-    val sc = s.sparkContext
-    val tag = confs.map { case (k, v) => s"$k=$v" }.mkString(";")
-    sessions.computeIfAbsent(s"${sc.applicationId}@${sc.startTime}:$root#$tag", _ => {
-      val ss = s.newSession()
-      confs.foreach { case (k, v) => ss.conf.set(k, v) }
+      confs: Seq[(String, String)] = Nil): SparkSession =
+    sessions(s, s"$root#${graft.Sessions.confTag(confs)}") {
+      val ss = graft.Sessions.child(s, confs)
       TpchGen.tableNames.foreach(t =>
         ss.read.parquet(s"$root/$t.parquet").createOrReplaceTempView(t))
       ss
-    })
-  }
+    }
+
+  /** The persisted full-schema corpus for a testdata dir: generated
+    * once at the dir's scale factor ([[TpchGen.sfFromDir]]), its root
+    * returned. */
+  private[graft] def rootFor(s: SparkSession, dir: String): String =
+    ensurePersisted(s, TpchGen.sfFromDir(dir))
 
   /** Per-KEY session-conf overrides, routed through [[sessionFor]]'s
     * conf tag so a single key can run under a different physical-
@@ -168,8 +168,7 @@ object FullTpch {
     GQuery(
       name,
       (s, dir) => {
-        val root = ensurePersisted(s, TpchGen.sfFromDir(dir))
-        sessionFor(s, root, confOverrides.getOrElse(name, Nil)).sql(sparkSql)
+        sessionFor(s, rootFor(s, dir), confOverrides.getOrElse(name, Nil)).sql(sparkSql)
       },
       Some(oracleSql),
       tags = Set("tpch_full"))

@@ -364,11 +364,17 @@ object TpchGen {
 
   // ---------------------------------------------------- GQuery surface
 
-  /** Scale factor from the testdata dir name ("…/sf0.01" → 0.01) so
-    * the bench runs generation at the bench scale; correctness runs
-    * at sf0.01 where the constant oracles below are pinned. */
-  private[graft] def sfFromDir(dir: String): Double =
-    "sf([0-9.]+)".r.findFirstMatchIn(dir).map(_.group(1).toDouble).getOrElse(0.01)
+  /** Scale factor named by a testdata dir: the LAST `sf<number>` in
+    * the path, so `/data/sf2024/runs/sf0.1` is 0.1 and a trailing dot
+    * (`sf0.1.`) is not part of the number; None when the path names
+    * none. */
+  private[graft] def sfOf(dir: String): Option[Double] =
+    "sf([0-9]+(?:\\.[0-9]+)?)".r.findAllMatchIn(dir).toSeq.lastOption.map(_.group(1).toDouble)
+
+  /** [[sfOf]], defaulting to 0.01, so generation runs at the bench's
+    * scale; correctness runs at sf0.01 where the constant oracles
+    * below are pinned. */
+  private[graft] def sfFromDir(dir: String): Double = sfOf(dir).getOrElse(0.01)
 
   /** Distributed generation of all 8 tables; returns (table_name,
     * n_rows). The oracle derives every expected count from the

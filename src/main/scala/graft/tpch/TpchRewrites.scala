@@ -50,7 +50,7 @@ object TpchRewrites {
     "q22_full_anti_rewrite",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val root = FullTpch.ensurePersisted(s, TpchGen.sfFromDir(dir))
+      val root = FullTpch.rootFor(s, dir)
       val codes = Seq("13", "31", "23", "29", "30", "18", "17")
       val cust = s.read.parquet(s"$root/customer.parquet")
         .select(col("c_custkey"), col("c_acctbal"),
@@ -115,7 +115,7 @@ object TpchRewrites {
     "q15_full_view_reuse",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val root = FullTpch.ensurePersisted(s, TpchGen.sfFromDir(dir))
+      val root = FullTpch.rootFor(s, dir)
       val cents = floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
         .cast("long")
       val revenue = graft.Caches.persistTracked(

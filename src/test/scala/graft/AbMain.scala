@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * {{{
   * Test/runMain graft.AbMain <sfDir> <pairs> <armA> <armB> [...]
-  * Test/runMain graft.AbMain dev/sf1 10 op_topk_rewrite op_topk_rewrite@spark.graft.topk.rewrite=false
+  * Test/runMain graft.AbMain dev/sf1 10 op_topk_rewrite op_topk_rewrite@spark.sql.optimizer.excludedRules=graft.plans.TopKRewrite
   * }}}
   *
   * Every arm's order-insensitive digest (row count + Σ hash over the

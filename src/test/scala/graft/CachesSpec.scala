@@ -33,6 +33,45 @@ class CachesSpec extends SparkSpecBase {
     assert(Caches.release() == 0)
   }
 
+  test("rebuilding a key re-persists nothing: no second cache entry, no CacheManager warning") {
+    Caches.release()
+    spark.catalog.clearCache()
+    def run(): Unit = SparkEntry.queries("ann_ivf_balanced")(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    val warned = cacheWarnings {
+      run()
+      val perBuild = Caches.release()
+      run()
+      val cached = spark.sparkContext.getPersistentRDDs.size
+      run() // no release in between: every plan is already cached
+      assert(spark.sparkContext.getPersistentRDDs.size == cached,
+        "the second build must reuse the first build's cache entries")
+      assert(Caches.release() == perBuild, "the second build must track nothing new")
+      assert(spark.sharedState.cacheManager.isEmpty)
+    }
+    assert(warned == 0, s"CacheManager warned $warned times about already-cached data")
+  }
+
+  /** Runs `body` and counts CacheManager's "Asked to cache already
+    * cached data" warnings logged meanwhile. */
+  private def cacheWarnings(body: => Unit): Int = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val probe = new AbstractAppender("caches-spec-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("Asked to cache already cached data"))
+          n.incrementAndGet()
+    }
+    probe.start()
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution.CacheManager").asInstanceOf[Logger]
+    logger.addAppender(probe)
+    try body finally { logger.removeAppender(probe); probe.stop() }
+    n.get
+  }
+
   test("memo builds once per (context, id, dir) and survives release()") {
     Caches.releaseMemos()
     var builds = 0

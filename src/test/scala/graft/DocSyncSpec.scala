@@ -43,6 +43,24 @@ class DocSyncSpec extends AnyFunSuite {
       s"SURVEY.md §2 prose claims ${prose.get} keys; Registry.all has ${shipped.size}")
   }
 
+  test("session building and context-scoped state live only in Sessions.scala") {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator()
+      .asInstanceOf[java.util.Iterator[java.nio.file.Path]]
+    var sources = Map.empty[String, String]
+    while (files.hasNext) {
+      val p = files.next()
+      if (p.toString.endsWith(".scala"))
+        sources += p.getFileName.toString -> new String(
+          java.nio.file.Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
+    }
+    def filesMatching(re: String) = sources.collect {
+      case (f, src) if re.r.findFirstIn(src).nonEmpty => f
+    }.toSet
+    assert(filesMatching("""SparkSession\s*\.\s*builder""") == Set("Sessions.scala"))
+    assert(filesMatching("applicationId") == Set("Sessions.scala"))
+    assert(filesMatching("""spark\.graft\.topk\.rewrite""").isEmpty)
+  }
+
   test("README totals match the build: registry key count and test count") {
     // the one doc-drift class the §2 pin doesn't cover — README.md's
     // headline numbers went stale twice in three rounds (r8/r9). The

@@ -63,6 +63,16 @@ class PlanSpec extends SparkSpecBase {
     }
   }
 
+  test("TopKLong plans exactly in the keys that call top_k_long or spell the rewritable window") {
+    // the TopKRewrite rule is on in every GraftExtensions session: pin
+    // its reach so a widened pattern match shows up here as a new key
+    val withTopK = Registry.all.filter { q =>
+      q.build(spark, sfDir).queryExecution.optimizedPlan.exists(
+        _.expressions.exists(_.exists(_.isInstanceOf[graft.functions.TopKLong])))
+    }.map(_.name).toSet
+    assert(withTopK == Set("op_topk_agg", "op_topk_rewrite", "pipeline_cap_per_group"))
+  }
+
   test("every registry query plans and has a non-empty schema") {
     Registry.all.foreach { q =>
       val df = q.build(spark, sfDir)

@@ -16,16 +16,14 @@ import org.apache.spark.sql.functions._
   * row-identical to the same query with the rule off (semantics
   * preserved); (3) the rule does NOT fire when any safety premise fails —
   * a rider column the aggregate can't carry, a nullable order key, k
-  * beyond the heap contract — and does not fire at all in sessions that
-  * never opted in (default-off deployment posture).
+  * beyond the heap contract. The rule runs in every session built with
+  * `GraftExtensions`, the shared test session included; the rule-off
+  * control excludes it with Spark's own `excludedRules` conf.
   */
 class TopKRewriteSpec extends SparkSpecBase {
 
-  private def onSession(): SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.graft.topk.rewrite", "true")
-    ss
-  }
+  private lazy val offSession: SparkSession =
+    Sessions.child(spark, Seq("spark.sql.optimizer.excludedRules" -> "graft.plans.TopKRewrite"))
 
   /** Non-nullable long (g, s, p) frame with score ties inside groups.
     * Bitwise ops, not `%`: Remainder is nullable even under ANSI, and
@@ -51,14 +49,11 @@ class TopKRewriteSpec extends SparkSpecBase {
     df.queryExecution.optimizedPlan.collect { case w: LWindow => w }.nonEmpty
 
   test("safe shape: rewrite fires (TopKLong in, Window out) and results match rule-off") {
-    val ss = onSession()
-    val rewritten = topk(frame(ss), 5)
+    val rewritten = topk(frame(spark), 5)
     assert(hasTopK(rewritten), "expected TopKLong aggregate in the optimized plan")
     assert(!hasWindow(rewritten), "expected the Window node to be erased")
 
-    val off = spark.newSession()
-    off.conf.set("spark.graft.topk.rewrite", "false")
-    val control = topk(frame(off), 5)
+    val control = topk(frame(offSession), 5)
     assert(!hasTopK(control) && hasWindow(control))
 
     val a = rewritten.orderBy("g", "rn").collect().map(_.toSeq)
@@ -67,9 +62,8 @@ class TopKRewriteSpec extends SparkSpecBase {
   }
 
   test("ties at the k boundary stay deterministic (payload ASC wins)") {
-    val ss = onSession()
     // 4 groups x 75 rows with scores in [0, 8) -> heavy ties at the cut
-    val df = ss.range(0, 300).select(
+    val df = spark.range(0, 300).select(
       col("id").bitwiseAND(3).as("g"),
       (col("id") * 37).bitwiseAND(7).as("s"),
       col("id").as("p"))
@@ -86,8 +80,7 @@ class TopKRewriteSpec extends SparkSpecBase {
   }
 
   test("no misfire: rider column the aggregate cannot carry") {
-    val ss = onSession()
-    val df = frame(ss).withColumn("rider", col("p") * 2)
+    val df = frame(spark).withColumn("rider", col("p") * 2)
     val q = topk(df, 5)
     assert(!hasTopK(q), "rewrite must not fire when extra columns ride the window")
     assert(hasWindow(q))
@@ -95,8 +88,7 @@ class TopKRewriteSpec extends SparkSpecBase {
   }
 
   test("no misfire: nullable order key") {
-    val ss = onSession()
-    val df = frame(ss).select(col("g"),
+    val df = frame(spark).select(col("g"),
       when(col("s") > lit(-1L), col("s")).as("s"), col("p"))
     assert(df.schema("s").nullable)
     val q = topk(df, 5)
@@ -104,46 +96,43 @@ class TopKRewriteSpec extends SparkSpecBase {
   }
 
   test("no misfire: k beyond the heap contract") {
-    val ss = onSession()
-    val q = topk(frame(ss), 2000)
+    val q = topk(frame(spark), 2000)
     assert(!hasTopK(q) && hasWindow(q))
   }
 
-  test("default off: plain sessions keep the window plan") {
-    val q = topk(frame(spark), 5)
-    assert(!hasTopK(q) && hasWindow(q))
+  test("a plain Sessions.local session rewrites op_topk_rewrite (no conf set)") {
+    val plain = Sessions.local("graft-test").newSession()
+    val q = Registry.byName("op_topk_rewrite").build(plain, sfDir)
+    assert(hasTopK(q) && !hasWindow(q))
   }
 
   test("conjunctive filter: bound extracted, full predicate preserved") {
-    val ss = onSession()
     val w = Window.partitionBy(col("g")).orderBy(col("s").desc, col("p"))
     def q(sess: SparkSession) = frame(sess)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 5 && col("g") > 2)
-    assert(hasTopK(q(ss)) && !hasWindow(q(ss)))
-    val got = q(ss).orderBy("g", "rn").collect().map(_.toSeq).toSeq
-    val want = q(spark).orderBy("g", "rn").collect().map(_.toSeq).toSeq
+    assert(hasTopK(q(spark)) && !hasWindow(q(spark)))
+    val got = q(spark).orderBy("g", "rn").collect().map(_.toSeq).toSeq
+    val want = q(offSession).orderBy("g", "rn").collect().map(_.toSeq).toSeq
     assert(got == want && got.length == 25) // groups 3..7, top 5 each
   }
 
   test("strict and equality spellings: rn < 6 and rn === 3 both rewrite") {
-    val ss = onSession()
     val w = Window.partitionBy(col("g")).orderBy(col("s").desc, col("p"))
     def lt(sess: SparkSession) = frame(sess)
       .withColumn("rn", row_number().over(w)).filter(col("rn") < 6)
     def eq(sess: SparkSession) = frame(sess)
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 3)
-    assert(hasTopK(lt(ss)) && hasTopK(eq(ss)))
-    assert(lt(ss).orderBy("g", "rn").collect().map(_.toSeq).toSeq ==
-      lt(spark).orderBy("g", "rn").collect().map(_.toSeq).toSeq)
-    val got = eq(ss).orderBy("g").collect().map(_.toSeq).toSeq
-    assert(got == eq(spark).orderBy("g").collect().map(_.toSeq).toSeq)
+    assert(hasTopK(lt(spark)) && hasTopK(eq(spark)))
+    assert(lt(spark).orderBy("g", "rn").collect().map(_.toSeq).toSeq ==
+      lt(offSession).orderBy("g", "rn").collect().map(_.toSeq).toSeq)
+    val got = eq(spark).orderBy("g").collect().map(_.toSeq).toSeq
+    assert(got == eq(offSession).orderBy("g").collect().map(_.toSeq).toSeq)
     assert(got.length == 8 && got.forall(_.last == 3))
   }
 
   test("int order attrs rewrite via lossless casts and restore their type") {
-    val ss = onSession()
-    val df = ss.range(0, 2000).select(
+    val df = spark.range(0, 2000).select(
       col("id").bitwiseAND(7).cast("int").as("g"),
       (col("id") * 37).bitwiseAND(63).cast("int").as("s"),
       col("id").cast("int").as("p"))
@@ -152,8 +141,7 @@ class TopKRewriteSpec extends SparkSpecBase {
     assert(hasTopK(q) && !hasWindow(q))
     assert(q.schema.fields.map(_.dataType.typeName).toSeq ==
       Seq("integer", "integer", "integer", "integer"))
-    val off = spark.newSession()
-    val dfOff = off.range(0, 2000).select(
+    val dfOff = offSession.range(0, 2000).select(
       col("id").bitwiseAND(7).cast("int").as("g"),
       (col("id") * 37).bitwiseAND(63).cast("int").as("s"),
       col("id").cast("int").as("p"))
@@ -163,31 +151,30 @@ class TopKRewriteSpec extends SparkSpecBase {
   }
 
   test("long-literal and cast-wrapped rn spellings rewrite (r16 advice)") {
-    val ss = onSession()
     val w = Window.partitionBy(col("g")).orderBy(col("s").desc, col("p"))
     // rn <= 5L: type coercion wraps the int rn in a lossless long cast
     def longLit(sess: SparkSession) = frame(sess)
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= lit(5L))
-    assert(hasTopK(longLit(ss)) && !hasWindow(longLit(ss)))
-    assert(longLit(ss).orderBy("g", "rn").collect().map(_.toSeq).toSeq ==
-      longLit(spark).orderBy("g", "rn").collect().map(_.toSeq).toSeq)
+    assert(hasTopK(longLit(spark)) && !hasWindow(longLit(spark)))
+    assert(longLit(spark).orderBy("g", "rn").collect().map(_.toSeq).toSeq ==
+      longLit(offSession).orderBy("g", "rn").collect().map(_.toSeq).toSeq)
     // explicit CAST(rn AS BIGINT) <= 5 — the op_topk_agg oracle's shape
     def castRn(sess: SparkSession) = frame(sess)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn").cast("long") <= 5)
-    assert(hasTopK(castRn(ss)), "cast-wrapped rn bound must rewrite")
-    assert(castRn(ss).orderBy("g", "rn").collect().map(_.toSeq).toSeq ==
-      castRn(spark).orderBy("g", "rn").collect().map(_.toSeq).toSeq)
+    assert(hasTopK(castRn(spark)), "cast-wrapped rn bound must rewrite")
+    assert(castRn(spark).orderBy("g", "rn").collect().map(_.toSeq).toSeq ==
+      castRn(offSession).orderBy("g", "rn").collect().map(_.toSeq).toSeq)
     // literal-first equality: 3L = rn
     def eqFlip(sess: SparkSession) = frame(sess)
       .withColumn("rn", row_number().over(w)).filter(lit(3L) === col("rn"))
-    assert(hasTopK(eqFlip(ss)))
-    assert(eqFlip(ss).orderBy("g").collect().map(_.toSeq).toSeq ==
-      eqFlip(spark).orderBy("g").collect().map(_.toSeq).toSeq)
+    assert(hasTopK(eqFlip(spark)))
+    assert(eqFlip(spark).orderBy("g").collect().map(_.toSeq).toSeq ==
+      eqFlip(offSession).orderBy("g").collect().map(_.toSeq).toSeq)
     // a long bound past the heap contract still refuses
     def big(sess: SparkSession) = frame(sess)
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= lit(5000L))
-    assert(!hasTopK(big(ss)) && hasWindow(big(ss)))
+    assert(!hasTopK(big(spark)) && hasWindow(big(spark)))
   }
 
   test("documented negative: op_topk_per_group stays a window under the rule (r17)") {
@@ -195,18 +182,16 @@ class TopKRewriteSpec extends SparkSpecBase {
     // parquet corpus whose columns are OPTIONAL → nullable, and the
     // rule correctly refuses nullable order keys (the heap skips
     // nulls where row_number ranks them). This pins the r17 adoption
-    // A/B's negative verdict: opting the key's frame into the rewrite
-    // changes nothing — the plan keeps its Window.
-    val ss = onSession()
-    val q = Registry.byName("op_topk_per_group").build(ss, sfDir)
+    // A/B's negative verdict: the rule leaves the key's frame alone —
+    // the plan keeps its Window.
+    val q = Registry.byName("op_topk_per_group").build(spark, sfDir)
     assert(q.schema("v_cents").nullable, "premise: corpus order key is nullable")
     assert(!hasTopK(q) && hasWindow(q))
   }
 
   test("no misfire: lower-bound-only predicate has no k to extract") {
-    val ss = onSession()
     val w = Window.partitionBy(col("g")).orderBy(col("s").desc, col("p"))
-    val q = frame(ss).withColumn("rn", row_number().over(w)).filter(col("rn") >= 2)
+    val q = frame(spark).withColumn("rn", row_number().over(w)).filter(col("rn") >= 2)
     assert(!hasTopK(q) && hasWindow(q))
   }
 }

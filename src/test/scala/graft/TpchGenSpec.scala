@@ -67,6 +67,15 @@ class TpchGenSpec extends SparkSpecBase {
     assert(dangling.count() == 0)
   }
 
+  test("scale factor of a dir: the last sf<number> in the path") {
+    assert(TpchGen.sfFromDir("/data/testdata/sf0.01") == 0.01)
+    assert(TpchGen.sfFromDir("/data/sf2024/runs/sf0.1") == 0.1)
+    assert(TpchGen.sfFromDir("/data/sf0.1.") == 0.1)
+    assert(TpchGen.sfFromDir("/data/sf10/") == 10.0)
+    assert(TpchGen.sfOf("/data/sf./tpch").isEmpty)
+    assert(TpchGen.sfFromDir("/data/tpch") == 0.01)
+  }
+
   test("orders custkeys skip multiples of 3 and stay in range") {
     val bad = TpchGen.orders(spark, 0.001)
       .filter(col("o_custkey") % 3 === 0 || col("o_custkey") < 1 || col("o_custkey") > 150)
