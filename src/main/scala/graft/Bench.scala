@@ -122,7 +122,7 @@ object Bench {
     def runOnce(name: String): Either[String, Double] =
       try {
         // cold-run discipline (round-6 advice): builder-internal
-        // persists (e.g. the graph keys' edge frames) survive across
+        // persists (e.g. the IVF balance guard's index) survive across
         // runs via the CacheManager, so without this runs 2..n of
         // those keys would read the materialised cache and skip their
         // pipeline entirely — the reported min would be
@@ -130,7 +130,7 @@ object Bench {
         // BEFORE the clock starts: every run pays the whole plan,
         // min stays an honest cold estimator. Deliberate exception
         // (r12 directive): Caches.memo frames — the suite-shared
-        // co-purchase edge list and dup-cluster labels — survive
+        // co-purchase arc frame and dup-cluster labels — survive
         // across keys AND runs, exactly like the materialized shared
         // inputs a real pipeline fans out from; the bench line then
         // measures the operator under test, not a 7×-repaid upstream.

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Registry of frames persisted INSIDE operator builders (e.g. the
-  * graph keys' edge frames, the IVF balance guard's index).
+  * IVF balance guard's index).
   *
   * A builder-internal `persist()` has no natural unpersist point —
   * the builder returns a lazy frame and only the CALLER knows when
@@ -39,7 +39,7 @@ object Caches {
   /** Build-once shared frames, keyed on (SparkContext incarnation,
     * frame id, input dir) — the in-suite reuse path for expensive
     * frames that MANY registry keys consume as an input (the
-    * co-purchase edge list feeds all 7 graph keys; the dup-cluster
+    * co-purchase arc frame feeds all 7 graph keys; the dup-cluster
     * label frame feeds both dedup_components and
     * pipeline_split_cluster). A real pipeline materializes these once
     * and fans out; before this memo the suite paid the priciest

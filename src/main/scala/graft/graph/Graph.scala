@@ -1,8 +1,9 @@
 package graft.graph
 
+import graft.Checkpoints.truncate
 import graft.GQuery
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,112 +16,124 @@ import org.apache.spark.sql.functions._
   * iterate-to-convergence connected components in
   * [[graft.dedup.Dedup.componentsOf]].
   *
-  * Scale posture: the edge list is built by an equi-join keyed on
-  * l_orderkey (order basket sizes are spec-bounded, so the per-order
-  * pair fan-out is a constant ~C(7,2)); triangle counting uses the
-  * standard degree-orientation trick — orient every edge from the
-  * (degree, id)-smaller endpoint to the larger — which bounds
-  * out-degree by O(√E), so the wedge join is O(E^1.5) worst-case
-  * instead of Σdeg² (the difference between survivable and quadratic
-  * on a power-law graph). PageRank runs a FIXED 3 iterations in
-  * integer millionths (rank DIV out-degree contributions, damping
-  * 85/100 in integer math) so the plan is three chained
-  * join+aggregate stages — no driver loop state, no floating drift,
-  * and the DuckDB oracle replays all three hops bit-for-bit. */
+  * Scale posture: every key reads the one memoized arc frame
+  * [[arcs]], built by a shuffle keyed on l_orderkey (order basket
+  * sizes are spec-bounded, so the per-order pair fan-out is a
+  * constant); triangle counting uses the standard degree-orientation
+  * trick — orient every edge from the (degree, id)-smaller endpoint
+  * to the larger — which bounds out-degree by O(√E), so the wedge
+  * work is O(E^1.5) worst-case instead of Σdeg² (the difference
+  * between survivable and quadratic on a power-law graph). PageRank
+  * runs a FIXED 3 iterations in integer millionths (rank DIV
+  * out-degree contributions, damping 85/100 in integer math) so the
+  * plan is three chained join+aggregate stages — no driver loop
+  * state, no floating drift, and the DuckDB oracle replays all three
+  * hops bit-for-bit. The iterated keys unroll the same [[Rounds]] on
+  * both sides: a fold on the Spark side, one CTE template per key on
+  * the oracle side. */
 object Graph {
 
-  /** Distinct undirected co-purchase edges (a < b) between parts
-    * sharing an order. Spelled as per-order sorted part SETS exploded
-    * into pairs (ONE lineitem shuffle keyed on l_orderkey + the edge
-    * distinct) rather than the definitional self-join, which shuffles
-    * lineitem TWICE. Measured A/B (warm, local[32]): set build wins
-    * ~12% at sf0.1; at sf1 the join build edges it locally (1.9 vs
-    * 2.5 s — the nested transform's per-order array cost vs the
-    * join's second shuffle, which local mode under-prices). The set
-    * spelling is kept because halving shuffled bytes is the constraint
-    * that binds on a real cluster, not local CPU. Per-order fan-out is
-    * the spec-bounded basket C(n,2); sets are sorted so a < b by
-    * construction. The oracle side keeps the self-join spelling — two
-    * constructions hash-matching is itself a check. */
-  /** The memoized suite-shared edge frame: all 7 graph keys consume
-    * the SAME co-purchase edge list, so it is built and persisted
-    * once per (context, dir) via [[graft.Caches.memo]] — the
-    * materialize-once-fan-out shape a real pipeline uses — instead
-    * of each key re-running the lineitem shuffle. */
-  private[graft] def sharedEdges(s: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo(s, "coPurchaseEdges", dir)(coPurchaseEdges(s, dir))
+  /** The co-purchase graph as one arc frame `(n, nbr, d)`: both
+    * directions of every distinct edge between parts sharing an
+    * order, `d` the degree of `n`. Every graph key reads it — the
+    * (a < b) edge list is [[pairs]], degrees are the `d` column — so
+    * direction, degree and persistence are paid once per (context,
+    * dir) through [[graft.Caches.memo]], the materialize-once-fan-out
+    * shape a real pipeline uses, instead of once per key. */
+  private[graft] def arcs(s: SparkSession, dir: String): DataFrame =
+    graft.Caches.memo(s, "coPurchaseArcs", dir)(buildArcs(s, dir))
 
-  private[graft] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
+  /** Spelled as per-order part SETS expanded into ordered pairs (ONE
+    * lineitem shuffle keyed on l_orderkey), then one set per node:
+    * that second shuffle both drops repeated edges and sizes `d`, so
+    * the degree costs no join. The definitional self-join shuffles
+    * lineitem TWICE. Measured A/B of the (a < b) edge-list build
+    * (warm, local[32]): the set build wins ~12% at sf0.1; at sf1 the
+    * join build edges it locally (1.9 vs 2.5 s — the nested
+    * transform's per-order array cost vs the join's second shuffle,
+    * which local mode under-prices). The set spelling is kept because
+    * halving shuffled bytes is the constraint that binds on a real
+    * cluster, not local CPU. Per-order fan-out is the spec-bounded
+    * basket n(n-1). The oracle side keeps the self-join spelling —
+    * two constructions hash-matching is itself a check. */
+  private def buildArcs(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+      .agg(collect_set(col("l_partkey")).as("ps"))
       .select(explode(expr(
-        """flatten(transform(ps, (x, i) ->
-             transform(slice(ps, i + 2, size(ps) - i - 1), y -> struct(x AS a, y AS b))))"""))
+        "flatten(transform(ps, x -> transform(filter(ps, y -> y != x), y -> struct(x AS n, y AS nbr))))"))
         .as("e"))
-      .select(col("e.a"), col("e.b")).distinct()
+      .groupBy(col("e.n").as("n"))
+      .agg(collect_set(col("e.nbr")).as("nbrs"))
+      .select(col("n"), explode(col("nbrs")).as("nbr"), size(col("nbrs")).cast("long").as("d"))
 
+  /** The undirected edge list (a < b): a view of [[arcs]]. */
+  private[graft] def pairs(s: SparkSession, dir: String): DataFrame =
+    arcs(s, dir).filter(col("n") < col("nbr")).select(col("n").as("a"), col("nbr").as("b"))
+
+  /** Round count of every iterated key, on both sides. */
+  private val Rounds = 1 to 3
+
+  // oracle fragments: the definitional edge list, its degree and its
+  // two directions
   private val pairsSql = """
       pairs AS (
         SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
         FROM lineitem l1 JOIN lineitem l2
           ON l1.l_orderkey = l2.l_orderkey AND l1.l_partkey < l2.l_partkey)"""
 
+  private def degSql(name: String, edges: String) = s"""
+      $name AS (SELECT n, count(*) AS d
+             FROM (SELECT a AS n FROM $edges UNION ALL SELECT b AS n FROM $edges) GROUP BY 1)"""
+
+  private def bothWaysSql(name: String, from: String, to: String) = s"""
+      $name AS (SELECT a AS $from, b AS $to FROM pairs
+                UNION ALL SELECT b AS $from, a AS $to FROM pairs)"""
+
+  private def oracle(ctes: Seq[String])(select: String): Option[String] =
+    Some(s"""
+      WITH ${(pairsSql +: ctes).mkString(",")}
+      $select""")
+
   /** Exact triangle count by degree orientation: every edge points at
     * its HIGHER-(degree, id) endpoint, so out-degree is O(√E) and each
     * triangle x<y<z is found exactly once — as z ∈ N⁺(x) ∩ N⁺(y) at
-    * edge (x, y). The Spark body intersects sorted out-neighbour
-    * arrays per edge (shuffles O(E) rows of O(√E) payload) instead of
-    * materialising the O(E^1.5) wedge-pair stream, and takes the wedge
-    * count from the closed form Σ C(out-degree, 2); the oracle replays
-    * the definitional wedge-join spelling — two independent algorithms
+    * edge (x, y). The Spark body intersects out-neighbour arrays per
+    * oriented edge (shuffles O(E) rows of O(√E) payload) instead of
+    * materialising the O(E^1.5) wedge-pair stream (70 M rows at
+    * sf0.1), and takes the edge and wedge counts from the closed forms
+    * Σ out-degree and Σ C(out-degree, 2); the oracle replays the
+    * definitional wedge-join spelling — two independent algorithms
     * hash-matching is the point. Emits the census (edges, wedges,
     * triangles) as one row via 1-row broadcast joins. */
   val triangles: GQuery = GQuery(
     "graph_triangles",
     (s, dir) => {
-      val pairs = sharedEdges(s, dir)
-      val deg = pairs.select(col("a").as("n")).union(pairs.select(col("b").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
-      val withDeg = pairs
-        .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
-        .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
-      val lt = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-      val oriented = withDeg.select(
-        when(lt, col("a")).otherwise(col("b")).as("u"),
-        when(lt, col("b")).otherwise(col("a")).as("v"))
-      // adjacency-intersection spelling: never materialise the wedge
-      // pairs (O(E^1.5) rows — 70 M at sf0.1). Out-neighbour lists are
-      // O(√E) long under the orientation, so attaching them to each
-      // edge and intersecting (codegen'd array_intersect on sorted
-      // sets) shuffles O(E) rows of O(√E) payload instead. The wedge
-      // COUNT is the closed form Σ C(out-degree, 2) — no pair stream
-      // needed for it either.
-      val adj = graft.Caches.persistTracked(
-        oriented.groupBy(col("u"))
-          .agg(sort_array(collect_set(col("v"))).as("nbrs"), count(lit(1)).as("od")))
-      val tri = oriented
-        .join(adj.select(col("u"), col("nbrs").as("nu")), "u")
-        .join(adj.select(col("u").as("v"), col("nbrs").as("nv")), Seq("v"), "left")
-        .select(size(array_intersect(col("nu"),
-          coalesce(col("nv"), expr("CAST(array() AS array<bigint>)")))).cast("long").as("c"))
-      pairs.agg(count(lit(1)).as("n_edges"))
-        .crossJoin(adj.agg(sum(expr("od * (od - 1) DIV 2")).cast("long").as("n_wedges")))
-        .crossJoin(tri.agg(sum(col("c")).as("n_triangles")))
+      // grouped by nbr, the arcs hand each node u its neighbours with
+      // their degrees, and u's own degree is the group size
+      val out = arcs(s, dir).groupBy(col("nbr").as("u"))
+        .agg(collect_list(struct(col("d"), col("n"))).as("ns"))
+        .select(col("u"), expr(
+          "transform(filter(ns, x -> x.d > size(ns) OR (x.d = size(ns) AND x.n > u)), x -> x.n)")
+          .as("nbrs"))
+      val tri = out.select(explode(col("nbrs")).as("v"), col("nbrs").as("nu"))
+        .join(out.select(col("u").as("v"), col("nbrs").as("nv")), "v")
+        .select(size(array_intersect(col("nu"), col("nv"))).cast("long").as("c"))
+      def total(c: Column) = coalesce(sum(c).cast("long"), lit(0L))
+      out.agg(total(size(col("nbrs"))).as("n_edges"),
+          total(expr("size(nbrs) * (size(nbrs) - 1) DIV 2")).as("n_wedges"))
+        .crossJoin(tri.agg(total(col("c")).as("n_triangles")))
     },
-    Some(s"""
-      WITH $pairsSql,
-      deg AS (SELECT n, count(*) AS d
-              FROM (SELECT a AS n FROM pairs UNION ALL SELECT b AS n FROM pairs) GROUP BY 1),
+    oracle(Seq(degSql("deg", "pairs"), """
       oriented AS (
         SELECT CASE WHEN (da.d, a) < (db.d, b) THEN a ELSE b END AS u,
                CASE WHEN (da.d, a) < (db.d, b) THEN b ELSE a END AS v,
                CASE WHEN (da.d, a) < (db.d, b) THEN db.d ELSE da.d END AS dv
-        FROM pairs JOIN deg da ON da.n = a JOIN deg db ON db.n = b),
+        FROM pairs JOIN deg da ON da.n = a JOIN deg db ON db.n = b)""", """
       wedges AS (
         SELECT e1.v AS x, e2.v AS y
         FROM oriented e1 JOIN oriented e2
-          ON e1.u = e2.u AND ((e1.dv, e1.v) < (e2.dv, e2.v)))
+          ON e1.u = e2.u AND ((e1.dv, e1.v) < (e2.dv, e2.v)))"""))("""
       SELECT CAST((SELECT count(*) FROM pairs) AS BIGINT) AS n_edges,
              CAST((SELECT count(*) FROM wedges) AS BIGINT) AS n_wedges,
              CAST(count(*) AS BIGINT) AS n_triangles
@@ -129,8 +142,9 @@ object Graph {
 
   /** Fixed-iteration integer PageRank (3 hops, damping 85/100, ranks
     * in millionths): every iteration is contribution = rank DIV
-    * out-degree pushed along each directed edge, summed per target,
-    * damped — one join + one aggregate per hop, all keyed on node id.
+    * out-degree pushed along each arc, summed per target, damped —
+    * one join + one aggregate per hop, all keyed on node id. Every
+    * node starts at the same rank, so hop 1 needs no join at all.
     * Fixed iteration count keeps the plan static (no convergence
     * probe, no driver round-trips) — the production spelling for
     * "rank this 100 TB link graph" is exactly k chained hops of this
@@ -138,190 +152,140 @@ object Graph {
   val pagerank: GQuery = GQuery(
     "graph_pagerank",
     (s, dir) => {
-      val pairs = sharedEdges(s, dir)
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      // degree is a per-edge constant: attach it ONCE and persist the
-      // (src, dst, d) frame — each of the 3 hops then joins only the
-      // current rank, not rank AND deg
-      val edgesD = graft.Caches.persistTracked(edges.join(deg, "src"))
-      var rank = deg.select(col("src").as("n"), lit(1000000L).as("r"))
-      for (_ <- 1 to 3) {
-        rank = edgesD
-          .join(rank.withColumnRenamed("n", "src"), "src")
-          .select(col("dst"), expr("r DIV d").as("c"))
-          .groupBy(col("dst"))
-          .agg(sum(col("c")).as("s"))
-          .select(col("dst").as("n"),
-            (lit(150000L) + expr("(85 * s) DIV 100")).cast("long").as("r"))
-      }
-      rank
+      val a = arcs(s, dir)
+      // ranks r on the arcs n → nbr in, ranks of the targets out
+      def hop(ranked: DataFrame): DataFrame = ranked
+        .groupBy(col("nbr").as("n"))
+        .agg(sum(expr("r DIV d")).as("s"))
+        .select(col("n"), (lit(150000L) + expr("(85 * s) DIV 100")).cast("long").as("r"))
+      Rounds.tail.foldLeft(hop(a.withColumn("r", lit(1000000L))))((rank, _) => hop(a.join(rank, "n")))
     },
-    Some(s"""
-      WITH $pairsSql,
-      edges AS (SELECT a AS src, b AS dst FROM pairs
-                UNION ALL SELECT b AS src, a AS dst FROM pairs),
-      deg AS (SELECT src, count(*) AS d FROM edges GROUP BY 1),
-      r0 AS (SELECT src AS n, CAST(1000000 AS BIGINT) AS r FROM deg),
-      r1 AS (SELECT dst AS n, CAST(150000 + (85 * sum(r // d)) // 100 AS BIGINT) AS r
-             FROM edges JOIN r0 ON r0.n = edges.src JOIN deg USING (src) GROUP BY dst),
-      r2 AS (SELECT dst AS n, CAST(150000 + (85 * sum(r // d)) // 100 AS BIGINT) AS r
-             FROM edges JOIN r1 ON r1.n = edges.src JOIN deg USING (src) GROUP BY dst),
-      r3 AS (SELECT dst AS n, CAST(150000 + (85 * sum(r // d)) // 100 AS BIGINT) AS r
-             FROM edges JOIN r2 ON r2.n = edges.src JOIN deg USING (src) GROUP BY dst)
-      SELECT n, r FROM r3"""),
+    oracle(Seq(bothWaysSql("edges", "src", "dst"), """
+      deg AS (SELECT src, count(*) AS d FROM edges GROUP BY 1)""", """
+      r0 AS (SELECT src AS n, CAST(1000000 AS BIGINT) AS r FROM deg)""") ++
+      Rounds.map(i => s"""
+      r$i AS (SELECT dst AS n, CAST(150000 + (85 * sum(r // d)) // 100 AS BIGINT) AS r
+             FROM edges JOIN r${i - 1} ON r${i - 1}.n = edges.src JOIN deg USING (src) GROUP BY dst)"""))(
+      s"SELECT n, r FROM r${Rounds.last}"),
     tags = Set("graph"))
 
   /** Degree distribution of the co-purchase graph — the first question
     * asked of any graph (is it power-law? where do the hubs start?)
     * and the input to every skew decision the other graph keys make
-    * (orientation in [[triangles]], salting thresholds). Two
-    * map-side-combined aggregates: degree per node, then node count
-    * per degree — output is O(distinct degrees), tiny at any scale. */
+    * (orientation in [[triangles]], salting thresholds). One
+    * map-side-combined aggregate over the arcs' degree column: a node
+    * of degree d owns exactly d arcs — output is O(distinct degrees),
+    * tiny at any scale. */
   val degreeDistribution: GQuery = GQuery(
     "graph_degree_distribution",
-    (s, dir) => {
-      val pairs = sharedEdges(s, dir)
-      pairs.select(col("a").as("n")).union(pairs.select(col("b").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
-        .groupBy(col("d").as("degree")).agg(count(lit(1)).as("n_nodes"))
-    },
-    Some(s"""
-      WITH $pairsSql,
-      deg AS (SELECT n, count(*) AS d
-              FROM (SELECT a AS n FROM pairs UNION ALL SELECT b AS n FROM pairs) GROUP BY 1)
+    (s, dir) =>
+      arcs(s, dir).groupBy(col("d").as("degree")).agg(count(lit(1)).as("n_arcs"))
+        .select(col("degree"), expr("n_arcs DIV degree").as("n_nodes")),
+    oracle(Seq(degSql("deg", "pairs")))("""
       SELECT CAST(d AS BIGINT) AS degree, count(*) AS n_nodes
       FROM deg GROUP BY 1"""),
     tags = Set("graph"))
 
   /** k-hop reachability (BFS, fixed 3 hops) from a seed set: hop
     * distance = min over paths, computed by 3 unrolled
-    * frontier-expansion rounds (join frontier to edges, union, min per
-    * node) — the bounded-depth traversal behind "everything within k
-    * links of these accounts/parts". Fixed k keeps the plan static
-    * like [[pagerank]]; the iterate-to-fixpoint variant is
+    * frontier-expansion rounds (join frontier to arcs, min per node) —
+    * the bounded-depth traversal behind "everything within k links of
+    * these accounts/parts". Fixed k keeps the plan static like
+    * [[pagerank]]; the iterate-to-fixpoint variant is
     * [[graft.dedup.Dedup.componentsOf]]'s RDD loop. Each round
-    * shuffles (frontier ⋈ edges) + one min-aggregate keyed by node —
+    * shuffles (frontier ⋈ arcs) + one min-aggregate keyed by node —
     * frontier size is bounded by the node count, never the path
     * count, because min-per-node collapses every round. */
   val khop: GQuery = GQuery(
     "graph_khop",
     (s, dir) => {
-      val pairs = sharedEdges(s, dir)
-      val edges = graft.Caches.persistTracked(
-        pairs.select(col("a").as("src"), col("b").as("dst"))
-          .union(pairs.select(col("b").as("src"), col("a").as("dst"))))
-      // the frontier is referenced twice per round (union + expansion
-      // join) and its lineage deepens each round — each round is an
-      // EAGER truncation ([[graft.Checkpoints.truncate]]: executor-
-      // local by default, reliable checkpoint when
+      val a = arcs(s, dir)
+      // each round is an EAGER truncation ([[graft.Checkpoints.truncate]]:
+      // executor-local by default, reliable checkpoint when
       // spark.graft.checkpoint.reliable names a durable dir — the
       // recovery contract lives on that object), keeping the next
       // round's Catalyst pass shallow (the same plan-depth cost
-      // graph_kcore measures) and neither reference recomputing the
-      // expansion. It is node-bounded, so the expansion join
-      // broadcasts it and the edge list never reshuffles; at
+      // graph_kcore measures). The frontier is node-bounded, so the
+      // expansion join broadcasts it and the arcs never reshuffle; at
       // billion-node scale drop the hint and AQE plans the shuffle
       // join.
-      var front = edges.filter(col("src") < 10)
-        .select(col("src").as("n")).distinct()
+      val seeds = a.filter(col("n") < 10).select(col("n")).distinct()
         .withColumn("hop", lit(0L))
-        .transform(graft.Checkpoints.truncate(s))
-      for (_ <- 1 to 3) {
-        front = front
-          .union(edges.join(broadcast(front.withColumnRenamed("n", "src")), "src")
-            .select(col("dst").as("n"), (col("hop") + 1).as("hop")))
+        .transform(truncate(s))
+      // every frontier node owns an arc, so the join keeps it at its
+      // own hop beside its neighbours at hop + 1
+      Rounds.foldLeft(seeds)((front, _) =>
+        a.join(broadcast(front), "n")
+          .selectExpr("inline(array(struct(n, hop), struct(nbr AS n, hop + 1 AS hop)))")
           .groupBy(col("n")).agg(min(col("hop")).as("hop"))
-          .transform(graft.Checkpoints.truncate(s))
-      }
-      front
+          .transform(truncate(s)))
     },
-    Some(s"""
-      WITH $pairsSql,
-      edges AS (SELECT a AS src, b AS dst FROM pairs
-                UNION ALL SELECT b AS src, a AS dst FROM pairs),
-      h0 AS (SELECT DISTINCT src AS n, CAST(0 AS BIGINT) AS hop FROM edges WHERE src < 10),
-      h1 AS (SELECT n, min(hop) AS hop FROM (
-               SELECT n, hop FROM h0
+    oracle(Seq(bothWaysSql("edges", "src", "dst"), """
+      h0 AS (SELECT DISTINCT src AS n, CAST(0 AS BIGINT) AS hop FROM edges WHERE src < 10)""") ++
+      Rounds.map(i => s"""
+      h$i AS (SELECT n, min(hop) AS hop FROM (
+               SELECT n, hop FROM h${i - 1}
                UNION ALL
-               SELECT e.dst AS n, h0.hop + 1 FROM edges e JOIN h0 ON e.src = h0.n) GROUP BY 1),
-      h2 AS (SELECT n, min(hop) AS hop FROM (
-               SELECT n, hop FROM h1
-               UNION ALL
-               SELECT e.dst AS n, h1.hop + 1 FROM edges e JOIN h1 ON e.src = h1.n) GROUP BY 1),
-      h3 AS (SELECT n, min(hop) AS hop FROM (
-               SELECT n, hop FROM h2
-               UNION ALL
-               SELECT e.dst AS n, h2.hop + 1 FROM edges e JOIN h2 ON e.src = h2.n) GROUP BY 1)
-      SELECT n, CAST(hop AS BIGINT) AS hop FROM h3"""),
+               SELECT e.dst AS n, h${i - 1}.hop + 1 FROM edges e JOIN h${i - 1} ON e.src = h${i - 1}.n) GROUP BY 1)"""))(
+      s"SELECT n, CAST(hop AS BIGINT) AS hop FROM h${Rounds.last}"),
     tags = Set("graph"))
 
   /** k-core decomposition, 3 unrolled peeling rounds at k = 100
     * (chosen at the graph's median degree so the peel actually
-    * cascades — see [[degreeDistribution]]): each round recomputes
-    * degrees over the surviving edge set, drops nodes below k, and
-    * keeps only edges with both endpoints surviving (two left-semi
-    * joins — no row widening). Emits the per-round census
-    * (round, n_nodes, n_edges) — the shrinking curve IS the result.
-    * Fixed round count keeps the plan static exactly like
-    * [[pagerank]]; full peeling-to-fixpoint would use the
-    * [[graft.dedup.Dedup.componentsOf]] RDD-loop shape. Each round is
-    * one degree aggregate + two semi-joins keyed on node id — all
-    * shuffle-partitioned, nothing driver-side. */
+    * cascades — see [[degreeDistribution]]): each round drops nodes
+    * of degree below k and keeps only arcs with both endpoints
+    * surviving (two left-semi joins — no row widening). Round 1 reads
+    * the arcs' degree column; later rounds count the surviving arcs.
+    * Emits the per-round census (round, n_nodes, n_edges) — the
+    * shrinking curve IS the result. Fixed round count keeps the plan
+    * static exactly like [[pagerank]]; full peeling-to-fixpoint would
+    * use the [[graft.dedup.Dedup.componentsOf]] RDD-loop shape. Each
+    * round is one node-keyed aggregate + two semi-joins keyed on node id —
+    * all shuffle-partitioned, nothing driver-side. */
   val kcore: GQuery = GQuery(
     "graph_kcore",
     (s, dir) => {
       val K = 100
-      var edges = sharedEdges(s, dir)
-      var rounds = Seq.empty[org.apache.spark.sql.DataFrame]
-      for (r <- 1 to 3) {
-        val deg = edges.select(col("a").as("n")).union(edges.select(col("b").as("n")))
-          .groupBy(col("n")).agg(count(lit(1)).as("d"))
-        // Both per-round frames are EAGER truncations: the round's
-        // result is materialized and its lineage truncated, so round
-        // r+1's Catalyst pass optimizes a shallow plan over a
-        // LogicalRDD instead of the whole accumulated tree — without
-        // this, rounds cost driver-side plan time superlinear in depth
-        // (measured: rounds 1/2 in 0.8 s each, round 3 in 8 s on 7 k
-        // rows). keep is NODE-bounded (≤ the surviving core), so the
-        // semi-joins broadcast it and the edge set never shuffles; for
-        // a core too large to broadcast, drop the hint and AQE plans
-        // the shuffle semi-join. Durability tier is conf-switched
-        // (graft.Checkpoints: local blocks by default, reliable
-        // checkpoint under spark.graft.checkpoint.reliable).
-        val keep = deg.filter(col("d") >= K).select(col("n")).transform(graft.Checkpoints.truncate(s))
-        edges = edges
-          .join(broadcast(keep.withColumnRenamed("n", "a")), Seq("a"), "left_semi")
-          .join(broadcast(keep.withColumnRenamed("n", "b")), Seq("b"), "left_semi")
-          .transform(graft.Checkpoints.truncate(s))
-        rounds = rounds :+ keep.agg(count(lit(1)).as("n_nodes"))
-          .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
-          .select(lit(r.toLong).as("round"), col("n_nodes"), col("n_edges"))
+      val a = arcs(s, dir)
+      def cores(edges: DataFrame) =
+        edges.groupBy(col("n")).agg(count(lit(1)).as("d")).filter(col("d") >= K).select(col("n"))
+      // state: surviving arcs, the nodes that pass the next peel, census rows
+      val (_, _, census) = Rounds.foldLeft((a.select(col("n"), col("nbr")),
+          a.filter(col("d") >= K).select(col("n")).distinct(), Seq.empty[DataFrame])) {
+        case ((edges, passing, rows), r) =>
+          // Both per-round frames are EAGER truncations: the round's
+          // result is materialized and its lineage truncated, so round
+          // r+1's Catalyst pass optimizes a shallow plan over a
+          // LogicalRDD instead of the whole accumulated tree — without
+          // this, rounds cost driver-side plan time superlinear in depth
+          // (measured: rounds 1/2 in 0.8 s each, round 3 in 8 s on 7 k
+          // rows). keep is NODE-bounded (≤ the surviving core), so the
+          // semi-joins broadcast it and the arcs never shuffle; for a
+          // core too large to broadcast, drop the hint and AQE plans
+          // the shuffle semi-join. Durability tier is conf-switched
+          // (graft.Checkpoints: local blocks by default, reliable
+          // checkpoint under spark.graft.checkpoint.reliable).
+          val keep = passing.transform(truncate(s))
+          val kept = edges
+            .join(broadcast(keep), Seq("n"), "left_semi")
+            .join(broadcast(keep.withColumnRenamed("n", "nbr")), Seq("nbr"), "left_semi")
+            .transform(truncate(s))
+          (kept, cores(kept), rows :+ keep.agg(count(lit(1)).as("n_nodes"))
+            .crossJoin(kept.filter(col("n") < col("nbr")).agg(count(lit(1)).as("n_edges")))
+            .select(lit(r.toLong).as("round"), col("n_nodes"), col("n_edges")))
       }
-      rounds.reduce(_ unionByName _)
+      census.reduce(_ unionByName _)
     },
-    Some(s"""
-      WITH $pairsSql,
-      d1 AS (SELECT n, count(*) AS d
-             FROM (SELECT a AS n FROM pairs UNION ALL SELECT b AS n FROM pairs) GROUP BY 1),
-      k1 AS (SELECT n FROM d1 WHERE d >= 100),
-      e1 AS (SELECT a, b FROM pairs
-             WHERE a IN (SELECT n FROM k1) AND b IN (SELECT n FROM k1)),
-      d2 AS (SELECT n, count(*) AS d
-             FROM (SELECT a AS n FROM e1 UNION ALL SELECT b AS n FROM e1) GROUP BY 1),
-      k2 AS (SELECT n FROM d2 WHERE d >= 100),
-      e2 AS (SELECT a, b FROM e1
-             WHERE a IN (SELECT n FROM k2) AND b IN (SELECT n FROM k2)),
-      d3 AS (SELECT n, count(*) AS d
-             FROM (SELECT a AS n FROM e2 UNION ALL SELECT b AS n FROM e2) GROUP BY 1),
-      k3 AS (SELECT n FROM d3 WHERE d >= 100),
-      e3 AS (SELECT a, b FROM e2
-             WHERE a IN (SELECT n FROM k3) AND b IN (SELECT n FROM k3))
+    oracle(Rounds.flatMap { i =>
+      val prev = if (i == 1) "pairs" else s"e${i - 1}"
+      Seq(degSql(s"d$i", prev), s"""
+      k$i AS (SELECT n FROM d$i WHERE d >= 100)""", s"""
+      e$i AS (SELECT a, b FROM $prev
+             WHERE a IN (SELECT n FROM k$i) AND b IN (SELECT n FROM k$i))""")
+    })("""
       SELECT CAST(1 AS BIGINT) AS round, (SELECT count(*) FROM k1) AS n_nodes,
-             (SELECT count(*) FROM e1) AS n_edges
-      UNION ALL SELECT 2, (SELECT count(*) FROM k2), (SELECT count(*) FROM e2)
-      UNION ALL SELECT 3, (SELECT count(*) FROM k3), (SELECT count(*) FROM e3)"""),
+             (SELECT count(*) FROM e1) AS n_edges""" + Rounds.tail.map(i => s"""
+      UNION ALL SELECT $i, (SELECT count(*) FROM k$i), (SELECT count(*) FROM e$i)""").mkString),
     tags = Set("graph"))
 
   /** Common-neighbor link prediction: score every non-adjacent pair
@@ -339,30 +303,22 @@ object Graph {
     (s, dir) => {
       val MID_CAP = 96
       val MIN_COMMON = 5
-      val pairs = sharedEdges(s, dir)
-      val adj = pairs.select(col("a").as("n"), col("b").as("nbr"))
-        .union(pairs.select(col("b").as("n"), col("a").as("nbr")))
-      val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("d"))
-      val mid = graft.Caches.persistTracked(
-        adj.join(deg.filter(col("d") <= MID_CAP).select(col("n")), Seq("n"), "left_semi"))
+      val mid = arcs(s, dir).filter(col("d") <= MID_CAP).select(col("n"), col("nbr"))
       val scored = mid.as("x").join(mid.as("y"), "n")
         .filter(col("x.nbr") < col("y.nbr"))
         .groupBy(col("x.nbr").as("a"), col("y.nbr").as("b"))
         .agg(count(lit(1)).as("common"))
         .filter(col("common") >= MIN_COMMON)
-      scored.join(pairs, Seq("a", "b"), "left_anti")
+      scored.join(pairs(s, dir), Seq("a", "b"), "left_anti")
         .orderBy(col("common").desc, col("a"), col("b"))
         .limit(100)
     },
-    Some(s"""
-      WITH $pairsSql,
-      adj AS (SELECT a AS n, b AS nbr FROM pairs
-              UNION ALL SELECT b AS n, a AS nbr FROM pairs),
-      deg AS (SELECT n, count(*) AS d FROM adj GROUP BY 1),
-      mid AS (SELECT adj.n, adj.nbr FROM adj JOIN deg ON deg.n = adj.n WHERE deg.d <= 96),
+    oracle(Seq(bothWaysSql("adj", "n", "nbr"), """
+      deg AS (SELECT n, count(*) AS d FROM adj GROUP BY 1)""", """
+      mid AS (SELECT adj.n, adj.nbr FROM adj JOIN deg ON deg.n = adj.n WHERE deg.d <= 96)""", """
       wedge AS (SELECT x.nbr AS a, y.nbr AS b, count(*) AS common
                 FROM mid x JOIN mid y ON x.n = y.n AND x.nbr < y.nbr
-                GROUP BY 1, 2 HAVING count(*) >= 5)
+                GROUP BY 1, 2 HAVING count(*) >= 5)"""))("""
       SELECT w.a, w.b, w.common
       FROM wedge w LEFT JOIN pairs p ON p.a = w.a AND p.b = w.b
       WHERE p.a IS NULL
@@ -375,7 +331,7 @@ object Graph {
     * (count desc, label asc) is a deterministic function of the
     * neighborhood, which is what makes an ahead-of-time SQL oracle
     * possible at all (classic async LPA is run-order-dependent).
-    * Each round: one edge-keyed join pushing labels along adjacency
+    * Each round: one arc-keyed join pushing labels along the arcs
     * + one (node, label) count aggregate + a per-node rank over ≤
     * degree rows. The node-sized label frame broadcasts
     * ([[khop]]'s trade, same caveat) and each round is an eager
@@ -385,43 +341,25 @@ object Graph {
   val labelProp: GQuery = GQuery(
     "graph_labelprop",
     (s, dir) => {
-      val pairs = sharedEdges(s, dir)
-      val adj = pairs.select(col("a").as("n"), col("b").as("nbr"))
-        .union(pairs.select(col("b").as("n"), col("a").as("nbr")))
-      var labels = adj.select(col("n")).distinct()
-        .withColumn("lab", col("n")).transform(graft.Checkpoints.truncate(s))
-      for (_ <- 1 to 3) {
-        val counted = adj
-          .join(broadcast(labels.select(col("n").as("nbr"), col("lab"))), "nbr")
+      val a = arcs(s, dir)
+      val best = Window.partitionBy(col("n")).orderBy(col("c").desc, col("lab"))
+      val own = a.select(col("n")).distinct().withColumn("lab", col("n")).transform(truncate(s))
+      Rounds.foldLeft(own)((labels, _) =>
+        a.join(broadcast(labels.select(col("n").as("nbr"), col("lab"))), "nbr")
           .groupBy(col("n"), col("lab")).agg(count(lit(1)).as("c"))
-        val best = Window.partitionBy(col("n")).orderBy(col("c").desc, col("lab"))
-        labels = counted
           .withColumn("rn", row_number().over(best)).filter(col("rn") === 1)
-          .select(col("n"), col("lab")).transform(graft.Checkpoints.truncate(s))
-      }
-      labels
+          .select(col("n"), col("lab")).transform(truncate(s)))
     },
-    Some(s"""
-      WITH $pairsSql,
-      adj AS (SELECT a AS n, b AS nbr FROM pairs
-              UNION ALL SELECT b AS n, a AS nbr FROM pairs),
-      l0 AS (SELECT DISTINCT n, n AS lab FROM adj),
-      r1 AS (SELECT n, lab FROM (
-               SELECT adj.n, l0.lab, count(*) AS c,
+    oracle(Seq(bothWaysSql("adj", "n", "nbr"), """
+      l0 AS (SELECT DISTINCT n, n AS lab FROM adj)""") ++ Rounds.map { i =>
+      val prev = if (i == 1) "l0" else s"r${i - 1}"
+      s"""
+      r$i AS (SELECT n, lab FROM (
+               SELECT adj.n, $prev.lab, count(*) AS c,
                       row_number() OVER (PARTITION BY adj.n
-                                         ORDER BY count(*) DESC, l0.lab) AS rn
-               FROM adj JOIN l0 ON l0.n = adj.nbr GROUP BY 1, 2) WHERE rn = 1),
-      r2 AS (SELECT n, lab FROM (
-               SELECT adj.n, r1.lab, count(*) AS c,
-                      row_number() OVER (PARTITION BY adj.n
-                                         ORDER BY count(*) DESC, r1.lab) AS rn
-               FROM adj JOIN r1 ON r1.n = adj.nbr GROUP BY 1, 2) WHERE rn = 1),
-      r3 AS (SELECT n, lab FROM (
-               SELECT adj.n, r2.lab, count(*) AS c,
-                      row_number() OVER (PARTITION BY adj.n
-                                         ORDER BY count(*) DESC, r2.lab) AS rn
-               FROM adj JOIN r2 ON r2.n = adj.nbr GROUP BY 1, 2) WHERE rn = 1)
-      SELECT n, lab FROM r3"""),
+                                         ORDER BY count(*) DESC, $prev.lab) AS rn
+               FROM adj JOIN $prev ON $prev.n = adj.nbr GROUP BY 1, 2) WHERE rn = 1)"""
+    })(s"SELECT n, lab FROM r${Rounds.last}"),
     tags = Set("graph"))
 
   def all: Seq[GQuery] =

@@ -190,7 +190,7 @@ class AnalyticsSpec extends SparkSpecBase {
   test("degree distribution conserves edge endpoints and node count") {
     val dist = SparkEntry.queries("graph_degree_distribution")(spark, sfDir).cache()
     try {
-      val e = graph.Graph.coPurchaseEdges(spark, sfDir)
+      val e = graph.Graph.pairs(spark, sfDir)
       val endpoints = dist.agg(sum(col("degree") * col("n_nodes"))).head.getLong(0)
       assert(endpoints == 2 * e.count(), "sum(degree * n_nodes) must equal 2|E|")
       val nodes = e.select(col("a").as("n")).union(e.select(col("b").as("n")))

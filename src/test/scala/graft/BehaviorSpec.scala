@@ -86,7 +86,7 @@ class BehaviorSpec extends SparkSpecBase {
     try {
       assert(pred.count() <= 100)
       assert(pred.filter(col("common") < 5).isEmpty, "score floor")
-      val existing = graph.Graph.coPurchaseEdges(spark, sfDir)
+      val existing = graph.Graph.pairs(spark, sfDir)
       assert(pred.join(existing, Seq("a", "b"), "left_semi").isEmpty,
         "a predicted link must not already exist")
     } finally {
@@ -170,9 +170,7 @@ class BehaviorSpec extends SparkSpecBase {
   test("label propagation is deterministic and labels are node ids") {
     val l1 = SparkEntry.queries("graph_labelprop")(spark, sfDir).cache()
     try {
-      val nodes = graph.Graph.coPurchaseEdges(spark, sfDir)
-        .select(col("a").as("n")).union(graph.Graph.coPurchaseEdges(spark, sfDir)
-          .select(col("b").as("n"))).distinct().cache()
+      val nodes = graph.Graph.arcs(spark, sfDir).select(col("n")).distinct().cache()
       try {
         assert(l1.count() == nodes.count(), "every connected node gets a label")
         assert(l1.join(nodes.withColumnRenamed("n", "lab"), Seq("lab"), "left_anti").isEmpty,

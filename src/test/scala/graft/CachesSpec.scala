@@ -105,11 +105,11 @@ class CachesSpec extends SparkSpecBase {
     SparkEntry.queries("graph_triangles")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     Caches.release() // between-keys drain, as Verify/Bench do
-    val e1 = graft.graph.Graph.sharedEdges(spark, sfDir)
+    val e1 = graft.graph.Graph.arcs(spark, sfDir)
     assert(spark.sharedState.cacheManager.lookupCachedData(e1.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).nonEmpty,
-      "triangles must have left the shared edge frame materialized")
-    val e2 = graft.graph.Graph.sharedEdges(spark, sfDir)
-    assert(e1 eq e2, "second graph key must reuse the same edge frame")
+      "triangles must have left the shared arc frame materialized")
+    val e2 = graft.graph.Graph.arcs(spark, sfDir)
+    assert(e1 eq e2, "second graph key must reuse the same arc frame")
     Caches.releaseMemos()
   }
 }

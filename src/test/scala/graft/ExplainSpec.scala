@@ -128,4 +128,47 @@ class ExplainSpec extends SparkSpecBase {
     schemas.foreach(s =>
       assert(!s.contains(","), s"a profiler branch scans more than one column: $s"))
   }
+
+  test("graph keys read the arc memo as their only cached input and plan no Union") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case _ => (p.children ++ p.subqueries).flatMap(nodes)
+    })
+    val memo = spark.sharedState.cacheManager
+      .lookupCachedData(graph.Graph.arcs(spark, sfDir).asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .get.cachedRepresentation.cacheBuilder
+    Seq("graph_pagerank", "graph_khop", "graph_labelprop", "graph_link_predict",
+        "graph_degree_distribution").foreach { k =>
+      // every execution the key runs: the eager round truncations its
+      // builder fires, then the final collect
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f -> qe.executedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        SparkEntry.queries(k)(spark, sfDir).collect()
+        // listener events arrive asynchronously, in execution order
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (!seen.asScala.exists(_._1 == "collect") && System.nanoTime() < deadline)
+          Thread.sleep(20)
+      } finally spark.listenerManager.unregister(listener)
+      val plans = seen.asScala.toSeq
+      assert(plans.exists(_._1 == "collect"), s"$k: the final collect was never reported")
+      val all = plans.flatMap(p => nodes(p._2))
+      assert(!all.exists(_.nodeName == "Union"), s"$k plans a Union\n${plans.mkString("\n")}")
+      val cached = all.collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+      assert(cached.nonEmpty, s"$k never reads the arc memo")
+      assert(cached.forall(_ eq memo), s"$k reads a cached frame other than the arc memo")
+    }
+  }
 }
