@@ -53,25 +53,14 @@ def canon(rows, cols):
 
 def main(sf_dir, out_dir):
     con = duckdb.connect()
-    src = {}
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             # driver testdata is one file per table; dev corpora
             # (PersistSfMain) are Spark-written directories
-            src[t] = f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'"
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM {src[t]}")
-    # dev corpora (AuxGen) store events.ts as raw NANOS int64 and value
-    # as decimal(24,2); the engine normalizes on read (Tables.events'
-    # schema dispatch), so the oracle view must normalize identically
-    # or type/value checks compare raw layout, not semantics
-    if "events" in src and con.execute(
-            "SELECT typeof(ts) FROM events LIMIT 1").fetchone()[0] == "BIGINT":
-        con.execute(f"""CREATE OR REPLACE VIEW events AS
-            SELECT event_id, make_timestamp(ts // 1000) AS ts, user_id,
-                   event_type, CAST(value AS DOUBLE) AS value, props
-            FROM {src['events']}""")
+            src = f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'"
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM {src}")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):

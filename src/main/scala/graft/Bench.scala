@@ -109,16 +109,6 @@ object Bench {
     val loadStart = loadAvg()
     val statStart = cpuStat()
 
-    // Keys whose OUTPUT is a Caches.memo frame (r13 verdict #2): the
-    // shared-input memo exemption below is wrong for these — leaving
-    // the memo warm would make timed runs 2..n a cache lookup of the
-    // very frame the key exists to build (r13 reported 0.04 s for a
-    // 5.7 s cold components build). Drop exactly that memo id before
-    // the clock so every timed run pays the true build; consumers of
-    // the frame (pipeline_split_cluster) still find it warm because
-    // the producer's final run re-memoizes it.
-    val memoProducers = Map("dedup_components" -> "dedupComponents")
-
     def runOnce(name: String): Either[String, Double] =
       try {
         // cold-run discipline (round-6 advice): builder-internal
@@ -128,17 +118,18 @@ object Bench {
         // pipeline entirely — the reported min would be
         // warm-cache, not a full execution. Release tracked frames
         // BEFORE the clock starts: every run pays the whole plan,
-        // min stays an honest cold estimator. Deliberate exception
-        // (r12 directive): Caches.memo frames — the suite-shared
-        // co-purchase arc frame and dup-cluster labels — survive
-        // across keys AND runs, exactly like the materialized shared
-        // inputs a real pipeline fans out from; the bench line then
-        // measures the operator under test, not a 7×-repaid upstream.
+        // min stays an honest cold estimator. Deliberate exception:
+        // Caches.memo frames — the suite-shared co-purchase arc frame
+        // and dup-cluster labels — survive across keys AND runs,
+        // exactly like the materialized shared inputs a real pipeline
+        // fans out from; the bench line then measures the operator
+        // under test, not a 7×-repaid upstream. No key's OUTPUT is a
+        // memo frame (dedup_components builds its labels fresh), so
+        // no timed run is a cache lookup of the frame it exists to build.
         // (The former blanket spark.catalog.clearCache() would evict
         // them; per-frame release keeps the discipline targeted. All
         // src/main persists are Caches-tracked — audited, PlanSpec.)
         Caches.release()
-        memoProducers.get(name).foreach(Caches.releaseMemo)
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()

@@ -38,12 +38,12 @@ object Caches {
 
   /** Build-once shared frames, keyed on (SparkContext incarnation,
     * frame id, input dir) — the in-suite reuse path for expensive
-    * frames that MANY registry keys consume as an input (the
-    * co-purchase arc frame feeds all 7 graph keys; the dup-cluster
-    * label frame feeds both dedup_components and
-    * pipeline_split_cluster). A real pipeline materializes these once
-    * and fans out; before this memo the suite paid the priciest
-    * computations up to 7×.
+    * frames that registry keys consume as an INPUT (the co-purchase
+    * arc frame feeds all 7 graph keys; the dup-cluster label frame
+    * feeds pipeline_split_cluster). A real pipeline materializes these
+    * once and fans out; before this memo the suite paid the priciest
+    * computations up to 7×. A key whose OUTPUT is such a frame builds
+    * it without the memo, so its own timed runs stay cold.
     *
     * Deliberately NOT drained by [[release]] — these are shared
     * INPUTS with suite lifetime, not builder-internal scratch; the
@@ -59,15 +59,6 @@ object Caches {
     persistOnce(df)
     df
   }
-
-  /** Unpersist and forget the memo entries for ONE frame id (any
-    * context incarnation / input dir). This is the bench-honesty path
-    * for registry keys whose OUTPUT is itself the memoized frame
-    * (today: `dedup_components` → "dedupComponents"): for those, a
-    * suite-lifetime memo would turn timed runs 2..n into cache reads,
-    * so the harness drops exactly this id before each clock start
-    * while other keys' shared-input memos stay warm. */
-  def releaseMemo(id: String): Int = unpersistAll(memos.drain(_.startsWith(s"$id:")))
 
   /** Unpersist and forget every memoized frame; returns how many
     * live entries were released. */

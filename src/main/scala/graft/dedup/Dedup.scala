@@ -739,12 +739,11 @@ object Dedup {
   }
 
   /** The memoized (doc_id, component, is_rep) label frame — built and
-    * persisted ONCE per (context, dir) via [[graft.Caches.memo]]:
-    * it is the engine's priciest computation and at least two keys
-    * consume it (`dedup_components` itself and
-    * `pipeline_split_cluster`'s routing coin); a real curation
-    * pipeline materializes the cluster labels once and every
-    * downstream stage reads them. */
+    * persisted ONCE per (context, dir) via [[graft.Caches.memo]], the
+    * shared INPUT of `pipeline_split_cluster`'s routing coin: a real
+    * curation pipeline materializes the cluster labels once and every
+    * downstream stage reads them. `dedup_components`, whose output
+    * the labels are, builds them fresh ([[buildComponents]]). */
   private[graft] def componentsFrame(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     graft.Caches.memo(s, "dedupComponents", dir)(buildComponents(s, dir))
@@ -788,7 +787,7 @@ object Dedup {
     * not just the edge list. */
   val components: GQuery = GQuery(
     "dedup_components",
-    (s, dir) => componentsFrame(s, dir),
+    (s, dir) => buildComponents(s, dir),
     Some(s"""
       $componentsOracleChain
       SELECT doc AS doc_id, min(lab) AS component, min(lab) = doc AS is_rep

@@ -681,9 +681,10 @@ object Relational {
   val lateralJoin: GQuery = GQuery(
     "op_lateral_join",
     (s, dir) => {
-      Tables.nation(s, dir).createOrReplaceTempView("nation")
-      Tables.customer(s, dir).createOrReplaceTempView("customer")
-      s.sql("""
+      // views on a child session: the caller's own catalog is left alone
+      val ss = graft.Sessions.childWith(s, Nil)
+      Tables.registerAll(ss, dir, Seq("nation", "customer"))
+      ss.sql("""
         SELECT n.n_name, t.c_custkey, t.c_acctbal
         FROM nation n,
         LATERAL (SELECT c_custkey, c_acctbal FROM customer c

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.GQuery
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed generators for the three non-TPC-H tables (`events`,
@@ -110,29 +110,34 @@ object AuxGen {
         expr("transform(raw, x -> cast(x / nrm AS float))").as("embedding"),
         expr("cast(pmod(xxhash64(id, 8005), 10) AS int)").as("label"))
 
-  /** Epoch of 2024-01-01T00:00:00Z in nanoseconds — `ts` is stored as
-    * an int64 of nanos, the same physical shape as the testdata
-    * parquet, so [[Tables.events]]'s `ts div 1000 → timestamp_micros`
-    * read path applies unchanged to generated output. */
+  /** Epoch of 2024-01-01 00:00:00 in nanoseconds. Event times are
+    * drawn in nanoseconds and stored as TIMESTAMP_NTZ at µs precision
+    * (truncated, like DuckDB's TIMESTAMP), the testdata's shape. */
   private val EventsEpochNs = 1704067200000000000L
   private val EventsWindowNs = 30L * 24 * 3600 * 1000000000L // fixed 30 days
+
+  /** The TIMESTAMP_NTZ at `ns div 1000` µs after 1970-01-01 00:00:00 —
+    * built off an NTZ literal, so no session time zone enters it. */
+  private def ntzOfNs(ns: String): Column =
+    expr(s"timestampadd(MICROSECOND, ($ns) div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')")
 
   /** `events(event_id, ts, user_id, event_type, value, props)` —
     * roughly time-ordered (each event jitters inside its own slot of
     * the 30-day window, so `ts` never leaves id order by more than
     * one slot), users = max(150, 1.5e4·sf), five event types uniform,
-    * value in [0, 200) with 2 decimals, props a tiny JSON string. */
+    * value a DOUBLE in [0, 200) rounded to 2 decimals, props a tiny
+    * JSON string. The schema is the testdata's (AuxGenSpec pins it). */
   def events(spark: SparkSession, sf: Double, numParts: Int = 0): DataFrame = {
     val n = eventsRows(sf)
     val users = eventUsers(sf)
     val gapNs = EventsWindowNs / n
     range(spark, n, numParts).select(
       col("id").as("event_id"),
-      expr(s"${EventsEpochNs}L + id * ${gapNs}L + pmod(xxhash64(id, 9001), ${gapNs}L)").as("ts"),
+      ntzOfNs(s"${EventsEpochNs}L + id * ${gapNs}L + pmod(xxhash64(id, 9001), ${gapNs}L)").as("ts"),
       expr(s"pmod(xxhash64(id, 9002), ${users}L)").as("user_id"),
       expr("element_at(array('signup','purchase','view','click','error'), " +
         "cast(pmod(xxhash64(id, 9003), 5) AS int) + 1)").as("event_type"),
-      expr("round(pmod(xxhash64(id, 9004), 20000) / 100.0, 2)").as("value"),
+      expr("CAST(round(pmod(xxhash64(id, 9004), 20000) / 100.0, 2) AS DOUBLE)").as("value"),
       expr("""concat('{"k": ', pmod(xxhash64(id, 9005), 100), '}')""").as("props"))
   }
 
@@ -146,7 +151,7 @@ object AuxGen {
         s"unknown aux table '$other' (expected one of ${tableNames.mkString(", ")})")
     }
 
-  /** Generate-and-persist, `dir/<table>.parquet` — combined with
+  /** Generate-and-persist at [[Tables.path]] — combined with
     * [[graft.tpch.TpchGen.persistAll]] this materialises a COMPLETE
     * drop-in testdata directory at any sf (every [[Tables]] accessor
     * and registry query runs against it unchanged — AuxGenSpec pins
@@ -155,7 +160,7 @@ object AuxGen {
   def persistAll(spark: SparkSession, sf: Double, dir: String,
       numParts: Int = 0, mode: String = "overwrite"): Unit =
     tableNames.foreach { n =>
-      Sinks.writeParquet(table(spark, n, sf, numParts), s"$dir/$n.parquet", mode = mode)
+      Sinks.writeParquet(table(spark, n, sf, numParts), Tables.path(dir, n), mode = mode)
     }
 
   /** Structural profile of the generated aux corpus vs the driver
@@ -178,8 +183,9 @@ object AuxGen {
       val e = events(s, sf).agg(
         count(lit(1)).as("n_events"),
         countDistinct(col("event_type")).as("n_types"),
-        (min(col("ts")) >= EventsEpochNs &&
-          max(col("ts")) < EventsEpochNs + EventsWindowNs).cast("long").as("ts_in_window"))
+        (min(col("ts")) >= ntzOfNs(s"${EventsEpochNs}L") &&
+          max(col("ts")) < ntzOfNs(s"${EventsEpochNs + EventsWindowNs}L"))
+          .cast("long").as("ts_in_window"))
       val v = embeddings(s, sf).agg(
         count(lit(1)).as("n_vecs"),
         (min(size(col("embedding"))) === 64 && max(size(col("embedding"))) === 64)

@@ -22,9 +22,6 @@ object Sinks {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** Bucketed (and bucket-sorted) parquet table: rows are hash-split
     * into `nBuckets` files per partition by `bucketCol`, recorded in
     * the catalog, so every LATER join or aggregation keyed on
@@ -127,8 +124,7 @@ object Sinks {
         // short prefix, and a collision silently repoints one catalog
         // table at the other's data
         val table = s"graft_bktfact_${tag}_$file$suffix"
-        writeBucketed(s.read.parquet(s"$root/$file.parquet")
-            .select(cols.map(col): _*),
+        writeBucketed(Tables.load(s, root, file).select(cols.map(col): _*),
           table, s"$wh/$file", bucketCol, 32)
         table
       }
@@ -249,9 +245,9 @@ object Sinks {
         col("l1.l_orderkey") === col("l3.l_orderkey") &&
           col("l1.l_suppkey") =!= col("l3.l_suppkey"), "left_anti")
       val fOrders = ss.table(orTable).where(col("o_orderstatus") === "F")
-      val supp = ss.read.parquet(s"$root/supplier.parquet")
+      val supp = Tables.load(ss, root, "supplier")
         .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
-      val saudi = ss.read.parquet(s"$root/nation.parquet")
+      val saudi = Tables.load(ss, root, "nation")
         .where(col("n_name") === "SAUDI ARABIA").select(col("n_nationkey"))
       soleLate
         .join(fOrders, col("l_orderkey") === col("o_orderkey"))
@@ -315,7 +311,7 @@ object Sinks {
         .groupBy(col("o_orderkey"), col("o_custkey"),
           col("o_totalprice"), col("o_orderdate"))
         .agg(sum(col("l_quantity")).as("sum_qty"))
-      val cust = ss.read.parquet(s"$root/customer.parquet")
+      val cust = Tables.load(ss, root, "customer")
         .select(col("c_custkey"), col("c_name"))
       cust.join(broadcast(perOrder), col("c_custkey") === col("o_custkey"))
         .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
@@ -370,14 +366,14 @@ object Sinks {
       // columns the dimension joins need
       val fact = li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey"), col("l_suppkey"), cents.as("cents"))
-      val supp = ss.read.parquet(s"$root/supplier.parquet")
+      val supp = Tables.load(ss, root, "supplier")
         .select(col("s_suppkey"), col("s_nationkey"))
-      val asiaNations = ss.read.parquet(s"$root/nation.parquet")
-        .join(broadcast(ss.read.parquet(s"$root/region.parquet")
+      val asiaNations = Tables.load(ss, root, "nation")
+        .join(broadcast(Tables.load(ss, root, "region")
           .where(col("r_name") === "ASIA").select(col("r_regionkey"))),
           col("n_regionkey") === col("r_regionkey"))
         .select(col("n_nationkey"), col("n_name"))
-      val cust = ss.read.parquet(s"$root/customer.parquet")
+      val cust = Tables.load(ss, root, "customer")
         .select(col("c_custkey"), col("c_nationkey"))
       fact.join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
         .join(broadcast(asiaNations), col("s_nationkey") === col("n_nationkey"))
@@ -549,7 +545,7 @@ object Sinks {
       val root = graft.tpch.FullTpch.rootFor(s, dir)
       val (liTable, orTable) = orderkeyLayout(s, root)
       val ss = sortedScanSession(s)
-      val pairNations = ss.read.parquet(s"$root/nation.parquet")
+      val pairNations = Tables.load(ss, root, "nation")
         .where(col("n_name").isin("FRANCE", "GERMANY"))
         .select(col("n_nationkey"), col("n_name"))
       val li = ss.table(liTable)
@@ -561,11 +557,11 @@ object Sinks {
             .cast("long").as("volume_cents"))
       val ord = ss.table(orTable).select(col("o_orderkey"), col("o_custkey"))
       val fact = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      val supp = ss.read.parquet(s"$root/supplier.parquet")
+      val supp = Tables.load(ss, root, "supplier")
         .select(col("s_suppkey"), col("s_nationkey"))
         .join(broadcast(pairNations), col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      val cust = ss.read.parquet(s"$root/customer.parquet")
+      val cust = Tables.load(ss, root, "customer")
         .select(col("c_custkey"), col("c_nationkey"))
         .join(broadcast(pairNations), col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name").as("cust_nation"))

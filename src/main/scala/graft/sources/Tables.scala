@@ -2,12 +2,17 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Typed accessors for the testdata tables.
+/** The one owner of where a corpus table lives and how it is read.
   *
-  * Each accessor is a plain parquet scan; column pruning and filter
-  * pushdown are left to Catalyst (asserted in `TablesSpec`). At 100 TB
-  * the same accessors work unchanged against a directory of many
-  * files — `spark.read.parquet` splits by `files.maxPartitionBytes`.
+  * A corpus directory holds one parquet dataset per table at
+  * `<dir>/<table>.parquet` ([[path]]); every table has ONE shape, the
+  * one the testdata dirs store — `TpchGen.persistAll` and
+  * `AuxGen.persistAll` write it (`events.ts` as TIMESTAMP_NTZ µs,
+  * `events.value` as DOUBLE), so every read is the same plain
+  * [[load]]. Column pruning and filter pushdown are left to Catalyst
+  * (asserted in `TablesSpec`). At 100 TB the same load works unchanged
+  * against a directory of many files — `spark.read.parquet` splits by
+  * `files.maxPartitionBytes`.
   *
   * Reference surface: clflushopt/datafusion-tpch registers these
   * tables in the session catalog (src/lib.rs:232-261); here
@@ -19,8 +24,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
+  /** Where table `name` of the corpus at `dir` lives. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.parquet(path(dir, name))
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
@@ -29,45 +37,14 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
-
-  /** `events.parquet` has shipped `ts` two ways across driver rounds:
-    * as INT64 TIMESTAMP(NANOS) (which Spark's parquet reader rejects by
-    * default — read via legacy nanosAsLong and truncate to µs, exactly
-    * what DuckDB's TIMESTAMP does) and, since round 12, as a plain
-    * µs-precision timestamp (already DuckDB-identical — pass through).
-    * Dispatch on the read schema so both corpora keep working. The
-    * same dispatch normalizes `value`: the AuxGen corpus persists it
-    * as DECIMAL(24,2) (Spark's `bigint / 100.0` literal arithmetic)
-    * where the driver testdata carries DOUBLE — without the cast,
-    * value-typed outputs would change schema with the corpus (caught
-    * by the round-15 sf1 spot-check, dev/BENCH_NOTES.md). */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(spark, dir, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => // nanos-as-long corpus
-        raw.withColumn("ts",
-            org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-          .withColumn("value",
-            org.apache.spark.sql.functions.col("value").cast("double"))
-      case _ => raw
-    }
-  }
+  def events(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "events")
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
-  /** Typed accessor per table name — the single reading path, so views
-    * registered by [[registerAll]] expose the same schema as the
-    * accessors (notably `events.ts` as a µs timestamp, not raw nanos). */
-  val accessors: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "region" -> region, "nation" -> nation, "customer" -> customer,
-    "supplier" -> supplier, "part" -> part, "orders" -> orders,
-    "lineitem" -> lineitem, "events" -> events, "documents" -> documents,
-    "embeddings" -> embeddings)
-
-  /** Register every table as a temp view (≙ the reference's `tpch(sf)`
-    * UDTF registering all tables in the catalog). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => accessors(n)(spark, dir).createOrReplaceTempView(n))
+  /** Register `tables` as temp views on `spark` (≙ the reference's
+    * `tpch(sf)` UDTF registering all tables in the catalog). A builder
+    * that needs views registers them on a child session
+    * (`Sessions.childWith`), never on its caller's. */
+  def registerAll(spark: SparkSession, dir: String, tables: Seq[String]): Unit =
+    tables.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

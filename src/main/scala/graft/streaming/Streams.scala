@@ -374,9 +374,7 @@ object Streams {
   val streamEnrich: GQuery = GQuery(
     "stream_enrich",
     (s, dir) =>
-      enrichStream(
-        Tables.events(s, dir).withColumn("value", col("value")),
-        Tables.customer(s, dir))
+      enrichStream(Tables.events(s, dir), Tables.customer(s, dir))
         .groupBy(col("segment"), col("event_type"))
         .agg(count(lit(1)).as("cnt"), sum(col("v_cents")).as("sum_cents")),
     Some("""

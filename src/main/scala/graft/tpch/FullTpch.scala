@@ -1,6 +1,7 @@
 package graft.tpch
 
 import graft.GQuery
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** §2.2b — the UNADAPTED textbook TPC-H suite over [[TpchGen]]-persisted
@@ -113,8 +114,7 @@ object FullTpch {
       confs: Seq[(String, String)] = Nil): SparkSession =
     sessions(s, s"$root#${graft.Sessions.confTag(confs)}") {
       val ss = graft.Sessions.child(s, confs)
-      TpchGen.tableNames.foreach(t =>
-        ss.read.parquet(s"$root/$t.parquet").createOrReplaceTempView(t))
+      Tables.registerAll(ss, root, TpchGen.tableNames)
       ss
     }
 
@@ -163,7 +163,7 @@ object FullTpch {
     sparkSqlOf(name) = sparkSql
     val oracleSql =
       (tables.map(t =>
-        s"$t AS (SELECT * FROM read_parquet('$OracleRoot/$t.parquet/*.parquet'))") ++ cteSql)
+        s"$t AS (SELECT * FROM read_parquet('${Tables.path(OracleRoot, t)}/*.parquet'))") ++ cteSql)
         .mkString("WITH ", ",\n     ", "\n") + body
     GQuery(
       name,

@@ -336,7 +336,7 @@ object TpchGen {
   /** One-call generate-and-persist — ≙ the reference's COPY-to-parquet
     * demo (`examples/parquet.rs:1-34`) and the documented `tpch(sf,
     * path)` surface (src/lib.rs:277-279). Writes each table as parquet
-    * at `dir/<table>.parquet`, the SAME layout the testdata dirs use,
+    * at [[graft.sources.Tables.path]], the SAME layout the testdata dirs use,
     * so the output directory is a drop-in source for every
     * [[graft.sources.Tables]] accessor and registry query (GenSqlSpec
     * pins the persist→read-back→q1 round trip). Delegates to
@@ -347,7 +347,8 @@ object TpchGen {
   def persistAll(spark: SparkSession, sf: Double, dir: String,
       numParts: Int = 0, mode: String = "overwrite"): Unit =
     tableNames.foreach { n =>
-      graft.sources.Sinks.writeParquet(table(spark, n, sf, numParts), s"$dir/$n.parquet", mode = mode)
+      graft.sources.Sinks.writeParquet(table(spark, n, sf, numParts),
+        graft.sources.Tables.path(dir, n), mode = mode)
     }
 
   /** One-call SQL surface ≙ the reference's "register then query from

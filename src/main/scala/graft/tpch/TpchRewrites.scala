@@ -1,6 +1,7 @@
 package graft.tpch
 
 import graft.GQuery
+import graft.sources.Tables
 
 /** Plan-REWRITE routing arms for textbook TPC-H keys whose measured
   * residue is a specific erasable plan defect rather than layout-
@@ -52,7 +53,7 @@ object TpchRewrites {
       import org.apache.spark.sql.functions._
       val root = FullTpch.rootFor(s, dir)
       val codes = Seq("13", "31", "23", "29", "30", "18", "17")
-      val cust = s.read.parquet(s"$root/customer.parquet")
+      val cust = Tables.load(s, root, "customer")
         .select(col("c_custkey"), col("c_acctbal"),
           substring(col("c_phone"), 1, 2).as("cntrycode"))
         .where(col("cntrycode").isin(codes: _*))
@@ -67,7 +68,7 @@ object TpchRewrites {
       // orders probes the broadcast candidate key set MAP-ONLY (the
       // inversion that erases raw q22's 15M-row exchange + sort), and
       // the surviving keys collapse map-side before the wire
-      val withOrders = s.read.parquet(s"$root/orders.parquet")
+      val withOrders = Tables.load(s, root, "orders")
         .select(col("o_custkey"))
         .join(broadcast(candidates.select(col("c_custkey"))),
           col("o_custkey") === col("c_custkey"), "left_semi")
@@ -119,7 +120,7 @@ object TpchRewrites {
       val cents = floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
         .cast("long")
       val revenue = graft.Caches.persistTracked(
-        s.read.parquet(s"$root/lineitem.parquet")
+        Tables.load(s, root, "lineitem")
           .where(col("l_shipdate") >= lit("1996-01-01").cast("date") &&
             col("l_shipdate") < lit("1996-04-01").cast("date"))
           .groupBy(col("l_suppkey"))
@@ -129,7 +130,7 @@ object TpchRewrites {
       val winners = revenue.crossJoin(broadcast(maxRev))
         .where(col("total_revenue") === col("max_rev"))
         .select(col("supplier_no"), col("total_revenue"))
-      s.read.parquet(s"$root/supplier.parquet")
+      Tables.load(s, root, "supplier")
         .select(col("s_suppkey"), col("s_name"), col("s_address"), col("s_phone"))
         .join(broadcast(winners), col("s_suppkey") === col("supplier_no"))
         .select(col("s_suppkey"), col("s_name"), col("s_address"),

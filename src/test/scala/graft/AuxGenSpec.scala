@@ -14,7 +14,7 @@ class AuxGenSpec extends SparkSpecBase {
                           0.1 -> "/root/testdata/sf0.1");
          t <- AuxGen.tableNames)
       assert(AuxGen.table(spark, t, sf).count() ==
-        Tables.accessors(t)(spark, dir).count(), s"$t at sf=$sf")
+        Tables.load(spark, dir, t).count(), s"$t at sf=$sf")
   }
 
   test("generation is deterministic and shuffle-free") {
@@ -60,16 +60,37 @@ class AuxGenSpec extends SparkSpecBase {
     assert(near >= 2, s"only $near cosine>0.99 pairs — planted copies missing")
   }
 
+  test("persisted events have the testdata schema and time-zone-free timestamps") {
+    val root = java.nio.file.Files.createTempDirectory("auxgen_events")
+    def fields(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    try {
+      val ts = Seq("UTC", "America/Los_Angeles").map { tz =>
+        val ss = Sessions.childWith(spark, Seq("spark.sql.session.timeZone" -> tz))
+        val dir = root.resolve(tz.replace('/', '_')).toString
+        AuxGen.persistAll(ss, 0.001, dir)
+        val ev = Tables.events(ss, dir)
+        assert(fields(ev) == fields(Tables.events(ss, sfDir)), s"events schema under $tz")
+        ev.orderBy("event_id").select("ts").collect().map(_.get(0)).toSeq
+      }
+      assert(ts(0) == ts(1), "ts values moved with the session time zone")
+      // the values are the nanosecond draw truncated to µs
+      val gapNs = 30L * 24 * 3600 * 1000000000L / AuxGen.eventsRows(0.001)
+      val want = spark.range(AuxGen.eventsRows(0.001)).select(expr(
+        s"(1704067200000000000L + id * ${gapNs}L + pmod(xxhash64(id, 9001), ${gapNs}L)) div 1000"))
+        .collect().map(_.getLong(0)).toSeq
+      val got = Tables.events(spark, root.resolve("UTC").toString).orderBy("event_id")
+        .select(expr("unix_micros(CAST(ts AS TIMESTAMP))")).collect().map(_.getLong(0)).toSeq
+      assert(got == want)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+  }
+
   test("persistAll output is a drop-in testdata dir: accessors read it, registry keys run on it") {
     val dir = java.nio.file.Files.createTempDirectory("auxgen").toString
     try {
       AuxGen.persistAll(spark, 0.001, dir)
       tpch.TpchGen.persistAll(spark, 0.001, dir)
-      // the events read path (int64 nanos -> timestamp_micros) applies
-      // to generated output exactly as to testdata parquet
-      assert(Tables.events(spark, dir).schema("ts").dataType.typeName == "timestamp")
       for (t <- AuxGen.tableNames)
-        assert(Tables.accessors(t)(spark, dir).count() == AuxGen.table(spark, t, 0.001).count(), t)
+        assert(Tables.load(spark, dir, t).count() == AuxGen.table(spark, t, 0.001).count(), t)
       // one key per aux table family end-to-end against the generated dir
       for (k <- Seq("text_quality", "op_sessionize", "ann_cosine_topk"))
         assert(SparkEntry.queries(k)(spark, dir).count() > 0, k)

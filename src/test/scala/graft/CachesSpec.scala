@@ -100,6 +100,14 @@ class CachesSpec extends SparkSpecBase {
     Caches.releaseMemos()
   }
 
+  test("dedup_components builds its labels without the memo") {
+    Caches.releaseMemos()
+    SparkEntry.queries("dedup_components")(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    Caches.release()
+    assert(Caches.releaseMemos() == 0, "dedup_components left a memo entry")
+  }
+
   test("the graph keys share ONE memoized co-purchase edge frame") {
     Caches.releaseMemos()
     SparkEntry.queries("graph_triangles")(spark, sfDir)

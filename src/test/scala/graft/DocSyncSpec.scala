@@ -43,22 +43,47 @@ class DocSyncSpec extends AnyFunSuite {
       s"SURVEY.md §2 prose claims ${prose.get} keys; Registry.all has ${shipped.size}")
   }
 
-  test("session building and context-scoped state live only in Sessions.scala") {
+  /** file name → text of every `src/main` source. */
+  private lazy val rawSources: Map[String, String] = {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator()
       .asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-    var sources = Map.empty[String, String]
+    var out = Map.empty[String, String]
     while (files.hasNext) {
       val p = files.next()
       if (p.toString.endsWith(".scala"))
-        sources += p.getFileName.toString -> new String(
+        out += p.getFileName.toString -> new String(
           java.nio.file.Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
     }
-    def filesMatching(re: String) = sources.collect {
-      case (f, src) if re.r.findFirstIn(src).nonEmpty => f
-    }.toSet
+    out
+  }
+
+  /** The same sources with comments stripped: a scaladoc usage example
+    * is not code. Only block comments that open a line are stripped,
+    * so a comment opener inside a string literal is kept. */
+  private lazy val sources: Map[String, String] = rawSources.map { case (f, src) =>
+    f -> src.replaceAll("""(?sm)^\s*/\*.*?\*/""", "").replaceAll("""\s//[^\n]*""", "")
+  }
+
+  private def filesMatching(re: String): Set[String] = sources.collect {
+    case (f, src) if re.r.findFirstIn(src).nonEmpty => f
+  }.toSet
+
+  test("session building and context-scoped state live only in Sessions.scala") {
     assert(filesMatching("""SparkSession\s*\.\s*builder""") == Set("Sessions.scala"))
     assert(filesMatching("applicationId") == Set("Sessions.scala"))
     assert(filesMatching("""spark\.graft\.topk\.rewrite""").isEmpty)
+  }
+
+  test("corpus paths, reads and temp views have one owner each") {
+    // the `<dir>/<table>.parquet` layout is spelled only by Tables.path
+    assert(filesMatching("""\$\{?\w+\}?\.parquet""") == Set("Tables.scala"))
+    assert(filesMatching("""read\.parquet\(s?"[^"]*\.parquet""").isEmpty)
+    assert(rawSources.values.forall(!_.contains("nanosAsLong")))
+    assert(filesMatching("""conf\.set\(""") == Set("Sessions.scala"))
+    val views = sources.toSeq.flatMap { case (f, src) =>
+      """createOrReplaceTempView\(""".r.findAllIn(src).map(_ => f)
+    }
+    assert(views.sorted == Seq("Tables.scala", "TpchGen.scala"), views)
   }
 
   test("README totals match the build: registry key count and test count") {

@@ -134,7 +134,7 @@ class GraphSpec extends SparkSpecBase {
         assert(got.size == want(k).size && got.toSet == want(k), s"$k on $what: $got")
       }
     } finally {
-      Caches.releaseMemo("coPurchaseArcs")
+      Caches.releaseMemos()
       org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
     }
   }

@@ -29,7 +29,7 @@ class SinksSpec extends SparkSpecBase {
     Sinks.writeParquet(src, dir, partitionBy = Seq("n_regionkey"))
     val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
     assert(dirs.exists(_.startsWith("n_regionkey=")), dirs.mkString(","))
-    val back = Sinks.readParquet(spark, dir)
+    val back = spark.read.parquet(dir)
     assert(back.count() == src.count())
     // partition-column filter prunes to one directory
     val pruned = back.filter(col("n_regionkey") === 0)

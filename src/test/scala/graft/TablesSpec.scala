@@ -37,15 +37,16 @@ class TablesSpec extends SparkSpecBase {
   }
 
   test("registerAll exposes the accessor schema (events.ts is a timestamp)") {
-    Tables.registerAll(spark, sfDir)
+    Tables.registerAll(spark, sfDir, Tables.names)
     val tsType = spark.sql("SELECT ts FROM events LIMIT 1").schema.head.dataType
-    // µs-precision timestamp either way; NTZ on corpora that store
-    // TIMESTAMP(MICROS) without UTC adjustment (driver testdata since
-    // r12), LTZ on corpora where the legacy nanos column is converted
-    // via timestamp_micros. Never the raw long.
-    val ok = Set[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.TimestampType,
-      org.apache.spark.sql.types.TimestampNTZType)
-    assert(ok.contains(tsType), tsType.toString)
+    // every corpus stores ts as TIMESTAMP(MICROS) without UTC adjustment
+    assert(tsType == org.apache.spark.sql.types.TimestampNTZType, tsType.toString)
+  }
+
+  test("op_lateral_join leaves the caller's temp views alone") {
+    val caller = spark.newSession()
+    caller.range(3).toDF("c_custkey").createOrReplaceTempView("customer")
+    assert(SparkEntry.queries("op_lateral_join")(caller, sfDir).count() > 0)
+    assert(caller.table("customer").count() == 3, "the key replaced the caller's customer view")
   }
 }
