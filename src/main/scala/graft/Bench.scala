@@ -304,8 +304,10 @@ object Bench {
     // text binds the sf0.01 correctness corpus; the bench-sf corpus was
     // persisted by the Spark runs above, so a path rewrite retargets it.
     // Best-effort: a box without python3+duckdb (dev harness, not the
-    // shipped library) just skips the column.
-    val duck: Seq[(String, Double)] = duckdbBaseline(results, sfDir)
+    // shipped library) just skips the column. Only a whole-registry run
+    // pays for it: a SPARK_GRAFT_BENCH_ONLY dev loop leaves it empty.
+    val duck: Seq[(String, Double)] =
+      if (only.isEmpty) duckdbBaseline(results, sfDir) else Nil
     val loadEnd = loadAvg()
     val stealPct = (for {
       (s1, t1) <- statStart

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.GQuery
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
@@ -14,9 +14,6 @@ final case class SEvent(user_id: Long, ts: Timestamp, event_type: String, value:
 /** One document on an ingest stream (the `documents` columns plus the
   * arrival time that anchors the dedup-state watermark). */
 final case class SDoc(doc_id: Long, ingest_ts: Timestamp, text: String)
-
-final case class SessionAcc(start: Timestamp, end: Timestamp, n_events: Long)
-final case class SessionOut(user_id: Long, session_start: Timestamp, session_end: Timestamp, n_events: Long)
 
 /** One event on the anomaly stream (adds the id the incident report
   * needs for a deterministic tie-break and output key). */
@@ -40,112 +37,61 @@ final case class AnomalyOut(user_id: Long, event_id: Long, v_cents: Long)
 
 /** §2.5 Structured Streaming over the `events` stream.
   *
-  * The transforms are written once and applied to EITHER a batch or a
-  * streaming DataFrame — that is Spark's batch/stream unification, and
-  * it is what makes the batch-parity oracle meaningful: the driver
-  * checks [[windowedAgg]] on the batch table against DuckDB
-  * `time_bucket`, and StreamingSpec replays the same transform through
-  * a MemoryStream with a watermark.
+  * Each operator is ONE function, applied to EITHER a batch or a
+  * streaming input — Spark's batch/stream unification. Its registry
+  * key runs it over the batch table and is checked against DuckDB;
+  * StreamingSpec runs the same function through a MemoryStream; a
+  * production query runs it over `readStream` into [[sinkToParquet]].
+  * The watermark lives inside each operator: on batch input Spark
+  * drops it during analysis, so the batch plan is the plain one.
   *
-  * Scale posture: watermarks bound state (late data beyond 2h is
-  * dropped, state for closed windows is evicted); sessionization state
-  * is per-user and evicted via event-time timeout — state size is
+  * On batch input the custom-state operators ([[anomalyStream]],
+  * [[cdcStream]]) see each user's whole history in one call, buffered
+  * on the task heap. `op_anomaly_trailing` and `op_cdc_apply` are the
+  * batch operators for the same rules: a window per user that Spark
+  * can spill.
+  *
+  * Scale posture: watermarks bound state (data more than [[Lateness]]
+  * behind the newest event is dropped, state for closed windows is
+  * evicted); custom state is fixed-size per user and the anomaly
+  * state is evicted by event-time timeout — state size is
   * O(active users), never O(events).
   */
 object Streams {
 
-  /** Parse a `withWatermark`-style delay string ("2 hours",
-    * "30 minutes") to milliseconds, via the same Catalyst interval
-    * grammar Structured Streaming itself uses — so a state-timeout
-    * horizon derived from it can never disagree with the watermark. */
-  private[streaming] def watermarkMillis(delay: String): Long = {
+  /** The event-time lateness every watermark here allows. */
+  private val Lateness = "2 hours"
+
+  /** [[Lateness]] in milliseconds, parsed by the Catalyst interval
+    * grammar `withWatermark` itself uses — so a state-timeout horizon
+    * derived from it can never disagree with the watermark. */
+  private val LatenessMs: Long = {
     val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(delay))
-    require(iv.months == 0, s"watermark '$delay' must not use month units")
+      org.apache.spark.unsafe.types.UTF8String.fromString(Lateness))
     iv.days * 86400000L + iv.microseconds / 1000L
   }
 
   private def cents = floor(col("value") * lit(100) + lit(0.5)).cast("long")
 
-  /** Tumbling 1-hour window aggregate per event_type. Works on batch
-    * and (after `withWatermark`) streaming input unchanged. */
+  /** µs since the epoch: the full precision of a `ts`, which
+    * `getTime`'s milliseconds drop. */
+  private def micros(t: Timestamp): Long = t.getTime * 1000L + t.getNanos / 1000 % 1000
+
+  /** Tumbling 1-hour window aggregate per event_type. On a stream,
+    * append mode emits each window once the watermark passes it. */
   def windowedAgg(events: DataFrame): DataFrame =
-    events
+    events.withWatermark("ts", Lateness)
       .withColumn("v_cents", cents)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), sum(col("v_cents")).as("sum_cents"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("cnt"), col("sum_cents"))
 
-  /** Streaming windowed counts: watermark → tumbling window →
-    * count. Append-mode compatible (the memory-sink spec asserts
-    * emitted rows once the watermark passes). */
-  def windowedCounts(stream: DataFrame, watermark: String = "2 hours"): DataFrame =
-    windowedAgg(stream.withWatermark("ts", watermark))
-
-  /** Custom session windows via flatMapGroupsWithState: sessions break
-    * after `gapMinutes` idle; state is one (start, end, n) accumulator
-    * per user, evicted by event-time timeout once the watermark passes
-    * the gap — closed sessions are emitted either by a later event
-    * arriving past the gap or by the timeout firing. Late
-    * (out-of-order) events within the gap of the ACTIVE session merge
-    * into it, extending bounds monotonically (min start / max end) —
-    * the bounded-state streaming approximation: history is never
-    * reconstructed for late data, only the open window absorbs it.
-    *
-    * Heap note: the per-trigger sort buffers ONE user's CURRENT
-    * micro-batch events on the task heap — bounded by trigger
-    * interval × that user's event rate, not by history (state itself
-    * is a fixed-size accumulator). A pathological single-key firehose
-    * should be rate-limited or pre-bucketed upstream; the group
-    * iterator here cannot spill. */
-  def sessionize(events: Dataset[SEvent], gapMinutes: Int = 30): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60000L
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionAcc, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, evs: Iterator[SEvent], state: GroupState[SessionAcc]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(user, s.start, s.end, s.n_events))
-          } else {
-            val sorted = evs.toSeq.sortBy(_.ts.getTime)
-            val out = scala.collection.mutable.Buffer[SessionOut]()
-            var acc = state.getOption
-            for (e <- sorted) acc match {
-              case Some(a) if e.ts.getTime - a.end.getTime <= gapMs =>
-                // a late-but-in-watermark event must never move the
-                // session window backward: extend bounds with min/max
-                acc = Some(SessionAcc(
-                  if (e.ts.before(a.start)) e.ts else a.start,
-                  if (e.ts.after(a.end)) e.ts else a.end,
-                  a.n_events + 1))
-              case Some(a) =>
-                out += SessionOut(user, a.start, a.end, a.n_events)
-                acc = Some(SessionAcc(e.ts, e.ts, 1))
-              case None =>
-                acc = Some(SessionAcc(e.ts, e.ts, 1))
-            }
-            acc.foreach { a =>
-              state.update(a)
-              state.setTimeoutTimestamp(a.end.getTime + gapMs)
-            }
-            out.iterator
-          }
-      }
-  }
-
-  /** DataFrame-native session windows via the built-in
-    * `session_window()` — the declarative twin of [[sessionize]]
-    * (which demonstrates custom state); this one is the spelling to
-    * prefer in production because it stays inside Catalyst (hash
-    * aggregate with merging session state, AQE, codegen) instead of
-    * opaque user state. The same transform runs on batch and (after
-    * `withWatermark`) streaming input unchanged.
+  /** Session windows via the built-in `session_window()` with a
+    * 30-minute gap: merging session state inside Catalyst (hash
+    * aggregate, AQE, codegen) instead of opaque user state. On a
+    * stream, append mode emits a session once the watermark passes
+    * its close.
     *
     * Semantics note the oracle must replay: the builtin's windows are
     * half-open `[start, max(ts) + gap)` and an event landing exactly
@@ -153,19 +99,14 @@ object Streams {
     * replay breaks sessions on `ts >= prev + gap` (strict `>` in
     * [[graft.operators.Relational.sessionize]]'s manual variant) and
     * emits `max(ts) + gap` as the end. */
-  def sessionWindowAgg(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events
-      .groupBy(col("user_id"), session_window(col("ts"), gap))
+  def sessionWindowAgg(events: DataFrame): DataFrame =
+    events.withWatermark("ts", Lateness)
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"))
-
-  /** Streaming session counts: watermark-bounded state, append mode
-    * emits a session once the watermark passes its close. */
-  def sessionWindowCounts(stream: DataFrame, watermark: String = "2 hours"): DataFrame =
-    sessionWindowAgg(stream.withWatermark("ts", watermark))
 
   /** Exact dedup at ingest — how a 100 TB corpus dedups INCREMENTALLY
     * instead of re-scanning itself per delivery: every arriving
@@ -175,15 +116,16 @@ object Streams {
     * beyond the horizon counts as a new observation — the standard
     * bounded-state contract; unbounded `dropDuplicates` would grow
     * state forever). State per doc is the 16-byte hash, not the text. */
-  def dedupStream(docs: DataFrame, watermark: String = "2 hours"): DataFrame =
+  def dedupStream(docs: DataFrame): DataFrame =
     docs.withColumn("text_md5", md5(col("text")))
-      .withWatermark("ingest_ts", watermark)
+      .withWatermark("ingest_ts", Lateness)
       .dropDuplicatesWithinWatermark("text_md5")
 
-  /** The batch twin of [[dedupStream]]: same transform minus the
-    * watermark. `dropDuplicates` keeps an ARBITRARY physical row per
-    * hash, so only the hash set itself is deterministic — the parity
-    * key projects exactly that. */
+  /** The batch spelling of [[dedupStream]] — the one operator here
+    * with two: the batch `documents` table has no ingest time for
+    * `dropDuplicatesWithinWatermark` to anchor on. `dropDuplicates`
+    * keeps an ARBITRARY physical row per hash, so only the hash set
+    * itself is deterministic — the parity key projects exactly that. */
   def dedupDocs(docs: DataFrame): DataFrame =
     docs.withColumn("text_md5", md5(col("text")))
       .dropDuplicates("text_md5")
@@ -215,10 +157,10 @@ object Streams {
     * advances — without the interval, stream-stream join state grows
     * forever. Works identically on batch inputs (`withWatermark` is a
     * no-op there), which is what the parity key checks. */
-  def intervalJoin(clicks: DataFrame, views: DataFrame, watermark: String = "2 hours"): DataFrame = {
-    val c = clicks.withWatermark("ts", watermark)
+  def intervalJoin(clicks: DataFrame, views: DataFrame): DataFrame = {
+    val c = clicks.withWatermark("ts", Lateness)
       .select(col("user_id"), col("ts").as("click_ts"))
-    val v = views.withWatermark("ts", watermark)
+    val v = views.withWatermark("ts", Lateness)
       .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
     c.join(v,
       col("user_id") === col("v_user") &&
@@ -254,21 +196,15 @@ object Streams {
     tags = Set("streaming"))
 
   /** Sliding 1-hour window (30-minute slide) aggregate per event_type —
-    * each event lands in exactly 2 overlapping windows. Same
-    * batch/stream unification as [[windowedAgg]]: after
-    * `withWatermark` the identical transform runs on a stream with
-    * state bounded to the open windows. */
+    * each event lands in exactly 2 overlapping windows. On a stream,
+    * state is bounded to the windows the watermark has not passed. */
   def slidingAgg(events: DataFrame): DataFrame =
-    events
+    events.withWatermark("ts", Lateness)
       .withColumn("v_cents", cents)
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), sum(col("v_cents")).as("sum_cents"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("cnt"), col("sum_cents"))
-
-  /** Streaming sliding counts: watermark → sliding window → agg. */
-  def slidingCounts(stream: DataFrame, watermark: String = "2 hours"): DataFrame =
-    slidingAgg(stream.withWatermark("ts", watermark))
 
   /** Batch-parity key for [[slidingAgg]]: the oracle replays the
     * overlap by expanding every event into its two member windows
@@ -305,38 +241,33 @@ object Streams {
     tags = Set("streaming"))
 
   /** Per-(window, user) activity counts — the streaming-safe half of
-    * windowed top-k. Works on batch and (after `withWatermark`)
-    * streaming input unchanged. */
+    * windowed top-k. On a stream, append mode emits each (window,
+    * user) row once, when the watermark closes its window. Ranking is
+    * NOT streamable (a rank can change until the window closes), so
+    * the production pattern is exactly this split: stream the additive
+    * aggregate, rank the closed windows downstream (foreachBatch or a
+    * batch job over the sink) — which is what [[topkPerWindow]] does
+    * and the parity key checks. */
   def userWindowCounts(events: DataFrame): DataFrame =
-    events
+    events.withWatermark("ts", Lateness)
       .groupBy(window(col("ts"), "1 hour"), col("user_id"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("window_start"), col("user_id"), col("cnt"))
 
-  /** Streaming spelling: watermark-bounded counts in append mode —
-    * each (window, user) row is emitted once, when the watermark
-    * closes its window. Ranking is NOT streamable (a rank can change
-    * until the window closes), so the production pattern is exactly
-    * this split: stream the additive aggregate, rank the closed
-    * windows downstream (foreachBatch or a batch job over the sink) —
-    * which is what [[topkPerWindow]] does and the parity key checks. */
-  def userWindowCountsStream(stream: DataFrame, watermark: String = "2 hours"): DataFrame =
-    userWindowCounts(stream.withWatermark("ts", watermark))
-
-  /** The downstream rank over closed windows: top-k users per window
-    * by count, ties on user_id. The window partitions by window_start
-    * over the ALREADY-aggregated (window, user) frame — ≪ the raw
-    * stream, never a global sort. */
-  def topkPerWindow(events: DataFrame, k: Int = 2): DataFrame = {
+  /** The downstream rank over closed windows: the top 2 users per
+    * window by count, ties on user_id. The window partitions by
+    * window_start over the ALREADY-aggregated (window, user) frame —
+    * ≪ the raw stream, never a global sort. */
+  def topkPerWindow(events: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("window_start")).orderBy(col("cnt").desc, col("user_id"))
     userWindowCounts(events)
       .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+      .filter(col("rn") <= 2)
   }
 
   /** Batch-parity key for the windowed top-k split
-    * ([[userWindowCountsStream]] → [[topkPerWindow]]). */
+    * ([[userWindowCounts]] → [[topkPerWindow]]). */
   val streamTopk: GQuery = GQuery(
     "stream_topk",
     (s, dir) => topkPerWindow(Tables.events(s, dir)),
@@ -384,32 +315,41 @@ object Streams {
       GROUP BY 1, 2"""),
     tags = Set("streaming"))
 
-  // ---------------------------------------------- trailing anomaly
+  // ---------------------------------------------- custom state
 
-  /** The streaming twin of `op_anomaly_trailing`'s trailing-20 rule:
-    * per-user custom state = the ring of the last ≤20 cents values.
-    * An event is flagged when it has ≥8 trailing values and
-    * v·n > 4·Σ (the same cross-multiplied integer test — no floats in
-    * state or rule). State is FIXED-size per user (20 longs) and
-    * evicted by event-time timeout once a user goes quiet past the
-    * watermark — O(active users) state, never O(events). Within a
-    * micro-batch, events sort by (ts, event_id) so replayed batches
-    * reproduce the batch window's order. */
-  def anomalyStream(events: Dataset[AEvent], watermark: String = "2 hours"): Dataset[AnomalyOut] = {
+  /** The batch `events` table as typed rows for the custom-state
+    * operators. `ts` is stored as TIMESTAMP_NTZ; it becomes the instant
+    * with the same wall-clock reading in UTC, built from its fields
+    * with the zone named. A cast (or `timestampdiff`, or NTZ interval
+    * arithmetic) reads it in the session time zone instead, where a
+    * time inside a daylight-saving gap moves an hour later, past
+    * events it preceded. */
+  private def typedEvents(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir).select(col("user_id"), col("event_id"),
+      expr("make_timestamp(year(ts), month(ts), day(ts), hour(ts), minute(ts), " +
+        "date_part('SECOND', ts), 'UTC')").as("ts"),
+      col("event_type"), col("value"))
+
+  /** The trailing-20 anomaly rule of `op_anomaly_trailing` as per-user
+    * custom state = the ring of the last ≤20 cents values. An event is
+    * flagged when it has ≥8 trailing values and v·n > 4·Σ (the same
+    * cross-multiplied integer test — no floats in state or rule). State
+    * is FIXED-size per user (20 longs) and evicted by event-time
+    * timeout once a user goes quiet for [[Lateness]] — the same bound
+    * as the watermark, so state is never evicted while an in-watermark
+    * event can still arrive. Within a call, events sort by (ts,
+    * event_id) so replayed batches reproduce the batch window's order. */
+  def anomalyStream(events: Dataset[AEvent]): Dataset[AnomalyOut] = {
     import events.sparkSession.implicits._
-    // State-eviction horizon derives from the SAME lateness bound as the
-    // watermark — a caller passing "30 minutes" must not keep 2 h of state
-    // (or worse, evict while in-watermark events can still arrive).
-    val horizonMs = watermarkMillis(watermark)
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Lateness)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[TrailState, AnomalyOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, evs: Iterator[AEvent], state: GroupState[TrailState]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
-            val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+            val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
             var ring = state.getOption.map(_.ring).getOrElse(Vector.empty[Long])
             val out = scala.collection.mutable.Buffer[AnomalyOut]()
             var lastTs = 0L
@@ -422,30 +362,11 @@ object Streams {
               lastTs = e.ts.getTime
             }
             state.update(TrailState(ring))
-            if (lastTs > 0) state.setTimeoutTimestamp(lastTs + horizonMs)
+            if (lastTs > 0) state.setTimeoutTimestamp(lastTs + LatenessMs)
             out.iterator
           }
       }
   }
-
-  /** Batch twin of [[anomalyStream]]: the declarative trailing-frame
-    * window (stays inside Catalyst on batch input), projecting the
-    * same (user_id, event_id, v_cents) incident rows. StreamingSpec
-    * pins stream == batch on ordered input. */
-  def anomalyBatch(events: DataFrame): DataFrame = {
-    val byTime = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      .rowsBetween(-20, -1)
-    events
-      .withColumn("v_cents", cents)
-      .withColumn("trail_sum", sum(col("v_cents")).over(byTime))
-      .withColumn("trail_n", count(lit(1)).over(byTime))
-      .filter(col("trail_n") >= 8 &&
-        col("v_cents") * col("trail_n") > col("trail_sum") * 4)
-      .select(col("user_id"), col("event_id"), col("v_cents"))
-  }
-
-  // ---------------------------------------------- CDC materialization
 
   /** Streaming CDC materialization — the MERGE INTO sequencing pattern
     * as bounded per-key state: each user's state is exactly the
@@ -457,7 +378,7 @@ object Streams {
     * is the state, which is the floor for any CDC consumer; keys are
     * never dropped here because a tombstoned key must keep absorbing
     * late out-of-order changes (production bounds that with a
-    * retention TTL via timeouts, the [[sessionize]] mechanism). */
+    * retention TTL via timeouts, the [[anomalyStream]] mechanism). */
   def cdcStream(changes: Dataset[CEvent]): Dataset[CdcOut] = {
     import changes.sparkSession.implicits._
     changes
@@ -468,9 +389,9 @@ object Streams {
           var cur = state.getOption
           var changed = false
           for (e <- evs) {
-            val (kTs, kId) = (e.ts.getTime, e.event_id)
+            val (kTs, kId) = (micros(e.ts), e.event_id)
             if (cur.forall(c => c.ts < kTs || (c.ts == kTs && c.event_id < kId))) {
-              cur = Some(CdcState(e.ts.getTime, e.event_id, e.event_type,
+              cur = Some(CdcState(kTs, e.event_id, e.event_type,
                 math.floor(e.value * 100 + 0.5).toLong))
               changed = true
             }
@@ -483,24 +404,17 @@ object Streams {
       }
   }
 
-  /** Batch twin of [[cdcStream]]: the declarative last-change-wins
-    * rank ([[graft.operators.Relational.cdcApply]]'s plan), live rows
-    * only — what the materialized table holds after the stream
-    * drains. StreamingSpec pins stream == batch. */
-  def cdcBatch(events: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
-    events
-      .withColumn("v_cents", cents)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("event_type") =!= "error")
-      .select(col("user_id"), col("event_type").as("last_type"), col("v_cents"))
-  }
-
-  /** Batch-parity key for [[cdcStream]]. */
+  /** Registry key for [[cdcStream]]: the operator itself over the batch
+    * events table, live rows only — what the materialized table holds
+    * once the stream drains. */
   val streamCdc: GQuery = GQuery(
     "stream_cdc",
-    (s, dir) => cdcBatch(Tables.events(s, dir)),
+    (s, dir) => {
+      import s.implicits._
+      cdcStream(typedEvents(s, dir).as[CEvent])
+        .filter(!col("deleted"))
+        .select(col("user_id"), col("last_type"), col("v_cents"))
+    },
     Some("""
       WITH last AS (
         SELECT user_id, event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_cents,
@@ -510,10 +424,14 @@ object Streams {
       FROM last WHERE rn = 1 AND event_type <> 'error'"""),
     tags = Set("streaming"))
 
-  /** Batch-parity key for [[anomalyStream]]. */
+  /** Registry key for [[anomalyStream]]: the operator itself over the
+    * batch events table. */
   val streamAnomaly: GQuery = GQuery(
     "stream_anomaly",
-    (s, dir) => anomalyBatch(Tables.events(s, dir)),
+    (s, dir) => {
+      import s.implicits._
+      anomalyStream(typedEvents(s, dir).as[AEvent]).toDF()
+    },
     Some("""
       WITH t AS (SELECT user_id, event_id, ts,
                         CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_cents
@@ -590,9 +508,13 @@ object Streams {
       ev.repartition(3).write.parquet(s"$tmp/in")
       val src = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in")
-      val q = sinkToParquet(src, s"$tmp/out", s"$tmp/ckpt")
+      val out = s"$tmp/out"
+      val q = sinkToParquet(src, out, s"$tmp/ckpt")
       q.processAllAvailable()
       q.stop()
+      // the schema partition inference gives, stated: an empty stream
+      // lands no batch_id partition to infer it from
+      def sunk = s.read.schema(ev.schema.add("batch_id", "int")).parquet(out)
       // materialize batch 0 to a SIDE directory before re-landing it:
       // reading the sink and dynamic-overwriting the same path in one
       // job only works because dynamic overwrite defers partition
@@ -600,12 +522,11 @@ object Streams {
       // delete its own input under static mode or a changed commit
       // protocol (r14 advice)
       val replay = s"$tmp/replay0"
-      s.read.parquet(s"$tmp/out")
-        .where(col("batch_id") === 0).drop("batch_id")
+      sunk.where(col("batch_id") === 0).drop("batch_id")
         .write.mode("overwrite").parquet(replay)
       // idempotent: overwrites its own partition
-      mergeBatch(s.read.parquet(replay), 0L, s"$tmp/out")
-      s.read.parquet(s"$tmp/out").drop("batch_id")
+      mergeBatch(s.read.parquet(replay), 0L, out)
+      sunk.drop("batch_id")
     },
     Some("""
       SELECT event_id, user_id, event_type,

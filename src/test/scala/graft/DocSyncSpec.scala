@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * spec parses the backticked key column of every §2 table row and
   * asserts SET EQUALITY with `Registry.all` — a key added to the code
   * without a doc row (or vice versa) fails the build, not a judge pass
-  * two rounds later. Spec-only API rows (e.g. `Streams.sessionize`) are
-  * naturally excluded: registry keys are lower_snake_case with no dots.
+  * two rounds later. Spec-only API rows (e.g. `Streams.dedupStream`)
+  * are naturally excluded: registry keys are lower_snake_case with no
+  * dots.
   */
 class DocSyncSpec extends AnyFunSuite {
 
@@ -84,6 +85,20 @@ class DocSyncSpec extends AnyFunSuite {
       """createOrReplaceTempView\(""".r.findAllIn(src).map(_ => f)
     }
     assert(views.sorted == Seq("Tables.scala", "TpchGen.scala"), views)
+  }
+
+  test("streaming operators have one lateness literal and no batch copies") {
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/streaming")
+    val files = java.nio.file.Files.list(dir).iterator()
+      .asInstanceOf[java.util.Iterator[java.nio.file.Path]]
+    var names = Set.empty[String]
+    while (files.hasNext) names += files.next().getFileName.toString
+    val streaming = sources.filter { case (f, _) => names(f) }.values.mkString("\n")
+    assert(""""2 hours"""".r.findAllIn(streaming).size == 1)
+    // mergeBatch is the foreachBatch sink's per-batch merge, not a
+    // batch copy of an operator
+    val batchDefs = """def (\w+Batch)\(""".r.findAllMatchIn(streaming).map(_.group(1)).toSet
+    assert(batchDefs == Set("mergeBatch"), batchDefs)
   }
 
   test("README totals match the build: registry key count and test count") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Semantics of the graph family: the degree-oriented triangle census
@@ -11,12 +11,6 @@ import org.apache.spark.sql.functions._
 class GraphSpec extends SparkSpecBase {
 
   private val graphKeys = graph.Graph.all.map(_.name)
-
-  /** Order-insensitive (row count, Σ hash over the name-sorted columns). */
-  private def digest(df: DataFrame): (Long, Long) = {
-    val r = df.agg(count(lit(1)), sum(hash(df.columns.sorted.toSeq.map(col): _*).cast("long"))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
 
   test("oriented triangle count equals the brute-force a<b<c count") {
     val census = SparkEntry.queries("graph_triangles")(spark, sfDir).head()

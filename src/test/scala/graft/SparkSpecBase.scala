@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, hash, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared session for the whole test run (Spark boot is ~5s;
@@ -14,4 +15,10 @@ object TestSession {
 abstract class SparkSpecBase extends AnyFunSuite {
   def spark: SparkSession = TestSession.spark
   def sfDir: String = TestSession.sfDir
+
+  /** Order-insensitive (row count, Σ hash over the name-sorted columns). */
+  protected def digest(df: DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)), sum(hash(df.columns.sorted.toSeq.map(col): _*).cast("long"))).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
 }

@@ -1,16 +1,28 @@
 package graft
 
 import graft.streaming.{AEvent, SDoc, SEvent, Streams}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
-/** Streaming behaviour through real micro-batches: the windowed
-  * transform matches its batch twin, and sessionize emits sessions
-  * once the watermark closes them. */
+/** Streaming behaviour through real micro-batches: each operator,
+  * streamed, matches the same function on batch input; the registry
+  * keys run that function and hold under any physical config. */
 class StreamingSpec extends SparkSpecBase {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
+
+  /** Runs `f` over a corpus dir whose `events` table is `rows` with
+    * `ts` stored as TIMESTAMP_NTZ, the shape of the testdata table. */
+  private def withEvents[T](rows: DataFrame)(f: String => T): T = {
+    val root = java.nio.file.Files.createTempDirectory("graft_stream_events")
+    try {
+      rows.withColumn("ts", col("ts").cast("timestamp_ntz"))
+        .write.parquet(sources.Tables.path(root.toString, "events"))
+      f(root.toString)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+  }
 
   private val events = Seq(
     SEvent(1, ts("2024-01-01 10:05:00"), "click", 10.0),
@@ -25,7 +37,7 @@ class StreamingSpec extends SparkSpecBase {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SEvent]
     mem.addData(events: _*)
-    val q = Streams.windowedCounts(mem.toDF()).writeStream
+    val q = Streams.windowedAgg(mem.toDF()).writeStream
       .format("memory").queryName("wc_out").outputMode("append").start()
     try { q.processAllAvailable() } finally q.stop()
     val streamed = spark.table("wc_out")
@@ -46,7 +58,7 @@ class StreamingSpec extends SparkSpecBase {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SEvent]
     mem.addData(events: _*)
-    val q = Streams.slidingCounts(mem.toDF()).writeStream
+    val q = Streams.slidingAgg(mem.toDF()).writeStream
       .format("memory").queryName("sl_out").outputMode("append").start()
     try { q.processAllAvailable() } finally q.stop()
     val streamed = spark.table("sl_out")
@@ -93,7 +105,7 @@ class StreamingSpec extends SparkSpecBase {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SEvent]
     mem.addData(events: _*)
-    val q = Streams.userWindowCountsStream(mem.toDF()).writeStream
+    val q = Streams.userWindowCounts(mem.toDF()).writeStream
       .format("memory").queryName("uwc_out").outputMode("append").start()
     try { q.processAllAvailable() } finally q.stop()
     val streamed = spark.table("uwc_out")
@@ -144,7 +156,7 @@ class StreamingSpec extends SparkSpecBase {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SEvent]
     mem.addData(events: _*)
-    val q = Streams.sessionWindowCounts(mem.toDF()).writeStream
+    val q = Streams.sessionWindowAgg(mem.toDF()).writeStream
       .format("memory").queryName("sw_out").outputMode("append").start()
     try { q.processAllAvailable() } finally q.stop()
     val streamed = spark.table("sw_out")
@@ -160,45 +172,6 @@ class StreamingSpec extends SparkSpecBase {
     assert(streamed.subsetOf(batch), s"streamed=$streamed batch=$batch")
     assert(streamed.contains(Seq(1L, ts("2024-01-01 10:05:00"), ts("2024-01-01 10:50:00"), 2L)),
       streamed.toString)
-  }
-
-  test("sessionize emits closed sessions with correct bounds, counts, and late-event merging") {
-    import TestSession.spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    // batch 1 WITHOUT the watermark-advancing tail, so batch 2's late
-    // event is still above the watermark (below it, Spark drops the
-    // row before the state function ever sees it)
-    mem.addData(events.filter(_.user_id != 9): _*)
-    val q = Streams.sessionize(mem.toDS()).writeStream
-      .format("memory").queryName("sess_out").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // a LATE out-of-order event for user 2 (10:40 < the state's 10:45
-      // end, within the gap) must merge without moving the window
-      // backward
-      mem.addData(SEvent(2, ts("2024-01-01 10:40:00"), "click", 5.0))
-      q.processAllAvailable()
-      // two watermark-advancing batches: the first moves the watermark
-      // past every open session's timeout, the second triggers the
-      // timeout pass that emits them
-      mem.addData(SEvent(9, ts("2024-01-02 00:00:00"), "view", 0.0))
-      q.processAllAvailable()
-      mem.addData(SEvent(9, ts("2024-01-03 00:00:00"), "view", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("sess_out")
-      .select(col("user_id"), col("session_start"), col("session_end"), col("n_events"))
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3)))
-      .toSet
-    // user 1: first session = 2 events 10:05..10:20 (closed by the 11:30 event)
-    assert(got.contains((1L, ts("2024-01-01 10:05:00"), ts("2024-01-01 10:20:00"), 2L)), got.toString)
-    // user 1 second session closes via timeout
-    assert(got.exists(s => s._1 == 1L && s._4 == 1L), got.toString)
-    // user 2: late event merged -> 10:40..10:45 with 2 events (never
-    // an inverted start > end window)
-    assert(got.contains((2L, ts("2024-01-01 10:40:00"), ts("2024-01-01 10:45:00"), 2L)), got.toString)
-    assert(got.forall(s => !s._2.after(s._3)), s"inverted session window: $got")
   }
 
   test("enrichStream joins a static dim per micro-batch with no state") {
@@ -257,9 +230,14 @@ class StreamingSpec extends SparkSpecBase {
       .filter(!_._2.getAs[Boolean]("deleted"))
       .map { case (u, r) => (u, r.getAs[String]("last_type"), r.getAs[Long]("v_cents")) }
       .toSet
-    val batch = Streams.cdcBatch(changes.toDF())
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val batch = Streams.cdcStream(changes.toDS()).collect()
+      .collect { case r if !r.deleted => (r.user_id, r.last_type, r.v_cents) }.toSet
+    val reference = withEvents(changes.toDF()) { dir =>
+      Registry.byName("op_cdc_apply").build(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    }
     assert(replayed == batch, s"replayed=$replayed batch=$batch")
+    assert(replayed == reference, s"replayed=$replayed op_cdc_apply=$reference")
     assert(replayed == Set((1L, "purchase", 500L), (3L, "click", 700L)), replayed.toString)
   }
 
@@ -287,10 +265,15 @@ class StreamingSpec extends SparkSpecBase {
     val streamed = spark.table("anom_out")
       .select(col("user_id"), col("event_id"), col("v_cents"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val batch = Streams.anomalyBatch(
-        allEvents.toDF().withColumnRenamed("value", "value"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val batch = Streams.anomalyStream(allEvents.toDS())
+      .collect().map(r => (r.user_id, r.event_id, r.v_cents)).toSet
+    val reference = withEvents(allEvents.toDF()) { dir =>
+      Registry.byName("op_anomaly_trailing").build(spark, dir)
+        .select(col("user_id"), col("event_id"), col("v_cents"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    }
     assert(streamed == batch, s"streamed=$streamed batch=$batch")
+    assert(streamed == reference, s"streamed=$streamed op_anomaly_trailing=$reference")
     assert(streamed == Set((1L, 10L, 1000L)), streamed.toString)
   }
 
@@ -306,14 +289,14 @@ class StreamingSpec extends SparkSpecBase {
 
     // first incarnation: half the stream, then a clean stop
     mem.addData(events.take(3): _*)
-    val q1 = Streams.sinkToParquet(Streams.windowedCounts(mem.toDF()), out, ckpt)
+    val q1 = Streams.sinkToParquet(Streams.windowedAgg(mem.toDF()), out, ckpt)
     try q1.processAllAvailable() finally q1.stop()
 
     // SECOND incarnation from the SAME checkpoint dir: committed
     // offsets resume (no reprocessing of the first half), the
     // watermark-advancing tail closes the earlier windows
     mem.addData(events.drop(3): _*)
-    val q2 = Streams.sinkToParquet(Streams.windowedCounts(mem.toDF()), out, ckpt)
+    val q2 = Streams.sinkToParquet(Streams.windowedAgg(mem.toDF()), out, ckpt)
     try q2.processAllAvailable() finally q2.stop()
 
     val sunk = spark.read.parquet(out)
@@ -346,5 +329,73 @@ class StreamingSpec extends SparkSpecBase {
     // micro-batch fails both
     assert(sunk.count() == n)
     assert(sunk.select("event_id").distinct().count() == n)
+  }
+
+  /** Every `events`-reading streaming key, plus the batch operators
+    * for the two custom-state rules. */
+  private val eventsKeys =
+    Streams.all.map(_.name).filter(_ != "stream_dedup") ++ Seq("op_cdc_apply", "op_anomaly_trailing")
+
+  test("stream_cdc and stream_anomaly build through the custom-state operators") {
+    for (k <- Seq("stream_cdc", "stream_anomaly")) {
+      val plan = Registry.byName(k).build(spark, sfDir).queryExecution.analyzed
+      assert(plan.collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState => f
+      }.nonEmpty, s"$k has no FlatMapGroupsWithState:\n$plan")
+    }
+  }
+
+  test("events-reading streaming keys give the same digest under any physical config") {
+    val base = eventsKeys.map(k => k -> digest(Registry.byName(k).build(spark, sfDir))).toMap
+    Seq(
+      Seq("spark.sql.shuffle.partitions" -> "1"),
+      Seq("spark.sql.shuffle.partitions" -> "7"),
+      Seq("spark.sql.adaptive.enabled" -> "false"),
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")).foreach { confs =>
+      val ss = Sessions.childWith(spark, confs)
+      val moved = eventsKeys.filter(k => digest(Registry.byName(k).build(ss, sfDir)) != base(k))
+      assert(moved.isEmpty, s"$confs changed ${moved.mkString(", ")}")
+    }
+  }
+
+  test("events-reading streaming keys build and return no rows over an empty events table") {
+    withEvents(sources.Tables.events(spark, sfDir).limit(0)) { dir =>
+      sources.Tables.customer(spark, sfDir).write.parquet(sources.Tables.path(dir, "customer"))
+      val bad = eventsKeys.flatMap { k =>
+        scala.util.Try(Registry.byName(k).build(spark, dir).count()) match {
+          case scala.util.Success(0L) => None
+          case other => Some(s"$k: $other")
+        }
+      }
+      assert(bad.isEmpty, bad.mkString("; "))
+    }
+  }
+
+  test("stream_cdc and stream_anomaly order events by wall clock in any session time zone") {
+    import TestSession.spark.implicits._
+    // one user: seven calm events, a calm one at 02:30 inside the
+    // 2024-03-10 02:00-03:00 Los Angeles DST gap, then a spike at 03:10.
+    // Read in Los Angeles time, 02:30 would become 03:30 and sort after
+    // the spike: the spike would have 7 trailing values (not flagged)
+    // and the 02:30 view would be the last change. User 8's two events
+    // share a millisecond: the later microsecond must win, not the
+    // higher event_id.
+    val calm = (1 to 7).map(i => (i.toLong, 7L, f"2024-03-10 00:${i * 7}%02d:00", "view", 1.0))
+    val rows = (calm ++ Seq(
+      (8L, 7L, "2024-03-10 02:30:00", "view", 1.0),
+      (9L, 7L, "2024-03-10 03:10:00", "purchase", 10.0),
+      (10L, 8L, "2024-03-10 05:00:00.000200", "signup", 2.0),
+      (11L, 8L, "2024-03-10 05:00:00.000100", "view", 3.0)))
+      .toDF("event_id", "user_id", "ts", "event_type", "value")
+    withEvents(rows) { dir =>
+      val la = Sessions.childWith(spark, Seq("spark.sql.session.timeZone" -> "America/Los_Angeles"))
+      def build(k: String, ss: org.apache.spark.sql.SparkSession) = Registry.byName(k).build(ss, dir)
+      for ((k, want) <- Seq(
+          "stream_anomaly" -> Set(Seq(7L, 9L, 1000L)),
+          "stream_cdc" -> Set(Seq(7L, "purchase", 1000L), Seq(8L, "signup", 200L)))) {
+        assert(build(k, spark).collect().map(_.toSeq).toSet == want, k)
+        assert(digest(build(k, la)) == digest(build(k, spark)), s"$k under America/Los_Angeles")
+      }
+    }
   }
 }
