@@ -307,7 +307,7 @@ object Bench {
     // shipped library) just skips the column. Only a whole-registry run
     // pays for it: a SPARK_GRAFT_BENCH_ONLY dev loop leaves it empty.
     val duck: Seq[(String, Double)] =
-      if (only.isEmpty) duckdbBaseline(results, sfDir) else Nil
+      if (only.isEmpty) duckdbBaseline(spark, results, sfDir) else Nil
     val loadEnd = loadAvg()
     val stealPct = (for {
       (s1, t1) <- statStart
@@ -389,7 +389,7 @@ object Bench {
     * read — a chatty child can neither fill the pipe buffer nor make
     * the timeout unreachable; per-key result lines are emitted as the
     * child completes them, so a timeout still yields partial data. */
-  private def duckdbBaseline(
+  private def duckdbBaseline(spark: org.apache.spark.sql.SparkSession,
       results: Seq[(String, Either[String, Seq[Double]])],
       sfDir: String): Seq[(String, Double)] =
     try {
@@ -418,7 +418,8 @@ object Bench {
       val targets = fullTargets ++ nonTpch
       if (targets.isEmpty) Nil
       else {
-        val dir = java.nio.file.Files.createTempDirectory("graft_duck")
+        val dir = java.nio.file.Paths.get(
+          graft.sources.Sinks.compactScratch(spark, s"$sfDir#duck", "graft_duck")())
         val utf8 = java.nio.charset.StandardCharsets.UTF_8
         targets.foreach { case (k, sql) =>
           java.nio.file.Files.write(dir.resolve(s"$k.sql"), sql.getBytes(utf8)) }

@@ -30,11 +30,7 @@ object Registry {
       streaming.Streams.all ++
       tpch.TpchGen.all ++
       sources.AuxGen.all ++
-      Seq(sources.Sinks.bucketedJoin, sources.Sinks.q21Bucketed,
-        sources.Sinks.q18Bucketed, sources.Sinks.q5Bucketed,
-        sources.Sinks.q17Bucketed, sources.Sinks.q4Bucketed,
-        sources.Sinks.q12Bucketed, sources.Sinks.q13Bucketed,
-        sources.Sinks.q7Bucketed,
+      Seq(sources.Sinks.bucketedJoin) ++ sources.Sinks.layoutKeys ++ Seq(
         sources.Sinks.compactSmallFiles, sources.Sinks.compactPartitioned,
         sources.Sinks.partitionPrune, sources.Sinks.bloomFilterJoin,
         sources.Sinks.statsSkipping) ++

@@ -279,8 +279,8 @@ object Behavior {
       Tables.events(s, dir)
         .withColumn("v_cents", cents(col("value")))
         .withColumn("dur_ms",
-          unix_millis(lead(col("ts"), 1).over(w).cast("timestamp"))
-            - unix_millis(col("ts").cast("timestamp")))
+          unix_millis(Tables.wallClock(lead(col("ts"), 1).over(w)))
+            - unix_millis(Tables.wallClock(col("ts"))))
         .filter(col("dur_ms").isNotNull)
         .groupBy(col("user_id"))
         .agg(sum(col("dur_ms") * col("v_cents")).as("num_cents_ms"),

@@ -576,7 +576,7 @@ object Relational {
     "op_range_frame",
     (s, dir) => {
       val w = Window.partitionBy(col("user_id"))
-        .orderBy(unix_millis(col("ts").cast("timestamp")))
+        .orderBy(unix_millis(Tables.wallClock(col("ts"))))
         .rangeBetween(-3600000L, 0L)
       Tables.events(s, dir)
         .withColumn("v_cents", cents(col("value")))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** The one owner of where a corpus table lives and how it is read.
   *
@@ -41,10 +41,27 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
+  /** A TIMESTAMP_NTZ column (`events.ts`) as the instant with the same
+    * wall-clock reading in UTC, built from its fields with the zone
+    * named — the DuckDB oracles read `ts` as wall clock. A cast (or
+    * `timestampdiff`, or NTZ interval arithmetic) reads it in the
+    * session time zone instead, where a time inside a daylight-saving
+    * gap moves an hour later, past events it preceded. */
+  def wallClock(ts: Column): Column = {
+    import org.apache.spark.sql.functions._
+    make_timestamp(year(ts), month(ts), day(ts), hour(ts), minute(ts),
+      date_part(lit("SECOND"), ts), lit("UTC"))
+  }
+
   /** Register `tables` as temp views on `spark` (≙ the reference's
     * `tpch(sf)` UDTF registering all tables in the catalog). A builder
     * that needs views registers them on a child session
     * (`Sessions.childWith`), never on its caller's. */
   def registerAll(spark: SparkSession, dir: String, tables: Seq[String]): Unit =
-    tables.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+    registerViews(tables.map(n => n -> load(spark, dir, n)))
+
+  /** Register each frame as a temp view, under its name, on the
+    * frame's own session. */
+  def registerViews(views: Seq[(String, DataFrame)]): Unit =
+    views.foreach { case (n, df) => df.createOrReplaceTempView(n) }
 }

@@ -318,17 +318,10 @@ object Streams {
   // ---------------------------------------------- custom state
 
   /** The batch `events` table as typed rows for the custom-state
-    * operators. `ts` is stored as TIMESTAMP_NTZ; it becomes the instant
-    * with the same wall-clock reading in UTC, built from its fields
-    * with the zone named. A cast (or `timestampdiff`, or NTZ interval
-    * arithmetic) reads it in the session time zone instead, where a
-    * time inside a daylight-saving gap moves an hour later, past
-    * events it preceded. */
+    * operators, `ts` read as wall clock ([[Tables.wallClock]]). */
   private def typedEvents(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir).select(col("user_id"), col("event_id"),
-      expr("make_timestamp(year(ts), month(ts), day(ts), hour(ts), minute(ts), " +
-        "date_part('SECOND', ts), 'UTC')").as("ts"),
-      col("event_type"), col("value"))
+      Tables.wallClock(col("ts")).as("ts"), col("event_type"), col("value"))
 
   /** The trailing-20 anomaly rule of `op_anomaly_trailing` as per-user
     * custom state = the ring of the last ≤20 cents values. An event is
@@ -501,7 +494,10 @@ object Streams {
   val streamSinkParquet: GQuery = GQuery(
     "stream_sink_parquet",
     (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString
+      val tmp = graft.sources.Sinks.compactScratch(s, s"$dir#sink", "graft_sink")()
+      // a reused checkpoint would resume the last build's query and
+      // stream nothing: every build starts from an empty directory
+      org.apache.commons.io.FileUtils.cleanDirectory(new java.io.File(tmp))
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           cents.as("v_cents"))

@@ -148,9 +148,11 @@ object FullTpch {
     Map.empty
 
   /** name → the exact SQL text the Spark side runs (spec text, CTEs
-    * prefixed) — read by the measurement probes (FullTpchProbeMain)
-    * so layout/stats A/Bs run the SAME text over differently-prepared
-    * catalogs. */
+    * prefixed). The registry's layout keys (`*_full_bucketed`,
+    * `graft.sources.Sinks.layoutKeys`) run this text over a catalog
+    * whose fact tables are bucketed copies, and the measurement probes
+    * (FullTpchProbeMain) read it too, so every arm runs the SAME text
+    * over differently-prepared catalogs. */
   private[graft] val sparkSqlOf =
     scala.collection.mutable.LinkedHashMap.empty[String, String]
 

@@ -282,42 +282,45 @@ class StreamingSpec extends SparkSpecBase {
     implicit val sqlCtx = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("graft_sink_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_ckpt").toString
-    val mem = MemoryStream[SEvent]
-    def cols(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("window_start"), col("event_type"), col("cnt"), col("sum_cents"))
-      .collect().map(_.toSeq).toSeq
+    try {
+      val mem = MemoryStream[SEvent]
+      def cols(df: org.apache.spark.sql.DataFrame) = df
+        .select(col("window_start"), col("event_type"), col("cnt"), col("sum_cents"))
+        .collect().map(_.toSeq).toSeq
 
-    // first incarnation: half the stream, then a clean stop
-    mem.addData(events.take(3): _*)
-    val q1 = Streams.sinkToParquet(Streams.windowedAgg(mem.toDF()), out, ckpt)
-    try q1.processAllAvailable() finally q1.stop()
+      // first incarnation: half the stream, then a clean stop
+      mem.addData(events.take(3): _*)
+      val q1 = Streams.sinkToParquet(Streams.windowedAgg(mem.toDF()), out, ckpt)
+      try q1.processAllAvailable() finally q1.stop()
 
-    // SECOND incarnation from the SAME checkpoint dir: committed
-    // offsets resume (no reprocessing of the first half), the
-    // watermark-advancing tail closes the earlier windows
-    mem.addData(events.drop(3): _*)
-    val q2 = Streams.sinkToParquet(Streams.windowedAgg(mem.toDF()), out, ckpt)
-    try q2.processAllAvailable() finally q2.stop()
+      // SECOND incarnation from the SAME checkpoint dir: committed
+      // offsets resume (no reprocessing of the first half), the
+      // watermark-advancing tail closes the earlier windows
+      mem.addData(events.drop(3): _*)
+      val q2 = Streams.sinkToParquet(Streams.windowedAgg(mem.toDF()), out, ckpt)
+      try q2.processAllAvailable() finally q2.stop()
 
-    val sunk = spark.read.parquet(out)
-    val rows = cols(sunk)
-    val batch = Streams.windowedAgg(events.toDF()).collect().map(_.toSeq).toSet
-    assert(rows.nonEmpty)
-    // exactly-once across the restart: append-mode emits each closed
-    // window once, so any duplicate row means the restart re-delivered
-    assert(rows.distinct.size == rows.size, s"duplicate rows after restart: $rows")
-    assert(rows.toSet.subsetOf(batch), s"sunk=$rows batch=$batch")
-    assert(rows.exists(_.toString.contains("2024-01-01 10:00")), rows.toString)
+      val sunk = spark.read.parquet(out)
+      val rows = cols(sunk)
+      val batch = Streams.windowedAgg(events.toDF()).collect().map(_.toSeq).toSet
+      assert(rows.nonEmpty)
+      // exactly-once across the restart: append-mode emits each closed
+      // window once, so any duplicate row means the restart re-delivered
+      assert(rows.distinct.size == rows.size, s"duplicate rows after restart: $rows")
+      assert(rows.toSet.subsetOf(batch), s"sunk=$rows batch=$batch")
+      assert(rows.exists(_.toString.contains("2024-01-01 10:00")), rows.toString)
 
-    // replay simulation: re-run the LAST batch id's merge by hand (the
-    // crash-between-write-and-commit window) — the dynamic-overwrite
-    // merge must be idempotent, not append a second copy
-    val lastId = sunk.agg(max(col("batch_id").cast("long"))).first.getLong(0)
-    val replayed = sunk.filter(col("batch_id") === lastId).drop("batch_id")
-    Streams.mergeBatch(replayed, lastId, out)
-    val after = cols(spark.read.parquet(out))
-    assert(after.sortBy(_.toString) == rows.sortBy(_.toString),
-      s"batch replay changed sink contents: before=$rows after=$after")
+      // replay simulation: re-run the LAST batch id's merge by hand (the
+      // crash-between-write-and-commit window) — the dynamic-overwrite
+      // merge must be idempotent, not append a second copy
+      val lastId = sunk.agg(max(col("batch_id").cast("long"))).first.getLong(0)
+      val replayed = sunk.filter(col("batch_id") === lastId).drop("batch_id")
+      Streams.mergeBatch(replayed, lastId, out)
+      val after = cols(spark.read.parquet(out))
+      assert(after.sortBy(_.toString) == rows.sortBy(_.toString),
+        s"batch replay changed sink contents: before=$rows after=$after")
+    } finally Seq(out, ckpt).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
 
   test("stream_sink_parquet registry key: multi-batch file-source run lands every event exactly once") {
@@ -329,6 +332,19 @@ class StreamingSpec extends SparkSpecBase {
     // micro-batch fails both
     assert(sunk.count() == n)
     assert(sunk.select("event_id").distinct().count() == n)
+  }
+
+  test("stream_sink_parquet builds reuse one scratch directory and land the oracle's rows") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def sinkDirs = tmp.listFiles().count(f => f.isDirectory && f.getName.startsWith("graft_sink"))
+    val before = sinkDirs
+    val want = digest(sources.Tables.events(spark, sfDir).select(col("event_id"), col("user_id"),
+      col("event_type"), floor(col("value") * 100 + 0.5).cast("long").as("v_cents")))
+    // the second build clears the first one's checkpoint: resuming it
+    // would stream nothing and read back only the old sink
+    for (i <- 1 to 2)
+      assert(digest(Registry.byName("stream_sink_parquet").build(spark, sfDir)) == want, s"build $i")
+    assert(sinkDirs - before <= 1, s"$before graft_sink dirs before, $sinkDirs after")
   }
 
   /** Every `events`-reading streaming key, plus the batch operators
@@ -395,6 +411,19 @@ class StreamingSpec extends SparkSpecBase {
           "stream_cdc" -> Set(Seq(7L, "purchase", 1000L), Seq(8L, "signup", 200L)))) {
         assert(build(k, spark).collect().map(_.toSeq).toSet == want, k)
         assert(digest(build(k, la)) == digest(build(k, spark)), s"$k under America/Los_Angeles")
+      }
+      // the batch operators that time the gaps between events: user 7's
+      // durations sum to 03:10 - 00:07 = 183 min whatever the zone, and
+      // 02:30 is more than an hour before 03:10 only on the wall clock
+      def twap(ss: org.apache.spark.sql.SparkSession) = build("op_time_weighted_avg", ss)
+        .where(col("user_id") === 7).collect().map(_.toSeq).toSeq
+      def hour(ss: org.apache.spark.sql.SparkSession) = build("op_range_frame", ss)
+        .where(col("event_id").isin(8L, 9L)).orderBy(col("event_id"))
+        .select(col("hour_cents"), col("hour_events")).collect().map(_.toSeq).toSeq
+      for (ss <- Seq(spark, la)) {
+        val zone = ss.conf.get("spark.sql.session.timeZone")
+        assert(twap(ss) == Seq(Seq(7L, 1098000000L, 10980000L, 100L)), s"op_time_weighted_avg in $zone")
+        assert(hour(ss) == Seq(Seq(100L, 1L), Seq(1100L, 2L)), s"op_range_frame in $zone")
       }
     }
   }
