@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, Literal, XXH64, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -532,6 +532,116 @@ object SignBandKeys {
       j += 1
     }
     ArrayData.toArrayData(keys)
+  }
+}
+
+/** `xxhash64(lit(tag), c)` for a bigint `c`, with the tag pre-hashed:
+  * `tag_hash(c, tag)` → bigint.
+  *
+  * Spark's `xxhash64` folds its children left to right from seed 42,
+  * so the two-child spelling re-hashes the tag's bytes on every row
+  * before hashing `c` with that result as the seed. Here the tag's
+  * hash is computed once per JVM and the row runs one
+  * `XXH64.hashLong(c, seed)` — the same value bit for bit. A null `c`
+  * is skipped, as `xxhash64` skips null children, leaving the seed.
+  * Only a bigint `c` is accepted (no implicit cast): an int hashes
+  * through `hashInt` and would give different values. */
+case class TagHash(child: Expression, tag: String)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[DataType] = Seq(LongType)
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "tag_hash"
+
+  private def seed: Long = TagHash.seed(tag)
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val c = child.eval(input)
+    if (c == null) seed else XXH64.hashLong(c.asInstanceOf[Long], seed)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |final long ${ev.value} = ${c.isNull} ? ${seed}L
+      |  : org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(${c.value}, ${seed}L);
+      """.stripMargin, isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TagHash =
+    copy(child = newChild)
+}
+
+object TagHash {
+  private val seeds = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** `xxhash64(tag)`: Spark's own expression evaluated once per tag. */
+  def seed(tag: String): Long =
+    seeds.computeIfAbsent(tag, t =>
+      new XxHash64(Seq(Literal(t))).eval().asInstanceOf[Long])
+}
+
+/** One TPC-H order's fold over its lineitems: `tpch_order_fold(okey,
+  * p)` → `struct(tp bigint, nf int)`, for the `p` parts of the scale.
+  *
+  * Order `okey` has lines ln = 1 .. okey mod 7 + 1, each with row id
+  * `okey·8 + ln` and the draws `graft.tpch.TpchGen.lineitem` makes
+  * from it: quantity, partkey (and so its retail price in cents),
+  * discount, tax and shipdate. `tp` is Σ qty·rpc·(100−d)·(100+t), the
+  * order's total price in exact integer 10⁻⁶ units, and `nf` counts
+  * the lines shipped before 1995-06-17 (linestatus 'F'). The draws are
+  * `pmod(xxhash64(tag, rowId), m)` through [[TagHash]] seeds, so the
+  * values are those of the lambda spelling `aggregate(sequence(1, okey
+  * mod 7 + 1), …)` this replaces (TpchGenSpec keeps it as the
+  * reference) — in one plain loop inside whole-stage codegen, where
+  * Spark evaluates the lambda interpreted. A null `okey` yields null. */
+case class OrderFold(child: Expression, p: Long)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
+  import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+
+  require(p > 0, s"tpch_order_fold: need p > 0 parts, got $p")
+
+  override def inputTypes: Seq[DataType] = Seq(LongType)
+  override def dataType: DataType = StructType(Seq(
+    StructField("tp", LongType, nullable = false),
+    StructField("nf", IntegerType, nullable = false)))
+  override def prettyName: String = "tpch_order_fold"
+
+  override protected def nullSafeEval(okey: Any): Any = OrderFold.compute(okey.asInstanceOf[Long], p)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.OrderFold.compute($c, ${p}L)")
+
+  override protected def withNewChildInternal(newChild: Expression): OrderFold =
+    copy(child = newChild)
+}
+
+object OrderFold {
+  private val Seq(od, lq, lp, ld, lt, lsd) = Seq("od", "lq", "lp", "ld", "lt", "lsd").map(TagHash.seed)
+  private val StartDay = java.time.LocalDate.parse("1992-01-01").toEpochDay
+  private val ShipCutoffDay = java.time.LocalDate.parse("1995-06-17").toEpochDay
+
+  private def u(seed: Long, id: Long, m: Long): Long = Math.floorMod(XXH64.hashLong(id, seed), m)
+
+  /** Called from generated code. */
+  def compute(okey: Long, p: Long): org.apache.spark.sql.catalyst.InternalRow = {
+    val orderDay = StartDay + u(od, okey, 2406)
+    val n = Math.floorMod(okey, 7L) + 1
+    var tp = 0L
+    var nf = 0
+    var ln = 1L
+    while (ln <= n) {
+      val rowId = okey * 8 + ln
+      val pk = u(lp, rowId, p) + 1
+      val rpc = 90000 + Math.floorMod(pk / 10, 20001L) + 100 * Math.floorMod(pk, 1000L)
+      tp += (u(lq, rowId, 50) + 1) * rpc * (100 - u(ld, rowId, 11)) * (100 + u(lt, rowId, 9))
+      if (orderDay + u(lsd, rowId, 121) + 1 < ShipCutoffDay) nf += 1
+      ln += 1
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](tp, nf))
   }
 }
 

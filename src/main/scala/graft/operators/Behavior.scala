@@ -361,7 +361,7 @@ object Behavior {
             raise_error(concat(lit("op_attribution: event_id "), col("event_id"),
               lit(" overflows the 2^22 pack width — widen the pack"))).cast("long"))
           .when(col("event_type") =!= "purchase",
-            unix_millis(col("ts").cast("timestamp")) * PACK + col("event_id")))
+            unix_millis(Tables.wallClock(col("ts"))) * PACK + col("event_id")))
         .withColumn("last_touch", max(col("touch_key")).over(w))
         .filter(col("event_type") === "purchase" && col("last_touch").isNotNull)
         .select(col("user_id"), col("event_id").as("purchase_id"),
@@ -392,7 +392,8 @@ object Behavior {
     * textbook "never collect the points, ship the moments" shape that
     * is the same ONE shuffle at 100 TB. x is the day offset from the
     * corpus min day (a 1-row broadcast scalar, the
-    * [[decayScore]]/[[Relational.incrementalAgg]] spelling), y is
+    * [[decayScore]]/[[Relational.incrementalAgg]] spelling) of the
+    * wall-clock day ([[Tables.wallClock]]), y is
     * exact integer cents, so every sum is accumulation-order
     * independent. The quadratic forms `n·Σxy − Σx·Σy` etc. are
     * computed over DECIMAL(19,0)-widened terms, whose products ride
@@ -417,8 +418,9 @@ object Behavior {
     (s, dir) => {
       val e = Tables.events(s, dir)
         .select(col("event_type"),
-          expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000").as("d"),
+          unix_micros(Tables.wallClock(col("ts"))).as("us"),
           cents(col("value")).as("y"))
+        .withColumn("d", expr("us div 86400000000"))
       val base = e.agg(min(col("d")).as("d0"))
       def wide(c: Column): Column = c.cast("decimal(19,0)")
       val m = e.crossJoin(broadcast(base))
@@ -477,7 +479,8 @@ object Behavior {
     * share a single exchange + sort and the whole match is one keyed
     * pass with zero joins (the plan a streaming-state engine would
     * run; at 100 TB the cost is the one user_id shuffle). Timestamps
-    * stay in exact µs so window order and values are engine-identical. */
+    * stay in exact µs of their wall-clock reading ([[Tables.wallClock]])
+    * so window order and values are engine- and time-zone-identical. */
   val sequenceMatch: GQuery = GQuery(
     "op_sequence_match",
     (s, dir) => {
@@ -485,7 +488,7 @@ object Behavior {
         .rowsBetween(Window.unboundedPreceding, -1)
       Tables.events(s, dir)
         .select(col("user_id"), col("event_type"),
-          unix_micros(col("ts").cast("timestamp")).as("us"), col("event_id"))
+          unix_micros(Tables.wallClock(col("ts"))).as("us"), col("event_id"))
         .withColumn("v_us",
           max(when(col("event_type") === "view", col("us"))).over(w))
         .withColumn("vc_us",

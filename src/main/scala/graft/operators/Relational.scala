@@ -391,13 +391,16 @@ object Relational {
     * bucketed by day so the join is an equi-join on the bucket with the
     * range predicate as residual — never a BroadcastNestedLoopJoin over
     * the raw inequality. Windows spanning a day boundary are exploded
-    * into both covering buckets (sequence→explode). */
+    * into both covering buckets (sequence→explode). Event times and
+    * window bounds are wall-clock readings ([[Tables.wallClock]]), so
+    * the session time zone moves no event across a bound. */
   val rangeJoin: GQuery = GQuery(
     "op_range_join",
     (s, dir) => {
       val wins = s.range(60).toDF("window_id")
         .withColumn("w_start", timestamp_seconds(
-          unix_timestamp(lit("2024-01-01 00:00:00").cast("timestamp")) + col("window_id") * 11 * 3600))
+          unix_timestamp(Tables.wallClock(lit("2024-01-01 00:00:00").cast("timestamp_ntz")))
+            + col("window_id") * 11 * 3600))
         .withColumn("w_end", timestamp_seconds(
           unix_timestamp(col("w_start")) + 5 * 3600))
       val winBuckets = wins.withColumn("bucket",
@@ -405,10 +408,11 @@ object Relational {
           floor(unix_timestamp(col("w_start")) / 86400).cast("long"),
           floor((unix_timestamp(col("w_end")) - 1) / 86400).cast("long"))))
       val e = Tables.events(s, dir)
-        .withColumn("bucket", floor(unix_timestamp(col("ts")) / 86400).cast("long"))
+        .withColumn("wts", Tables.wallClock(col("ts")))
+        .withColumn("bucket", floor(unix_timestamp(col("wts")) / 86400).cast("long"))
         .withColumn("v_cents", cents(col("value")))
       e.join(winBuckets, Seq("bucket"))
-        .filter(col("ts") >= col("w_start") && col("ts") < col("w_end"))
+        .filter(col("wts") >= col("w_start") && col("wts") < col("w_end"))
         .groupBy(col("window_id"))
         .agg(count(lit(1)).as("cnt"), sum(col("v_cents")).as("sum_cents"))
     },
@@ -428,7 +432,9 @@ object Relational {
     * before it. Plan: tag+union both sides, one shuffle by user, one
     * window pass carrying the last click forward (clicks sort before
     * purchases on ts ties → '≤' semantics) — no per-row subquery, no
-    * range join. Oracle is DuckDB's native ASOF LEFT JOIN. */
+    * range join. Oracle is DuckDB's native ASOF LEFT JOIN. The
+    * purchases' null `click_ts` is TIMESTAMP_NTZ like `ts`, so the
+    * union reads no time in the session time zone. */
   val asofJoin: GQuery = GQuery(
     "op_asof_join",
     (s, dir) => {
@@ -438,7 +444,7 @@ object Relational {
           lit(null).cast("long").as("event_id"), col("ts").as("click_ts"))
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"), lit(1).as("is_p"),
-          col("event_id"), lit(null).cast("timestamp").as("click_ts"))
+          col("event_id"), lit(null).cast("timestamp_ntz").as("click_ts"))
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("is_p"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

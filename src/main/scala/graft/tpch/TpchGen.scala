@@ -1,7 +1,9 @@
 package graft.tpch
 
 import graft.GQuery
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.{OrderFold, TagHash}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
+import org.apache.spark.sql.classic.ColumnConversions._
 import org.apache.spark.sql.functions._
 
 /** §2.1 distributed TPC-H data generator — the reference's literal
@@ -32,7 +34,9 @@ object TpchGen {
 
   // ------------------------------------------------------- primitives
 
-  private def h(tag: String, c: Column): Column = xxhash64(lit(tag), c)
+  /** `xxhash64(lit(tag), c)`, with the tag hashed once per JVM
+    * ([[graft.functions.TagHash]]); `c` must be a bigint. */
+  private def h(tag: String, c: Column): Column = GraftColumns(TagHash(c.expr, tag))
   /** Uniform long in [0, m) — deterministic per (tag, id). */
   private def u(tag: String, c: Column, m: Long): Column = pmod(h(tag, c), lit(m))
   /** money in [lo, hi] with 2 decimals, from exact integer cents. */
@@ -135,8 +139,9 @@ object TpchGen {
 
   /** p_retailprice in exact integer cents per the spec formula — also
     * recomputed from l_partkey inside [[lineitem]] so extendedprice is
-    * FK-consistent without a join, and from o_orderkey inside
-    * [[orders]] so o_totalprice is lineitem-consistent without one. */
+    * FK-consistent without a join, and per line inside
+    * [[graft.functions.OrderFold]] (the same formula in Java) so
+    * o_totalprice is lineitem-consistent without one. */
   private def retailPriceCents(pk: Column): Column =
     lit(90000) + pmod((pk / lit(10)).cast("long"), lit(20001)) + lit(100) * pmod(pk, lit(1000))
 
@@ -196,34 +201,20 @@ object TpchGen {
   }
 
   /** Per-order fold over its 1..7 lineitems, re-synthesised from the
-    * same deterministic per-line expressions [[lineitem]] uses — the
-    * spec's "orders derive from their lineitems" semantics WITHOUT a
-    * join: generation stays a single narrow shuffle-free pipeline.
-    * Folds to a struct of (Σ qty·rpc·(100−d)·(100+t) — the totalprice
-    * in exact integer 10⁻⁶ currency units — and the count of
-    * linestatus='F' lines for o_orderstatus). */
-  private def lineFold(okey: Column, p: Long): Column =
-    aggregate(
-      sequence(lit(1), (pmod(okey, lit(7)) + 1).cast("int")),
-      struct(lit(0L).as("tp"), lit(0).as("nf")),
-      (acc, ln) => {
-        val rowId = okey * 8 + ln
-        val qty = u("lq", rowId, 50) + 1
-        val pk = u("lp", rowId, p) + 1
-        val shipdate = date_add(orderDate(okey), (u("lsd", rowId, 121) + 1).cast("int"))
-        struct(
-          (acc.getField("tp") + qty * retailPriceCents(pk) *
-            (lit(100) - u("ld", rowId, 11)) * (lit(100) + u("lt", rowId, 9))).as("tp"),
-          (acc.getField("nf") +
-            when(shipdate < lit("1995-06-17").cast("date"), 1).otherwise(0)).as("nf"))
-      })
+    * same deterministic per-line draws [[lineitem]] makes — the spec's
+    * "orders derive from their lineitems" semantics WITHOUT a join:
+    * generation stays a single narrow shuffle-free pipeline. A struct
+    * of (tp, nf): Σ qty·rpc·(100−d)·(100+t) — the totalprice in exact
+    * integer 10⁻⁶ currency units — and the count of linestatus='F'
+    * lines for o_orderstatus ([[graft.functions.OrderFold]]). */
+  private def orderFold(okey: Column, p: Long): Column = GraftColumns(OrderFold(okey.expr, p))
 
   def orders(spark: SparkSession, sf: Double, numParts: Int = 0, part: Int = -1): DataFrame = {
     val c = rows(sf, 150000)
     val p = rows(sf, 200000)
     ids(spark, rows(sf, 1500000), numParts, part)
       .select(orderKey(col("i")).as("o_orderkey"))
-      .withColumn("lf", lineFold(col("o_orderkey"), p))
+      .withColumn("lf", orderFold(col("o_orderkey"), p))
       .select(
         col("o_orderkey"),
         orderCust(col("o_orderkey"), c).as("o_custkey"),
@@ -480,15 +471,16 @@ object TpchGen {
     * fold is integer-exact, the lineitem-side recompute is double
     * arithmetic), and o_orderstatus must equal the status derived
     * from the lines' linestatus values — i.e. the spec's
-    * orders↔lineitem consistency that [[lineFold]] synthesises
+    * orders↔lineitem consistency that [[orderFold]] synthesises
     * without a join.
     *
     * ONE generator pass: both sides re-derive per order id inside the
-    * same Range scan — the orders side via [[lineFold]]'s exact
-    * integer fold (the formula [[orders]] ships), the lineitem side
-    * via an array fold of the literal double-arithmetic column
-    * expressions [[lineitem]] emits. Those are maintained as two
-    * separate code paths on purpose, so the audit still catches drift
+    * same Range scan — the orders side via the exact integer fold of
+    * the [[graft.functions.OrderFold]] kernel (what [[orders]] ships),
+    * the lineitem side via an array fold of the literal
+    * double-arithmetic column expressions [[lineitem]] emits. Those
+    * are two separate code paths on purpose — Java draws in the kernel,
+    * Catalyst expressions here — so the audit still catches drift
     * between them (e.g. a domain edit to one side), while the old
     * explode + groupBy + join — two full generator passes and two
     * shuffles — collapses into a single narrow scan with one partial
@@ -516,7 +508,7 @@ object TpchGen {
       })
       ids(s, rows(sf, 1500000), 0, -1)
         .select(orderKey(col("i")).as("okey"))
-        .withColumn("lf", lineFold(col("okey"), p))
+        .withColumn("lf", orderFold(col("okey"), p))
         .select(
           // orders' shipped values (same formulas as orders())
           round(col("lf.tp") / lit(1000000.0), 2).as("o_totalprice"),

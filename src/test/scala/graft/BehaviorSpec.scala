@@ -397,4 +397,20 @@ class BehaviorSpec extends SparkSpecBase {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), "market basket must not plan any join")
   }
+
+  test("the events-timing keys read ts as wall clock: equal digests in UTC and Los Angeles") {
+    // a time read in the session time zone moves by the zone offset:
+    // day buckets, µs outputs, window bounds and the as-of join's
+    // TIMESTAMP union would all change with it
+    val la = Sessions.childWith(spark, Seq("spark.sql.session.timeZone" -> "America/Los_Angeles"))
+    val dir = TestSession.sfDir01
+    val moved = Seq("op_attribution", "op_regression_stats", "op_sequence_match",
+        "op_range_join", "op_asof_join").flatMap { k =>
+      val utc = digest(Registry.byName(k).build(spark, dir))
+      assert(utc._1 > 0, s"$k is empty at sf0.01")
+      val other = digest(Registry.byName(k).build(la, dir))
+      if (other == utc) None else Some(s"$k: UTC $utc, America/Los_Angeles $other")
+    }
+    assert(moved.isEmpty, moved.mkString("; "))
+  }
 }
