@@ -51,7 +51,8 @@ def canon(rows, cols):
         out.append(tuple(repr(r[i]) for i in order))
     return sorted(out), [cols[i] for i in order]
 
-def main(sf_dir, out_dir):
+def connect(sf_dir):
+    """A DuckDB connection with a view per corpus table of <sf_dir>."""
     con = duckdb.connect()
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
@@ -61,6 +62,10 @@ def main(sf_dir, out_dir):
             # (PersistSfMain) are Spark-written directories
             src = f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'"
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM {src}")
+    return con
+
+def main(sf_dir, out_dir):
+    con = connect(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):

@@ -239,7 +239,9 @@ object BenchFormat {
       TailWindow - TrailerWorst - LineBreaks - HiddenReserve - baseLen
     }
     val qJson = {
-      val wrapOverhead = ""","queries":{}""".length + ""","qmore":999""".length
+      // qmore can count at most every key, so reserve that many digits
+      val wrapOverhead = ""","queries":{}""".length +
+        s""","qmore":${expensiveFirst.size}""".length
       // stop at the FIRST non-fitting entry so the included set is an
       // exact most-expensive prefix: every omitted key's min is then
       // provably <= the cheapest included key's

@@ -166,8 +166,8 @@ object Behavior {
         viol(col("l_extendedprice") <= 0).as("price_positive"),
         viol(!col("l_returnflag").isin("A", "N", "R")).as("returnflag_domain"),
         viol(col("l_shipdate").isNull ||
-          col("l_shipdate") < lit("1992-01-01").cast("timestamp") ||
-          col("l_shipdate") >= lit("1999-01-01").cast("timestamp")).as("shipdate_range"),
+          col("l_shipdate") < lit("1992-01-01").cast("timestamp_ntz") ||
+          col("l_shipdate") >= lit("1999-01-01").cast("timestamp_ntz")).as("shipdate_range"),
         count(lit(1)).as("checked"))
       val unpivoted = scanRules.selectExpr(
         """stack(5,

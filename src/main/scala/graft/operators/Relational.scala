@@ -215,7 +215,7 @@ object Relational {
     (s, dir) => {
       val c = Tables.customer(s, dir)
       val o = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("2000-01-01 00:00:00").cast("timestamp"))
+        .filter(col("o_orderdate") >= lit("2000-01-01 00:00:00").cast("timestamp_ntz"))
       c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
     },
@@ -682,28 +682,18 @@ object Relational {
     * decorrelates the LIMIT via a partitioned rank filter, so the plan
     * is the same window + filter as [[topkPerGroup]] — one shuffle,
     * no per-row re-execution — while the query text stays the
-    * SQL-standard lateral join a reference user writes. DuckDB runs
-    * the identical text. */
-  val lateralJoin: GQuery = GQuery(
-    "op_lateral_join",
-    (s, dir) => {
-      // views on a child session: the caller's own catalog is left alone
-      val ss = graft.Sessions.childWith(s, Nil)
-      Tables.registerAll(ss, dir, Seq("nation", "customer"))
-      ss.sql("""
-        SELECT n.n_name, t.c_custkey, t.c_acctbal
-        FROM nation n,
-        LATERAL (SELECT c_custkey, c_acctbal FROM customer c
-                 WHERE c.c_nationkey = n.n_nationkey
-                 ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t""")
-    },
-    Some("""
+    * SQL-standard lateral join a reference user writes. Spark and
+    * DuckDB run the one text ([[Tables.sql]] binds the table names). */
+  val lateralJoin: GQuery = {
+    val text = """
       SELECT n.n_name, t.c_custkey, t.c_acctbal
       FROM nation n,
       LATERAL (SELECT c_custkey, c_acctbal FROM customer c
                WHERE c.c_nationkey = n.n_nationkey
-               ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t"""),
-    tags = Set("relational"))
+               ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t"""
+    GQuery("op_lateral_join", (s, dir) => Tables.sql(s, dir, text), Some(text),
+      tags = Set("relational"))
+  }
 
   /** Semi-structured extraction over the events `props` JSON column —
     * both production spellings: `from_json` with an explicit schema

@@ -689,8 +689,8 @@ object Sinks {
     (s, dir) => {
       import org.apache.spark.sql.functions._
       val root = skipRoot(s, dir)
-      val lo = lit("2024-01-10 00:00:00").cast("timestamp")
-      val hi = lit("2024-01-15 00:00:00").cast("timestamp")
+      val lo = lit("2024-01-10 00:00:00").cast("timestamp_ntz")
+      val hi = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
       val (keep, _) = skipSelect(s, root, lo, hi)
       s.read.parquet(keep: _*)
         .filter(col("ts") >= lo && col("ts") < hi)

@@ -53,10 +53,32 @@ object Tables {
       date_part(lit("SECOND"), ts), lit("UTC"))
   }
 
+  /** Run the SQL `text` in `spark` over the corpus at `dir`: every
+    * corpus table the text names is bound to its file by a `WITH <table>
+    * AS (SELECT * FROM parquet.`<path>`)` prelude, merged into the text's
+    * own `WITH` clause if it has one. The names resolve inside the
+    * statement, so the caller's temp views neither shadow them nor
+    * change, and the text runs under the caller's own confs. */
+  def sql(spark: SparkSession, dir: String, text: String): DataFrame =
+    spark.sql(bind(dir, text))
+
+  /** `text` with [[sql]]'s name-binding prelude. */
+  private[graft] def bind(dir: String, text: String): String = {
+    val bound = names.filter(n => s"\\b$n\\b".r.findFirstIn(text).nonEmpty)
+      .map(n => s"$n AS (SELECT * FROM parquet.`${path(dir, n)}`)")
+    val ownWith = """(?is)\s*WITH\s(.*)""".r
+    if (bound.isEmpty) text
+    else text match {
+      case ownWith(rest) => bound.mkString("WITH ", ",\n", s",\n$rest")
+      case _ => bound.mkString("WITH ", ",\n", s"\n$text")
+    }
+  }
+
   /** Register `tables` as temp views on `spark` (≙ the reference's
     * `tpch(sf)` UDTF registering all tables in the catalog). A builder
-    * that needs views registers them on a child session
-    * (`Sessions.childWith`), never on its caller's. */
+    * that runs a SQL text uses [[sql]]; one that needs views registers
+    * them on a child session (`Sessions.childWith`), never on its
+    * caller's. */
   def registerAll(spark: SparkSession, dir: String, tables: Seq[String]): Unit =
     registerViews(tables.map(n => n -> load(spark, dir, n)))
 

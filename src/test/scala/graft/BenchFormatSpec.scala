@@ -78,6 +78,22 @@ class BenchFormatSpec extends AnyFunSuite {
     q.foreach { case (k, v) => assert(v == fullQ(k), s"$k differs between lines") }
   }
 
+  test("qmore accounting holds and the line fits with more than 999 omitted keys") {
+    // synthetic keys: the qmore reserve is sized from the key count,
+    // so a four-digit omitted count must still fit the window
+    val many = (0 until 1500).map(i => f"k$i%04d" -> Seq(1.0 + i * 0.01))
+    val l = BenchFormat.lines(many.map { case (k, ts) => k -> Right(ts) }, "0.1", 3,
+      Seq(0.3, 0.3, 0.3), (0.1, 0.1), stealPct = 0.1)
+    assert(l.compact.length + BenchFormat.TrailerWorst + BenchFormat.LineBreaks <= BenchFormat.TailWindow,
+      s"compact line ${l.compact.length} chars cannot parse behind the sbt trailer")
+    val compact = parse(l.compact)
+    val q = (compact \ "queries").asInstanceOf[JObject].obj
+    assert(q.nonEmpty)
+    val omitted = many.size - q.size
+    assert(omitted > 999, s"only $omitted keys omitted")
+    assert((compact \ "qmore") == JInt(omitted))
+  }
+
   test("mergeAttempts admits times from rejected windows (min-over-all-attempts rule)") {
     val rejected = Bench.ChunkAttempt(accepted = false, 0.9, 0.8, 5.0,
       Map("k1" -> Seq(1.0, 1.4)), Map.empty)

@@ -87,6 +87,12 @@ class DocSyncSpec extends AnyFunSuite {
     assert(views.sorted == Seq("Tables.scala", "TpchGen.scala"), views)
   }
 
+  test("no timestamp cast in src/main reads a wall clock in the session time zone") {
+    // corpus times are TIMESTAMP_NTZ; literals compared with them are
+    // NTZ too, and instants go through Tables.wallClock
+    assert(filesMatching("""\.cast\("timestamp"\)""").isEmpty)
+  }
+
   test("streaming operators have one lateness literal and no batch copies") {
     val dir = java.nio.file.Paths.get("src/main/scala/graft/streaming")
     val files = java.nio.file.Files.list(dir).iterator()
