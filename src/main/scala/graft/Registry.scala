@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One engine capability: a named query (driver contract) + optional
@@ -13,6 +14,19 @@ final case class GQuery(
     build: (SparkSession, String) => DataFrame,
     oracle: Option[String],
     tags: Set[String] = Set.empty)
+
+object GQuery {
+  /** A key's build when the key is its oracle text: [[Tables.sql]] runs
+    * `text` in the caller's session over the corpus. */
+  final case class SqlText(text: String) extends ((SparkSession, String) => DataFrame) {
+    def apply(spark: SparkSession, dir: String): DataFrame = Tables.sql(spark, dir, text)
+  }
+
+  /** The one constructor of a key that is a SQL text: Spark runs the
+    * text ([[SqlText]]) and DuckDB replays it verbatim as the oracle. */
+  def sql(name: String, tag: String, text: String): GQuery =
+    GQuery(name, SqlText(text), Some(text), Set(tag))
+}
 
 object Registry {
   /** Full inventory, mirrors SURVEY.md §2. */

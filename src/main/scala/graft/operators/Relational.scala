@@ -11,10 +11,15 @@ import org.apache.spark.sql.functions._
   * (windows, grouping analytics, set ops, join variants, range/as-of
   * joins, sessionisation, sketches).
   *
-  * Numeric discipline: every floating aggregate is discretized to
-  * exact integer cents (see [[graft.tpch.TpchQueries]]) so Spark's
-  * partial+final aggregation and DuckDB's sequential aggregation
-  * produce bit-identical results.
+  * A key whose DataFrame builder would only re-spell its oracle is the
+  * oracle text itself ([[GQuery.sql]]): Spark runs it in the caller's
+  * session and DuckDB replays it verbatim. The numeric and typing
+  * rules of one spelling for both engines — exact integer cents for
+  * every floating aggregate, DOUBLE divisions, BIGINT ranks, DATE
+  * literals — are [[graft.tpch.TpchQueries]]'; the builders below
+  * follow them too. A key keeps its builder where the builder is an
+  * algorithm the oracle only specifies (salting, sketches, bounded
+  * heaps, prefix filters, two-level scans).
   *
   * Scale notes (100 TB posture) are per-op scaladoc; the common rules:
   * window functions partition on a real key (never a global window on
@@ -30,45 +35,18 @@ object Relational {
 
   /** rank / dense_rank over value, row_number with a total tie-break.
     * Partitioned window → scales (shuffle by event_type; no global sort). */
-  val windowRank: GQuery = GQuery(
-    "op_window_rank",
-    (s, dir) => {
-      val e = Tables.events(s, dir)
-      val byVal = Window.partitionBy(col("event_type")).orderBy(col("value").desc)
-      val total = Window.partitionBy(col("event_type")).orderBy(col("value").desc, col("event_id"))
-      e.select(col("event_type"), col("event_id"), col("value"),
-          rank().over(byVal).cast("long").as("rnk"),
-          dense_rank().over(byVal).cast("long").as("drnk"),
-          row_number().over(total).cast("long").as("rn"))
-        .filter(col("rn") <= 5)
-    },
-    Some("""
+  val windowRank: GQuery = GQuery.sql("op_window_rank", "relational", """
       SELECT * FROM (
         SELECT event_type, event_id, value,
-               rank()       OVER (PARTITION BY event_type ORDER BY value DESC) AS rnk,
-               dense_rank() OVER (PARTITION BY event_type ORDER BY value DESC) AS drnk,
-               row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rn
+               CAST(rank()       OVER (PARTITION BY event_type ORDER BY value DESC) AS BIGINT) AS rnk,
+               CAST(dense_rank() OVER (PARTITION BY event_type ORDER BY value DESC) AS BIGINT) AS drnk,
+               CAST(row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS BIGINT) AS rn
         FROM events)
-      WHERE rn <= 5"""),
-    tags = Set("relational"))
+      WHERE rn <= 5""")
 
   /** Running sum + moving average + lag/lead frames, partitioned by
     * user. Exact integer cents keep the running sums engine-stable. */
-  val windowRunning: GQuery = GQuery(
-    "op_window_running",
-    (s, dir) => {
-      val e = Tables.events(s, dir).filter(col("user_id") < 10)
-        .withColumn("v_cents", cents(col("value")))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val mov = w.rowsBetween(-3, 0)
-      e.select(col("user_id"), col("event_id"), col("ts"), col("v_cents"),
-          sum(col("v_cents")).over(run).as("running_cents"),
-          round(avg(col("v_cents")).over(mov), 4).as("moving_avg_cents"),
-          lag(col("v_cents"), 1).over(w).as("prev_cents"),
-          lead(col("v_cents"), 1).over(w).as("next_cents"))
-    },
-    Some("""
+  val windowRunning: GQuery = GQuery.sql("op_window_running", "relational", """
       SELECT user_id, event_id, ts,
              CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_cents,
              CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
@@ -81,74 +59,36 @@ object Relational {
                OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_cents,
              lead(CAST(floor(value * 100 + 0.5) AS BIGINT), 1)
                OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_cents
-      FROM events WHERE user_id < 10"""),
-    tags = Set("relational"))
+      FROM events WHERE user_id < 10""")
 
   /** Top-k per group: the window+filter plan (rank pushes the k-limit
     * into each partition; no global sort of the fact table). */
-  val topkPerGroup: GQuery = GQuery(
-    "op_topk_per_group",
-    (s, dir) => {
-      val e = Tables.events(s, dir).withColumn("v_cents", cents(col("value")))
-      val w = Window.partitionBy(col("event_type")).orderBy(col("v_cents").desc, col("event_id"))
-      e.select(col("event_type"), col("event_id"), col("v_cents"),
-          row_number().over(w).cast("long").as("rn"))
-        .filter(col("rn") <= 3)
-    },
-    Some("""
+  val topkPerGroup: GQuery = GQuery.sql("op_topk_per_group", "relational", """
       SELECT * FROM (
         SELECT event_type, event_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_cents,
-               row_number() OVER (PARTITION BY event_type
-                                  ORDER BY CAST(floor(value * 100 + 0.5) AS BIGINT) DESC, event_id) AS rn
+               CAST(row_number() OVER (PARTITION BY event_type
+                                       ORDER BY CAST(floor(value * 100 + 0.5) AS BIGINT) DESC, event_id) AS BIGINT) AS rn
         FROM events)
-      WHERE rn <= 3"""),
-    tags = Set("relational"))
+      WHERE rn <= 3""")
 
   // ------------------------------------------ grouping analytics
 
-  private def rollupOracle(kind: String): String = s"""
+  private def grouped(name: String, groupBy: String): GQuery = GQuery.sql(name, "relational", s"""
       SELECT l_returnflag, l_linestatus, count(*) AS cnt,
-             sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) / 100.0 AS sum_price
+             sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS sum_price
       FROM lineitem
-      GROUP BY $kind (l_returnflag, l_linestatus)"""
+      GROUP BY $groupBy""")
 
   /** GROUP BY ROLLUP — partial+final agg over the expanded grouping-id,
     * single shuffle. */
-  val rollup: GQuery = GQuery(
-    "op_rollup",
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"),
-          (sum(cents(col("l_extendedprice"))) / lit(100.0)).as("sum_price")),
-    Some(rollupOracle("ROLLUP")),
-    tags = Set("relational"))
+  val rollup: GQuery = grouped("op_rollup", "ROLLUP (l_returnflag, l_linestatus)")
 
   /** GROUP BY CUBE. */
-  val cube: GQuery = GQuery(
-    "op_cube",
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"),
-          (sum(cents(col("l_extendedprice"))) / lit(100.0)).as("sum_price")),
-    Some(rollupOracle("CUBE")),
-    tags = Set("relational"))
+  val cube: GQuery = grouped("op_cube", "CUBE (l_returnflag, l_linestatus)")
 
   /** Explicit GROUPING SETS ((flag), (status), ()). */
-  val groupingSets: GQuery = GQuery(
-    "op_grouping_sets",
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupingSets(
-          Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq()),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"),
-          (sum(cents(col("l_extendedprice"))) / lit(100.0)).as("sum_price")),
-    Some(rollupOracle("GROUPING SETS")
-      .replace("GROUPING SETS (l_returnflag, l_linestatus)",
-        "GROUPING SETS ((l_returnflag), (l_linestatus), ())")),
-    tags = Set("relational"))
+  val groupingSets: GQuery =
+    grouped("op_grouping_sets", "GROUPING SETS ((l_returnflag), (l_linestatus), ())")
 
   /** Pivot long→wide (oracle via CASE): per returnflag, a count column
     * per linestatus. Explicit value list → no extra distinct-values job. */
@@ -195,93 +135,43 @@ object Relational {
   // ------------------------------------------------------- join variants
 
   /** Left-semi: customers with ≥1 urgent order. */
-  val semiJoin: GQuery = GQuery(
-    "op_semi_join",
-    (s, dir) => {
-      val c = Tables.customer(s, dir)
-      val o = Tables.orders(s, dir).filter(col("o_orderpriority") === "1-URGENT")
-      c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-    },
-    Some("""
+  val semiJoin: GQuery = GQuery.sql("op_semi_join", "relational", """
       SELECT c_custkey, c_name FROM customer
       WHERE EXISTS (SELECT 1 FROM orders
-                    WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')"""),
-    tags = Set("relational"))
+                    WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')""")
 
   /** Left-anti: customers with no order on/after 2000-01-01. */
-  val antiJoin: GQuery = GQuery(
-    "op_anti_join",
-    (s, dir) => {
-      val c = Tables.customer(s, dir)
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("2000-01-01 00:00:00").cast("timestamp_ntz"))
-      c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-    },
-    Some("""
+  val antiJoin: GQuery = GQuery.sql("op_anti_join", "relational", """
       SELECT c_custkey, c_name FROM customer
       WHERE NOT EXISTS (SELECT 1 FROM orders
                         WHERE o_custkey = c_custkey
-                          AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')"""),
-    tags = Set("relational"))
+                          AND o_orderdate >= DATE '2000-01-01')""")
 
   /** Full outer with null-key handling: per-nation customer counts vs
     * rich-supplier counts (filter induces nations missing on one side). */
-  val fullOuterJoin: GQuery = GQuery(
-    "op_full_outer_join",
-    (s, dir) => {
-      val c = Tables.customer(s, dir).groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("c_cnt"))
-      val su = Tables.supplier(s, dir).filter(col("s_acctbal") > 5000)
-        .groupBy(col("s_nationkey")).agg(count(lit(1)).as("s_cnt"))
-      c.join(su, col("c_nationkey") === col("s_nationkey"), "full_outer")
-        .select(coalesce(col("c_nationkey"), col("s_nationkey")).as("nationkey"),
-          col("c_cnt"), col("s_cnt"))
-    },
-    Some("""
+  val fullOuterJoin: GQuery = GQuery.sql("op_full_outer_join", "relational", """
       SELECT coalesce(c_nationkey, s_nationkey) AS nationkey, c_cnt, s_cnt
       FROM (SELECT c_nationkey, count(*) AS c_cnt FROM customer GROUP BY 1) c
       FULL OUTER JOIN
            (SELECT s_nationkey, count(*) AS s_cnt FROM supplier
             WHERE s_acctbal > 5000 GROUP BY 1) s
-        ON c_nationkey = s_nationkey"""),
-    tags = Set("relational"))
+        ON c_nationkey = s_nationkey""")
 
   /** UNION / EXCEPT / INTERSECT (distinct semantics), tagged into one
     * result. A = building-segment customers, B = customers with an
     * urgent order. */
-  val unionExceptIntersect: GQuery = GQuery(
-    "op_union_except_intersect",
-    (s, dir) => {
-      val a = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey"))
-      val b = Tables.orders(s, dir).filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey").as("c_custkey"))
-      a.union(b).distinct().withColumn("tag", lit("union"))
-        .unionByName(a.except(b).withColumn("tag", lit("except")))
-        .unionByName(a.intersect(b).withColumn("tag", lit("intersect")))
-        .select(col("tag"), col("c_custkey"))
-    },
-    Some("""
+  val unionExceptIntersect: GQuery = GQuery.sql("op_union_except_intersect", "relational", """
       WITH a AS (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
            b AS (SELECT o_custkey AS c_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
       SELECT 'union' AS tag, c_custkey FROM (SELECT c_custkey FROM a UNION SELECT c_custkey FROM b)
       UNION ALL
       SELECT 'except', c_custkey FROM (SELECT c_custkey FROM a EXCEPT SELECT c_custkey FROM b)
       UNION ALL
-      SELECT 'intersect', c_custkey FROM (SELECT c_custkey FROM a INTERSECT SELECT c_custkey FROM b)"""),
-    tags = Set("relational"))
+      SELECT 'intersect', c_custkey FROM (SELECT c_custkey FROM a INTERSECT SELECT c_custkey FROM b)""")
 
-  /** DISTINCT / dropDuplicates. */
-  val distinctOp: GQuery = GQuery(
-    "op_distinct",
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .select(col("l_returnflag"), col("l_linestatus"))
-        .dropDuplicates("l_returnflag", "l_linestatus"),
-    Some("SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem"),
-    tags = Set("relational"))
+  /** DISTINCT. */
+  val distinctOp: GQuery =
+    GQuery.sql("op_distinct", "relational", "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem")
 
   // ------------------------------------------------- nested / aggregates
 
@@ -367,23 +257,12 @@ object Relational {
     tags = Set("relational"))
 
   /** Filtered aggregates — FILTER (WHERE …) clauses. */
-  val conditionalAgg: GQuery = GQuery(
-    "op_conditional_agg",
-    (s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("v_cents", cents(col("value")))
-        .groupBy(col("event_type"))
-        .agg(
-          expr("count(*) FILTER (WHERE value > 100)").as("cnt_big"),
-          expr("sum(v_cents) FILTER (WHERE user_id % 2 = 0)").as("sum_even_users"),
-          expr("count(DISTINCT user_id) FILTER (WHERE value <= 100)").as("users_small")),
-    Some("""
+  val conditionalAgg: GQuery = GQuery.sql("op_conditional_agg", "relational", """
       SELECT event_type,
              count(*) FILTER (WHERE value > 100) AS cnt_big,
              CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) FILTER (WHERE user_id % 2 = 0) AS BIGINT) AS sum_even_users,
              count(DISTINCT user_id) FILTER (WHERE value <= 100) AS users_small
-      FROM events GROUP BY event_type"""),
-    tags = Set("relational"))
+      FROM events GROUP BY event_type""")
 
   // ------------------------------------------------- interval / temporal
 
@@ -463,22 +342,7 @@ object Relational {
   /** Gaps-and-islands sessionisation: a session breaks after 30 idle
     * minutes. lag → boundary flag → running sum (session id) → per-
     * session aggregate; one shuffle by user, two window passes. */
-  val sessionize: GQuery = GQuery(
-    "op_sessionize",
-    (s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, dir)
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            col("ts") > col("prev_ts") + expr("INTERVAL 30 MINUTES"), 1L).otherwise(0L))
-        .withColumn("session_id", sum(col("new_session")).over(run))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-    },
-    Some("""
+  val sessionize: GQuery = GQuery.sql("op_sessionize", "relational", """
       WITH flagged AS (
         SELECT user_id, ts, event_id,
                CASE WHEN lag(ts) OVER w IS NULL
@@ -493,8 +357,7 @@ object Relational {
         FROM flagged)
       SELECT user_id, session_id, min(ts) AS session_start, max(ts) AS session_end,
              count(*) AS n_events
-      FROM ids GROUP BY user_id, session_id"""),
-    tags = Set("relational"))
+      FROM ids GROUP BY user_id, session_id""")
 
   /** HLL sketch: approx_count_distinct per group. The production
     * shape is the sketch ALONE — mergeable partial+final, fixed-size
@@ -633,24 +496,13 @@ object Relational {
     * standard-semantics implementations. One shuffle on event_type;
     * the partition count is bounded by the type cardinality — the skew
     * caveat is documented on [[saltedAgg]], not re-solved here. */
-  val ntileOp: GQuery = GQuery(
-    "op_ntile",
-    (s, dir) => {
-      val w = Window.partitionBy(col("event_type")).orderBy(col("value"), col("event_id"))
-      Tables.events(s, dir).select(
-        col("event_id"), col("event_type"),
-        ntile(4).over(w).cast("long").as("quartile"),
-        round(percent_rank().over(w), 6).as("pct_rank"),
-        round(cume_dist().over(w), 6).as("cume"))
-    },
-    Some("""
+  val ntileOp: GQuery = GQuery.sql("op_ntile", "relational", """
       SELECT event_id, event_type,
              CAST(ntile(4) OVER w AS BIGINT) AS quartile,
              round(percent_rank() OVER w, 6) AS pct_rank,
              round(cume_dist() OVER w, 6) AS cume
       FROM events
-      WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)"""),
-    tags = Set("relational"))
+      WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)""")
 
   /** [[Skew.saltedJoin]] as a keyed operator: the events fact joined
     * to its 5-row event_type dim with the big side salted 16 ways and
@@ -684,16 +536,12 @@ object Relational {
     * no per-row re-execution — while the query text stays the
     * SQL-standard lateral join a reference user writes. Spark and
     * DuckDB run the one text ([[Tables.sql]] binds the table names). */
-  val lateralJoin: GQuery = {
-    val text = """
+  val lateralJoin: GQuery = GQuery.sql("op_lateral_join", "relational", """
       SELECT n.n_name, t.c_custkey, t.c_acctbal
       FROM nation n,
       LATERAL (SELECT c_custkey, c_acctbal FROM customer c
                WHERE c.c_nationkey = n.n_nationkey
-               ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t"""
-    GQuery("op_lateral_join", (s, dir) => Tables.sql(s, dir, text), Some(text),
-      tags = Set("relational"))
-  }
+               ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t""")
 
   /** Semi-structured extraction over the events `props` JSON column —
     * both production spellings: `from_json` with an explicit schema
@@ -733,21 +581,7 @@ object Relational {
     * warehouse pattern for reconstructing a temporal dimension from a
     * log. Two window passes over one shuffle on user_id; ties broken
     * by event_id so both engines agree. */
-  val scd2Intervals: GQuery = GQuery(
-    "op_scd2_intervals",
-    (s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val changes = Tables.events(s, dir)
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
-      val w2 = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      changes
-        .withColumn("valid_to", lead(col("ts"), 1).over(w2))
-        .select(col("user_id"), col("event_type"),
-          col("ts").as("valid_from"), col("valid_to"),
-          col("valid_to").isNull.as("is_current"))
-    },
-    Some("""
+  val scd2Intervals: GQuery = GQuery.sql("op_scd2_intervals", "relational", """
       WITH changes AS (
         SELECT user_id, event_type, ts, event_id
         FROM (SELECT user_id, event_type, ts, event_id,
@@ -757,8 +591,7 @@ object Relational {
       SELECT user_id, event_type, ts AS valid_from,
              lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
              lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL AS is_current
-      FROM changes"""),
-    tags = Set("relational"))
+      FROM changes""")
 
   /** Bits per Z-order dimension (8 → 256 buckets per dim, 16-bit key). */
   private[graft] val Z_BITS = 8
@@ -860,25 +693,7 @@ object Relational {
     * stage's 1-row-per-user frame — three linear passes, no window
     * over the raw log and no per-user event sort. `stage` counts how
     * deep the user got (1 = viewed only … 3 = full conversion). */
-  val funnel: GQuery = GQuery(
-    "op_funnel",
-    (s, dir) => {
-      val e = Tables.events(s, dir)
-      val v = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t_view"))
-      val c = e.filter(col("event_type") === "click").select(col("user_id"), col("ts"))
-        .join(v, "user_id").filter(col("ts") > col("t_view"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t_click"))
-      val p = e.filter(col("event_type") === "purchase").select(col("user_id"), col("ts"))
-        .join(c, "user_id").filter(col("ts") > col("t_click"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t_purchase"))
-      v.join(c, Seq("user_id"), "left")
-        .join(p, Seq("user_id"), "left")
-        .select(col("user_id"), col("t_view"), col("t_click"), col("t_purchase"),
-          (lit(1) + when(col("t_click").isNotNull, 1).otherwise(0)
-            + when(col("t_purchase").isNotNull, 1).otherwise(0)).cast("long").as("stage"))
-    },
-    Some("""
+  val funnel: GQuery = GQuery.sql("op_funnel", "relational", """
       WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
                  WHERE event_type = 'view' GROUP BY 1),
       c AS (SELECT e.user_id, min(e.ts) AS t_click
@@ -889,8 +704,7 @@ object Relational {
             WHERE e.event_type = 'purchase' AND e.ts > c.t_click GROUP BY 1)
       SELECT user_id, t_view, t_click, t_purchase,
              CAST(1 + (t_click IS NOT NULL)::INT + (t_purchase IS NOT NULL)::INT AS BIGINT) AS stage
-      FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)"""),
-    tags = Set("relational"))
+      FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)""")
 
   /** Cohort retention: users are cohorted by first active day, then
     * every (cohort_day, day_offset) cell counts the cohort's users
@@ -901,24 +715,12 @@ object Relational {
     * per user, and the join attaches a 1-row frame on the unique
     * user_id, so nothing here fans out. The output is cohorts × spans
     * — tiny at any corpus size. */
-  val retentionCohort: GQuery = GQuery(
-    "op_retention_cohort",
-    (s, dir) => {
-      val act = Tables.events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      val cohort = act.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
-      act.join(cohort, "user_id")
-        .groupBy(col("cohort_day"),
-          datediff(col("day"), col("cohort_day")).cast("long").as("day_offset"))
-        .agg(count(lit(1)).as("n_users"))
-    },
-    Some("""
+  val retentionCohort: GQuery = GQuery.sql("op_retention_cohort", "relational", """
       WITH act AS (SELECT DISTINCT user_id, ts::DATE AS day FROM events),
       cohort AS (SELECT user_id, min(day) AS cohort_day FROM act GROUP BY 1)
       SELECT cohort_day, CAST(day - cohort_day AS BIGINT) AS day_offset,
              count(*) AS n_users
-      FROM act JOIN cohort USING (user_id) GROUP BY 1, 2"""),
-    tags = Set("relational"))
+      FROM act JOIN cohort USING (user_id) GROUP BY 1, 2""")
 
   /** Equi-width histogram of order totals in pure integer bucket math:
     * bucket = min(cents DIV width, n_buckets-1) — one map-side-combined
@@ -997,24 +799,7 @@ object Relational {
     * running sum of those break flags labels the islands. Two window
     * passes over one shuffle on user_id; (s, event_id) ordering makes
     * tied starts deterministic in both engines. */
-  val mergeIntervals: GQuery = GQuery(
-    "op_merge_intervals",
-    (s, dir) => {
-      val iv = Tables.events(s, dir)
-        .select(col("user_id"), col("ts").as("s"),
-          (col("ts") + expr("INTERVAL 30 MINUTES")).as("e"), col("event_id"))
-      val byStart = Window.partitionBy(col("user_id")).orderBy(col("s"), col("event_id"))
-      val wPrev = byStart.rowsBetween(Window.unboundedPreceding, -1)
-      val wRun = byStart.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      iv.withColumn("prev_max_e", max(col("e")).over(wPrev))
-        .withColumn("brk",
-          when(col("prev_max_e").isNull || col("s") > col("prev_max_e"), 1).otherwise(0))
-        .withColumn("grp", sum(col("brk")).over(wRun).cast("long"))
-        .groupBy(col("user_id"), col("grp"))
-        .agg(min(col("s")).as("iv_start"), max(col("e")).as("iv_end"),
-          count(lit(1)).as("n_events"))
-    },
-    Some("""
+  val mergeIntervals: GQuery = GQuery.sql("op_merge_intervals", "relational", """
       WITH iv AS (SELECT user_id, ts AS s, ts + INTERVAL 30 MINUTE AS e, event_id
                   FROM events),
       m AS (SELECT user_id, s, e, event_id,
@@ -1030,8 +815,7 @@ object Relational {
             FROM b)
       SELECT user_id, CAST(grp AS BIGINT) AS grp, min(s) AS iv_start,
              max(e) AS iv_end, count(*) AS n_events
-      FROM g GROUP BY 1, 2"""),
-    tags = Set("relational"))
+      FROM g GROUP BY 1, 2""")
 
   /** CDC materialization: collapse a change stream to current state —
     * per key (user), the LAST change wins (ts, then event_id), and a
@@ -1041,24 +825,13 @@ object Relational {
     * key → single shuffle, no global sort; at 100 TB the same plan
     * runs per key-range and is exactly how MERGE INTO engines
     * sequence late changes. */
-  val cdcApply: GQuery = GQuery(
-    "op_cdc_apply",
-    (s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
-      Tables.events(s, dir)
-        .withColumn("v_cents", cents(col("value")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1 && col("event_type") =!= "error")
-        .select(col("user_id"), col("event_type").as("last_type"), col("v_cents"))
-    },
-    Some("""
+  val cdcApply: GQuery = GQuery.sql("op_cdc_apply", "relational", """
       WITH last AS (
         SELECT user_id, event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_cents,
                row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
         FROM events)
       SELECT user_id, event_type AS last_type, v_cents
-      FROM last WHERE rn = 1 AND event_type <> 'error'"""),
-    tags = Set("relational"))
+      FROM last WHERE rn = 1 AND event_type <> 'error'""")
 
   /** 2-D Pareto frontier (skyline): orders not strictly dominated in
     * (recency, price) — on the frontier iff no strictly-later order
@@ -1112,25 +885,13 @@ object Relational {
     * prefix per day). Two keyed aggregates + an O(n) running frame
     * over the distinct-day frame (the only single-partition stage,
     * bounded by the calendar). */
-  val cumulativeReach: GQuery = GQuery(
-    "op_cumulative_reach",
-    (s, dir) => {
-      val first = Tables.events(s, dir)
-        .groupBy(col("user_id")).agg(min(to_date(col("ts"))).as("d"))
-      val daily = first.groupBy(col("d")).agg(count(lit(1)).as("new_users"))
-      val run = Window.orderBy(col("d"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      daily.withColumn("cumulative_users", sum(col("new_users")).over(run).cast("long"))
-        .select(col("d").as("day"), col("new_users"), col("cumulative_users"))
-    },
-    Some("""
+  val cumulativeReach: GQuery = GQuery.sql("op_cumulative_reach", "relational", """
       WITH first AS (SELECT user_id, min(ts::DATE) AS d FROM events GROUP BY 1),
       daily AS (SELECT d, count(*) AS new_users FROM first GROUP BY 1)
       SELECT d AS day, new_users,
              CAST(sum(new_users) OVER (ORDER BY d
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cumulative_users
-      FROM daily"""),
-    tags = Set("relational"))
+      FROM daily""")
 
   /** Trailing-window anomaly detection in pure integer arithmetic: an
     * event is flagged when its value exceeds 4× the trailing-20 mean,
@@ -1139,21 +900,7 @@ object Relational {
     * events. One window pass per user (sum + count share the frame),
     * emitting only the anomalies — the output is the incident list,
     * not the annotated stream. */
-  val anomalyTrailing: GQuery = GQuery(
-    "op_anomaly_trailing",
-    (s, dir) => {
-      val byTime = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id")).rowsBetween(-20, -1)
-      Tables.events(s, dir)
-        .withColumn("v_cents", cents(col("value")))
-        .withColumn("trail_sum_cents", sum(col("v_cents")).over(byTime))
-        .withColumn("trail_n", count(lit(1)).over(byTime))
-        .filter(col("trail_n") >= 8 &&
-          col("v_cents") * col("trail_n") > col("trail_sum_cents") * 4)
-        .select(col("user_id"), col("event_id"), col("ts"), col("v_cents"),
-          col("trail_sum_cents"), col("trail_n"))
-    },
-    Some("""
+  val anomalyTrailing: GQuery = GQuery.sql("op_anomaly_trailing", "relational", """
       WITH t AS (SELECT user_id, event_id, ts,
                         CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_cents
                  FROM events),
@@ -1166,8 +913,7 @@ object Relational {
       SELECT user_id, event_id, ts, v_cents,
              CAST(trail_sum AS BIGINT) AS trail_sum_cents,
              CAST(trail_n AS BIGINT) AS trail_n
-      FROM w WHERE trail_n >= 8 AND v_cents * trail_n > 4 * trail_sum"""),
-    tags = Set("relational"))
+      FROM w WHERE trail_n >= 8 AND v_cents * trail_n > 4 * trail_sum""")
 
   /** Column profiler (the `DESCRIBE`/Deequ-profile scan an ingest
     * runs before anything else): per column — null count, distinct
@@ -1235,26 +981,7 @@ object Relational {
     * deterministic earliest-start tie-break. Every stage is keyed on
     * user_id; the distinct bounds the window input at days, not
     * events. */
-  val streaks: GQuery = GQuery(
-    "op_streaks",
-    (s, dir) => {
-      val days = Tables.events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-        .withColumn("dn", datediff(col("d"), lit("1970-01-01").cast("date")).cast("long"))
-      val byUser = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      val islands = days
-        .withColumn("grp", col("dn") - row_number().over(byUser))
-        .groupBy(col("user_id"), col("grp"))
-        .agg(count(lit(1)).as("len"), min(col("d")).as("start"))
-      val best = Window.partitionBy(col("user_id"))
-        .orderBy(col("len").desc, col("start"))
-      islands
-        .withColumn("rn", row_number().over(best))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("len").as("streak_days"),
-          col("start").as("streak_start"))
-    },
-    Some("""
+  val streaks: GQuery = GQuery.sql("op_streaks", "relational", """
       WITH days AS (
         SELECT DISTINCT user_id, ts::DATE AS d FROM events),
       isl AS (
@@ -1272,8 +999,7 @@ object Relational {
                                   ORDER BY len DESC, start) AS rn
         FROM runs)
       SELECT user_id, len AS streak_days, start AS streak_start
-      FROM best WHERE rn = 1"""),
-    tags = Set("relational"))
+      FROM best WHERE rn = 1""")
 
   /** Exact-cents proration by the largest-remainder method: allocate
     * each order's total across its lineitems proportionally to line

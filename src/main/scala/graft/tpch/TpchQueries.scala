@@ -1,7 +1,6 @@
 package graft.tpch
 
 import graft.GQuery
-import graft.sources.Tables
 
 /** The TPC-H query surface, adapted to the driver's reduced schema.
   *
@@ -10,9 +9,10 @@ import graft.sources.Tables
   * them via DataFusion; the equivalent Spark-native surface is this module:
   * each of the 22 queries is ONE SQL text, run by `spark.sql` in the
   * caller's session and replayed verbatim by DuckDB as the oracle. The
-  * corpus tables are bound to the text's table names by [[Tables.sql]]'s
-  * `WITH` prelude, so the caller's confs (time zone, AQE, join
-  * thresholds) apply and its catalog is neither read nor changed.
+  * corpus tables are bound to the text's table names by
+  * [[graft.sources.Tables.sql]]'s `WITH` prelude, so the caller's confs
+  * (time zone, AQE, join thresholds) apply and its catalog is neither
+  * read nor changed.
   *
   * Schema adaptations (driver testdata vs TPC-H spec):
   *  - no `partsupp` table → part↔supplier relationships derived from
@@ -26,7 +26,10 @@ import graft.sources.Tables
   *    windows shifted into that range (q3 uses 1998-03-15, not the spec's
   *    1995-03-15, to sit mid-domain; noted per query).
   *
-  * One spelling for both engines:
+  * One spelling for both engines. These are the only rules by which a
+  * text key ([[GQuery.sql]]: these 22 and the operator keys that are
+  * their oracle) is respelled, and each leaves DuckDB's answer
+  * unchanged:
   *  - money sums are discretized to exact BIGINT cents,
   *    `sum(CAST(floor(x * 100 + 0.5) AS BIGINT))`, using only IEEE-754
   *    double ops that are bit-identical across engines. A plain double
@@ -38,6 +41,9 @@ import graft.sources.Tables
   *  - a cents sum is divided by `CAST(100.0 AS DOUBLE)`: Spark types the
   *    bare literal `100.0` as DECIMAL where DuckDB's division returns
   *    DOUBLE, and the driver's hash compare tells the two apart.
+  *  - an output ranking function is `CAST(rank() … AS BIGINT)` (also
+  *    `dense_rank`, `row_number`, `ntile`): Spark types it INT, DuckDB
+  *    BIGINT.
   *  - date windows are `DATE` literals. The date columns are
   *    TIMESTAMP_NTZ, compared with a date at midnight in both engines;
   *    a `TIMESTAMP` literal would be read in the session time zone.
@@ -53,13 +59,10 @@ import graft.sources.Tables
   */
 object TpchQueries {
 
-  private def key(name: String, text: String): GQuery =
-    GQuery(name, (s, dir) => Tables.sql(s, dir, text), Some(text), tags = Set("tpch"))
-
   // ---------------------------------------------------------------- Q1
   /** Q1 pricing summary: scan→filter→8-way aggregate. Full TPC-H shape
     * (all needed columns exist). */
-  val q1: GQuery = key("q1_pricing_summary", """
+  val q1: GQuery = GQuery.sql("q1_pricing_summary", "tpch", """
       SELECT l_returnflag, l_linestatus,
              sum(CAST(floor((l_quantity) * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS sum_qty,
              sum(CAST(floor((l_extendedprice) * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS sum_base_price,
@@ -80,7 +83,7 @@ object TpchQueries {
     * observed l_extendedprice/l_quantity. For STANDARD parts of size ≤ 5
     * supplied from EUROPE, pick each part's cheapest supplier (a
     * per-part min window over the joined supply rows). */
-  val q2: GQuery = key("q2_min_cost_supplier", """
+  val q2: GQuery = GQuery.sql("q2_min_cost_supplier", "tpch", """
       WITH supply AS (
         SELECT l_partkey, l_suppkey, min(l_extendedprice / l_quantity) AS unit_cost
         FROM lineitem GROUP BY 1, 2
@@ -103,7 +106,7 @@ object TpchQueries {
     * 1998-03-15 (mid date-domain) instead of the spec's 1995-03-15.
     * Customer is fact-scale at the 100 TB posture, so the text carries
     * no broadcast hint; AQE picks broadcast at small sf. */
-  val q3: GQuery = key("q3_shipping_priority", """
+  val q3: GQuery = GQuery.sql("q3_shipping_priority", "tpch", """
       SELECT l_orderkey,
              sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS revenue,
              CAST(o_orderdate AS DATE) AS o_orderdate
@@ -120,7 +123,7 @@ object TpchQueries {
   /** Q4 order priority check, adapted: no l_commitdate/l_receiptdate, so
     * "late" means a lineitem shipped > 60 days after the order date.
     * Catalyst plans the EXISTS as a left-semi join on orderkey. */
-  val q4: GQuery = key("q4_order_priority", """
+  val q4: GQuery = GQuery.sql("q4_order_priority", "tpch", """
       SELECT o_orderpriority, count(*) AS order_count
       FROM orders
       WHERE o_orderdate >= DATE '1996-01-01'
@@ -135,7 +138,7 @@ object TpchQueries {
   /** Q5 local supplier volume: 6-way join, revenue per nation for ASIA,
     * order year 1996.
     * The c_nationkey = s_nationkey "local" constraint is the spec's. */
-  val q5: GQuery = key("q5_local_supplier", """
+  val q5: GQuery = GQuery.sql("q5_local_supplier", "tpch", """
       SELECT n_name, sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS revenue
       FROM lineitem, orders, customer, supplier, nation, region
       WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
@@ -150,7 +153,7 @@ object TpchQueries {
   // ---------------------------------------------------------------- Q6
   /** Q6 forecast revenue: pure scan+filter+agg; the whole predicate
     * reaches the parquet reader (PushedFilters asserted in spec). */
-  val q6: GQuery = key("q6_forecast_revenue", """
+  val q6: GQuery = GQuery.sql("q6_forecast_revenue", "tpch", """
       SELECT sum(CAST(floor(l_extendedprice * l_discount * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS revenue
       FROM lineitem
       WHERE l_shipdate >= DATE '1996-01-01'
@@ -161,7 +164,7 @@ object TpchQueries {
   // ---------------------------------------------------------------- Q7
   /** Q7 volume shipping between NATION_1 and NATION_2 (either direction):
     * disjunctive nation-pair predicate, ship-year extract, 1996-1997. */
-  val q7: GQuery = key("q7_volume_shipping", """
+  val q7: GQuery = GQuery.sql("q7_volume_shipping", "tpch", """
       SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              year(l_shipdate) AS l_year,
              sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS revenue
@@ -179,7 +182,7 @@ object TpchQueries {
   // ---------------------------------------------------------------- Q8
   /** Q8 market share of NATION_3 suppliers in ASIA for ECONOMY parts,
     * order years 1995-1996: conditional agg sum(case)/sum over 7-way join. */
-  val q8: GQuery = key("q8_market_share", """
+  val q8: GQuery = GQuery.sql("q8_market_share", "tpch", """
       SELECT year(o_orderdate) AS o_year,
              round(CAST(sum(CASE WHEN n2.n_name = 'NATION_3'
                             THEN CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)
@@ -201,7 +204,7 @@ object TpchQueries {
     * 10% of p_retailprice; parts matched on '%red%' ('green' absent from
     * this testdata's p_name domain). Profit per supplier-nation per
     * order-year. */
-  val q9: GQuery = key("q9_profit", """
+  val q9: GQuery = GQuery.sql("q9_profit", "tpch", """
       SELECT n_name AS nation, year(o_orderdate) AS o_year,
              sum(CAST(floor((l_extendedprice * (1 - l_discount) - p_retailprice * 0.1 * l_quantity) * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS sum_profit
       FROM lineitem, part, supplier, orders, nation
@@ -215,7 +218,7 @@ object TpchQueries {
   /** Q10 returned items: customers who returned goods ('R') for orders in
     * 1996Q1, revenue per customer, top 20. No c_address/phone/comment →
     * output keeps the columns the schema has. */
-  val q10: GQuery = key("q10_returned_items", """
+  val q10: GQuery = GQuery.sql("q10_returned_items", "tpch", """
       SELECT c_custkey, c_name, c_acctbal, n_name,
              sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS revenue
       FROM lineitem, orders, customer, nation
@@ -234,7 +237,7 @@ object TpchQueries {
     * one-row aggregate joined to the per-part values, not the spec's
     * HAVING scalar subquery, which Spark ran 25 % slower at sf0.1
     * (dev/BENCH_NOTES.md). */
-  val q11: GQuery = key("q11_important_stock", """
+  val q11: GQuery = GQuery.sql("q11_important_stock", "tpch", """
       WITH stock AS (
         SELECT l_partkey,
                CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT) AS cents
@@ -251,7 +254,7 @@ object TpchQueries {
   /** Q12 shipping class, adapted: no l_shipmode → quantity classes
     * (SMALL/MEDIUM/LARGE); counts of high- vs low-priority orders per
     * class for lineitems shipped in 1997. CASE-bucket conditional agg. */
-  val q12: GQuery = key("q12_priority_class", """
+  val q12: GQuery = GQuery.sql("q12_priority_class", "tpch", """
       SELECT CASE WHEN l_quantity < 10 THEN 'SMALL'
                   WHEN l_quantity < 30 THEN 'MEDIUM'
                   ELSE 'LARGE' END AS qty_class,
@@ -269,7 +272,7 @@ object TpchQueries {
     * filtered to non-urgent — stands in for the spec's comment filter),
     * count per customer, then distribution of counts. Two shuffles by
     * construction (custkey, then count). */
-  val q13: GQuery = key("q13_customer_distribution", """
+  val q13: GQuery = GQuery.sql("q13_customer_distribution", "tpch", """
       SELECT c_count, count(*) AS custdist
       FROM (SELECT c_custkey, count(o_orderkey) AS c_count
             FROM customer LEFT OUTER JOIN orders
@@ -281,7 +284,7 @@ object TpchQueries {
   // ---------------------------------------------------------------- Q14
   /** Q14 promo revenue share for 1997-09: conditional revenue share over
     * the part join (p_type = 'PROMO' — single-word type domain here). */
-  val q14: GQuery = key("q14_promo_revenue", """
+  val q14: GQuery = GQuery.sql("q14_promo_revenue", "tpch", """
       SELECT round(100.0 * CAST(sum(CASE WHEN p_type = 'PROMO'
                                     THEN CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)
                                     ELSE 0 END) AS DOUBLE)
@@ -297,7 +300,7 @@ object TpchQueries {
     * the spec's scalar subquery, which Spark ran slower at sf0.1 (as in
     * q11; dev/BENCH_NOTES.md). The cents sum BEFORE the max keeps the
     * argmax stable across engines. */
-  val q15: GQuery = key("q15_top_supplier", """
+  val q15: GQuery = GQuery.sql("q15_top_supplier", "tpch", """
       WITH revenue AS (
         SELECT l_suppkey,
                sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS total_revenue
@@ -314,7 +317,7 @@ object TpchQueries {
   /** Q16 parts/supplier count, adapted: no partsupp → the part↔supplier
     * relation is distinct (l_partkey, l_suppkey); the spec's
     * "customer complaints" NOT IN filter becomes s_acctbal < 0. */
-  val q16: GQuery = key("q16_parts_supplier_cnt", """
+  val q16: GQuery = GQuery.sql("q16_parts_supplier_cnt", "tpch", """
       SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
       FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) link, part
       WHERE p_partkey = l_partkey
@@ -329,7 +332,7 @@ object TpchQueries {
     * of size ≤ 10. The correlated avg-per-part subquery is an aggregate
     * joined back on partkey, its average an exact cents sum over a count
     * so the cut-off is bit-identical across engines. */
-  val q17: GQuery = key("q17_small_qty_revenue", """
+  val q17: GQuery = GQuery.sql("q17_small_qty_revenue", "tpch", """
       SELECT round(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) / CAST(7.0 AS DOUBLE), 2) AS avg_yearly
       FROM lineitem, part,
            (SELECT l_partkey AS a_partkey,
@@ -343,7 +346,7 @@ object TpchQueries {
   /** Q18 large orders: orders whose total quantity exceeds 250 (sized to
     * this data's per-order line distribution; spec uses 300), joined back
     * to customer, top 100 by o_totalprice. */
-  val q18: GQuery = key("q18_large_orders", """
+  val q18: GQuery = GQuery.sql("q18_large_orders", "tpch", """
       SELECT c_name, c_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate,
              o_totalprice, round(sum_qty, 2) AS sum_qty
       FROM (SELECT l_orderkey, sum(l_quantity) AS sum_qty
@@ -358,7 +361,7 @@ object TpchQueries {
     * quantity (no p_container in this schema). The equi-key (partkey)
     * stays conjunctive so the join is hash-based with the disjunction as
     * a residual filter — not a cartesian. */
-  val q19: GQuery = key("q19_discounted_revenue", """
+  val q19: GQuery = GQuery.sql("q19_discounted_revenue", "tpch", """
       SELECT sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS revenue
       FROM lineitem, part
       WHERE l_partkey = p_partkey
@@ -371,7 +374,7 @@ object TpchQueries {
     * qualifies if, for some 'small%' part, they shipped more than half of
     * that part's total 1996 quantity. Nested aggregation under two IN
     * subqueries, which Catalyst plans as left-semi joins. */
-  val q20: GQuery = key("q20_excess_suppliers", """
+  val q20: GQuery = GQuery.sql("q20_excess_suppliers", "tpch", """
       WITH pair_qty AS (
         SELECT l_partkey, l_suppkey, sum(l_quantity) AS pair_qty
         FROM lineitem
@@ -395,7 +398,7 @@ object TpchQueries {
     * orders: suppliers in NATION_4 whose lineitem was returned, where the
     * order has another supplier's lineitem (EXISTS → left-semi) but no
     * OTHER supplier's returned lineitem (NOT EXISTS → left-anti). */
-  val q21: GQuery = key("q21_waiting_suppliers", """
+  val q21: GQuery = GQuery.sql("q21_waiting_suppliers", "tpch", """
       SELECT s_name, count(*) AS numwait
       FROM lineitem l1, orders, supplier, nation
       WHERE l1.l_orderkey = o_orderkey AND o_orderstatus = 'F'
@@ -419,7 +422,7 @@ object TpchQueries {
     * The average over positive balances is an exact cents sum over a
     * count as in q17, a one-row aggregate joined to the customers rather
     * than the spec's scalar subquery (as in q11 and q15). */
-  val q22: GQuery = key("q22_global_sales", """
+  val q22: GQuery = GQuery.sql("q22_global_sales", "tpch", """
       SELECT cntrycode, count(*) AS numcust, sum(CAST(floor((c_acctbal) * 100 + 0.5) AS BIGINT)) / CAST(100.0 AS DOUBLE) AS totacctbal
       FROM (SELECT CAST(c_custkey % 7 AS STRING) AS cntrycode, c_custkey, c_acctbal
             FROM customer

@@ -405,10 +405,14 @@ class BehaviorSpec extends SparkSpecBase {
     val la = Sessions.childWith(spark, Seq("spark.sql.session.timeZone" -> "America/Los_Angeles"))
     val dir = TestSession.sfDir01
     // the keys after op_asof_join compare TIMESTAMP_NTZ columns with
-    // literals, or (op_lateral_join) run a text in the caller's session
+    // literals, or run a text in the caller's session that reads
+    // events.ts, o_orderdate or l_shipdate
     val moved = (Seq("op_attribution", "op_regression_stats", "op_sequence_match",
         "op_range_join", "op_asof_join", "op_anti_join", "op_dq_audit", "op_stats_skipping",
-        "op_lateral_join") ++ tpch.TpchQueries.all.map(_.name)).flatMap { k =>
+        "op_lateral_join", "op_window_running", "op_sessionize", "op_scd2_intervals",
+        "op_funnel", "op_retention_cohort", "op_merge_intervals", "op_cdc_apply",
+        "op_cumulative_reach", "op_anomaly_trailing", "op_streaks", "op_rfm") ++
+        tpch.TpchQueries.all.map(_.name)).flatMap { k =>
       val utc = digest(Registry.byName(k).build(spark, dir))
       assert(utc._1 > 0, s"$k is empty at sf0.01")
       val other = digest(Registry.byName(k).build(la, dir))
