@@ -14,10 +14,15 @@
 # each side's median and quartiles, the pairs the working tree won, and
 # the verdict of AbMain's rule: the working tree wins >= 9 of 10 pairs
 # AND its median beats the parent's by more than the parent's IQR. A
-# side is `correct` only if every one of its runs was. The raw result
-# lines stay in the scratch directory (printed at the end); the script
-# writes nothing under perfbench/ (run.py's own sbt build keeps its
-# target/ there, as on any run).
+# side is `correct` only if every one of its runs was. Then, per
+# operation, each side's median wall time over all its timed passes, so
+# a move of `op_tail_s` (the slowest op of each pass) is attributed to
+# the op that moved. The raw result lines and each run's per-pass
+# report (`<side>.<pair>.raw.json`, a copy of run.py's
+# `.bench_build/runs/<workload>/raw.json`) stay in the scratch
+# directory (printed at the end); the script writes nothing under
+# perfbench/ (run.py's own sbt build keeps its target/ there, as on any
+# run).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 [ $# -eq 3 ] || { echo "usage: $0 <parent-ref> <pairs> <workload>" >&2; exit 2; }
@@ -42,6 +47,7 @@ run_side() { # <side> <pair>
       --workload "$W" --seed "$2" --seconds "$RUN_SECONDS") \
     > "$WORK/runs/$1.$2.out" 2> "$WORK/runs/$1.$2.err" || true
   tail -n 1 "$WORK/runs/$1.$2.out" > "$WORK/runs/$1.$2.json"
+  cp "$dir/.bench_build/runs/$W/raw.json" "$WORK/runs/$1.$2.raw.json" 2>/dev/null || true
   echo "[ab] pair $2 $1: $(cut -c1-160 "$WORK/runs/$1.$2.json")" >&2
 }
 
@@ -89,5 +95,25 @@ for name, m in spec.items():
     print(f"{name:22} {pmed:>12.4g} [{pq1:.4g}, {pq3:.4g}]".ljust(53)
           + f" {hmed:>12.4g} [{hq1:.4g}, {hq3:.4g}]".ljust(31)
           + f" {delta:>+7.1f}% {won:>2}/{len(both):<3}  {'WIN' if win else 'no win'}")
+
+def op_walls(side):  # op -> wall seconds of every timed pass of every run
+    walls = {}
+    for p in range(1, pairs + 1):
+        try:
+            raw = json.load(open(os.path.join(runs, f"{side}.{p}.raw.json")))
+        except (OSError, ValueError):
+            continue  # the run died before its report
+        for ps in raw["passes"]:
+            for op, s in ps["op_s"].items():
+                walls.setdefault(op, []).append(s)
+    return walls
+
+walls = {s: op_walls(s) for s in ("parent", "head")}
+ops = sorted(set(walls["parent"]) | set(walls["head"]),
+             key=lambda op: -max(qt(sorted(walls[s].get(op, [0.0])), .5) for s in walls))
+print(f"{'op (median wall s)':34} {'parent':>8} {'head':>8} {'delta':>8}")
+for op in ops:
+    pm, hm = (qt(sorted(walls[s][op]), .5) if op in walls[s] else float("nan") for s in ("parent", "head"))
+    print(f"{op:34} {pm:>8.3f} {hm:>8.3f} {(hm - pm) / pm * 100 if pm else 0.0:>+7.1f}%")
 EOF
 echo "[ab] raw result lines: $WORK/runs" >&2

@@ -4,6 +4,7 @@ import graft.GQuery
 import graft.similarity.Ann
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** §2.4 dedup family over the `documents` / `embeddings` tables.
@@ -25,6 +26,8 @@ import org.apache.spark.sql.functions._
   * are identical across engines and the final doubles compare equal.
   */
 object Dedup {
+
+  private lazy val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
 
   private val J_THRESHOLD = 0.5 // word-3-gram Jaccard near-dup cut
   private val C_THRESHOLD = 0.4 // embedding cosine near-dup cut
@@ -404,35 +407,45 @@ object Dedup {
   }
 
   /** (doc_a, doc_b) pairs sharing a band bucket: all-to-all inside
-    * buckets of ≤ [[BUCKET_CAP]] docs, successor chains inside bigger
-    * (degenerate) ones — candidate count per bucket is
-    * min(B²/2, B−1)-bounded either way. `chainOrder` must be a
-    * SIMILARITY-PRESERVING ordering for the chain to connect true
-    * clusters: for minhash buckets, membership itself is the full
-    * band signature, so any order (doc_id) keeps a signature-equal
-    * cluster connected; for coarse buckets (simhash's 4096/band,
-    * where at scale EVERY bucket over-caps from random collisions),
-    * pass the signature column so signature-equal docs sit adjacent
-    * in the chain and exact-signature clusters still pair. `bands`
-    * must carry every column `chainOrder` references. */
-  private[graft] def bandCandidates(
-      bands: DataFrame, chainOrder: Seq[Column] = Seq(col("doc_id"))): DataFrame = {
-    val sized = bands.join(
-      bands.groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsize")),
-      Seq("band", "bkey"))
+    * buckets of B ≤ [[BUCKET_CAP]] docs, successor chains inside
+    * bigger (degenerate) ones — min(B²/2, B−1) candidates either way.
+    * `chainOrder` must be SIMILARITY-PRESERVING for the chain to
+    * connect true clusters: minhash bucket membership is the full band
+    * signature, so doc_id order will do; coarse buckets (simhash's
+    * 4096/band, which at scale ALL over-cap from random collisions)
+    * pass the signature so signature-equal docs sit adjacent. One
+    * window over (band, bkey) in chain order yields B and the
+    * successor (`lead`): one exchange feeds the self-join and the
+    * chain. `carry` columns come back per endpoint as `a_<c>` / `b_<c>`.
+    * B sums `weight`, the documents a row stands for: 1 per document,
+    * `mult` per contracted signature ([[buildComponents]]). With
+    * B = Σ mult a contracted bucket lands on its documents' side of
+    * the cap and the candidates stay exact: a small bucket's pairs of
+    * distinct signatures are its doc pairs whose signatures differ,
+    * and an over-cap (signature, doc_id) chain crosses from one
+    * distinct signature to the next exactly where the chain over
+    * distinct signatures links them. `bands` must carry every column
+    * `chainOrder` and `weight` reference. */
+  private[graft] def bandCandidates(bands: DataFrame,
+      chainOrder: Seq[Column] = Seq(col("doc_id")), carry: Seq[String] = Nil,
+      weight: Column = lit(1L)): DataFrame = {
+    val w = Window.partitionBy("band", "bkey").orderBy(chainOrder :+ col("doc_id"): _*)
+    val ends = "doc_id" +: carry
+    val sized = bands.select((Seq("band", "bkey") ++ ends).map(col) ++
+      ends.map(c => lead(col(c), 1).over(w).as(s"nxt_$c")) :+
+      sum(weight).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .as("bsize"): _*)
+    def pair(a: String => Column, b: String => Column): Seq[Column] =
+      Seq(a("doc_id").as("doc_a"), b("doc_id").as("doc_b")) ++
+        carry.flatMap(c => Seq(a(c).as(s"a_$c"), b(c).as(s"b_$c")))
     val small = sized.filter(col("bsize") <= BUCKET_CAP)
-    val pairs = small.as("x")
-      .join(small.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bkey")).orderBy(chainOrder :+ col("doc_id"): _*)
-    val chained = sized.filter(col("bsize") > BUCKET_CAP)
-      .withColumn("nxt", lead(col("doc_id"), 1).over(w))
-      .filter(col("nxt").isNotNull)
-      .select(least(col("doc_id"), col("nxt")).as("doc_a"),
-        greatest(col("doc_id"), col("nxt")).as("doc_b"))
+    val pairs = small.as("x").join(small.as("y"), Seq("band", "bkey"))
+      .filter(col("x.doc_id") < col("y.doc_id"))
+      .select(pair(c => col(s"x.$c"), c => col(s"y.$c")): _*)
+    val fwd = col("doc_id") < col("nxt_doc_id")
+    val chained = sized.filter(col("bsize") > BUCKET_CAP && col("nxt_doc_id").isNotNull)
+      .select(pair(c => when(fwd, col(c)).otherwise(col(s"nxt_$c")),
+        c => when(fwd, col(s"nxt_$c")).otherwise(col(c))): _*)
     pairs.unionByName(chained).distinct()
   }
 
@@ -459,7 +472,7 @@ object Dedup {
   /** `bsz` → `cand` CTEs over a `bands`(doc_id, band, bkey, …) CTE — the
     * SQL mirror of [[bandCandidates]]; `chainOrder` is its over-cap
     * chain's ORDER BY list, ending in doc_id. */
-  private def bandCandSql(chainOrder: String): String = s"""
+  private[graft] def bandCandSql(chainOrder: String): String = s"""
       bsz AS (SELECT band, bkey, count(*) AS bsize FROM bands GROUP BY 1, 2),
       bandss AS (SELECT b.*, bsize FROM bands b JOIN bsz USING (band, bkey)),
       cand_small AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
@@ -522,29 +535,17 @@ object Dedup {
 
   private val HAM_T = 3 // max hamming distance for a simhash near-dup
 
-  /** The [[simhashPairs]] body over a prebuilt signature frame —
-    * reusable so [[components]] can share one signature pass. `carry`
-    * names extra `sigs` columns to ride through the verify joins as
-    * `a_<c>` / `b_<c>` (free — the joins happen anyway), so callers
-    * don't pay two more joins to re-attach per-endpoint metadata. */
-  private[graft] def simhashPairsFrom(sigs: DataFrame, carry: Seq[String] = Nil): DataFrame = {
-      val bands = sigs.select(col("doc_id"), col("simhash"), posexplode(array(
-        (0 until 4).map(b => col(s"band$b")): _*)).as(Seq("band", "bkey")))
-      val h = bit_count(col("sa.simhash").bitwiseXOR(col("sb.simhash"))).cast("long")
-      val sa = sigs.select(col("doc_id") +: col("simhash") +:
-        carry.map(c => col(c).as(s"a_$c")): _*).as("sa")
-      val sb = sigs.select(col("doc_id") +: col("simhash") +:
-        carry.map(c => col(c).as(s"b_$c")): _*).as("sb")
-      // chain over-cap buckets in SIGNATURE order: simhash's 12-bit
-      // buckets over-cap from random collisions at scale, and only a
-      // signature-sorted chain keeps signature-equal docs adjacent
-      bandCandidates(bands, chainOrder = Seq(col("simhash")))
-        .join(sa, col("doc_a") === col("sa.doc_id"))
-        .join(sb, col("doc_b") === col("sb.doc_id"))
-        .withColumn("hamming", h)
-        .filter(col("hamming") <= HAM_T)
-        .select(col("doc_a") +: col("doc_b") +: col("hamming") +:
-          carry.flatMap(c => Seq(col(s"a_$c"), col(s"b_$c"))): _*)
+  /** The [[simhashPairs]] body over a prebuilt (doc_id, simhash, …)
+    * signature frame, so [[components]] can share one signature pass.
+    * `simhash` and the `carry` columns ride [[bandCandidates]] to both
+    * endpoints (`a_<c>` / `b_<c>`): the hamming verify joins nothing. */
+  private[graft] def simhashPairsFrom(sigs: DataFrame, carry: Seq[String] = Nil,
+      weight: Column = lit(1L)): DataFrame = {
+    bandCandidates(simhashBands(sigs), Seq(col("simhash")), "simhash" +: carry, weight)
+      .withColumn("hamming", bit_count(col("a_simhash").bitwiseXOR(col("b_simhash"))).cast("long"))
+      .filter(col("hamming") <= HAM_T)
+      .select(col("doc_a") +: col("doc_b") +: col("hamming") +:
+        carry.flatMap(c => Seq(col(s"a_$c"), col(s"b_$c"))): _*)
   }
 
   /** SimHash near-dup PAIRS — the verify stage over [[simhash]]'s
@@ -620,6 +621,10 @@ object Dedup {
       localMaxPairs: Long = CC_LOCAL_MAX_PAIRS): DataFrame = {
     val spark = verts.sparkSession
     import spark.implicits._
+    // every vertex with its (doc_id, c) label, singletons labelled by themselves
+    def labeled(labels: DataFrame): DataFrame = verts.select(col("doc_id"))
+      .join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("c"), col("doc_id")).as("component"))
     // undirected edges PLUS a self-loop per edge-vertex: the self-loop
     // folds "min with my own label" into the neighbor-min aggregate,
     // so each round needs no separate left-join backfill. Duplicate
@@ -667,14 +672,8 @@ object Dedup {
         val ra = find(a); val rb = find(b)
         if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
       }
-      val labeled = new Array[(Long, Long)](parent.size())
-      val it = parent.keySet().iterator()
-      var i = 0
-      while (it.hasNext) { val v = it.next(); labeled(i) = (v, find(v)); i += 1 }
-      val labelDf = spark.createDataFrame(labeled.toSeq).toDF("doc_id", "c")
-      return verts.select(col("doc_id"))
-        .join(labelDf, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("c"), col("doc_id")).as("component"))
+      import scala.jdk.CollectionConverters._
+      return labeled(parent.keySet().asScala.toSeq.map(v => (v, find(v))).toDF("doc_id", "c"))
     }
     val parts = math.max(1L, math.min(nE / 200000L + 1,
       8L * spark.sparkContext.defaultParallelism)).toInt
@@ -732,10 +731,8 @@ object Dedup {
     }
     require(done, s"componentsOf did not converge in $CC_MAX_ROUNDS rounds")
     ePairs.unpersist(blocking = false) // und superseded it after round 1
-    System.err.println(s"[components] converged in $round rounds")
-    verts.select(col("doc_id"))
-      .join(labels.toDF("doc_id", "c"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("c"), col("doc_id")).as("component"))
+    log.info(s"[components] converged in $round rounds")
+    labeled(labels.toDF("doc_id", "c"))
   }
 
   /** The memoized (doc_id, component, is_rep) label frame — built and
@@ -744,37 +741,31 @@ object Dedup {
     * curation pipeline materializes the cluster labels once and every
     * downstream stage reads them. `dedup_components`, whose output
     * the labels are, builds them fresh ([[buildComponents]]). */
-  private[graft] def componentsFrame(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    graft.Caches.memo(s, "dedupComponents", dir)(buildComponents(s, dir))
+  private[graft] def componentsFrame(s: SparkSession, dir: String): DataFrame =
+    graft.Caches.memo(s, "dedupComponents", dir)(buildComponents(Tables.documents(s, dir)))
 
-  private def buildComponents(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-      val docs = Tables.documents(s, dir)
-      val sigs = simhashSignatures(docs)
-      // CONTRACT equal signatures before iterating: same-sig docs are
-      // always transitively connected in the pair graph (they share
-      // every band bucket, the over-cap chain sorts by signature so
-      // they sit adjacent, and their hamming is 0), so collapsing
-      // each signature group to its min doc_id preserves components
-      // EXACTLY while deleting the duplicate masses whose chains
-      // drive both the round count and the iterated frame size —
-      // the sf1 anchor measured 14 rounds / 128 s uncontracted.
-      val repW = org.apache.spark.sql.expressions.Window.partitionBy(col("simhash"))
-      val docRep = graft.Caches.persistTracked(
-        sigs.select(col("doc_id"), col("simhash"),
-          col("band0"), col("band1"), col("band2"), col("band3"),
-          min(col("doc_id")).over(repW).as("rep")))
-      val contracted = simhashPairsFrom(docRep, carry = Seq("rep"))
-        .filter(col("a_rep") =!= col("b_rep"))
-        .select(least(col("a_rep"), col("b_rep")).as("doc_a"),
-          greatest(col("a_rep"), col("b_rep")).as("doc_b"))
-        .distinct()
-      val comp = componentsOf(docRep.select(col("rep").as("doc_id")).distinct(), contracted)
-      docRep
-        .join(comp.select(col("doc_id").as("rep"), col("component")), Seq("rep"))
-        .select(col("doc_id"), col("component"),
-          (col("doc_id") === col("component")).as("is_rep"))
+  /** The dup-cluster labels, contracted before they are paired:
+    * `docRep` (doc_id → `rep`, the min doc_id of its simhash) is
+    * persisted, candidates, verify and [[componentsOf]] run on the
+    * distinct signatures (rep, simhash, mult) — `mult` docs each — and
+    * the labels join back through `rep`. Exact: same-signature docs
+    * share a component (hamming 0), and with bsize = Σ mult every
+    * bucket lands on its documents' side of [[BUCKET_CAP]]
+    * ([[bandCandidates]]). Contraction deletes the duplicate masses
+    * whose chains drive both the round count and the iterated frame
+    * size (the sf1 anchor measured 14 rounds / 128 s uncontracted). */
+  private[graft] def buildComponents(docs: DataFrame,
+      localMaxPairs: Long = CC_LOCAL_MAX_PAIRS): DataFrame = {
+    val docRep = graft.Caches.persistTracked(
+      simhashSignatures(docs).select(col("doc_id"), col("simhash"),
+        min(col("doc_id")).over(Window.partitionBy(col("simhash"))).as("rep")))
+    val reps = docRep.groupBy(col("rep").as("doc_id"), col("simhash"))
+      .agg(count(lit(1)).as("mult"))
+    val comp = componentsOf(reps, simhashPairsFrom(reps, weight = col("mult")), localMaxPairs)
+    docRep
+      .join(comp.select(col("doc_id").as("rep"), col("component")), Seq("rep"))
+      .select(col("doc_id"), col("component"),
+        (col("doc_id") === col("component")).as("is_rep"))
   }
 
   /** Dup-cluster assignment for EVERY document: connected components
@@ -787,7 +778,7 @@ object Dedup {
     * not just the edge list. */
   val components: GQuery = GQuery(
     "dedup_components",
-    (s, dir) => buildComponents(s, dir),
+    (s, dir) => buildComponents(Tables.documents(s, dir)),
     Some(s"""
       $componentsOracleChain
       SELECT doc AS doc_id, min(lab) AS component, min(lab) = doc AS is_rep
@@ -819,8 +810,7 @@ object Dedup {
     * row, map-only; docs without a token drop out. */
   private[graft] def simhashSignatures(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val bandCols = (0 until 4).map(b =>
-      shiftright(col("simhash"), 12 * b).bitwiseAND(lit(0xfffL)).as(s"band$b"))
+    val bandCols = (0 until 4).map(b => simhashBand(b).as(s"band$b"))
     // simhash48 is null exactly when the text has no non-space byte.
     // Filtering on that cheap test, not on isNotNull(simhash), keeps
     // the optimizer from pushing a second kernel call below the
@@ -829,6 +819,14 @@ object Dedup {
       .select(col("doc_id"), expr("simhash48(text)").as("simhash"))
       .select(Seq(col("doc_id"), col("simhash")) ++ bandCols: _*)
   }
+
+  /** The `b`-th 12-bit hamming band of the `simhash` column. */
+  private def simhashBand(b: Int): Column =
+    shiftright(col("simhash"), 12 * b).bitwiseAND(lit(0xfffL))
+
+  /** `sigs` with one row per hamming band: (…, band, bkey). */
+  private[graft] def simhashBands(sigs: DataFrame): DataFrame =
+    sigs.select(col("*"), posexplode(array((0 until 4).map(simhashBand): _*)).as(Seq("band", "bkey")))
 
   // ------------------------------------------------- embedding cosine
 

@@ -51,6 +51,13 @@ class DedupSpec extends SparkSpecBase {
     assert(cand.toSet == Set((2001L, 2002L)), s"got ${cand.toSeq}")
   }
 
+  /** The degenerate minhash corpus: 1000 copies of one boilerplate
+    * text (one over-cap bucket per band) plus a planted near-dup pair. */
+  private lazy val planted = docs(
+    (Seq(2001L -> "the quick brown fox jumps over the lazy dog",
+         2002L -> "the quick brown fox jumps over the lazy cat") ++
+      (1L to 1000L).map(i => i -> "same boilerplate text every single time")): _*)
+
   test("a degenerate band bucket degrades to linear chain candidates that still dedup the cluster") {
     // 1000 docs with identical shingle sets land in the same 4 band
     // buckets; all-to-all would be ~500k pairs per band from one key —
@@ -66,13 +73,102 @@ class DedupSpec extends SparkSpecBase {
       .select(col("doc_b")).distinct().count()
     assert(losers == 999, s"expected 999 losers, got $losers")
     // a genuine near-dup pair in a small bucket is still found all-to-all
-    val planted = docs(
-      (Seq(2001L -> "the quick brown fox jumps over the lazy dog",
-           2002L -> "the quick brown fox jumps over the lazy cat") ++
-        (1L to 1000L).map(i => i -> "same boilerplate text every single time")): _*)
     val cand = Dedup.bandCandidates(Dedup.minhashBands(planted))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cand.contains((2001L, 2002L)), s"planted pair missing from ${cand.size} candidates")
+  }
+
+  /** 300 copies of one text, 60 one-word edits of it (every third
+    * doubled) and 20 unrelated docs: each band bucket of the base
+    * signature holds more than [[Dedup.BUCKET_CAP]] docs but far fewer
+    * distinct signatures, and the doubled edits fill small buckets. */
+  private lazy val overCapCorpus = {
+    val words = (1 to 30).map(i => s"word$i")
+    val base = words.mkString(" ")
+    val edits = (1 to 60).flatMap { i =>
+      val t = words.updated(i % 30, s"edit$i").mkString(" ")
+      ((1000L + i) -> t) +: (if (i % 3 == 0) Seq((2000L + i) -> t) else Nil)
+    }
+    val unrelated = (1L to 20L).map(i => (3000L + i) -> (1 to 12).map(j => s"u${i}x$j").mkString(" "))
+    docs((1L to 300L).map(_ -> base) ++ edits ++ unrelated: _*)
+  }
+
+  /** The shape of a simhash band frame: (docs, distinct signatures) of
+    * its largest bucket, and the number of small buckets holding two or
+    * more docs. */
+  private def bucketShape(bands: org.apache.spark.sql.DataFrame): ((Long, Long), Long) = {
+    val b = bands.groupBy(col("band"), col("bkey"))
+      .agg(count(lit(1)).as("n"), countDistinct(col("simhash")).as("k")).cache()
+    try {
+      val top = b.orderBy(desc("n")).head()
+      ((top.getLong(2), top.getLong(3)),
+        b.filter(col("n") >= 2 && col("n") <= Dedup.BUCKET_CAP).count())
+    } finally b.unpersist()
+  }
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select(col("doc_a"), col("doc_b")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("dup clusters over contracted signatures equal the uncontracted pair graph's on an over-cap bucket") {
+    try {
+      val sigs = Dedup.simhashSignatures(overCapCorpus)
+      val ((n, k), _) = bucketShape(Dedup.simhashBands(sigs))
+      assert(n > Dedup.BUCKET_CAP && k > 1 && k <= Dedup.BUCKET_CAP,
+        s"fixture: the largest bucket holds $n docs of $k signatures")
+      def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+        df.select(col("doc_id"), col("component")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // the reference pairs every document, uncontracted
+      val want = labels(Dedup.componentsOf(sigs, Dedup.simhashPairsFrom(sigs)))
+      assert(want.size == 300 + 80 + 20 && want.values.toSet.size > 20,
+        s"fixture: ${want.size} docs in ${want.values.toSet.size} clusters")
+      for (localMaxPairs <- Seq(Dedup.CC_LOCAL_MAX_PAIRS, -1L)) {
+        val got = labels(Dedup.buildComponents(overCapCorpus, localMaxPairs))
+        val diff = want.toSet.diff(got.toSet)
+        assert(got.size == want.size && diff.isEmpty, s"localMaxPairs $localMaxPairs")
+      }
+    } finally Caches.release()
+  }
+
+  test("bandCandidates returns bandCandSql's candidates in DuckDB, minhash over-cap and mixed simhash") {
+    import scala.sys.process._
+    assume(Seq("python3", "-c", "import duckdb").!(ProcessLogger(_ => ())) == 0,
+      "python3 with duckdb is not installed")
+    def check(bands: org.apache.spark.sql.DataFrame, chainOrder: String): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory("bandcand").toFile
+      try {
+        bands.write.parquet(s"$dir/bands")
+        val got = pairSet(Dedup.bandCandidates(spark.read.parquet(s"$dir/bands"),
+          chainOrder.split(", ").toSeq.map(col)))
+        val sql = s"WITH bands AS (SELECT * FROM read_parquet('$dir/bands/*.parquet')),\n" +
+          Dedup.bandCandSql(chainOrder) + "\nSELECT doc_a, doc_b FROM cand"
+        val py = "import duckdb, sys\nfor a, b in duckdb.sql(sys.stdin.read()).fetchall(): print(a, b)"
+        val out = (Seq("python3", "-c", py) #< new java.io.ByteArrayInputStream(sql.getBytes("UTF-8"))).!!
+        val want = out.linesIterator.map(_.split(" ")).map(a => (a(0).toLong, a(1).toLong)).toSet
+        assert(want.nonEmpty && (got -- want).size + (want -- got).size == 0,
+          s"order $chainOrder: ${got.size} candidates vs the oracle's ${want.size}; " +
+            s"only here ${(got -- want).take(5)}, only in DuckDB ${(want -- got).take(5)}")
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+    check(Dedup.minhashBands(planted), "doc_id")
+    val simBands = Dedup.simhashBands(Dedup.simhashSignatures(overCapCorpus))
+      .select(col("doc_id"), col("simhash"), col("band"), col("bkey"))
+    val ((n, _), smallShared) = bucketShape(simBands)
+    assert(n > Dedup.BUCKET_CAP && smallShared > 0, s"fixture: top bucket $n, $smallShared small shared")
+    check(simBands, "simhash, doc_id")
+  }
+
+  test("a warm dedup_components build + write submits <= 15 jobs, dedup_minhash_lsh <= 8") {
+    def jobs(key: String): Int = {
+      def run(): Unit =
+        try Registry.byName(key).build(spark, TestSession.sfDir01)
+          .write.format("noop").mode("overwrite").save()
+        finally Caches.release()
+      run() // warm
+      org.apache.spark.JobCount(spark.sparkContext)(run())
+    }
+    val (comp, lsh) = (jobs("dedup_components"), jobs("dedup_minhash_lsh"))
+    assert(comp <= 15 && lsh <= 8, s"dedup_components $comp jobs, dedup_minhash_lsh $lsh")
   }
 
   test("the MinHash band frame is map-only: its plan has no Exchange") {
