@@ -2,16 +2,16 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage truncation for ITERATED frames (mmr rerank rounds, graph
-  * bfs/kcore/labelprop loops) with a conf-switched durability tier
-  * (r16 verdict #4).
+/** Lineage truncation for ITERATED frames, with a conf-switched
+  * durability tier. Its callers are the graph loops only
+  * ([[graft.graph.Graph]]'s khop, kcore and labelprop rounds).
   *
   * Default — `localCheckpoint()` (eager): blocks live in executor
   * storage. Fast (no DFS round trip) and correct on a healthy
   * cluster, but the lineage is CUT, so an executor loss after the
   * checkpoint makes the lost blocks unrecoverable and fails the job —
   * acceptable for bounded interactive jobs (this harness; every
-  * truncated frame in the repo is probe- or frontier-sized), a silent
+  * truncated frame in the repo is frontier-sized), a silent
   * single-point-of-failure for long multi-tenant pipelines.
   *
   * Reliable — set `spark.graft.checkpoint.reliable` to a durable
@@ -19,7 +19,7 @@ import org.apache.spark.sql.DataFrame
   * can write) and the same call sites switch to eager reliable
   * `checkpoint()`: blocks are written to the directory, an executor
   * loss re-reads them there, and the job survives. Costs one write +
-  * read of the truncated frame per round — for the probe-sized
+  * read of the truncated frame per round — for the frontier-sized
   * frames under this contract that is milliseconds, so the switch is
   * a durability choice, not a rewrite.
   *

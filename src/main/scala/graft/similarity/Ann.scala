@@ -2,7 +2,8 @@ package graft.similarity
 
 import graft.GQuery
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,8 +15,9 @@ import org.apache.spark.sql.functions._
   * independent); the final divide/sqrt/round on those exact inputs is
   * IEEE-deterministic, making cosine values bit-identical between
   * Spark and the DuckDB oracle. All per-element math runs in
-  * codegen'd higher-order functions (`zip_with`/`aggregate`) — no
-  * UDFs, no collect.
+  * codegen'd expressions (`dot_long`, `sign_band_keys`) but one: MMR's
+  * greedy loop is a per-query UDF ([[mmrPicks]]), exact the same way —
+  * integer dot products, then the same IEEE operations on them.
   */
 object Ann {
 
@@ -415,12 +417,11 @@ object Ann {
       s"minSteps ($minSteps) must be <= maxSteps ($maxSteps): maxSteps bounds the total Lloyd passes")
     val vecs = graft.Caches.persistTracked(vecsIn)
     val n = vecs.count()
-    require(n > 0, "ivfBalanced needs a non-empty corpus")
     val cap = math.max(1L, math.ceil(maxListFactor * n / c).toLong)
     def withList(a: DataFrame): DataFrame =
       a.withColumn("list_id", struct(col("c_id"), lit(0L).as("sub")))
     def maxListOf(a: DataFrame): Long =
-      a.groupBy(col("list_id")).count().agg(max(col("count"))).head().getLong(0)
+      a.groupBy(col("list_id")).count().agg(coalesce(max(col("count")), lit(0L))).head().getLong(0)
     // every iteration's cents/assign are persisted (tracked): both are
     // TINY relative to their compute (≤c centroid rows; (vec_id, c_id)
     // pairs vs an N×c cosine cross-join) — the profile where persist
@@ -889,78 +890,74 @@ object Ann {
       FROM pick JOIN embeddings t ON pick.query_id = t.vec_id"""),
     tags = Set("similarity"))
 
+  /** One MMR pick: the candidate, its round and its unrounded score. */
+  private[graft] final case class MmrPick(vec_id: Long, round: Long, score: Option[Double])
+
+  /** `dot_long`: exact wrapping Long sum over the common prefix, None on a null. */
+  private def dotLong(a: Seq[Any], b: Seq[Any]): Option[Long] =
+    if (a == null || b == null) None
+    else a.iterator.zip(b.iterator).foldLeft(Option(0L)) {
+      case (Some(acc), (u: Long, v: Long)) => Some(acc + u * v)
+      case _ => None
+    }
+
+  /** Spark's `DESC NULLS LAST` on nullable doubles (NaN greatest, −0.0 = 0.0). */
+  private val descNullsLast: Ordering[Option[Double]] =
+    Ordering.Option(Ordering.fromLessThan[Double](SQLOrderingUtil.compareDoubles(_, _) < 0)).reverse
+
+  /** Greedy MMR over one query's (vec_id, cosine, ce) candidates, in any
+    * order: round 1 picks by (cosine [[descNullsLast]], vec_id), later
+    * rounds by (0.7·cosine − 0.3·m, vec_id), m the max [[cosineRaw]] to
+    * the picked set (null-skipping like `max`, null on a zero divisor
+    * like Spark's divide). n < 5 candidates yield n rounds. */
+  private[graft] def mmrPicks(cand: Seq[Row]): Seq[MmrPick] = {
+    val ids = cand.map(_.getLong(0)).toArray
+    val rel = cand.map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1))).toArray
+    val vecs = cand.map(_.getSeq[Any](2)).toArray
+    val norms = vecs.map(e => dotLong(e, e).map(n => math.sqrt(n.toDouble)))
+    val m = Array.fill[Option[Double]](ids.length)(None)
+    val open = scala.collection.mutable.Set(ids.indices: _*)
+    (1 to math.min(5, ids.length)).map { r =>
+      def score(i: Int) =
+        if (r == 1) rel(i).map(0.7 * _) else for (c <- rel(i); s <- m(i)) yield 0.7 * c - 0.3 * s
+      val best = open.minBy(i => (if (r == 1) rel(i) else score(i), ids(i)))(
+        Ordering.Tuple2(descNullsLast, Ordering.Long))
+      open -= best
+      open.foreach { i =>
+        val sim = for (d <- dotLong(vecs(i), vecs(best)); a <- norms(i); b <- norms(best)
+                       if a * b != 0.0) yield d.toDouble / (a * b)
+        if (descNullsLast.lt(sim, m(i))) m(i) = sim
+      }
+      MmrPick(ids(best), r, score(best))
+    }
+  }
+
+  private lazy val mmrKernel = udf((cand: Seq[Row]) => mmrPicks(cand))
+
   /** MMR DIVERSIFIED RE-RANKING (Carbonell/Goldstein maximal marginal
     * relevance, the standard result-diversification pass after any
     * top-k retrieval): greedily pick 5 of the top-20 candidates
-    * maximizing `0.7·rel − 0.3·max-sim-to-already-picked`. The greedy
-    * loop is inherently sequential in k, so it is UNROLLED into 4
-    * static join rounds — but every round's frames are bounded by the
-    * fixed candidate set (≤20 rows and one 20×20 sim block per
-    * query) and keyed by query_id, so a million concurrent queries
-    * diversify embarrassingly parallel with zero cross-query
-    * coordination; nothing in the plan grows with the corpus (only
-    * [[queryProbe]]'s candidate generation sees N). Determinism: rel
-    * and pairwise sims are unrounded doubles from exact quantized
-    * integers, λ = 0.7 parses to the identical IEEE double in both
-    * engines, ties break on vec_id; only the emitted score rounds
-    * (6 dp).
-    *
-    * Lineage discipline (the [[graft.graph.Graph]] kcore lesson,
-    * A/B-measured at sf0.1, dev/BENCH_NOTES.md): the three iterated
-    * frames — cand, sims, and each round's picked set — are EAGER
-    * [[graft.Checkpoints.truncate]] calls (executor-local blocks by
-    * default; reliable checkpoint under
-    * `spark.graft.checkpoint.reliable` — recovery contract on that
-    * object), truncating the plan that otherwise regrows
-    * through the 4 unrolled rounds: 12.8 s lineage-recomputed →
-    * 3.3 s checkpointed (health-accepted). `persist()` instead of
-    * checkpointing was tried and REFUTED (32.6 s: it defeats the
-    * ReusedExchange dedup of the candidate subtree and replaces it
-    * with InMemoryRelation round trips). All checkpointed frames are
-    * probe-sized (≤ 20 rows and one 20×20 block per query), never
-    * corpus-sized. */
+    * maximizing `0.7·rel − 0.3·max-sim-to-already-picked`. The loop is
+    * sequential in k but bounded per query: each query's ≤20 candidates
+    * form one group and [[mmrPicks]] runs it there, so queries never
+    * coordinate and only [[queryProbe]] sees the corpus. Rel and sims
+    * are unrounded doubles from exact quantized integers, λ = 0.7 is
+    * the same IEEE double in both engines, ties break on vec_id; only
+    * the emitted score rounds (6 dp, in the plan). The DuckDB oracle
+    * spells the same loop as 4 unrolled join rounds. */
   val mmrRerank: GQuery = GQuery(
     "ann_mmr_rerank",
     (s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val wc = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-      val cand = queryProbe(Tables.embeddings(s, dir))
+      queryProbe(Tables.embeddings(s, dir))
         .withColumn("rk", row_number().over(wc))
         .filter(col("rk") <= 20)
-        .select(col("query_id"), col("vec_id"), col("cosine"), col("ce").as("e"))
-        .transform(graft.Checkpoints.truncate(s))
-      val sims = cand.select(col("query_id"), col("vec_id").as("va"), col("e").as("ea"))
-        .join(cand.select(col("query_id"), col("vec_id").as("vb"), col("e").as("eb")),
-          Seq("query_id"))
-        .filter(col("va") =!= col("vb"))
-        .withColumn("sim", cosineRaw(expr("dot_long(ea, eb)"),
-          expr("dot_long(ea, ea)"), expr("dot_long(eb, eb)")))
-        .select(col("query_id"), col("va"), col("vb"), col("sim"))
-        .transform(graft.Checkpoints.truncate(s))
-      val bare = cand.select(col("query_id"), col("vec_id"), col("cosine"))
-      var sel = bare
-        .withColumn("pk", row_number().over(wc))
-        .filter(col("pk") === 1)
-        .select(col("query_id"), col("vec_id"),
-          (lit(0.7) * col("cosine")).as("score"), lit(1L).as("round"))
-      for (r <- 2 to 5) {
-        val picked = sel.select(col("query_id"), col("vec_id")).transform(graft.Checkpoints.truncate(s))
-        val ms = sims
-          .join(picked.withColumnRenamed("vec_id", "vb"), Seq("query_id", "vb"))
-          .groupBy(col("query_id"), col("va").as("vec_id"))
-          .agg(max(col("sim")).as("m"))
-        val ws = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id"))
-        val next = bare
-          .join(ms, Seq("query_id", "vec_id"))
-          .join(picked, Seq("query_id", "vec_id"), "left_anti")
-          .withColumn("score", lit(0.7) * col("cosine") - lit(0.3) * col("m"))
-          .withColumn("pk", row_number().over(ws))
-          .filter(col("pk") === 1)
-          .select(col("query_id"), col("vec_id"), col("score"), lit(r.toLong).as("round"))
-        sel = sel.unionByName(next)
-      }
-      sel.select(col("query_id"), col("vec_id"), col("round"),
-        round(col("score"), 6).as("mmr6"))
+        .groupBy(col("query_id"))
+        .agg(collect_list(struct(col("vec_id"), col("cosine"), col("ce"))).as("cand"))
+        .select(col("query_id"), explode(mmrKernel(col("cand"))).as("p"))
+        .select(col("query_id"), col("p.vec_id"), col("p.round"),
+          round(col("p.score"), 6).as("mmr6"))
     },
     Some {
       val base = s"""

@@ -282,4 +282,101 @@ class AnnSpec extends SparkSpecBase {
         "MMR round 1 must be the relevance argmax")
     } finally got.unpersist()
   }
+
+  private val annKeys = Registry.all.map(_.name).filter(_.startsWith("ann_"))
+
+  /** Builds each key over the corpus in `dir` and writes its rows
+    * beside its oracle text; `dev/compare.py` then replays every text
+    * in DuckDB over the same parquet. Returns compare.py's report. */
+  private def againstOracle(dir: String, keys: Seq[String]): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    import scala.sys.process._
+    val out = java.nio.file.Files.createTempDirectory("ann_oracle").toFile
+    try {
+      keys.foreach { k =>
+        try Registry.byName(k).build(spark, dir).write.parquet(s"$out/$k") finally Caches.release()
+      }
+      val texts = keys.map(k => k -> Registry.byName(k).oracle.get).toMap.asJava
+      new com.fasterxml.jackson.databind.ObjectMapper().writeValue(new java.io.File(out, "oracle_sql.json"), texts)
+      Seq("python3", "dev/compare.py", dir, out.toString).lazyLines_!(ProcessLogger(_ => ())).toList
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(out)
+  }
+
+  /** Writes each (table, rows) to a temp dir in the corpus layout and
+    * runs `f` on that dir. */
+  private def withCorpus[T](tables: (String, org.apache.spark.sql.DataFrame)*)(f: String => T): T = {
+    val root = java.nio.file.Files.createTempDirectory("ann_corpus")
+    try {
+      tables.foreach { case (t, rows) => rows.write.parquet(sources.Tables.path(root.toString, t)) }
+      f(root.toString)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+  }
+
+  /** `n` rows of `embeddings` in the testdata schema: vector `id` is 64
+    * pseudo-random components seeded by `src(id)`, so ids with the same
+    * source are exact duplicates. */
+  private def vectors(n: Long, src: String) =
+    spark.range(n).select(col("id").as("vec_id"),
+      expr(s"""transform(sequence(0, 63),
+                d -> CAST((pmod(xxhash64($src, d), 2001) - 1000) / 1000.0 AS FLOAT))""").as("embedding"),
+      pmod(col("id"), lit(3)).cast("int").as("label"))
+
+  test("every ann_* key over empty embeddings and documents tables returns its oracle's answer") {
+    assumeDuckdb()
+    withCorpus(Seq("embeddings", "documents").map(t => t -> sources.Tables.load(spark, sfDir, t).limit(0)): _*) { dir =>
+      val report = againstOracle(dir, annKeys)
+      assert(report.contains(s"== ${annKeys.size} ok, 0 bad =="), report.mkString("\n"))
+    }
+  }
+
+  test("mmr rerank matches its DuckDB oracle on a pool that runs dry and on exact duplicates") {
+    assumeDuckdb()
+    // 4 vectors: every query's pool holds 3 candidates, so 3 rounds
+    withCorpus("embeddings" -> vectors(4, "id")) { dir =>
+      val report = againstOracle(dir, Seq("ann_mmr_rerank"))
+      assert(report.contains("== 1 ok, 0 bad =="), report.mkString("\n"))
+      val rounds = Registry.byName("ann_mmr_rerank").build(spark, dir)
+        .groupBy(col("query_id")).agg(count(lit(1)).as("m"), max(col("round")).as("mx")).collect()
+      assert(rounds.length == 4 && rounds.forall(r => r.getLong(1) == 3 && r.getLong(2) == 3),
+        rounds.mkString(", "))
+    }
+    // 30 vectors: 20-24 copy queries 5-9, 25-29 copy 10-14 and 19
+    // copies 10 too, so duplicate candidates tie on cosine and on every
+    // later round's score, and vec_id decides
+    withCorpus("embeddings" -> vectors(30, "CASE WHEN id >= 20 THEN id - 15 WHEN id = 19 THEN 10 ELSE id END")) { dir =>
+      val report = againstOracle(dir, Seq("ann_mmr_rerank"))
+      assert(report.contains("== 1 ok, 0 bad =="), report.mkString("\n"))
+    }
+  }
+
+  test("a warm ann_mmr_rerank build submits <= 1 job, build + write <= 4") {
+    val q = Registry.byName("ann_mmr_rerank")
+    def jobs(write: Boolean): Int = {
+      def run(): Unit =
+        try {
+          val df = q.build(spark, TestSession.sfDir01)
+          if (write) df.write.format("noop").mode("overwrite").save()
+        } finally Caches.release()
+      run() // warm
+      org.apache.spark.JobCount(spark.sparkContext)(run())
+    }
+    val (build, all) = (jobs(write = false), jobs(write = true))
+    assert(build <= 1 && all <= 4, s"build $build jobs, build + write $all")
+  }
+
+  test("ann_* and dedup_semantic digests are invariant under shuffle partitions, AQE and the broadcast threshold") {
+    val keys = annKeys :+ "dedup_semantic"
+    def digests(ss: org.apache.spark.sql.SparkSession): Map[String, (Long, Long)] =
+      keys.map(k => k -> (try digest(Registry.byName(k).build(ss, sfDir)) finally Caches.release())).toMap
+    val base = digests(spark)
+    Seq(
+      Seq("spark.sql.shuffle.partitions" -> "1"),
+      Seq("spark.sql.shuffle.partitions" -> "7"),
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
+      Seq("spark.sql.adaptive.enabled" -> "false")).foreach { confs =>
+      val got = digests(Sessions.childWith(spark, confs))
+      val moved = keys.filter(k => got(k) != base(k))
+      assert(moved.isEmpty, s"$confs changed ${moved.mkString(", ")}")
+    }
+  }
 }

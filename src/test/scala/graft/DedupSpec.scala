@@ -132,8 +132,7 @@ class DedupSpec extends SparkSpecBase {
 
   test("bandCandidates returns bandCandSql's candidates in DuckDB, minhash over-cap and mixed simhash") {
     import scala.sys.process._
-    assume(Seq("python3", "-c", "import duckdb").!(ProcessLogger(_ => ())) == 0,
-      "python3 with duckdb is not installed")
+    assumeDuckdb()
     def check(bands: org.apache.spark.sql.DataFrame, chainOrder: String): Unit = {
       val dir = java.nio.file.Files.createTempDirectory("bandcand").toFile
       try {

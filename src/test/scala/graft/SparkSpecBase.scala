@@ -16,6 +16,13 @@ abstract class SparkSpecBase extends AnyFunSuite {
   def spark: SparkSession = TestSession.spark
   def sfDir: String = TestSession.sfDir
 
+  /** Cancels the test unless `python3` can import DuckDB, the oracle engine. */
+  protected def assumeDuckdb(): Unit = {
+    import scala.sys.process._
+    assume(Seq("python3", "-c", "import duckdb").!(ProcessLogger(_ => ())) == 0,
+      "python3 with duckdb is not installed")
+  }
+
   /** Order-insensitive (row count, Σ hash over the name-sorted columns). */
   protected def digest(df: DataFrame): (Long, Long) = {
     val r = df.agg(count(lit(1)), sum(hash(df.columns.sorted.toSeq.map(col): _*).cast("long"))).head()
